@@ -980,7 +980,8 @@ def decode_filtered(spark, out_dir: str, col: str | None = None, op: str | None 
     if not flt and not any_flt:
         raise ValueError("decode_filtered needs (col, op, value), "
                          "filters=[...], or any_filters=[...]")
-    fcols = [f[0] for f in flt + any_flt]
+    # one entry per filter column, however many predicates name it
+    fcols = list(dict.fromkeys(f[0] for f in flt + any_flt))
     cols = columns
     if cols is not None:
         cols = cols + [c for c in fcols if c not in cols]
@@ -1048,7 +1049,7 @@ def decode_plan(spark, out_dir: str, columns: list[str] | None = None,
             raise KeyError(f"column {c!r} not in encoded data")
     scan_cols = columns
     if scan_cols is not None:
-        fcols = [f[0] for f in flt + any_flt]
+        fcols = dict.fromkeys(f[0] for f in flt + any_flt)
         scan_cols = list(scan_cols) + [c for c in fcols
                                        if c not in scan_cols]
 

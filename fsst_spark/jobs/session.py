@@ -8,6 +8,9 @@ from pyspark.sql import SparkSession
 
 from ..env import tune_malloc
 
+# Directory (or zip archive) that holds the ``fsst_spark`` package.
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
 
 def get_spark(master: str | None = None, app_name: str = "fsst_spark",
               shuffle_partitions: int | None = None) -> SparkSession:
@@ -74,6 +77,13 @@ def get_spark(master: str | None = None, app_name: str = "fsst_spark",
                 "spark.driver.extraJavaOptions",
                 f"-Xms{mem} -XX:+UseParallelGC -XX:+AlwaysPreTouch -XX:+UseTransparentHugePages",
             )
+            # Skips the per-task re-read of pyspark.zip (fsst_spark.daemon).
+            # Local only: the daemon runs on this host, so putting the
+            # package root (a directory, or a --py-files archive) on its
+            # PYTHONPATH lets it import the engine; cluster daemons start
+            # before --py-files reach their path.
+            b = (b.config("spark.python.daemon.module", "fsst_spark.daemon")
+                 .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT))
     return b.getOrCreate()
 
 

@@ -20,6 +20,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import numpy as np
+import pyarrow as pa
 import pyarrow.parquet as pq
 
 
@@ -46,7 +47,7 @@ def main() -> None:
     total_results = {}
     for col in tbl.column_names:
         arr = tbl.column(col).combine_chunks()
-        if arr.type not in ("string", "large_string") and str(arr.type) != "string":
+        if not (pa.types.is_string(arr.type) or pa.types.is_large_string(arr.type)):
             continue
         vals = [v.as_py().encode() if v.is_valid else b"" for v in arr]
         raw = b"".join(vals)

@@ -1,0 +1,81 @@
+#!/usr/bin/env python3
+"""Per-task fixed cost of a Python ``mapInArrow`` task under ``get_spark``.
+
+Times a no-op ``mapInArrow`` job of N = ``TASKS`` tasks and the same job on
+the JVM alone (both written to the ``noop`` sink), each as the median of
+warm repetitions, and prints one JSON line. ``per_task_ms`` is the extra
+task-slot time a Python task costs: ``(python_s - jvm_s) * min(N, slots)
+/ N``. A worker-startup regression (daemon, imports, per-task setup) shows
+here without a full benchmark run.
+
+Usage: python scripts/task_overhead.py [--master local[4]]
+"""
+from __future__ import annotations
+
+import argparse
+import json
+import os
+import statistics
+import sys
+import time
+
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+os.environ.setdefault("PYSPARK_SUBMIT_ARGS", "--conf spark.ui.showConsoleProgress=false pyspark-shell")
+
+import fsst_spark  # noqa: F401,E402  (malloc tuning before the JVM starts)
+from fsst_spark.jobs.session import get_spark  # noqa: E402
+
+TASKS = 16
+REPS = 5
+ROWS_PER_TASK = 1000
+
+
+def _identity(batches):
+    yield from batches
+
+
+def _median_s(run) -> float:
+    run()  # warm: JVM codegen, Python daemon and workers
+    walls = []
+    for _ in range(REPS):
+        t0 = time.perf_counter()
+        run()
+        walls.append(time.perf_counter() - t0)
+    return statistics.median(walls)
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--master", default=None)
+    args = ap.parse_args()
+
+    spark = get_spark(args.master, app_name="task_overhead")
+    try:
+        spark.sparkContext.setLogLevel("ERROR")
+        n = TASKS
+        df = spark.range(0, n * ROWS_PER_TASK, 1, n)
+
+        def jvm():
+            df.write.format("noop").mode("overwrite").save()
+
+        def python():
+            df.mapInArrow(_identity, df.schema).write.format("noop").mode("overwrite").save()
+
+        jvm_s = _median_s(jvm)
+        python_s = _median_s(python)
+        conf = spark.sparkContext.getConf()
+        slots = spark.sparkContext.defaultParallelism
+        print(json.dumps({
+            "tasks": n,
+            "slots": slots,
+            "daemon_module": conf.get("spark.python.daemon.module", "pyspark.daemon"),
+            "python_s": round(python_s, 4),
+            "jvm_s": round(jvm_s, 4),
+            "per_task_ms": round((python_s - jvm_s) * min(n, slots) / n * 1000, 1),
+        }))
+    finally:
+        spark.stop()
+
+
+if __name__ == "__main__":
+    main()

@@ -12,6 +12,12 @@ Every CLI subcommand works unchanged (decode/verify/stats/advise/...).
 ``jobs.session.get_spark`` uses ``getOrCreate``, so the session inherits
 whatever master/conf spark-submit supplies — the same entry point runs
 at N and 4N executors with no code change.
+
+Where ``fsst_spark`` is installed on the executors (not only shipped via
+``--py-files``, which the worker daemon cannot see at startup), add
+``--conf spark.python.daemon.module=fsst_spark.daemon`` to skip the
+per-task re-read of ``pyspark.zip``'s directory on Python < 3.12; see
+``fsst_spark.daemon``.
 """
 
 from fsst_spark.jobs.cli import main

@@ -242,3 +242,19 @@ def test_encode_job_reroutes_bare_parquet_scan(spark, tmp_path):
     # (pid-keying compatibility beats the fast path)
     encode_job(spark, scan, out2, unique_col="doc_id").collect()  # no raise
     assert _manifest_mode(out2) == "dataframe"
+
+
+def test_decode_filtered_repeated_filter_column_outside_columns(spark, corpus, encoded_dir):
+    # two predicates on one column that `columns` leaves out: the column is
+    # scanned once for the row predicates and dropped from the result
+    from fsst_spark.jobs.decode import decode_filtered
+
+    ts = F.unix_micros("warc_ts")
+    t_min, t_max = corpus.select(F.min(ts), F.max(ts)).first()
+    lo, hi = t_min + (t_max - t_min) // 4, t_min + 3 * (t_max - t_min) // 4
+    want = corpus.where((ts >= lo) & (ts < hi)).count()
+    assert 0 < want < N_ROWS
+    got = decode_filtered(spark, encoded_dir, columns=["url"],
+                          filters=[("warc_ts", ">=", lo), ("warc_ts", "<", hi)])
+    assert [c for c in got.columns if c not in ("pid", "chunk_id")] == ["url"]
+    assert got.count() == want
