@@ -482,7 +482,7 @@ def encoded_group_sum(spark, out_dir: str, key_col: str, val_col: str,
 def _zone_can_pred(arrow_name: str, op: str, value):
     """Spark Column over (zmin_long, zmax_long): True unless the zone
     bounds PROVE no row of the chunk satisfies ``op value`` — the same
-    conservative keep predicate ``decode._zone_prune`` uses."""
+    conservative keep rule the planner's ``decode.zone_keep`` applies."""
     if op == "in":
         from .decode import zone_in_keep_pred
 

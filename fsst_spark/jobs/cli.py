@@ -196,8 +196,8 @@ def main(argv: list[str] | None = None) -> int:
     dec.add_argument("--ordered", action="store_true",
                      help="write the decoded rows in global (pid, chunk_id"
                           ", row) order — cluster-key order on a clustered "
-                          "store — via a range partition of the chunk "
-                          "metadata, no row-level sort (plain full decode "
+                          "store — tasks read chunk files in pid order, "
+                          "no shuffle or row-level sort (plain full decode "
                           "only: excludes --where/--limit/--sample/"
                           "--since)")
     dec.add_argument("--sample", type=int, default=None, metavar="N",

@@ -2,11 +2,14 @@
 
 Reads the chunk table written by ``encode_job`` and reconstructs the
 original columns, bit-identical. Decoding needs only the chunk rows (the
-symbol table travels inside each FSST payload section), so this is a pure
-``mapInArrow`` scan with no joins. Column pruning pushes down into the
-chunk parquet: asking for a column subset filters chunk rows by the
-``column`` field *at the scan* (Catalyst predicate pushdown), so unneeded
-payload bytes are never read.
+symbol table travels inside each FSST payload section), and every chunk
+lives whole inside its pid's chunk file, so a decode is one
+``mapInArrow`` task per run of chunk files with no shuffle and no join. Selective
+reads (filters, OR branches, ``as_of``, pid and chunk-key whitelists)
+first ask the driver-side planner (:mod:`jobs.plan`) which chunks can
+match: zone maps, dict sections and blooms prune there from metadata,
+only files with survivors become tasks, and each task decodes only its
+planned chunks and columns, so pruned payload bytes are never decoded.
 """
 
 from __future__ import annotations
@@ -209,8 +212,8 @@ def _zone_key(arrow_name: str, value) -> tuple[int, dict]:
 def zone_in_keep_pred(arrow_name: str, value):
     """Spark Column over (zmin_long, zmax_long): the conservative
     chunk-keep test for ``col IN (values)`` — true iff the chunk's zone
-    interval could contain ANY probed value. Shared by ``_zone_prune``
-    and ``agg._zone_can_pred``.
+    interval could contain ANY probed value, for the Spark-side zone
+    classification of ``agg._zone_can_pred``.
 
     Small lists build the plain OR of per-value containment tests (stays
     inside codegen/pushdown). Chaining one OR per value grows the
@@ -270,69 +273,15 @@ def _prefix_zone_bounds(arrow_name: str, value) -> tuple[int, int]:
     return zone_pack8(vb), zone_pack8(vb[:8].ljust(8, b"\xff"))
 
 
-def _zone_prune(chunks: DataFrame, zsrc: DataFrame,
-                zone_filter: tuple[str, str, int | str],
-                arrow_name: str) -> DataFrame:
-    """Drop chunk groups whose zone map proves ``col op value`` matches no
-    row. Conservative: chunks with null zones (all-null chunks,
-    pre-zone-map encodes) are always kept. The zone predicate filters the
-    narrow (pid, chunk_id, zmin, zmax) projection at the parquet scan
-    (PushedFilters), and survivors semi-join back on the narrow chunk key
-    — pruned payload bytes are never read. Dispatch is on the COLUMN's
-    arrow type, never the Python type of the value (a numeric-looking
-    string id must still use prefix zones)."""
-    col, op, value = zone_filter
-    if op in ("contains", "suffix"):
-        # substring/suffix predicates carry no zone information (zones
-        # are PREFIXES; any 8-byte prefix interval can hold a match);
-        # dict/FSST-dictionary pruning (below, in pruned_chunks) is the
-        # only chunk-level lever
-        _prefix_bytes(arrow_name, value, op)  # type check only
-        return chunks
-    if op == "rlike":
-        # regex predicates likewise carry no zone information; dictionary
-        # pruning (when the pattern is Java/Python-alignment-safe) is the
-        # chunk-level lever
-        if arrow_name not in ("string", "large_string"):
-            raise ValueError(
-                f"'rlike' needs a string column; {col!r} is {arrow_name}")
-        return chunks
-    if op == "in":
-        # set membership: a chunk can match iff it can match ANY element
-        pred = zone_in_keep_pred(arrow_name, value)
-    elif op == "prefix":
-        # s LIKE 'p%': every match packs into [pack8(p), pack8(p padded
-        # with 0xff)] — both bounds follow from bytewise order, so the
-        # chunk interval test is exact on the PACKED keys (still a
-        # conservative chunk bound, since zones are themselves prefixes)
-        lo, hi = _prefix_zone_bounds(arrow_name, value)
-        pred = (F.col("zmax_long") >= lo) & (F.col("zmin_long") <= hi)
-    elif op in _ZONE_OPS:
-        zval, ops = _zone_key(arrow_name, value)  # typed: raises on mismatch
-        pred = ops[op](zval)
-    else:
-        raise ValueError(
-            f"zone op must be one of {sorted(_ZONE_OPS) + ['in', 'prefix']}, "
-            f"got {op!r}")
-    if "zmin_long" not in chunks.columns:
-        return chunks  # pre-zone-map encode: nothing to prune on
-    keep = (
-        zsrc.filter(F.col("column") == col)
-        .filter(F.col("zmin_long").isNull() | pred)
-        .select("pid", "chunk_id")
-    )
-    return chunks.join(keep, ["pid", "chunk_id"], "left_semi")
-
-
 def _dict_probes(value: "str | bytes | list",
                  prefix: bool = False,
                  contains: bool = False,
                  suffix: bool = False):
     """(length-bucketed probe byte-sets, prefix bytes or None, substring
     bytes or None, suffix bytes or None) for a dictionary membership test
-    — shared prep of ``_dict_value_drop`` and the ``fsst`` DataSource's
-    executor-side pruning. At most one of ``prefix``/``contains``/
-    ``suffix`` may be set; those modes are single-value."""
+    — the planner's (:mod:`jobs.plan`) probe prep. At most one of
+    ``prefix``/``contains``/``suffix`` may be set; those modes are
+    single-value."""
     vals = value if isinstance(value, (list, tuple, set)) else [value]
     probes = {v.encode("utf-8", "surrogatepass") if isinstance(v, str) else bytes(v)
               for v in vals}
@@ -405,36 +354,55 @@ def dict_payload_has_value(params: dict, payload: bytes,
     )
 
 
-def zone_keep(arrow_name: str, op: str, value, zmin, zmax) -> bool:
-    """Pure-Python chunk-survival test for one zone filter — the scalar
-    twin of ``_zone_prune`` for callers outside a Spark plan (the ``fsst``
-    DataSource prunes per chunk file inside ``read()``). Conservative:
-    null zones always keep; string zones are 8-byte prefixes, so strict
-    ops compare non-strictly (same rule as ``_ZONE_OPS_PREFIX``)."""
-    if zmin is None or zmax is None:
-        return True
-    if op in ("contains", "suffix"):
-        _prefix_bytes(arrow_name, value, op)  # type check only
-        return True  # substring/suffix predicates carry no zone info
-    if op == "rlike":
-        return True  # regex predicates carry no zone information
-    if op == "prefix":
-        lo, hi = _prefix_zone_bounds(arrow_name, value)
-        return zmax >= lo and zmin <= hi
+def zone_keep(arrow_name: str, op: str, value):
+    """Compile one zone filter into its chunk-survival test ``(zmin, zmax)
+    -> bool``, which the driver-side planner (:mod:`jobs.plan`) runs per
+    chunk. Dispatch is on the COLUMN's arrow type, never the Python type
+    of the value (a numeric-looking string id must still use prefix
+    zones), and a value/column type mismatch or an unknown op raises here,
+    before any chunk is read. Conservative: null zones always keep. Each
+    op is a key interval [lo, hi] the chunk's zone must meet; string zones
+    are 8-byte prefixes, so strict ops bound non-strictly there (same rule
+    as ``_ZONE_OPS_PREFIX``), while exact int keys tighten them by one.
+    ``in`` keeps a chunk whose zone holds ANY probe: one bisection over
+    the sorted packed probes, O(log V) per chunk."""
+    import bisect
+
+    if op in ("contains", "suffix", "rlike"):
+        # substring/suffix/regex predicates carry no zone information
+        # (zones are PREFIXES); dictionary pruning is their lever
+        if op == "rlike" and arrow_name not in ("string", "large_string"):
+            raise ValueError(f"'rlike' needs a string column, got {arrow_name}")
+        if op != "rlike":
+            _prefix_bytes(arrow_name, value, op)  # type check only
+        return lambda zmin, zmax: True
     if op == "in":
-        values = list(value)
-        if not values:
+        probes = sorted(_zone_key(arrow_name, v)[0] for v in value)
+        if not probes:
             raise ValueError("'in' filter needs a non-empty value list")
-        return any(zone_keep(arrow_name, "==", v, zmin, zmax) for v in values)
-    zval, ops = _zone_key(arrow_name, value)
-    exact = ops is _ZONE_OPS  # ints/timestamps/floats: exact zone bounds
-    if op == "==":
-        return zmin <= zval <= zmax
-    if op in (">", ">="):
-        return zmax > zval if (op == ">" and exact) else zmax >= zval
-    if op in ("<", "<="):
-        return zmin < zval if (op == "<" and exact) else zmin <= zval
-    raise ValueError(f"zone op must be one of {sorted(_ZONE_OPS) + ['in', 'prefix']}, got {op!r}")
+
+        def test(zmin, zmax):
+            return (bisect.bisect_left(probes, zmin)
+                    < bisect.bisect_right(probes, zmax))
+    else:
+        if op == "prefix":
+            # s LIKE 'p%': every match packs into [pack8(p), pack8(p padded
+            # with 0xff)] — exact on the packed keys by bytewise order
+            lo, hi = _prefix_zone_bounds(arrow_name, value)
+        elif op in _ZONE_OPS:
+            zval, ops = _zone_key(arrow_name, value)  # typed: raises on mismatch
+            strict = int(ops is _ZONE_OPS)  # exact int keys: > v means >= v+1
+            lo, hi = {"==": (zval, zval), ">=": (zval, None),
+                      ">": (zval + strict, None), "<=": (None, zval),
+                      "<": (None, zval - strict)}[op]
+        else:
+            raise ValueError(
+                f"zone op must be one of {sorted(_ZONE_OPS) + ['in', 'prefix']}, "
+                f"got {op!r}")
+
+        def test(zmin, zmax):
+            return (lo is None or zmax >= lo) and (hi is None or zmin <= hi)
+    return lambda zmin, zmax: zmin is None or zmax is None or test(zmin, zmax)
 
 
 # escapes whose Java-regex meaning is BROADER than (or absent from)
@@ -488,167 +456,28 @@ def _rlike_prunable(pattern: str):
         return None
 
 
-def _dict_regex_drop(spark, out_dir: str, col: str,
-                     pattern: str) -> DataFrame:
-    """(pid, chunk_id) DROP-set for ``col RLIKE pattern``: ``str_dict``
-    chunks whose dictionary contains NO value matching the (alignment-
-    safe, see ``_rlike_prunable``) pattern. Same scan shape as
-    ``_dict_value_drop`` — only dict-coded chunk rows of the filter
-    column are read, only the dictionary section decodes."""
-    src = (
-        _chunks_df(spark, out_dir, [col])
-        .filter(F.col("codec") == "str_dict")
-        .select("pid", "chunk_id", "params", "payload")
-    )
-
-    def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        rx = re.compile(pattern, re.ASCII)
-        for batch in batches:
-            pids, cids = [], []
-            for pid_s, cid_s, params_s, payload_s in zip(
-                    batch.column("pid"), batch.column("chunk_id"),
-                    batch.column("params"), batch.column("payload")):
-                if not dict_payload_has_value(
-                        json.loads(params_s.as_py()), payload_s.as_py(),
-                        {}, None, None, rx=rx):
-                    pids.append(pid_s.as_py())
-                    cids.append(cid_s.as_py())
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(pids, pa.int32()), pa.array(cids, pa.int32())],
-                names=["pid", "chunk_id"])
-
-    return src.mapInArrow(task, "pid int, chunk_id int")
-
-
-def _dict_value_drop(spark, out_dir: str, col: str,
-                     value: "str | bytes | list",
-                     prefix: bool = False,
-                     contains: bool = False,
-                     suffix: bool = False) -> DataFrame:
-    """(pid, chunk_id) DROP-set for ``col == value`` (or ``col IN values``
-    when a list is given; ``col LIKE value%`` when ``prefix``; ``col LIKE
-    %value%`` when ``contains``; ``col LIKE %value`` when ``suffix``):
-    the ``str_dict`` chunks whose dictionary
-    provably lacks EVERY probed value — they contain no
-    matching row, so none of their columns need be read or decoded. The
-    pass scans only the filter column's DICT-CODED chunk rows (both the
-    ``column ==`` and ``codec == 'str_dict'`` predicates push to the chunk
-    parquet scan, so non-dict payloads are never read) and decodes only
-    the (tiny) dictionary section — codes stay encoded. On categorical
-    columns (lang, source, content-type) this turns a value probe into a
-    near-metadata scan at 100 TB; on columns with no dict chunks the scan
-    matches zero rows and costs footer reads only."""
-    by_len, pfx, sub, sfx = _dict_probes(value, prefix, contains, suffix)
-    src = (
-        _chunks_df(spark, out_dir, [col])
-        .filter(F.col("codec") == "str_dict")  # pushed: plain/fsst payloads unread
-        .select("pid", "chunk_id", "params", "payload")
-    )
-
-    def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            pids, cids = [], []
-            # iterate columns directly: to_pylist() would materialize every
-            # payload into a Python list of dicts before use
-            for pid_s, cid_s, params_s, payload_s in zip(
-                    batch.column("pid"), batch.column("chunk_id"),
-                    batch.column("params"), batch.column("payload")):
-                has_value = dict_payload_has_value(
-                    json.loads(params_s.as_py()), payload_s.as_py(),
-                    by_len, pfx, sub, sfx)
-                if not has_value:
-                    pids.append(pid_s.as_py())
-                    cids.append(cid_s.as_py())
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(pids, pa.int32()), pa.array(cids, pa.int32())],
-                names=["pid", "chunk_id"])
-
-    return src.mapInArrow(task, "pid int, chunk_id int")
-
-
-def _bloom_value_drop(spark, out_dir: str, col: str,
-                      value, arrow_name: str) -> DataFrame:
-    """(pid, chunk_id) DROP-set for ``col == value`` / ``col IN values``
-    from per-chunk Bloom filters (``kernel.bloom``): chunks whose bloom
-    proves EVERY probed value absent contain no matching row. This is the
-    point-predicate complement of zone pruning — a ``url == X`` probe over
-    an UNCLUSTERED store, where every 8-byte prefix zone collapses, still
-    tests ~10 bits per chunk instead of decoding payloads. The scan reads
-    only the filter column's (pid, chunk_id, bloom) projection (blooms are
-    ~0.1% of payload bytes); chunks without a bloom (dict-coded — dict
-    pruning covers those exactly — disabled encodes, unsupported types)
-    are conservatively kept."""
-    vals = value if isinstance(value, (list, tuple, set)) else [value]
-    if arrow_name in _STRINGY:
-        probes = list(vals)  # bloom hashes str/bytes natively
-    elif arrow_name in _INTY:
-        probes = [int(v) for v in vals]
-    elif arrow_name.startswith("timestamp["):
-        # encode hashed the storage-unit int64 ticks; probe in the same unit
-        probes = [_ts_ticks(arrow_name, v) for v in vals]
-    else:
-        return spark.createDataFrame([], "pid int, chunk_id int")
-    src = (
-        _chunks_df(spark, out_dir, [col])
-        .filter(F.col("bloom").isNotNull())  # pushed: bloom-less rows unread
-        .select("pid", "chunk_id", "bloom")
-    )
-
-    def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..kernel.bloom import bloom_might_contain
-
-        for batch in batches:
-            pids, cids = [], []
-            for pid_s, cid_s, bloom_s in zip(
-                    batch.column("pid"), batch.column("chunk_id"),
-                    batch.column("bloom")):
-                if not bloom_might_contain(bloom_s.as_py(), probes):
-                    pids.append(pid_s.as_py())
-                    cids.append(cid_s.as_py())
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(pids, pa.int32()), pa.array(cids, pa.int32())],
-                names=["pid", "chunk_id"])
-
-    return src.mapInArrow(task, "pid int, chunk_id int")
+def _keep_keys(spark, chunks: DataFrame, keys: list) -> DataFrame:
+    """``chunks`` left-semi-joined to a broadcast of the planned keys."""
+    kdf = spark.createDataFrame(keys, "pid int, chunk_id int")
+    return chunks.join(F.broadcast(kdf), ["pid", "chunk_id"], "left_semi")
 
 
 def pruned_chunks(spark, out_dir: str, columns: list[str] | None,
                   filters: list[tuple[str, str, int | str]],
                   dict_prune: bool = True) -> DataFrame:
-    """Chunk rows for ``columns``, minus every chunk a zone map or a dict
-    dictionary proves cannot match the conjunction ``filters`` — the shared
-    pruning front-end of ``decode_job`` and the encoded-store aggregation
-    ops. No payload outside dict sections is read."""
+    """Chunk rows for ``columns``, minus every chunk a zone map, a dict
+    dictionary or a bloom proves cannot match the conjunction ``filters``:
+    the JVM chunk-row frame the encoded-store aggregations and deletes
+    still consume, restricted to the keys of the driver-side planner
+    (:mod:`jobs.plan`)."""
     chunks = _chunks_df(spark, out_dir, columns)
-    if filters:
-        types = column_arrow_types(spark, out_dir)  # KeyError guard below
-        for zf in filters:
-            if zf[0] not in types:
-                raise KeyError(f"columns not present in encoded data: [{zf[0]!r}]")
-            # the zone column may be outside the requested column subset, so
-            # each keep-set reads its own (narrow, zone-only) projection
-            zsrc = _chunks_df(spark, out_dir, [zf[0]])
-            chunks = _zone_prune(chunks, zsrc, zf, types[zf[0]])
-            if (dict_prune and zf[1] in ("==", "in", "prefix", "contains",
-                                         "suffix")
-                    and types[zf[0]] in _STRINGY):
-                drop = _dict_value_drop(spark, out_dir, zf[0], zf[2],
-                                        prefix=zf[1] == "prefix",
-                                        contains=zf[1] == "contains",
-                                        suffix=zf[1] == "suffix")
-                chunks = chunks.join(drop, ["pid", "chunk_id"], "left_anti")
-            if (dict_prune and zf[1] == "rlike"
-                    and types[zf[0]] in ("string", "large_string")
-                    and _rlike_prunable(zf[2]) is not None):
-                rdrop = _dict_regex_drop(spark, out_dir, zf[0], zf[2])
-                chunks = chunks.join(rdrop, ["pid", "chunk_id"],
-                                     "left_anti")
-            if (dict_prune and zf[1] in ("==", "in")
-                    and "bloom" in chunks.columns):
-                bdrop = _bloom_value_drop(spark, out_dir, zf[0], zf[2],
-                                          types[zf[0]])
-                chunks = chunks.join(bdrop, ["pid", "chunk_id"], "left_anti")
-    return chunks
+    if not filters:
+        return chunks
+    from .plan import plan_chunks
+
+    keys = plan_chunks(out_dir, columns, filters, dict_prune=dict_prune,
+                       types=column_arrow_types(spark, out_dir)).keys
+    return _keep_keys(spark, chunks, keys)
 
 
 def pruned_chunks_any(spark, out_dir: str, columns: list[str] | None,
@@ -656,25 +485,20 @@ def pruned_chunks_any(spark, out_dir: str, columns: list[str] | None,
                       dict_prune: bool = True) -> DataFrame:
     """Chunk rows for ``columns``, minus every chunk that NO branch of the
     disjunction ``filters`` can match — the OR complement of
-    ``pruned_chunks``. A chunk survives if any single branch's full
-    pruning stack (zones, dict sections, blooms) keeps it, so the
-    surviving set is exactly the union of the per-branch keep-sets; each
-    branch reuses the conjunctive pruner with itself as the only filter
-    (metadata-only scans, one per branch — OR fan-out is small in
-    practice)."""
+    ``pruned_chunks``: a chunk survives if any single branch's full
+    pruning stack (zones, dict sections, blooms) keeps it."""
     chunks = _chunks_df(spark, out_dir, columns)
     if not filters:
         return chunks
-    keep = None
-    for zf in filters:
-        k = pruned_chunks(spark, out_dir, columns, [zf], dict_prune) \
-            .select("pid", "chunk_id")
-        keep = k if keep is None else keep.unionByName(k)
-    return chunks.join(keep.distinct(), ["pid", "chunk_id"], "left_semi")
+    from .plan import plan_chunks
+
+    keys = plan_chunks(out_dir, columns, any_filters=filters,
+                       dict_prune=dict_prune,
+                       types=column_arrow_types(spark, out_dir)).keys
+    return _keep_keys(spark, chunks, keys)
 
 
-def chunk_repartition(spark, chunks: DataFrame, out_dir: str,
-                      ordered: bool = False) -> DataFrame:
+def chunk_repartition(spark, chunks: DataFrame, out_dir: str) -> DataFrame:
     """Shuffle chunk rows so all column rows of one chunk land in one task.
 
     Chunk rows are few and fat (payload ~MBs), so the shuffle moves encoded
@@ -682,28 +506,13 @@ def chunk_repartition(spark, chunks: DataFrame, out_dir: str,
     minimal. Partition count tracks the store size (one manifest file per
     encode partition — a driver-side listing, no data read): a small encode
     gets a few real tasks instead of defaultParallelism near-empty ones, a
-    big store still fans out to full parallelism.
-
-    ``ordered=True`` swaps the hash shuffle for a RANGE partition on
-    (pid, chunk_id) plus an in-partition sort of the (few, fat) chunk
-    rows: task i then holds chunks strictly before task i+1's, each task
-    decodes its chunks in order, and the decoded output is globally
-    ordered by (pid, chunk_id, row) WITHOUT any row-level sort — on a
-    store clustered by ``sort_key`` that IS key order, so a sorted
-    100 TB export costs the same chunk-metadata shuffle as a plain
-    decode."""
+    big store still fans out to full parallelism."""
     import glob as _glob
     import os as _os
 
     n_pids = len(_glob.glob(_os.path.join(out_dir, "manifest", "*.parquet")))
-    n_part = min(spark.sparkContext.defaultParallelism * 2,
-                 max(1, n_pids * 4)) if n_pids else None
-    if ordered:
-        rng = (chunks.repartitionByRange(n_part, "pid", "chunk_id")
-               if n_part else
-               chunks.repartitionByRange("pid", "chunk_id"))
-        return rng.sortWithinPartitions("pid", "chunk_id")
-    if n_part:
+    if n_pids:
+        n_part = min(spark.sparkContext.defaultParallelism * 2, n_pids * 4)
         return chunks.repartition(n_part, F.col("pid"), F.col("chunk_id"))
     # non-globbable store: keep the default-parallelism shuffle
     return chunks.repartition(F.col("pid"), F.col("chunk_id"))
@@ -742,18 +551,18 @@ def decode_job(spark, out_dir: str, columns: list[str] | None = None,
     any payload beyond the dictionary itself.
 
     ``as_of=N`` time-travels: only chunks committed by log entries 0..N
-    decode (a pid filter pushed into the metadata scan — commit entries
+    decode (the planner reads only those pids' files — commit entries
     are immutable, so the same N always yields the same rows).
 
-    ``ordered=True`` returns the rows globally ordered by
-    (pid, chunk_id, row position) — partition i strictly precedes
-    partition i+1 and rows within a partition are in chunk order — via a
-    RANGE partition of the chunk metadata, never a row-level sort (see
-    :func:`chunk_repartition`). On a store clustered with
-    ``encode_job(sort_key=K)`` this is K-order: a sorted export for the
-    price of a plain decode. Caveat: a store with UNMATERIALIZED
-    schema-log-added columns buffers its pre-add chunks to end-of-stream,
-    which breaks in-partition chunk order — materialize first."""
+    ``ordered=True`` guarantees the rows come globally ordered by
+    (pid, chunk_id, row position); every decode runs this way. Task i reads the file of the i-th pid
+    and decodes its chunks in file (chunk_id) order, so partition i
+    strictly precedes partition i+1 with no shuffle and no row-level
+    sort. On a store clustered with ``encode_job(sort_key=K)`` this is
+    K-order: a sorted export for the price of a plain decode. Caveat: a
+    store with UNMATERIALIZED schema-log-added columns buffers its pre-add
+    chunks to end-of-stream, which breaks in-partition chunk order —
+    materialize first."""
     ddl, out_cols = decoded_schema_ddl(spark, out_dir, columns)
     filters = list(zone_filters or [])
     if zone_filter is not None:
@@ -826,82 +635,63 @@ def decode_job(spark, out_dir: str, columns: list[str] | None = None,
             if out is not None:
                 yield out
 
-    if (not filters and not zone_filters_any and as_of is None
-            and _pids is None and _chunk_keys is None and not ordered):
-        # FILE-GRANULAR fast path (the decode mirror of the encode-side
-        # reroute): an unfiltered decode needs no chunk pruning and no
-        # grouping shuffle — every (pid, chunk_id) group already lives
-        # whole inside its pid's single chunk file, so one task per file
-        # reads it columnar-natively with pyarrow. This removes BOTH the
-        # payload shuffle (encoded bytes never cross an Exchange) and the
-        # JVM->Python hop of the chunk-metadata scan (only file paths
-        # cross), and reads just the six columns the decode needs —
-        # zones/bloom/hll/checksum bytes stay on disk.
-        import glob as _glob
-        import os as _os
+    # FILE-GRANULAR read: every (pid, chunk_id) group lives whole inside
+    # its pid's single chunk file, so each task reads a run of files
+    # columnar-natively with pyarrow — no chunk-row shuffle, no JVM->Python
+    # hop of a chunk-metadata scan (only file paths and keep-sets cross),
+    # and just the six columns the decode needs. A selective read first
+    # asks the driver-side planner (jobs.plan) which chunks can match:
+    # only files with survivors become tasks, and each task decodes only
+    # its planned keys. Tasks run in pid order, which makes `ordered` free.
+    from .plan import chunk_files, file_tasks_df, plan_chunks
 
-        files = sorted(_glob.glob(_os.path.join(out_dir, "chunks",
-                                                "*.parquet")))
-        if files:
-            if scan_columns is not None:
-                col_keep, col_drop = list(scan_columns), None
-            else:
-                col_keep = None
-                col_drop = sorted(dropped_columns(out_dir)) or None
-            from .encode import file_task_df
-
-            task_df = file_task_df(spark, list(enumerate(files)),
-                                   "i int, path string")
-
-            def read_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-                import pyarrow.compute as _pc
-                import pyarrow.parquet as _pq
-
-                def file_batches():
-                    for batch in batches:
-                        for path in batch.column("path").to_pylist():
-                            t = _pq.read_table(
-                                path, columns=["pid", "chunk_id", "column",
-                                               "codec", "params", "payload"])
-                            if col_keep is not None:
-                                t = t.filter(_pc.is_in(
-                                    t.column("column"),
-                                    pa.array(col_keep, pa.string())))
-                            elif col_drop is not None:
-                                t = t.filter(_pc.invert(_pc.is_in(
-                                    t.column("column"),
-                                    pa.array(col_drop, pa.string()))))
-                            yield from t.to_batches()
-
-                yield from decode_task(file_batches())
-
-            return task_df.mapInArrow(read_files, ddl)
-
-    chunks = pruned_chunks(spark, out_dir, scan_columns, filters, dict_prune)
     if as_of is not None and _pids is not None:
         raise ValueError("pass as_of OR a pid whitelist, not both")
     pids = _as_of_pids(out_dir, as_of) if as_of is not None else _pids
-    if pids is not None:
-        if not pids:  # valid empty commit range: no chunks visible
-            chunks = chunks.where(F.lit(False))
-        elif len(pids) <= 100_000:
-            chunks = chunks.where(F.col("pid").isin(pids))
-        else:  # snapshot spans many writes: semi join beats a giant IN plan
-            pdf = spark.createDataFrame([(p,) for p in pids], "pid int")
-            chunks = chunks.join(F.broadcast(pdf), "pid", "left_semi")
-    if _chunk_keys is not None:  # LIMIT pushdown: exactly these chunks
-        kdf = spark.createDataFrame(_chunk_keys, "pid int, chunk_id int")
-        chunks = chunks.join(F.broadcast(kdf), ["pid", "chunk_id"],
-                             "left_semi")
-    if zone_filters_any:
-        any_keep = pruned_chunks_any(spark, out_dir, columns,
-                                     list(zone_filters_any), dict_prune) \
-            .select("pid", "chunk_id").distinct()
-        chunks = chunks.join(any_keep, ["pid", "chunk_id"], "left_semi")
-    # sketches served their purpose at pruning time; don't shuffle them
-    chunks = chunk_repartition(spark, chunks.drop("bloom", "hll"), out_dir,
-                               ordered=ordered)
-    return chunks.mapInArrow(decode_task, ddl)
+    if (filters or zone_filters_any or pids is not None
+            or _chunk_keys is not None):
+        plan = plan_chunks(out_dir, scan_columns, filters, zone_filters_any,
+                           pids=pids, dict_prune=dict_prune, keys=_chunk_keys,
+                           types=column_arrow_types(
+                               spark, out_dir, include_added=True))
+        files = [(fp.path, fp.keys) for fp in plan.files]
+    else:
+        files = [(path, None) for _, path in chunk_files(out_dir)]
+    if scan_columns is not None:
+        col_keep, col_drop = list(scan_columns), None
+    else:
+        col_keep = None
+        col_drop = sorted(dropped_columns(out_dir)) or None
+
+    def read_file(path: str, keys: list | None) -> pa.Table:
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        t = pq.read_table(path, columns=["pid", "chunk_id", "column",
+                                         "codec", "params", "payload"])
+        if col_keep is not None:
+            t = t.filter(pc.is_in(t.column("column"),
+                                  pa.array(col_keep, pa.string())))
+        elif col_drop is not None:
+            t = t.filter(pc.invert(pc.is_in(t.column("column"),
+                                            pa.array(col_drop, pa.string()))))
+        if keys is not None:  # the planned keep-set
+            got = pc.add(pc.multiply(t.column("pid").cast(pa.int64()), 1 << 32),
+                         t.column("chunk_id").cast(pa.int64()))
+            t = t.filter(pc.is_in(got, pa.array([p << 32 | c for p, c in keys],
+                                                pa.int64())))
+        return t
+
+    def read_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        def file_batches():
+            for batch in batches:
+                for run in batch.column("files").to_pylist():
+                    for path, keys in json.loads(run):
+                        yield from read_file(path, keys).to_batches()
+
+        yield from decode_task(file_batches())
+
+    return file_tasks_df(spark, files).mapInArrow(read_files, ddl)
 
 
 def _row_predicate(col: str, op: str, value, arrow_name: str):
@@ -1015,10 +805,10 @@ def decode_plan(spark, out_dir: str, columns: list[str] | None = None,
                 any_filters: list[tuple] | None = None,
                 as_of: int | None = None) -> dict:
     """EXPLAIN for a selective decode — what :func:`decode_filtered` WOULD
-    read, from metadata alone (zone/dict/bloom pruning runs for real; no
-    payload chunk is ever decoded). The dry-run costs one narrow metadata
-    scan per pruning stage, so planning a query against a 100 TB store is
-    an interactive operation — the ops surface for "is my store clustered
+    read, from metadata alone: the driver-side planner (:mod:`jobs.plan`)
+    runs its zone, dict and bloom stages for real and no payload chunk is
+    ever decoded. It runs no Spark job, so planning a query is an
+    interactive operation — the ops surface for "is my store clustered
     for this predicate?" before committing a cluster-hours decode, and the
     decode sibling of ``store_join_plan``.
 
@@ -1041,6 +831,9 @@ def decode_plan(spark, out_dir: str, columns: list[str] | None = None,
     Filter-column payloads decode too in the real query (the exact row
     predicate needs them), so ``columns`` here widens exactly like
     ``decode_filtered``'s scan set."""
+    from .deletes import has_deletes
+    from .plan import plan_chunks
+
     flt = list(filters or [])
     any_flt = list(any_filters or [])
     types = column_arrow_types(spark, out_dir, include_added=True)
@@ -1052,63 +845,24 @@ def decode_plan(spark, out_dir: str, columns: list[str] | None = None,
         fcols = dict.fromkeys(f[0] for f in flt + any_flt)
         scan_cols = list(scan_cols) + [c for c in fcols
                                        if c not in scan_cols]
-
     pids = _as_of_pids(out_dir, as_of) if as_of is not None else None
-
-    def _restrict(chunks: DataFrame) -> DataFrame:
-        if pids is None:
-            return chunks
-        if not pids:
-            return chunks.where(F.lit(False))
-        return chunks.where(F.col("pid").isin(pids))
-
-    def _measure(chunks: DataFrame) -> tuple[int, int, int]:
-        """(n_chunks, n_rows, enc_bytes) — chunk count and row total are
-        per (pid, chunk_id) [every column of a chunk shares n_rows]; bytes
-        sum over all selected column rows (what the decode reads)."""
-        r = _restrict(chunks).agg(
-            F.count_distinct("pid", "chunk_id").alias("c"),
-            F.sum("enc_bytes").alias("b"),
-        ).collect()[0]
-        rows = (_restrict(chunks)
-                .select("pid", "chunk_id", "n_rows").distinct()
-                .agg(F.sum("n_rows")).collect()[0][0])
-        return int(r["c"] or 0), int(rows or 0), int(r["b"] or 0)
-
-    total_c, total_r, total_b = _measure(
-        _chunks_df(spark, out_dir, scan_cols))
-
-    def _keep(dict_prune: bool) -> DataFrame:
-        chunks = pruned_chunks(spark, out_dir, scan_cols, flt, dict_prune)
-        if any_flt:
-            any_keep = (pruned_chunks_any(spark, out_dir, scan_cols,
-                                          any_flt, dict_prune)
-                        .select("pid", "chunk_id").distinct())
-            chunks = chunks.join(any_keep, ["pid", "chunk_id"], "left_semi")
-        return chunks
-
-    if flt or any_flt:
-        zone_c, _, _ = _measure(_keep(dict_prune=False))
-        kept_c, kept_r, kept_b = _measure(_keep(dict_prune=True))
-    else:
-        zone_c, (kept_c, kept_r, kept_b) = total_c, (total_c, total_r,
-                                                     total_b)
-    from .deletes import has_deletes
-
+    c = plan_chunks(out_dir, scan_cols, flt, any_flt, pids=pids,
+                    types=types).counts
     return {
         "store": out_dir,
         "columns": sorted(scan_cols) if scan_cols is not None else None,
         "filters": [list(f) for f in flt],
         "any_filters": [list(f) for f in any_flt],
         "as_of": as_of,
-        "chunks_total": total_c,
-        "chunks_after_zones": zone_c,
-        "chunks_kept": kept_c,
-        "rows_total": total_r,
-        "rows_bound": kept_r,
-        "enc_bytes_total": total_b,
-        "enc_bytes_to_read": kept_b,
-        "scan_fraction": round(kept_b / total_b, 6) if total_b else 0.0,
+        "chunks_total": c["chunks_total"],
+        "chunks_after_zones": c["chunks_after_zones"],
+        "chunks_kept": c["chunks_kept"],
+        "rows_total": c["rows_total"],
+        "rows_bound": c["rows_kept"],
+        "enc_bytes_total": c["enc_bytes_total"],
+        "enc_bytes_to_read": c["enc_bytes_kept"],
+        "scan_fraction": (round(c["enc_bytes_kept"] / c["enc_bytes_total"], 6)
+                          if c["enc_bytes_total"] else 0.0),
         "has_deletes": has_deletes(out_dir),
     }
 
@@ -1165,48 +919,30 @@ def decode_head(spark, out_dir: str, n: int,
     chunks as the limit needs — ``SELECT * LIMIT 100`` against a 100 TB
     store reads one chunk file, not the store.
 
-    Chunk selection is metadata-only and deterministic: surviving chunks
-    (zone/dict/bloom-pruned when ``filters`` are given) in (pid, chunk_id)
-    order, taking the shortest prefix whose summed ``n_rows`` covers the
-    limit. Without filters or tombstones the metadata counts are exact and
-    ONE selection suffices. With row predicates (or tombstones) surviving
-    chunks may yield fewer rows than their counts, so the prefix doubles
-    until the limit is met or every surviving chunk is read — each retry
-    costs one count() over a chunk set that is still bounded by ~2× what
-    the limit ultimately needed. ``filters`` rows are exact (zone pruning
-    is conservative; the row predicates re-apply), so the returned rows
-    always satisfy them.
-
-    At 10^12 docs: the selection reads only the narrow
-    (pid, chunk_id, n_rows) metadata projection with a sort-limit (never
-    payload, never a full collect), and the decode plan is the normal
-    selective-decode plan over the selected chunk whitelist."""
+    Chunk selection is the driver-side planner's and deterministic:
+    surviving chunks (zone/dict/bloom-pruned when ``filters`` are given)
+    in (pid, chunk_id) order, taking the shortest prefix whose summed
+    ``n_rows`` covers the limit. Without filters or tombstones the
+    metadata counts are exact and ONE selection suffices. With row
+    predicates (or tombstones) surviving chunks may yield fewer rows than
+    their counts, so the prefix doubles until the limit is met or every
+    surviving chunk is read — each retry costs one count() over a chunk
+    set that is still bounded by ~2× what the limit ultimately needed.
+    ``filters`` rows are exact (zone pruning is conservative; the row
+    predicates re-apply), so the returned rows always satisfy them."""
     if n <= 0:
         raise ValueError(f"decode_head needs n > 0 (got {n})")
+    from .deletes import has_deletes
+    from .plan import plan_chunks
+
     flt = list(filters or [])
     fcols = [f[0] for f in flt]
     cols = columns
     if cols is not None:
         cols = cols + [c for c in fcols if c not in cols]
-    ddl, ordered = decoded_schema_ddl(spark, out_dir, cols)
-    from .deletes import has_deletes
-
-    exact = not flt and not has_deletes(out_dir)
     types = column_arrow_types(spark, out_dir, include_added=True)
-    from .schema import added_columns as _added_cols
-
-    # the n_rows carrier must exist in EVERY chunk: exclude all added-log
-    # columns (a materialized add is physical in new files only)
-    phys = sorted(set(column_arrow_types(spark, out_dir))
-                  - set(_added_cols(out_dir)))
-    meta_col = next((c for c in ordered if c in phys), phys[0])
-    scan_cols = (cols if cols is None or meta_col in cols
-                 else cols + [meta_col])
-    src = (pruned_chunks(spark, out_dir, scan_cols, flt) if flt
-           else _chunks_df(spark, out_dir, scan_cols))
-    meta = (src.where(F.col("column") == meta_col)
-            .select("pid", "chunk_id", "n_rows")
-            .orderBy("pid", "chunk_id"))
+    plan = plan_chunks(out_dir, None, flt, types=types)
+    chunks = [(k, fp.n_rows[k]) for fp in plan.files for k in fp.keys]
 
     def build(keys):
         df = decode_job(spark, out_dir, cols, _chunk_keys=keys)
@@ -1216,21 +952,18 @@ def decode_head(spark, out_dir: str, n: int,
             df = df.drop(*[c for c in fcols if c not in columns])
         return df
 
+    if not flt and not has_deletes(out_dir):  # exact counts: one selection
+        keys, got = [], 0
+        for key, rows in chunks:
+            if got >= n:
+                break
+            keys.append(key)
+            got += rows
+        return build(keys).limit(n)
     k = 1
     while True:
-        rows = meta.limit(k).collect()
-        got = 0
-        keys = []
-        for r in rows:
-            keys.append((r["pid"], r["chunk_id"]))
-            got += r["n_rows"]
-            if exact and got >= n:
-                break
-        df = build(keys)
-        if exact and got >= n:
-            return df.limit(n)
-        exhausted = len(rows) < k
-        if exhausted or df.limit(n).count() >= n:
+        df = build([key for key, _ in chunks[:k]])
+        if k >= len(chunks) or df.limit(n).count() >= n:
             return df.limit(n)
         k *= 2
 

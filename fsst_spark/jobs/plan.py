@@ -1,0 +1,323 @@
+"""Driver-side chunk planner: which chunks of a store a selective read
+must decode — the one pruning implementation.
+
+Every selective read asks it: ``decode_job`` (filters, OR branches,
+``as_of``, pid and chunk-key whitelists), ``decode_plan``,
+``decode_head``, the ``fsst`` DataSource's ``partitions()``,
+``stats.encoded_column_minmax``, and the ``pruned_chunks`` adapters that
+the aggregations and deletes join against. It reads chunk metadata with
+pyarrow and starts no Spark job. Per chunk file it reads the narrow
+columns ``META_COLS``; the ``bloom`` column, only while a chunk of an
+``==``/``in`` filter column that is not dict-coded is still live (only
+those columns' blooms are probed); and ``params, payload`` of the filter
+column's ``str_dict`` rows (a parquet row filter), only while such a
+chunk is still live — only its dictionary section decodes.
+
+Every stage is conservative: null zones (all-null chunks) keep, and so do
+stores written before zone maps or blooms. A chunk with no row for a
+filter column (written before a schema-log ADD COLUMN) holds only NULLs
+there, which no predicate matches, so it drops.
+"""
+
+from __future__ import annotations
+
+import glob
+import json
+import os
+from collections import Counter
+from dataclasses import dataclass, field
+
+import pyarrow.parquet as pq
+
+from .decode import (
+    _INTY,
+    _STRINGY,
+    _dict_probes,
+    _rlike_prunable,
+    _ts_ticks,
+    dict_payload_has_value,
+    zone_keep,
+)
+
+META_COLS = ("pid", "chunk_id", "column", "codec", "n_rows", "enc_bytes",
+             "zmin_long", "zmax_long")
+
+
+def chunk_files(store: str, pids=None) -> list[tuple[int, str]]:
+    """``(pid, path)`` of the store's chunk files in pid order, restricted
+    to ``pids`` when given. Raises FileNotFoundError when the store has no
+    chunk file at all: the file-granular readers open chunk files with
+    pyarrow, so a store must be a local or mounted directory."""
+    paths = glob.glob(os.path.join(store, "chunks", "part-*.parquet"))
+    if not paths:
+        raise FileNotFoundError(
+            f"no chunk files under {store!r} (readers open chunk files "
+            "with pyarrow: the store must be a local or mounted directory)")
+    pids = None if pids is None else set(pids)
+    out = []
+    for path in paths:
+        pid = int(os.path.basename(path)[len("part-"):-len(".parquet")])
+        if pids is None or pid in pids:
+            out.append((pid, path))
+    return sorted(out)
+
+
+def file_tasks_df(spark, files: list):
+    """Task frame for the file-granular readers: one row, and one Spark
+    task, per contiguous run of ``files`` (``(path, keep-set or None)`` in
+    pid order, so task order is pid order). Runs are packed the way Spark
+    splits a file scan: a run closes before it would pass
+    ``min(maxPartitionBytes, max(openCostInBytes, total /
+    defaultParallelism))`` bytes, where the total counts each file's size
+    plus the open cost. A read of a few small files is then a few tasks,
+    not one Python task start per file. Row schema: ``files string``,
+    the JSON list of the run's ``[path, keys]``."""
+    from .encode import file_task_df
+
+    conf = spark._jsparkSession.sessionState().conf()
+    open_cost = conf.filesOpenCostInBytes()
+    sizes = [os.path.getsize(path) for path, _ in files]
+    total = sum(sizes) + open_cost * len(sizes)
+    split = min(conf.filesMaxPartitionBytes(),
+                max(open_cost, total // spark.sparkContext.defaultParallelism))
+    runs, run, run_bytes = [], [], 0
+    for f, size in zip(files, sizes):
+        if run and run_bytes + size > split:
+            runs.append(run)
+            run, run_bytes = [], 0
+        run.append(f)
+        run_bytes += size + open_cost
+    if run:
+        runs.append(run)
+    return file_task_df(spark, [(json.dumps(r),) for r in runs], "files string")
+
+
+def read_file_meta(path: str) -> tuple[pq.ParquetFile, dict[str, list]]:
+    """(the open chunk file, its ``META_COLS`` as Python lists); a
+    metadata column missing from a file written before it existed reads
+    as nulls."""
+    pf = pq.ParquetFile(path)
+    names = pf.schema_arrow.names
+    t = pf.read(columns=[c for c in META_COLS if c in names])
+    return pf, {c: (t.column(c).to_pylist() if c in names
+                    else [None] * t.num_rows) for c in META_COLS}
+
+
+def _bloom_probes(arrow_name: str, value) -> list | None:
+    """Probe values typed the way encode hashed the column (strings
+    natively, ints as-is, timestamps in storage-unit ticks), or None when
+    the column type carries no blooms."""
+    vals = value if isinstance(value, (list, tuple, set)) else [value]
+    if arrow_name in _STRINGY:
+        return list(vals)
+    if arrow_name in _INTY:
+        return [int(v) for v in vals]
+    if arrow_name.startswith("timestamp["):
+        return [_ts_ticks(arrow_name, v) for v in vals]
+    return None
+
+
+@dataclass
+class _Filter:
+    """One ``(col, op, value)`` predicate, type-checked and compiled once
+    per plan."""
+    col: str
+    zone: object            # (zmin, zmax) -> may the chunk match?
+    bloom: list | None      # typed bloom probes (==/in only)
+    dict_args: dict | None  # dict_payload_has_value probe arguments
+
+    @classmethod
+    def compile(cls, types: dict[str, str], f: tuple,
+                dict_prune: bool) -> "_Filter":
+        col, op, value = f
+        if col not in types:
+            raise KeyError(f"columns not present in encoded data: [{col!r}]")
+        arrow_name = types[col]
+        zone = zone_keep(arrow_name, op, value)  # raises on a bad op/value
+        bloom = dict_args = None
+        if dict_prune and op in ("==", "in"):
+            bloom = _bloom_probes(arrow_name, value)
+        if (dict_prune and arrow_name in _STRINGY
+                and op in ("==", "in", "prefix", "contains", "suffix")):
+            by_len, pfx, sub, sfx = _dict_probes(
+                value, prefix=op == "prefix", contains=op == "contains",
+                suffix=op == "suffix")
+            dict_args = {"by_len": by_len, "pfx": pfx, "sub": sub,
+                         "sfx": sfx}
+        elif dict_prune and op == "rlike":
+            rx = _rlike_prunable(value)
+            if rx is not None:
+                dict_args = {"by_len": {}, "pfx": None, "rx": rx}
+        return cls(col, zone, bloom, dict_args)
+
+
+class _FileState:
+    """Metadata of one chunk file plus the sketch cells read lazily from
+    it, keyed by ``(column, (pid, chunk_id))``."""
+
+    def __init__(self, path: str, bloom_cols: set[str]):
+        self.path = path
+        self.pf, self.meta = read_file_meta(path)
+        meta = self.meta
+        self.bloom_cols = bloom_cols  # the ==/in filter columns
+        self.zones: dict = {}
+        self.codecs: dict = {}
+        for pid, cid, col, codec, zmin, zmax in zip(
+                meta["pid"], meta["chunk_id"], meta["column"],
+                meta["codec"], meta["zmin_long"], meta["zmax_long"]):
+            self.zones[(col, (pid, cid))] = (zmin, zmax)
+            self.codecs[(col, (pid, cid))] = codec
+        self._blooms: dict | None = None
+        self._dicts: dict[str, dict] = {}
+
+    def zone_ok(self, f: _Filter, key) -> bool:
+        z = self.zones.get((f.col, key))
+        return z is not None and f.zone(*z)
+
+    def blooms(self) -> dict:
+        if self._blooms is None:
+            self._blooms = {}
+            if "bloom" in self.pf.schema_arrow.names:
+                m = self.meta
+                blobs = self.pf.read(columns=["bloom"]).column("bloom")
+                for i, (pid, cid, col) in enumerate(
+                        zip(m["pid"], m["chunk_id"], m["column"])):
+                    if col in self.bloom_cols:
+                        self._blooms[(col, (pid, cid))] = blobs[i].as_py()
+        return self._blooms
+
+    def dicts(self, col: str) -> dict:
+        if col not in self._dicts:
+            t = pq.read_table(self.path,
+                              columns=["pid", "chunk_id", "params", "payload"],
+                              filters=[("column", "==", col),
+                                       ("codec", "==", "str_dict")])
+            self._dicts[col] = {
+                (pid, cid): (params, payload)
+                for pid, cid, params, payload in zip(
+                    *(t.column(c).to_pylist()
+                      for c in ("pid", "chunk_id", "params", "payload")))}
+        return self._dicts[col]
+
+    def sketch_keep(self, f: _Filter, live: set) -> set:
+        """``live`` minus the chunks whose bloom or dictionary proves that
+        no row matches ``f``."""
+        from ..kernel.bloom import bloom_might_contain
+
+        out = set(live)
+        # dict-coded chunks carry no bloom (their dictionary prunes exactly)
+        if f.bloom is not None and any(
+                self.codecs.get((f.col, k)) != "str_dict" for k in out):
+            blooms = self.blooms()
+            out = {k for k in out
+                   if bloom_might_contain(blooms.get((f.col, k)), f.bloom)}
+        if f.dict_args is not None:
+            cand = [k for k in out if self.codecs.get((f.col, k)) == "str_dict"]
+            if cand:
+                dicts = self.dicts(f.col)
+                for k in cand:
+                    params, payload = dicts[k]
+                    if not dict_payload_has_value(json.loads(params), payload,
+                                                  **f.dict_args):
+                        out.discard(k)
+        return out
+
+
+@dataclass
+class FilePlan:
+    path: str
+    keys: list[tuple[int, int]]          # kept (pid, chunk_id), sorted
+    n_rows: dict = field(repr=False)     # kept key -> chunk row count
+
+
+@dataclass
+class ChunkPlan:
+    """Surviving files (pid order) with their keep-sets, and the per-stage
+    counts ``decode_plan`` reports: ``{chunks,rows,enc_bytes}_total``,
+    ``chunks_after_zones`` and ``{chunks,rows,enc_bytes}_kept``."""
+    files: list[FilePlan] = field(default_factory=list)
+    counts: Counter = field(default_factory=Counter)
+
+    @property
+    def keys(self) -> list[tuple[int, int]]:
+        return [k for fp in self.files for k in fp.keys]
+
+
+def _plan_file(path: str, col_ok, conj: list[_Filter], disj: list[_Filter],
+               dict_prune: bool, keys=None) -> tuple[FilePlan, dict]:
+    """(the file's keep-set, its per-stage counts)."""
+    state = _FileState(path, {f.col for f in conj + disj if f.bloom is not None})
+    meta = state.meta
+    n_rows: dict = {}
+    nbytes: dict = {}
+    for pid, cid, col, n, b in zip(meta["pid"], meta["chunk_id"],
+                                   meta["column"], meta["n_rows"],
+                                   meta["enc_bytes"]):
+        if col_ok(col) and (keys is None or (pid, cid) in keys):
+            n_rows[(pid, cid)] = n
+            nbytes[(pid, cid)] = nbytes.get((pid, cid), 0) + b
+    zoned = {k for k in n_rows if all(state.zone_ok(f, k) for f in conj)}
+    kept = zoned
+    if dict_prune:
+        for f in conj:
+            kept = state.sketch_keep(f, kept)
+    if disj:
+        zoned = {k for k in zoned if any(state.zone_ok(b, k) for b in disj)}
+        if dict_prune:
+            kept = set().union(*(
+                state.sketch_keep(b, {k for k in kept if state.zone_ok(b, k)})
+                for b in disj))
+        else:
+            kept = zoned
+    counts = {
+        "chunks_total": len(n_rows),
+        "rows_total": sum(n_rows.values()),
+        "enc_bytes_total": sum(nbytes.values()),
+        "chunks_after_zones": len(zoned),
+        "chunks_kept": len(kept),
+        "rows_kept": sum(n_rows[k] for k in kept),
+        "enc_bytes_kept": sum(nbytes[k] for k in kept),
+    }
+    return FilePlan(path, sorted(kept), {k: n_rows[k] for k in kept}), counts
+
+
+def plan_chunks(store: str, columns: list[str] | None = None,
+                filters=None, any_filters=None, pids=None,
+                dict_prune: bool = True, keys=None,
+                types: dict[str, str] | None = None) -> ChunkPlan:
+    """Plan a read of ``columns`` (None: every column not dropped) under
+    ``AND(filters) AND OR(any_filters)``, restricted to the files of
+    ``pids`` and to the ``(pid, chunk_id)`` whitelist ``keys`` when given.
+
+    ``types`` are the column types filters are checked against (needed
+    only with filters). An unknown filter column raises KeyError and a
+    mistyped filter value TypeError, before any file is read."""
+    conj = [_Filter.compile(types, f, dict_prune) for f in filters or []]
+    disj = [_Filter.compile(types, f, dict_prune) for f in any_filters or []]
+    if columns is not None:
+        col_ok = set(columns).__contains__
+    else:
+        from .schema import dropped_columns
+
+        dropped = dropped_columns(store)
+        col_ok = lambda c: c not in dropped  # noqa: E731
+    key_set = None if keys is None else set(map(tuple, keys))
+    if key_set is not None:
+        kp = {p for p, _ in key_set}
+        pids = kp if pids is None else kp & set(pids)
+    plan = ChunkPlan()
+    for _, path in chunk_files(store, pids):
+        fp, counts = _plan_file(path, col_ok, conj, disj, dict_prune, key_set)
+        plan.counts.update(counts)
+        if fp.keys:
+            plan.files.append(fp)
+    return plan
+
+
+def file_survivors(path: str, filters: list[tuple],
+                   types: dict[str, str]) -> set[tuple[int, int]]:
+    """The ``(pid, chunk_id)`` keys of one chunk file that may match the
+    conjunction ``filters``: the planner's per-file entry point."""
+    conj = [_Filter.compile(types, f, True) for f in filters]
+    fp, _ = _plan_file(path, lambda c: True, conj, [], True)
+    return set(fp.keys)

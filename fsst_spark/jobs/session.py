@@ -64,7 +64,7 @@ def get_spark(master: str | None = None, app_name: str = "fsst_spark",
     if master:
         b = b.master(master)
         if master.startswith("local"):
-            mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
+            mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
             b = b.config("spark.driver.memory", mem)
             # Pinned, pre-touched heap with a non-uncommitting GC: G1 keeps
             # returning regions to the OS, which re-faults them on the next
@@ -85,6 +85,22 @@ def get_spark(master: str | None = None, app_name: str = "fsst_spark",
             b = (b.config("spark.python.daemon.module", "fsst_spark.daemon")
                  .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT))
     return b.getOrCreate()
+
+
+def _default_driver_mem() -> str:
+    """Local driver heap: ``min(8g, MemTotal/4)``, or 8g when
+    ``/proc/meminfo`` is unreadable. The heap is pre-touched (see above),
+    so it is resident from start-up: a quarter of RAM leaves room for a
+    second local session (a CLI run next to a notebook or test fixture)
+    plus the Python workers."""
+    try:
+        with open("/proc/meminfo") as fh:
+            for line in fh:
+                if line.startswith("MemTotal:"):
+                    return f"{min(8 << 10, int(line.split()[1]) // 4096)}m"
+    except (OSError, ValueError, IndexError):
+        pass
+    return "8g"
 
 
 def _parse_local_cores(master: str | None) -> int | None:

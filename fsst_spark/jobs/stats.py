@@ -74,12 +74,13 @@ def encoded_column_minmax(spark, out_dir: str, column: str) -> dict:
     they still locate the extremes: the store's minimum value lives in a
     chunk whose ``zmin_long`` equals the global minimum zone key (its
     packed prefix IS that chunk's zmin), and symmetrically for the max. So:
-    one metadata aggregation finds the extreme keys, the chunks achieving
-    them become candidates (ties on the 8-byte prefix keep several — a
+    a driver-side read of the chunk metadata (the planner's,
+    :mod:`jobs.plan`) finds the extreme keys, the chunks achieving them
+    become candidates (ties on the 8-byte prefix keep several — a
     constant-prefix column keeps all, correct but unselective; cluster by a
-    selective key to bound it), and a distributed pass decodes ONLY those
-    candidates, reducing each to a per-chunk min/max before a final
-    metadata-scale aggregate. On a clustered 100 TB store ``min(url)`` /
+    selective key to bound it), and ONE file-granular Spark job decodes
+    only those candidates, reducing each to a per-chunk min/max that the
+    driver folds. On a clustered 100 TB store ``min(url)`` /
     ``max(price)`` reads ~2 chunks instead of everything.
 
     Returns ``{"min", "max", "n_rows", "n_chunks_total",
@@ -87,31 +88,36 @@ def encoded_column_minmax(spark, out_dir: str, column: str) -> dict:
     column is all null). Float min/max follow Spark/DuckDB NaN ordering
     (NaN greatest; min/max never return NaN unless every value is NaN).
     """
+    from .plan import chunk_files, file_tasks_df, read_file_meta
+
     _require_no_deletes(out_dir, 'encoded_column_minmax')
     types = column_arrow_types(spark, out_dir)
     if column not in types:
         raise KeyError(f"column {column!r} not in encoded data")
     arrow_name = types[column]
-    meta = _chunks_df(spark, out_dir, [column])
-    if "zmin_long" not in meta.columns:
-        raise ValueError("store has no zone maps (pre-zone encode)")
-    agg = meta.agg(
-        F.sum("n_rows").alias("n_rows"),
-        F.min("zmin_long").alias("gmin"),
-        F.max("zmax_long").alias("gmax"),
-        F.count("*").alias("n_chunks"),
-    ).collect()[0]
-    out = {"n_rows": agg["n_rows"], "n_chunks_total": agg["n_chunks"],
+    rows = []  # (path, key, zmin, zmax, n_rows) of the column's chunks
+    for _, path in chunk_files(out_dir):
+        pf, m = read_file_meta(path)
+        if "zmin_long" not in pf.schema_arrow.names:
+            raise ValueError("store has no zone maps (pre-zone encode)")
+        rows += [(path, (p, c), lo, hi, n) for p, c, col, lo, hi, n in zip(
+            m["pid"], m["chunk_id"], m["column"], m["zmin_long"],
+            m["zmax_long"], m["n_rows"]) if col == column]
+    out = {"n_rows": sum(r[4] for r in rows), "n_chunks_total": len(rows),
            "n_chunks_decoded": 0, "min": None, "max": None}
-    if agg["gmin"] is None:  # every chunk all-null
+    zmins = [r[2] for r in rows if r[2] is not None]
+    if not zmins:  # every chunk all-null
         return out
+    gmin, gmax = min(zmins), max(r[3] for r in rows if r[3] is not None)
     if arrow_name in _EXACT_ZONE_TYPES or arrow_name.startswith("timestamp["):
         # int/timestamp zones ARE the exact bounds (ts in storage ticks)
-        out["min"], out["max"] = agg["gmin"], agg["gmax"]
+        out["min"], out["max"] = gmin, gmax
         return out
     # boundary candidates: chunks whose zone touches a global extreme
-    cand = meta.filter((F.col("zmin_long") == agg["gmin"])
-                       | (F.col("zmax_long") == agg["gmax"]))
+    cand: dict[str, list] = {}
+    for path, key, lo, hi, _ in rows:
+        if lo == gmin or hi == gmax:
+            cand.setdefault(path, []).append(key)
     spark_t = _spark_type(arrow_name)
     is_float = arrow_name in ("float", "double")
     out_schema = pa.schema([("mn", _PA_BY_SPARK[spark_t]),
@@ -120,42 +126,57 @@ def encoded_column_minmax(spark, out_dir: str, column: str) -> dict:
     def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import numpy as np
         import pyarrow.compute as pc
+        import pyarrow.parquet as pq
 
         from ..kernel.codecs import decode_column
 
         for batch in batches:
             mns, mxs = [], []
-            for row in batch.to_pylist():
-                arr = decode_column(
-                    {"codec": row["codec"], "params": json.loads(row["params"]),
-                     "payload": row["payload"]}).drop_null()
-                if len(arr) == 0:
-                    continue
-                if is_float:
-                    # Spark/DuckDB ordering: NaN greatest, so a chunk with
-                    # any NaN has max NaN; min is NaN only when all-NaN
-                    v = arr.to_numpy(zero_copy_only=False).astype(np.float64)
-                    finite = v[~np.isnan(v)]
-                    if len(finite) == 0:
-                        mns.append(float("nan"))
-                        mxs.append(float("nan"))
+            for path, keys in (f for run in batch.column("files").to_pylist()
+                               for f in json.loads(run)):
+                want = {tuple(k) for k in keys}
+                t = pq.read_table(
+                    path, columns=["pid", "chunk_id", "codec", "params",
+                                   "payload"],
+                    filters=[("column", "==", column)])
+                for row in t.to_pylist():
+                    if (row["pid"], row["chunk_id"]) not in want:
+                        continue
+                    arr = decode_column(
+                        {"codec": row["codec"],
+                         "params": json.loads(row["params"]),
+                         "payload": row["payload"]}).drop_null()
+                    if len(arr) == 0:
+                        continue
+                    if is_float:
+                        # Spark/DuckDB ordering: NaN greatest, so a chunk
+                        # with any NaN has max NaN; min is NaN only when
+                        # all-NaN
+                        v = arr.to_numpy(zero_copy_only=False).astype(np.float64)
+                        finite = v[~np.isnan(v)]
+                        if len(finite) == 0:
+                            mns.append(float("nan"))
+                            mxs.append(float("nan"))
+                        else:
+                            mns.append(float(finite.min()))
+                            mxs.append(float("nan") if len(finite) < len(v)
+                                       else float(finite.max()))
                     else:
-                        mns.append(float(finite.min()))
-                        mxs.append(float("nan") if len(finite) < len(v)
-                                   else float(finite.max()))
-                else:
-                    mm = pc.min_max(arr)
-                    mns.append(mm["min"].as_py())
-                    mxs.append(mm["max"].as_py())
+                        mm = pc.min_max(arr)
+                        mns.append(mm["min"].as_py())
+                        mxs.append(mm["max"].as_py())
             yield pa.RecordBatch.from_pylist(
                 [{"mn": a, "mx": b} for a, b in zip(mns, mxs)],
                 schema=out_schema)
 
-    per_chunk = cand.mapInArrow(task, f"mn {spark_t}, mx {spark_t}")
-    rows = per_chunk.agg(F.min("mn").alias("mn"), F.max("mx").alias("mx"),
-                         F.count("*").alias("n")).collect()[0]
-    out["min"], out["max"] = rows["mn"], rows["mx"]
-    out["n_chunks_decoded"] = rows["n"]
+    per_chunk = (file_tasks_df(spark, list(cand.items()))
+                 .mapInArrow(task, f"mn {spark_t}, mx {spark_t}").collect())
+    if per_chunk:
+        # NaN sorts greatest (Spark/DuckDB); other types compare natively
+        order = (lambda v: (v != v, v)) if is_float else None  # noqa: E731
+        out["min"] = min((r["mn"] for r in per_chunk), key=order)
+        out["max"] = max((r["mx"] for r in per_chunk), key=order)
+    out["n_chunks_decoded"] = len(per_chunk)
     return out
 
 

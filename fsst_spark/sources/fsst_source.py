@@ -11,20 +11,21 @@ writes like any other format::
                  .where("lang = 'de' AND n_chars >= 300"))
 
 Why this matters at 100 TB: ``pushFilters`` hands the WHERE clause to the
-source during planning, and each read task prunes its chunk file with the
-same metadata stack ``decode_filtered`` uses — zone maps, dictionary
-membership, Bloom filters — before touching any payload bytes. A fully
-pruned file costs one narrow-column footer read; payload columns of
-pruned files are never fetched (columnar parquet IO). Spark re-applies
-the exact row predicates on top (``pushFilters`` returns every filter as
-"still needs evaluation"), so chunk-granular pruning can never change
-results — the same conservative contract as parquet row-group stats.
+source during planning, and ``partitions()`` runs the same driver-side
+chunk planner ``decode_filtered`` uses (:mod:`jobs.plan` — zone maps,
+dictionary membership, Bloom filters, all from metadata). Only chunk
+files with a surviving chunk become input partitions, each carrying its
+keep-set, so a point lookup on a clustered store reads one file, and the
+read task decodes only the planned chunks. Spark re-applies the exact row
+predicates on top (``pushFilters`` returns every filter as "still needs
+evaluation"), so chunk-granular pruning can never change results — the
+same conservative contract as parquet row-group stats.
 
 Execution shape: ``partitions()`` is one :class:`InputPartition` per
-chunk file (the encode task granularity), listed driver-side — the same
-O(#files) listing Spark's own ``FileIndex`` does for parquet. All
-pruning and decoding happens executor-side inside ``read()``; the driver
-never reads data. The write path routes each input partition through
+surviving chunk file (the encode task granularity), listed and planned
+driver-side — the metadata-only counterpart of the listing Spark's own
+``FileIndex`` does for parquet. Decoding happens executor-side inside
+``read()``. The write path routes each input partition through
 ``jobs.encode._encode_one_partition`` — identical chunk layout, zone
 maps, sketches, and atomic-rename durability as ``encode_job``, so a
 store written via ``df.write.format("fsst")`` is indistinguishable from
@@ -84,10 +85,6 @@ from pyspark.sql.datasource import (
 if TYPE_CHECKING:  # pragma: no cover
     import pyarrow as pa
 
-# narrow projection that drives pruning: everything except payload bytes
-_META_COLS = ["pid", "chunk_id", "column", "codec", "params",
-              "zmin_long", "zmax_long"]
-
 _FILTER_OPS = {
     EqualTo: "==",
     GreaterThan: ">",
@@ -135,6 +132,7 @@ def _store_ddl(col_types: dict[str, str]) -> str:
 @dataclass
 class _ChunkFilePartition(InputPartition):
     path: str
+    keys: list | None = None  # planned (pid, chunk_id) keep-set; None: all
 
 
 # ---------------------------------------------------------------------------
@@ -256,127 +254,6 @@ def _translate_filter(f: Filter, col_types: dict[str, str]):
     return (col, op, value)
 
 
-def _file_survivors(path: str, filters: list[tuple],
-                    col_types: dict[str, str]) -> "set[tuple[int, int]] | None":
-    """(pid, chunk_id) keys in one chunk file that survive every pruning
-    stage for the conjunction ``filters`` — or None for "all survive"
-    (no filters), letting the caller skip the key-membership filter.
-
-    Stage order mirrors ``pruned_chunks``: zone intervals first (needs
-    only the already-read meta columns), then dictionary membership and
-    Bloom probes, which read the filter column's payload/bloom cells for
-    still-live chunks only. Everything here runs in the read task —
-    driver-side cost stays O(#files)."""
-    import pyarrow.parquet as pq
-
-    from ..jobs.decode import _STRINGY, zone_keep
-
-    if not filters:
-        return None
-    have = set(pq.read_schema(path).names)
-    meta = pq.read_table(path, columns=[c for c in _META_COLS if c in have])
-    n = meta.num_rows
-    zmins = (meta.column("zmin_long").to_pylist() if "zmin_long" in have
-             else [None] * n)  # pre-zone-map store: conservatively keep all
-    zmaxs = (meta.column("zmax_long").to_pylist() if "zmax_long" in have
-             else [None] * n)
-    zones: dict[tuple[str, tuple[int, int]], tuple] = {}
-    keys: set[tuple[int, int]] = set()
-    for pid, cid, col, zmin, zmax in zip(
-            meta.column("pid").to_pylist(), meta.column("chunk_id").to_pylist(),
-            meta.column("column").to_pylist(), zmins, zmaxs):
-        keys.add((pid, cid))
-        zones[(col, (pid, cid))] = (zmin, zmax)
-    live = {
-        k for k in keys
-        if all(zone_keep(col_types[col], op, value, *zones.get((col, k), (None, None)))
-               for col, op, value in filters)
-    }
-    for col, op, value in filters:
-        if not live:
-            break
-        if col_types[col] in _STRINGY and op in ("==", "in", "prefix",
-                                                 "contains", "suffix"):
-            live = _dict_survivors(path, meta, col, op, value, live)
-        if op in ("==", "in"):
-            live = _bloom_survivors(path, meta, col, value, col_types[col], live)
-    return live
-
-
-def _bloom_survivors(path: str, meta: "pa.Table", col: str, value,
-                     arrow_name: str, live: set) -> set:
-    """Drop live chunks whose Bloom filter proves every probed value
-    absent — the same typing rules as ``_bloom_value_drop`` (strings
-    hash natively, ints as-is, timestamps in storage-unit ticks)."""
-    import pyarrow.parquet as pq
-
-    from ..jobs.decode import _INTY, _STRINGY, _ts_ticks
-    from ..kernel.bloom import bloom_might_contain
-
-    vals = value if isinstance(value, (list, tuple, set)) else [value]
-    if arrow_name in _STRINGY:
-        probes = list(vals)
-    elif arrow_name in _INTY:
-        probes = [int(v) for v in vals]
-    elif arrow_name.startswith("timestamp["):
-        probes = [_ts_ticks(arrow_name, v) for v in vals]
-    else:
-        return live
-    if "bloom" not in pq.read_schema(path).names:
-        return live  # pre-bloom store
-    rows = [
-        i for i, c in enumerate(meta.column("column").to_pylist())
-        if c == col
-        and (meta.column("pid")[i].as_py(), meta.column("chunk_id")[i].as_py()) in live
-    ]
-    if not rows:
-        return live
-    blooms = pq.read_table(path, columns=["pid", "chunk_id", "bloom"])
-    out = set(live)
-    for i in rows:
-        blob = blooms.column("bloom")[i].as_py()
-        if blob is None:
-            continue  # dict-coded / bloom-less chunk: conservatively keep
-        key = (blooms.column("pid")[i].as_py(), blooms.column("chunk_id")[i].as_py())
-        if not bloom_might_contain(blob, probes):
-            out.discard(key)
-    return out
-
-
-def _dict_survivors(path: str, meta: "pa.Table", col: str, op: str, value,
-                    live: set) -> set:
-    """Drop live chunks whose str_dict dictionary provably lacks every
-    probed value. Runs only when the file has live dict-coded rows for
-    the filter column, and decodes only their dictionary sections (the
-    payload column read is file-granular — parquet IO can't slice rows
-    within a row group — but the decode cost stays dictionary-only)."""
-    import pyarrow.parquet as pq
-
-    from ..jobs.decode import _dict_probes, dict_payload_has_value
-
-    rows = [
-        i for i, (c, codec) in enumerate(zip(meta.column("column").to_pylist(),
-                                             meta.column("codec").to_pylist()))
-        if c == col and codec == "str_dict"
-        and (meta.column("pid")[i].as_py(), meta.column("chunk_id")[i].as_py()) in live
-    ]
-    if not rows:
-        return live
-    by_len, pfx, sub, sfx = _dict_probes(value, prefix=op == "prefix",
-                                         contains=op == "contains",
-                                         suffix=op == "suffix")
-    full = pq.read_table(path, columns=["pid", "chunk_id", "params", "payload"])
-    out = set(live)
-    for i in rows:
-        key = (meta.column("pid")[i].as_py(), meta.column("chunk_id")[i].as_py())
-        params = json.loads(full.column("params")[i].as_py())
-        payload = full.column("payload")[i].as_py()
-        if not dict_payload_has_value(params, payload, by_len, pfx, sub,
-                                      sfx):
-            out.discard(key)
-    return out
-
-
 class FsstReader(DataSourceReader):
     def __init__(self, store: str, col_types: dict[str, str],
                  as_of: int | None = None, since: int | None = None):
@@ -407,47 +284,47 @@ class FsstReader(DataSourceReader):
         #     always return the same rows even while the store keeps
         #     growing. Row tombstones (jobs.deletes) are store-global
         #     physical state, not versioned — deletes still apply.
+        pids = None
         if self.as_of is not None or self.since is not None:
             pids = commit_range_pids(
                 self.store,
                 -1 if self.since is None else self.since,
                 self.as_of)
-            return [
-                _ChunkFilePartition(os.path.join(self.store, "chunks",
-                                                 f"part-{pid:05d}.parquet"))
-                for pid in sorted(pids)
-            ]
-        # datasource-written stores log every completed write: read exactly
-        # the committed pids, so a torn/aborted append's leftover files are
-        # invisible (snapshot isolation). Job-API stores (no logging
-        # guarantee) keep the plain listing — their resume contract already
-        # treats present files as durable.
-        if commit_count(self.store):
+        elif commit_count(self.store):
+            # datasource-written stores log every completed write: read
+            # exactly the committed pids, so a torn/aborted append's
+            # leftover files are invisible (snapshot isolation). Job-API
+            # stores (no logging guarantee) keep the plain listing — their
+            # resume contract already treats present files as durable.
             from ..jobs.encode import _manifest_mode
 
             if _manifest_mode(self.store) in ("datasource", "stream"):
-                pids: set[int] = set()
+                pids = set()
                 for i in range(commit_count(self.store)):
                     pids.update(_read_commit(self.store, i)["pids"])
-                return [
-                    _ChunkFilePartition(os.path.join(self.store, "chunks",
-                                                     f"part-{pid:05d}.parquet"))
-                    for pid in sorted(pids)
-                ]
-        files = sorted(glob.glob(os.path.join(self.store, "chunks", "*.parquet")))
-        return [_ChunkFilePartition(f) for f in files]
+        from ..jobs.plan import chunk_files, plan_chunks
 
-    def read(self, partition: _ChunkFilePartition) -> Iterator["pa.RecordBatch"]:
-        return _read_chunk_file(partition.path, self.col_types, self.pruning)
+        if not self.pruning:
+            return [_ChunkFilePartition(path)
+                    for _, path in chunk_files(self.store, pids)]
+        plan = plan_chunks(self.store, None, self.pruning, pids=pids,
+                           types=self.col_types)
+        return [_ChunkFilePartition(fp.path, fp.keys) for fp in plan.files]
+
+    def read(self, partition: _ChunkFilePartition | None) -> Iterator["pa.RecordBatch"]:
+        if partition is None:  # Spark's stand-in when nothing survived
+            return iter(())
+        return _read_chunk_file(partition.path, self.col_types, partition.keys)
 
 
 def _read_chunk_file(path: str, col_types: dict[str, str],
-                     pruning: list[tuple]) -> Iterator["pa.RecordBatch"]:
+                     keys: list | None = None) -> Iterator["pa.RecordBatch"]:
     """Decode one chunk file into RecordBatches of ``col_types``' columns
-    (shared by the batch and stream readers). When ``col_types`` is a
-    projection (the ``columns`` read option), the parquet scan row-filters
-    to the selected columns, so pruned columns' payloads are never
-    decompressed — and pruning stages still only read the filter columns."""
+    (shared by the batch and stream readers), restricted to the planned
+    ``(pid, chunk_id)`` keep-set ``keys`` when given. When ``col_types``
+    is a projection (the ``columns`` read option), the parquet scan
+    row-filters to the selected columns, so pruned columns' payloads are
+    never decompressed."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -460,9 +337,7 @@ def _read_chunk_file(path: str, col_types: dict[str, str],
     # <store>/chunks/, so the store root is two levels up
     store_root = os.path.dirname(os.path.dirname(path))
     dmask = DeleteMask(store_root) if has_deletes(store_root) else None
-    live = _file_survivors(path, pruning, col_types)
-    if live is not None and not live:
-        return  # fully pruned: payload column bytes were never read
+    live = None if keys is None else {tuple(k) for k in keys}
     ordered = sorted(col_types)
     target = _arrow_schema(col_types, ordered)
     from ..jobs.schema import added_columns
@@ -484,7 +359,7 @@ def _read_chunk_file(path: str, col_types: dict[str, str],
         filters=[("column", "in", scan_cols)])
     chunks: dict[tuple[int, int], dict] = {}
     # zip arrow scalars; .as_py() materializes a payload only for
-    # chunks that survived pruning
+    # planned chunks
     for pid_s, cid_s, col_s, codec_s, params_s, payload_s in zip(
             tbl.column("pid"), tbl.column("chunk_id"), tbl.column("column"),
             tbl.column("codec"), tbl.column("params"), tbl.column("payload")):
@@ -567,7 +442,7 @@ class FsstStreamReader(DataSourceStreamReader):
 
     def read(self, partition: _ChunkFilePartition) -> Iterator["pa.RecordBatch"]:
         # stream scans have no pushFilters hook; Spark filters rows above
-        return _read_chunk_file(partition.path, self.col_types, [])
+        return _read_chunk_file(partition.path, self.col_types)
 
     def commit(self, end: dict) -> None:
         return None  # progress is tracked by Spark's own checkpoint

@@ -10,3 +10,27 @@ def spark():
     s = get_spark("local[4]", app_name="fsst_spark_tests", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def parquet_reads(monkeypatch):
+    """Records ``(columns, filters)`` of every pyarrow parquet read this
+    process makes (``columns`` None means every column): the driver-side
+    chunk planner's metadata reads."""
+    import pyarrow.parquet as pq
+
+    calls = []
+    read_table, pf_read = pq.read_table, pq.ParquetFile.read
+
+    def rec_read_table(source, *args, columns=None, filters=None, **kw):
+        calls.append((columns, filters))
+        return read_table(source, *args, columns=columns, filters=filters, **kw)
+
+    def rec_pf_read(self, columns=None, *args, **kw):
+        calls.append((columns, None))
+        return pf_read(self, columns, *args, **kw)
+
+    monkeypatch.setattr(pq, "read_table", rec_read_table)
+    monkeypatch.setattr(pq.ParquetFile, "read", rec_pf_read)
+    return calls
+

@@ -1,0 +1,18 @@
+"""Assertions shared by the tests of planned (file-granular) reads."""
+
+import re
+
+
+def payload_read_filters(calls) -> list:
+    """The row filters of the recorded reads that fetch the payload column."""
+    return [f for cols, f in calls if cols is None or "payload" in cols]
+
+
+def assert_file_granular_plan(df) -> None:
+    """A planned read: file tasks (``read_files``), no Exchange, and no JVM
+    scan that reads chunk payloads."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "read_files" in plan, plan
+    assert "Exchange" not in plan, plan
+    scans = re.findall(r"ReadSchema: struct<[^>]*>", plan)
+    assert not any("payload" in s for s in scans), scans

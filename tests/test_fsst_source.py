@@ -1,5 +1,6 @@
 """The ``fsst`` Spark DataSource: format round-trip, pushed-filter
-correctness, and executor-side chunk pruning (zones + dict + bloom)."""
+correctness, and the planner's per-file chunk pruning (zones + dict +
+bloom)."""
 
 import glob
 import os
@@ -7,9 +8,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from fsst_spark.jobs.plan import file_survivors
 from fsst_spark.sources.fsst_source import (
     FsstReader,
-    _file_survivors,
     register,
     store_column_types,
 )
@@ -76,9 +77,9 @@ def test_zone_pruning_drops_chunks(store):
     files = sorted(glob.glob(os.path.join(store, "chunks", "*.parquet")))
     total = live = 0
     for f in files:
-        all_keys = _file_survivors(f, [("doc_id", ">=", 0)], types)
-        hit = _file_survivors(f, [("doc_id", ">=", 490)], types)
-        none = _file_survivors(f, [("doc_id", ">", 10_000_000)], types)
+        all_keys = file_survivors(f, [("doc_id", ">=", 0)], types)
+        hit = file_survivors(f, [("doc_id", ">=", 490)], types)
+        none = file_survivors(f, [("doc_id", ">", 10_000_000)], types)
         total += len(all_keys)
         live += len(hit)
         assert none == set()
@@ -91,10 +92,10 @@ def test_dict_and_bloom_pruning(store):
     files = sorted(glob.glob(os.path.join(store, "chunks", "*.parquet")))
     # a language no document has: dictionary membership kills every chunk
     for f in files:
-        assert _file_survivors(f, [("lang", "==", "zz")], types) == set()
+        assert file_survivors(f, [("lang", "==", "zz")], types) == set()
     # an int value no chunk contains: bloom (or zones) prune fully
     for f in files:
-        assert _file_survivors(f, [("doc_id", "==", 987654321)], types) == set()
+        assert file_survivors(f, [("doc_id", "==", 987654321)], types) == set()
 
 
 def test_reader_pushfilters_returns_all_filters(store):

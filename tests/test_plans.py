@@ -1,13 +1,17 @@
 """Physical-plan assertions: the operators must produce the plans we'd
-want at 100 TB — filters pushed into scans, columns pruned, small sides
-broadcast, no accidental shuffles."""
+want at 100 TB — filters pushed into scans or planned from metadata,
+columns pruned, small sides broadcast, no accidental shuffles."""
 
+import glob
+
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from fsst_spark.jobs.decode import decode_job
+from fsst_spark.jobs.decode import decode_job, decode_plan
 from fsst_spark.jobs.encode import encode_job, salted_repartition
 from fsst_spark.synth.webcorpus import synth_web_df
+from tests.plan_checks import assert_file_granular_plan, payload_read_filters
 
 
 def _plan(df) -> str:
@@ -22,16 +26,23 @@ def encoded(spark, tmp_path_factory):
     return out
 
 
-def test_decode_pushes_column_filter_to_scan(spark, encoded):
-    # PRUNED decodes go through the JVM metadata scan: the column filter
-    # must reach the parquet scan as a pushed filter
+def test_filtered_decode_plans_payload_free(spark, encoded, parquet_reads):
+    # PRUNED decodes are planned on the driver from chunk metadata and run
+    # as file tasks: no JVM chunk scan, no Exchange. The only payload cells
+    # planning may read are the filter column's dict-coded rows.
     dec = decode_job(spark, encoded, columns=["lang"],
                      zone_filter=("lang", "==", "en"))
-    plan = _plan(dec)
-    scan = plan[plan.index("FileScan"):]
-    first_line = scan.split("\n")[0]
-    assert "PushedFilters" in first_line
-    assert "In(column" in first_line or "EqualTo(column" in first_line, first_line
+    assert_file_granular_plan(dec)
+    assert all(f == [("column", "==", "lang"), ("codec", "==", "str_dict")]
+               for f in payload_read_filters(parquet_reads)), parquet_reads
+    # the column restriction reaches the plan: it counts lang's bytes only
+    lang_bytes = sum(
+        b for f in glob.glob(f"{encoded}/chunks/*.parquet")
+        for c, b in zip(*pq.read_table(f, columns=["column", "enc_bytes"])
+                        .to_pydict().values()) if c == "lang")
+    plan = decode_plan(spark, encoded, columns=["lang"],
+                       filters=[("lang", "==", "en")])
+    assert plan["enc_bytes_total"] == lang_bytes
 
 
 def test_decode_scan_prunes_payload_metadata(spark, encoded):

@@ -15,6 +15,7 @@ from fsst_spark.jobs.decode import decode_job
 from fsst_spark.jobs.encode import completed_pids, encode_job, read_manifest, salted_repartition
 from fsst_spark.jobs.verify import roundtrip_summary, verify_against_source, verify_chunks
 from fsst_spark.synth.webcorpus import synth_web_df
+from tests.plan_checks import assert_file_granular_plan, payload_read_filters
 
 N_ROWS = 2500
 SEED = 42
@@ -81,13 +82,15 @@ def test_decode_column_pruning(spark, encoded_dir):
     assert "payload" not in plan
 
 
-def test_decode_filtered_scan_pushdown(spark, encoded_dir):
-    # the pruned (zone-filter) path still scans chunk metadata through the
-    # JVM with the column filter pushed into parquet
+def test_decode_filtered_planned_file_tasks(spark, encoded_dir, parquet_reads):
+    # the pruned (zone-filter) path is planned from chunk metadata on the
+    # driver and decodes through file tasks: no JVM payload scan, no
+    # Exchange, and planning reads only the filter column's dict cells
     dec = decode_job(spark, encoded_dir, columns=["lang", "url"],
                      zone_filter=("lang", "==", "en"))
-    plan = dec._jdf.queryExecution().executedPlan().toString()
-    assert "column" in plan
+    assert_file_granular_plan(dec)
+    assert all(f == [("column", "==", "lang"), ("codec", "==", "str_dict")]
+               for f in payload_read_filters(parquet_reads)), parquet_reads
 
 
 def test_resume_after_injected_failure(spark, corpus, tmp_path):

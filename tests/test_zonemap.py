@@ -6,6 +6,7 @@ from pyspark.sql import functions as F
 
 from fsst_spark.jobs.decode import decode_filtered, decode_job
 from fsst_spark.jobs.encode import encode_job
+from tests.plan_checks import assert_file_granular_plan, payload_read_filters
 
 
 @pytest.fixture(scope="module")
@@ -59,22 +60,16 @@ def test_zone_pruning_skips_chunks(spark, encoded):
     assert n_pruned < n_full / 2, (n_pruned, n_full)
 
 
-def test_zone_keep_filter_pushed_to_scan(spark, encoded):
-    import contextlib
-    import io
-    import re
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        decode_job(spark, encoded,
-                   zone_filter=("doc_id", ">=", 3900)).explain("formatted")
-    plan = buf.getvalue()
-    pushed = re.findall(r"PushedFilters: \[[^\]]*\]", plan)
-    # the zone predicate must reach the keep-side parquet scan itself
-    assert any("GreaterThanOrEqual(zmax_long,3900)" in p for p in pushed), pushed
-    # and that scan must be payload-free (narrow zone projection only)
-    scans = re.findall(r"ReadSchema: struct<[^>]*>", plan)
-    assert any("payload" not in s and "zmax_long" in s for s in scans), scans
+def test_zone_filter_planned_from_metadata_only(spark, encoded, parquet_reads):
+    dec = decode_job(spark, encoded, zone_filter=("doc_id", ">=", 3900))
+    # the zone predicate prunes at planning time: only the file holding
+    # doc_ids >= 3900 (the last of the 4 ordered partitions) becomes a task
+    assert dec.rdd.getNumPartitions() == 1
+    assert_file_granular_plan(dec)
+    # and planning read chunk metadata only: an int range filter needs no
+    # dictionary, so no planner read touched a payload byte
+    assert parquet_reads
+    assert payload_read_filters(parquet_reads) == []
 
 
 def test_zone_filter_unknown_column_raises(spark, encoded):
@@ -274,7 +269,7 @@ def test_zone_type_mismatch_raises(spark, tmp_path):
     assert got == list(range(150, 200))
 
 
-def test_dict_membership_prune_skips_chunks(spark, tmp_path):
+def test_dict_membership_prune_skips_chunks(spark, tmp_path, parquet_reads):
     """String ``==`` on a dict-coded column must skip chunks whose
     DICTIONARY lacks the value even when the prefix zones span it: a chunk
     of {'aa','zz'} has zone [aa..zz] ∋ 'de' but provably no 'de' row."""
@@ -316,18 +311,17 @@ def test_dict_membership_prune_skips_chunks(spark, tmp_path):
                  decode_filtered(spark, out, "lang", "==", "de").collect())
     assert got == [10000 + i for i in range(2000) if i % 2 == 0]
 
-    # the drop-set scan must push BOTH predicates to parquet so non-dict
-    # payloads of other columns are never read
-    import contextlib
-    import io
-    import re
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        with_prune.explain("formatted")
-    plan = buf.getvalue()
-    pushed = re.findall(r"PushedFilters: \[[^\]]*\]", plan)
-    assert any("EqualTo(codec,str_dict)" in p and "EqualTo(column,lang)" in p
-               for p in pushed), pushed
+    # the dictionary probe must read payload cells of the filter column's
+    # dict-coded rows ONLY (pyarrow row filter on both predicates), so
+    # non-dict payloads and other columns' payloads are never fetched; the
+    # decode itself is file tasks with no JVM payload scan
+    assert_file_granular_plan(with_prune)
+    parquet_reads.clear()
+    decode_job(spark, out, zone_filters=[("lang", "==", "de")])
+    flt = payload_read_filters(parquet_reads)
+    assert flt, parquet_reads
+    assert all(f == [("column", "==", "lang"), ("codec", "==", "str_dict")]
+               for f in flt), flt
 
 
 def test_in_filter_with_dict_prune(spark, tmp_path):
