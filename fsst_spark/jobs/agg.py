@@ -7,17 +7,22 @@ FSST *next to* dict/RLE precisely so queries can run on codes): a
 never needs the expanded strings — the per-chunk answer is a bincount of
 the small integer code array plus one decode of the (tiny) dictionary
 section; an RLE-coded column answers from (run value, run length) pairs
-without materializing a single repeated row. Each chunk reduces to at
-most NDV(chunk) partial rows inside the scan task, so the one shuffle
-this job does is NDV-scale, not row-scale: at 10^12 documents a
-``GROUP BY lang`` shuffles a few hundred rows per chunk, not 10^12.
+without materializing a single repeated row.
 
-``encoded_group_sum`` extends this to ``GROUP BY k, count(*), sum(v)``:
-both column rows of a chunk live in the same chunk file (the encode jobs
-write one file per partition), so a scan task buffers the chunk's two
-descriptors, aggregates chunk-locally (int sums in exact int64 via
-``np.add.at``, never float bincount weights), and emits NDV-scale
-partials.
+Every job here that needs whole chunks gets them one way: the
+driver-side planner (:mod:`jobs.plan`) prunes chunks from metadata, its
+surviving files become file tasks, and each task reads its chunks with
+the one chunk reader (every column row of a chunk lives in its pid's
+chunk file), so no chunk row is ever shuffled. Each chunk reduces to at
+most NDV(chunk) partial rows inside its task, so the only shuffle is the
+NDV-scale final aggregate, not row-scale: at 10^12 documents a ``GROUP
+BY lang`` shuffles a few hundred rows per chunk, not 10^12.
+``encoded_group_sum`` extends this to ``GROUP BY k, count(*), sum(v)``
+(int sums in exact int64 via ``np.add.at``, never float bincount
+weights). The tri-state ``encoded_count_filtered`` and
+``encoded_histogram`` classify chunks inside the task from the chunk
+file's own zones, row counts and params, and read payloads only for the
+chunks their metadata cannot answer.
 
 Falls back to a full chunk decode (still chunk-local partial aggregation)
 for codecs with no structural shortcut (fsst/plain strings, floats).
@@ -45,14 +50,22 @@ from .decode import (
     _STRINGY,
     _chunks_df,
     _prefix_bytes,
-    _prefix_zone_bounds,
     _spark_type,
     _zone_key,
-    chunk_repartition,
     column_arrow_types,
-    pruned_chunks,
-    pruned_chunks_any,
+    zone_all,
 )
+from .deletes import DeleteMask, has_deletes
+from .plan import (
+    file_tasks_df,
+    plan_chunks,
+    planned_files,
+    read_chunks,
+    read_file_meta,
+    task_chunks,
+    task_files,
+)
+
 _INT_LIKE = ("int8", "int16", "int32", "int64")
 
 
@@ -166,48 +179,68 @@ def _arrow_mask(arr: pa.Array, op: str, value, arrow_name: str) -> np.ndarray:
     return m & valid
 
 
-def _assembled_chunks(batches: Iterator[pa.RecordBatch],
-                      needed: list[str],
-                      with_keys: bool = False) -> Iterator:
-    """Group a (pid, chunk_id)-co-located chunk-row stream back into whole
-    chunks: yields {column: enc-dict} once every needed column row of a
-    chunk has arrived (same pending-slot shape as decode_job's task).
-    ``with_keys`` yields ``((pid, chunk_id), cols)`` instead — consumers
-    that look up per-chunk side state (e.g. delete tombstones) need the
-    key."""
-    pending: dict[tuple[int, int], dict[str, dict]] = {}
-    for batch in batches:
-        for pid_s, cid_s, col_s, codec_s, params_s, payload_s in zip(
-                batch.column("pid"), batch.column("chunk_id"),
-                batch.column("column"), batch.column("codec"),
-                batch.column("params"), batch.column("payload")):
-            key = (pid_s.as_py(), cid_s.as_py())
-            cols = pending.setdefault(key, {})
-            cols[col_s.as_py()] = {
-                "codec": codec_s.as_py(),
-                "params": json.loads(params_s.as_py()),
-                "payload": payload_s.as_py(),
-            }
-            if len(cols) == len(needed):
-                yield (key, cols) if with_keys else cols
-                del pending[key]
-    if pending:
-        raise RuntimeError(
-            f"incomplete chunks (missing column rows): {sorted(pending)[:4]}")
-
-
 def _conj_mask(cols: dict[str, dict], filters: list[tuple],
-               types: dict[str, str],
-               decoded: dict[str, pa.Array]) -> np.ndarray | None:
-    """AND of the exact row masks for ``filters`` over one chunk; decodes
-    each filter column at most once (cached in ``decoded``)."""
-    mask: np.ndarray | None = None
-    for fc, fop, fval in filters:
+               types: dict[str, str], decoded: dict[str, pa.Array],
+               any_filters: list[tuple] = ()) -> np.ndarray | None:
+    """Exact row mask of ``AND(filters) AND OR(any_filters)`` over one
+    chunk (None when there are no filters); decodes each filter column at
+    most once (cached in ``decoded``)."""
+    def pred(f):
+        fc, fop, fval = f
         if fc not in decoded:
             decoded[fc] = decode_column(cols[fc])
-        m = _arrow_mask(decoded[fc], fop, fval, types[fc])
-        mask = m if mask is None else (mask & m)
+        return _arrow_mask(decoded[fc], fop, fval, types[fc])
+
+    mask = None
+    for f in filters:
+        mask = pred(f) if mask is None else (mask & pred(f))
+    if any_filters:
+        omask = np.logical_or.reduce([pred(f) for f in any_filters])
+        mask = omask if mask is None else (mask & omask)
     return mask
+
+
+def _keep_rows(mask: np.ndarray | None, n: int, dmask, key) -> np.ndarray:
+    """The chunk's rows ``mask`` keeps (every row when None), minus its
+    tombstoned positions."""
+    keep = np.ones(n, dtype=bool) if mask is None else mask.copy()
+    pos = dmask.positions(*key) if dmask is not None else None
+    if pos is not None:
+        keep[pos[pos < n]] = False
+    return keep
+
+
+def _chunk_job(spark, out_dir: str, columns: list[str], fn, ddl: str,
+               filters=None, any_filters=None, types=None) -> DataFrame:
+    """File tasks over the planner's surviving chunks of ``columns`` under
+    ``AND(filters) AND OR(any_filters)`` (every chunk without filters):
+    ``fn(chunks, dmask)`` maps a task's ``((pid, chunk_id), cols)`` stream
+    from the one chunk reader to partial batches; ``dmask`` is the task's
+    tombstone cache (None on a store without deletes)."""
+    files = planned_files(out_dir, columns, filters, any_filters, types=types)
+    deletes_on = has_deletes(out_dir)
+
+    def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        dmask = DeleteMask(out_dir) if deletes_on else None
+        yield from fn(task_chunks(batches, columns), dmask)
+
+    return file_tasks_df(spark, files).mapInArrow(task, ddl)
+
+
+def _file_zones(path: str, columns) -> dict:
+    """``{(pid, chunk_id): {column: (n_rows, zmin, zmax, has_nulls)}}`` of
+    one chunk file's rows for ``columns``, from its metadata columns and
+    params (the key ``"n_total"`` is written only when a chunk has nulls);
+    no payload read."""
+    pf, m = read_file_meta(path)
+    params = pf.read(columns=["params"]).column("params").to_pylist()
+    zones: dict = {}
+    for pid, cid, col, n, lo, hi, pj in zip(
+            m["pid"], m["chunk_id"], m["column"], m["n_rows"],
+            m["zmin_long"], m["zmax_long"], params):
+        if col in columns:
+            zones.setdefault((pid, cid), {})[col] = (n, lo, hi, '"n_total"' in pj)
+    return zones
 
 
 def _chunk_key_codes(kenc: dict, kt: pa.DataType,
@@ -261,21 +294,17 @@ def _group_partial(kenc: dict, kt: pa.DataType, mask: np.ndarray | None,
     return pa.RecordBatch.from_arrays(arrays, names=names)
 
 
-def _filtered_group_agg(spark, out_dir: str, key_col: str,
-                        val_col: str | None,
-                        filters: list[tuple]) -> DataFrame:
-    """Shared filtered path of encoded_group_count/encoded_group_sum:
-    zone/dict pruning drops definite-miss chunks before any payload read,
-    surviving chunks shuffle once on the chunk key (encoded bytes, small),
+def _group_agg(spark, out_dir: str, key_col: str, val_col: str | None,
+               filters: list[tuple]) -> DataFrame:
+    """Shared path of the filtered encoded_group_count and of
+    encoded_group_sum: zone/dict/bloom pruning drops definite-miss chunks
+    before any payload read, file tasks read the surviving chunks whole,
     the exact row mask and the per-key partials happen chunk-locally, and
-    the final shuffle is NDV-scale."""
+    the one shuffle is NDV-scale."""
     types = column_arrow_types(spark, out_dir)
-    fcols = []
-    for f in filters:
-        if f[0] not in fcols:
-            fcols.append(f[0])
     needed = [key_col] + ([val_col] if val_col and val_col != key_col else [])
-    needed += [c for c in fcols if c not in needed]
+    needed += [c for c in dict.fromkeys(f[0] for f in filters)
+               if c not in needed]
     for c in needed:
         if c not in types:
             raise KeyError(f"column {c!r} not in encoded data")
@@ -283,19 +312,9 @@ def _filtered_group_agg(spark, out_dir: str, key_col: str,
     int_sum = val_col is not None and types[val_col] in _INT_LIKE
     if val_col is not None and not int_sum and types[val_col] not in ("float", "double"):
         raise ValueError(f"sum column must be int or float, got {types[val_col]}")
-    chunks = pruned_chunks(spark, out_dir, needed, list(filters))
-    chunks = chunk_repartition(
-        spark, chunks.select("pid", "chunk_id", "column", "codec",
-                             "params", "payload"), out_dir)
-    from .deletes import has_deletes
 
-    deletes_on = has_deletes(out_dir)
-
-    def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from .deletes import DeleteMask
-
-        dmask = DeleteMask(out_dir) if deletes_on else None
-        for key, cols in _assembled_chunks(batches, needed, with_keys=True):
+    def partials(chunks, dmask) -> Iterator[pa.RecordBatch]:
+        for key, cols in chunks:
             decoded: dict[str, pa.Array] = {}
             mask = _conj_mask(cols, filters, types, decoded)
             if mask is not None and not mask.any():
@@ -312,7 +331,9 @@ def _filtered_group_agg(spark, out_dir: str, key_col: str,
     if val_col is not None:
         ddl += f", sum_val {'bigint' if int_sum else 'double'}"
         aggs.append(F.sum("sum_val").alias("sum_val"))
-    return chunks.mapInArrow(task, ddl).groupBy("value").agg(*aggs)
+    return (_chunk_job(spark, out_dir, needed, partials, ddl, filters,
+                       types=types)
+            .groupBy("value").agg(*aggs))
 
 
 def encoded_group_count(spark, out_dir: str, column: str,
@@ -335,9 +356,7 @@ def encoded_group_count(spark, out_dir: str, column: str,
     the deletes parquet); tombstone-free chunks keep the pure
     codec-structural fast path."""
     if filters:
-        return _filtered_group_agg(spark, out_dir, column, None, filters)
-    from .deletes import has_deletes
-
+        return _group_agg(spark, out_dir, column, None, filters)
     deletes_on = has_deletes(out_dir)
     types = column_arrow_types(spark, out_dir, [column])
     if column not in types:
@@ -349,8 +368,6 @@ def encoded_group_count(spark, out_dir: str, column: str,
     out_schema = pa.schema([("value", t), ("cnt", pa.int64())])
 
     def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from .deletes import DeleteMask
-
         dmask = DeleteMask(out_dir) if deletes_on else None
         for batch in batches:
             tbl = pa.Table.from_batches([batch])
@@ -406,138 +423,7 @@ def encoded_group_sum(spark, out_dir: str, key_col: str, val_col: str,
     dict-coded key column uses its code array directly — the expanded
     key strings are never materialized. Delete-aware: tombstoned
     positions drop out of both cnt and sum_val chunk-locally."""
-    if filters:
-        return _filtered_group_agg(spark, out_dir, key_col, val_col, filters)
-    from .deletes import has_deletes
-
-    deletes_on = has_deletes(out_dir)
-    types = column_arrow_types(spark, out_dir, [key_col, val_col])
-    for c in (key_col, val_col):
-        if c not in types:
-            raise KeyError(f"column {c!r} not in encoded data")
-    vt_name = types[val_col]
-    if vt_name not in _INT_LIKE and vt_name not in ("float", "double"):
-        raise ValueError(f"sum column must be int or float, got {vt_name}")
-    int_sum = vt_name in _INT_LIKE
-    kt = parse_arrow_type(types[key_col])
-
-    def emit(kenc: dict, venc: dict,
-             drop_pos: "np.ndarray | None" = None) -> pa.RecordBatch:
-        return _group_partial(kenc, kt, None, venc=venc, int_sum=int_sum,
-                              drop_pos=drop_pos)
-
-    # file-granular scan: every encode job writes ALL column rows of a
-    # chunk into one chunk file, but a relational parquet scan may split
-    # a file across tasks at row-group boundaries and separate them. One
-    # task per file guarantees complete chunks (a chunk file is one
-    # encode partition's output — tens of MB, a single task's working
-    # set by design, same contract as encode_files_job).
-    import glob as _glob
-    import os as _os
-
-    files = sorted(_glob.glob(_os.path.join(out_dir, "chunks", "*.parquet")))
-    if not files:
-        raise FileNotFoundError(f"no chunk files under {out_dir}")
-    task_df = spark.createDataFrame(
-        [(i, f) for i, f in enumerate(files)], "fid int, path string"
-    ).repartitionByRange(len(files), "fid")
-
-    def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.parquet as _pq
-
-        from .deletes import DeleteMask
-
-        dmask = DeleteMask(out_dir) if deletes_on else None
-        for batch in batches:
-            for row in batch.to_pylist():
-                tbl = _pq.read_table(
-                    row["path"],
-                    columns=["pid", "chunk_id", "column", "codec", "params", "payload"],
-                    filters=[("column", "in", [key_col, val_col])])
-                pending: dict[tuple[int, int], dict[str, dict]] = {}
-                for i in range(tbl.num_rows):
-                    key = (tbl.column("pid")[i].as_py(), tbl.column("chunk_id")[i].as_py())
-                    enc = {"codec": tbl.column("codec")[i].as_py(),
-                           "params": json.loads(tbl.column("params")[i].as_py()),
-                           "payload": tbl.column("payload")[i].as_py()}
-                    cols = pending.setdefault(key, {})
-                    cols[tbl.column("column")[i].as_py()] = enc
-                    if len(cols) == 2:
-                        pos = (dmask.positions(*key)
-                               if dmask is not None else None)
-                        yield emit(cols[key_col], cols[val_col], pos)
-                        del pending[key]
-                if pending:
-                    raise RuntimeError(
-                        f"incomplete chunks in {row['path']}: "
-                        f"{sorted(pending)[:4]}")
-
-    ddl = (f"value {_spark_type(types[key_col])}, cnt bigint, "
-           f"sum_val {'bigint' if int_sum else 'double'}")
-    partial = task_df.mapInArrow(task, ddl)
-    return partial.groupBy("value").agg(
-        F.sum("cnt").alias("cnt"), F.sum("sum_val").alias("sum_val"))
-
-
-def _zone_can_pred(arrow_name: str, op: str, value):
-    """Spark Column over (zmin_long, zmax_long): True unless the zone
-    bounds PROVE no row of the chunk satisfies ``op value`` — the same
-    conservative keep rule the planner's ``decode.zone_keep`` applies."""
-    if op == "in":
-        from .decode import zone_in_keep_pred
-
-        # stack-safe: >16 probes run as one vectorized binary search
-        # instead of a chained OR (see zone_in_keep_pred)
-        return zone_in_keep_pred(arrow_name, value)
-    if op == "prefix":
-        lo, hi = _prefix_zone_bounds(arrow_name, value)
-        return (F.col("zmax_long") >= lo) & (F.col("zmin_long") <= hi)
-    if op == "contains":
-        _prefix_bytes(arrow_name, value, op)  # type check only
-        return F.lit(True)  # substring predicates carry no zone information
-    zv, ops = _zone_key(arrow_name, value)
-    if op not in ops:
-        raise ValueError(
-            f"zone op must be one of {sorted(ops) + ['in', 'prefix']}, got {op!r}")
-    return ops[op](zv)
-
-
-def _zone_all_pred(arrow_name: str, op: str, value):
-    """Spark Column over (zmin_long, zmax_long): True iff the zone bounds
-    PROVE every non-null row of the chunk satisfies ``op value``.
-
-    Int/timestamp zones are exact min/max and float zones are the
-    order-isomorphic total-order key (NaN greatest, matching Spark/DuckDB
-    comparison semantics), so the exact table applies. String zones are
-    8-byte PREFIX bounds: only STRICT pack inequalities transfer to the
-    rows (pack(min) > pack(v) => min > v, but pack equality proves
-    nothing), and equality is never provable from a prefix."""
-    zmin, zmax = F.col("zmin_long"), F.col("zmax_long")
-    from .decode import _STRINGY as _STR
-
-    if op == "contains":
-        # a zone interval can never prove every row CONTAINS a substring
-        return F.lit(False)
-    if arrow_name in _STR:
-        if op in ("==", "in"):
-            return F.lit(False)
-        if op == "prefix":
-            # packs are the rows' first 8 bytes: a zone interval inside
-            # [lo, hi] proves every row's first len(p) bytes equal p —
-            # only meaningful for prefixes that fit the 8-byte pack
-            lo, hi = _prefix_zone_bounds(arrow_name, value)
-            if len(_prefix_bytes(arrow_name, value)) > 8:
-                return F.lit(False)
-            return (zmin >= lo) & (zmax <= hi)
-        zv = _zone_key(arrow_name, value)[0]
-        return {">=": zmin > zv, ">": zmin > zv,
-                "<=": zmax < zv, "<": zmax < zv}[op]
-    if op == "in":
-        vals = [_zone_key(arrow_name, v)[0] for v in value]
-        return (zmin == zmax) & zmin.isin(vals)
-    zv = _zone_key(arrow_name, value)[0]
-    return {">=": zmin >= zv, ">": zmin > zv, "<=": zmax <= zv,
-            "<": zmax < zv, "==": (zmin == zv) & (zmax == zv)}[op]
+    return _group_agg(spark, out_dir, key_col, val_col, list(filters or []))
 
 
 def encoded_count_filtered(spark, out_dir: str,
@@ -555,12 +441,16 @@ def encoded_count_filtered(spark, out_dir: str,
     Returns one row: ``n_rows`` plus observability counts
     (chunks_total/pruned/metadata_only/decoded).
 
+    The planner prunes on zones alone (its counts give ``chunks_total``
+    and ``chunks_pruned``); each file task classifies its surviving chunks
+    from the file's own metadata and reads payloads only when a boundary
+    chunk is left.
+
     Delete-aware (the one fast path that stays exact under row
     tombstones): full-match chunks subtract their per-chunk tombstone
-    count (a narrow metadata join on the deletes parquet — still no
-    payload read), boundary chunks subtract tombstoned-AND-matching
-    positions in-task. Pruned chunks need no correction — zero rows
-    match, deleted or not.
+    count (the task's tombstone cache — still no payload read), boundary
+    chunks subtract tombstoned-AND-matching positions in-task. Pruned
+    chunks need no correction — zero rows match, deleted or not.
 
     ``any_filters`` adds one OR clause — the count of ``AND(filters) AND
     OR(any_filters)``, CNF like ``decode_filtered``. Tri-state logic per
@@ -569,119 +459,65 @@ def encoded_count_filtered(spark, out_dir: str,
     branch full-matches every row (a sound under-approximation — a chunk
     that satisfies the OR only as a mixture of branches is conservatively
     demoted to the decode path, which is exact); BOUNDARY otherwise."""
+    flt = list(filters)
     any_flt = list(any_filters or [])
-    if not filters and not any_flt:
+    if not flt and not any_flt:
         raise ValueError("encoded_count_filtered needs filters=[(col, op, "
                          "value), ...] and/or any_filters=[...]")
     types = column_arrow_types(spark, out_dir)
-    fcols: list[str] = []
-    for f in list(filters) + any_flt:
-        if f[0] not in types:
-            raise KeyError(f"column {f[0]!r} not in encoded data")
-        if f[0] not in fcols:
-            fcols.append(f[0])
-    base = _chunks_df(spark, out_dir, fcols)
-    has_zones = "zmin_long" in base.columns
-    zsel = ["pid", "chunk_id", "column", "n_rows"]
-    if has_zones:
-        zsel += ["zmin_long", "zmax_long"]
-    # null-freeness read from the params JSON string JVM-side (the key is
-    # only ever written when the chunk has nulls); a false positive just
-    # demotes the chunk to the decode path — conservative, never wrong
-    z = base.select(*zsel, F.col("params").contains('"n_total"').alias("has_nulls"))
-    joined = None
-
-    def _pred_cols(c, op, v, tag):
-        nonlocal joined
-        zi = z.filter(F.col("column") == c)
-        if has_zones:
-            can = F.col("zmin_long").isNull() | _zone_can_pred(types[c], op, v)
-            alm = (F.col("zmin_long").isNotNull() & ~F.col("has_nulls")
-                   & _zone_all_pred(types[c], op, v))
-        else:  # pre-zone-map store: everything is a boundary chunk
-            can, alm = F.lit(True), F.lit(False)
-        zi = zi.select("pid", "chunk_id", "n_rows",
-                       can.alias(f"can{tag}"), alm.alias(f"all{tag}"))
-        joined = zi if joined is None else joined.join(
-            zi.drop("n_rows"), ["pid", "chunk_id"])
-
-    for i, (c, op, v) in enumerate(filters):
-        _pred_cols(c, op, v, str(i))
-    for j, (c, op, v) in enumerate(any_flt):
-        _pred_cols(c, op, v, f"o{j}")
-    can_all = F.lit(True)
-    alm_all = F.lit(True)
-    for i in range(len(filters)):
-        can_all = can_all & F.col(f"can{i}")
-        alm_all = alm_all & F.col(f"all{i}")
-    if any_flt:
-        # OR clause: chunk can match if ANY branch can; full-matches when
-        # SOME branch full-matches (sound under-approximation, see above)
-        can_or = F.lit(False)
-        alm_or = F.lit(False)
-        for j in range(len(any_flt)):
-            can_or = can_or | F.col(f"cano{j}")
-            alm_or = alm_or | F.col(f"allo{j}")
-        can_all = can_all & can_or
-        alm_all = alm_all & alm_or
-    cls = joined.select("pid", "chunk_id", "n_rows",
-                        can_all.alias("can"), alm_all.alias("all_rows"))
-
-    from .deletes import _deletes_dir, has_deletes
-
+    fcols = list(dict.fromkeys(f[0] for f in flt + any_flt))
+    for c in fcols:
+        if c not in types:
+            raise KeyError(f"column {c!r} not in encoded data")
+    plan = plan_chunks(out_dir, fcols, flt, any_flt, dict_prune=False,
+                       types=types)
+    conj = [(c, zone_all(types[c], op, v)) for c, op, v in flt]
+    disj = [(c, zone_all(types[c], op, v)) for c, op, v in any_flt]
     deletes_on = has_deletes(out_dir)
-    if deletes_on:
-        # per-chunk tombstone counts: a narrow aggregation of the deletes
-        # parquet (spark ignores the _log/ sidecar), broadcast-joinable
-        tomb = (spark.read.parquet(_deletes_dir(out_dir))
-                .groupBy("pid", "chunk_id")
-                .agg(F.count("*").alias("n_del")))
-        cls = (cls.join(F.broadcast(tomb), ["pid", "chunk_id"], "left")
-               .na.fill({"n_del": 0}))
-    else:
-        cls = cls.withColumn("n_del", F.lit(0))
-
-    meta = cls.select(
-        F.when(F.col("can") & F.col("all_rows"),
-               F.col("n_rows") - F.col("n_del"))
-        .otherwise(F.lit(0)).cast("bigint").alias("n"))
-    straddle_keys = cls.filter(F.col("can") & ~F.col("all_rows")).select("pid", "chunk_id")
-    sub = (base.select("pid", "chunk_id", "column", "codec", "params", "payload")
-           .join(straddle_keys, ["pid", "chunk_id"], "left_semi"))
-    sub = chunk_repartition(spark, sub, out_dir)
-    flt = list(filters)
 
     def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from .deletes import DeleteMask
-
         dmask = DeleteMask(out_dir) if deletes_on else None
-        for key, cols in _assembled_chunks(batches, fcols, with_keys=True):
-            decoded: dict[str, pa.Array] = {}
-            mask = _conj_mask(cols, flt, types, decoded)
-            if any_flt:
-                omask = None
-                for br in any_flt:
-                    m = _conj_mask(cols, [br], types, decoded)
-                    omask = m if omask is None else (omask | m)
-                mask = omask if mask is None else (mask & omask)
-            n = int(mask.sum())
-            if dmask is not None and n:
-                pos = dmask.positions(*key)
-                if pos is not None:
-                    n -= int(mask[pos[pos < len(mask)]].sum())
-            yield pa.RecordBatch.from_arrays(
-                [pa.array([n], pa.int64())], names=["n"])
+        for path, keys in task_files(batches):
+            zones = _file_zones(path, fcols)
+            n = n_meta = 0
+            boundary = []
+            for key in map(tuple, keys):
+                z = zones[key]
+                if (all(_proves_all(z, c, t) for c, t in conj)
+                        and (not disj
+                             or any(_proves_all(z, c, t) for c, t in disj))):
+                    n_meta += 1
+                    n_rows = next(iter(z.values()))[0]
+                    pos = dmask.positions(*key) if dmask is not None else None
+                    n += n_rows - (0 if pos is None else len(pos))
+                else:
+                    boundary.append(key)
+            for key, cols in read_chunks(path, boundary, fcols):
+                mask = _conj_mask(cols, flt, types, {}, any_flt)
+                n += int(_keep_rows(mask, len(mask), dmask, key).sum())
+            yield pa.RecordBatch.from_pydict(
+                {"n": [n], "meta": [n_meta], "dec": [len(boundary)]})
 
-    straddle = sub.mapInArrow(task, "n bigint")
-    total = meta.unionByName(straddle).agg(F.sum("n").alias("n_rows"))
-    obs = cls.agg(
-        F.count("*").alias("chunks_total"),
-        F.sum(F.when(~F.col("can"), 1).otherwise(0)).alias("chunks_pruned"),
-        F.sum(F.when(F.col("can") & F.col("all_rows"), 1).otherwise(0))
-        .alias("chunks_metadata_only"),
-        F.sum(F.when(F.col("can") & ~F.col("all_rows"), 1).otherwise(0))
-        .alias("chunks_decoded"))
-    return total.crossJoin(obs)
+    def total(col):  # 0, not NULL, when every chunk is pruned
+        return F.coalesce(F.sum(col), F.lit(0))
+
+    counts = plan.counts
+    part = file_tasks_df(spark, [(fp.path, fp.keys) for fp in plan.files]) \
+        .mapInArrow(task, "n bigint, meta bigint, dec bigint")
+    return part.agg(
+        total("n").alias("n_rows"),
+        F.lit(counts["chunks_total"]).cast("bigint").alias("chunks_total"),
+        F.lit(counts["chunks_total"] - counts["chunks_kept"]).cast("bigint")
+        .alias("chunks_pruned"),
+        total("meta").alias("chunks_metadata_only"),
+        total("dec").alias("chunks_decoded"))
+
+
+def _proves_all(zones: dict, col: str, test) -> bool:
+    """Do a chunk's zone rows (``_file_zones``) prove that every row of
+    ``col`` passes the ``zone_all`` test? A column with nulls never does."""
+    z = zones.get(col)
+    return z is not None and not z[3] and test(z[1], z[2])
 
 
 def encoded_group_strlen(spark, out_dir: str, key_col: str, str_col: str,
@@ -748,19 +584,9 @@ def _group_value_stats(spark, out_dir: str, key_col: str, val_col: str,
             raise KeyError(f"column {f[0]!r} not in encoded data")
         if f[0] not in needed:
             needed.append(f[0])
-    chunks = pruned_chunks(spark, out_dir, needed, flt)
-    chunks = chunk_repartition(
-        spark, chunks.select("pid", "chunk_id", "column", "codec",
-                             "params", "payload"), out_dir)
-    from .deletes import has_deletes
 
-    deletes_on = has_deletes(out_dir)
-
-    def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from .deletes import DeleteMask
-
-        dmask = DeleteMask(out_dir) if deletes_on else None
-        for key, cols in _assembled_chunks(batches, needed, with_keys=True):
+    def partials(chunks, dmask) -> Iterator[pa.RecordBatch]:
+        for key, cols in chunks:
             decoded: dict[str, pa.Array] = {}
             mask = _conj_mask(cols, flt, types, decoded)
             if mask is not None and not mask.any():
@@ -769,11 +595,7 @@ def _group_value_stats(spark, out_dir: str, key_col: str, val_col: str,
                 cols[key_col], kt, decoded.get(key_col))
             n = len(codes)
             full, valid = value_fn(cols, decoded, n)
-            keep = np.ones(n, dtype=bool) if mask is None else mask.copy()
-            if dmask is not None:
-                pos = dmask.positions(*key)
-                if pos is not None and len(pos):
-                    keep[pos[pos < n]] = False
+            keep = _keep_rows(mask, n, dmask, key)
             if not keep.any():
                 continue
             sel = keep & valid
@@ -803,7 +625,7 @@ def _group_value_stats(spark, out_dir: str, key_col: str, val_col: str,
 
     ddl = (f"value {_spark_type(types[key_col])}, n_rows bigint, "
            "n_values bigint, s bigint, mn bigint, mx bigint")
-    part = chunks.mapInArrow(task, ddl)
+    part = _chunk_job(spark, out_dir, needed, partials, ddl, flt, types=types)
     agg = part.groupBy("value").agg(
         F.sum("n_rows").alias("n_rows"),
         F.sum("n_values").alias("n_values"),
@@ -891,19 +713,9 @@ def _group_distinct_pairs(spark, out_dir: str, key_col: str, val_col: str,
             raise KeyError(f"column {f[0]!r} not in encoded data")
         if f[0] not in needed:
             needed.append(f[0])
-    chunks = pruned_chunks(spark, out_dir, needed, flt)
-    chunks = chunk_repartition(
-        spark, chunks.select("pid", "chunk_id", "column", "codec",
-                             "params", "payload"), out_dir)
-    from .deletes import has_deletes
 
-    deletes_on = has_deletes(out_dir)
-
-    def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from .deletes import DeleteMask
-
-        dmask = DeleteMask(out_dir) if deletes_on else None
-        for key, cols in _assembled_chunks(batches, needed, with_keys=True):
+    def partials(chunks, dmask) -> Iterator[pa.RecordBatch]:
+        for key, cols in chunks:
             decoded: dict[str, pa.Array] = {}
             mask = _conj_mask(cols, flt, types, decoded)
             if mask is not None and not mask.any():
@@ -915,12 +727,7 @@ def _group_distinct_pairs(spark, out_dir: str, key_col: str, val_col: str,
             else:
                 vcodes, vdict, kv = _chunk_key_codes(
                     cols[val_col], vt, decoded.get(val_col))
-            n = len(kcodes)
-            keep = np.ones(n, dtype=bool) if mask is None else mask.copy()
-            if dmask is not None:
-                pos = dmask.positions(*key)
-                if pos is not None and len(pos):
-                    keep[pos[pos < n]] = False
+            keep = _keep_rows(mask, len(kcodes), dmask, key)
             if not keep.any():
                 continue
             kvals = pa.concat_arrays([kdict.cast(kt), pa.nulls(1, kt)])
@@ -945,7 +752,7 @@ def _group_distinct_pairs(spark, out_dir: str, key_col: str, val_col: str,
 
     ddl = (f"value {_spark_type(types[key_col])}, "
            f"val {_spark_type(types[val_col])}")
-    return chunks.mapInArrow(task, ddl)
+    return _chunk_job(spark, out_dir, needed, partials, ddl, flt, types=types)
 
 
 def encoded_group_ndv(spark, out_dir: str, key_col: str, val_col: str,
@@ -1012,19 +819,9 @@ def encoded_group_topk(spark, out_dir: str, key_col: str, val_col: str,
             raise KeyError(f"column {f[0]!r} not in encoded data")
         if f[0] not in needed:
             needed.append(f[0])
-    chunks = pruned_chunks(spark, out_dir, needed, flt)
-    chunks = chunk_repartition(
-        spark, chunks.select("pid", "chunk_id", "column", "codec",
-                             "params", "payload"), out_dir)
-    from .deletes import has_deletes
 
-    deletes_on = has_deletes(out_dir)
-
-    def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from .deletes import DeleteMask
-
-        dmask = DeleteMask(out_dir) if deletes_on else None
-        for key, cols in _assembled_chunks(batches, needed, with_keys=True):
+    def partials(chunks, dmask) -> Iterator[pa.RecordBatch]:
+        for key, cols in chunks:
             decoded: dict[str, pa.Array] = {}
             mask = _conj_mask(cols, flt, types, decoded)
             if mask is not None and not mask.any():
@@ -1036,12 +833,7 @@ def encoded_group_topk(spark, out_dir: str, key_col: str, val_col: str,
             else:
                 vcodes, vdict, kv = _chunk_key_codes(
                     cols[val_col], vt, decoded.get(val_col))
-            n = len(kcodes)
-            keep = np.ones(n, dtype=bool) if mask is None else mask.copy()
-            if dmask is not None:
-                pos = dmask.positions(*key)
-                if pos is not None and len(pos):
-                    keep[pos[pos < n]] = False
+            keep = _keep_rows(mask, len(kcodes), dmask, key)
             sel = keep & (vcodes < kv)  # null values are not ranked
             if not sel.any():
                 continue
@@ -1058,7 +850,8 @@ def encoded_group_topk(spark, out_dir: str, key_col: str, val_col: str,
 
     ddl = (f"value {_spark_type(types[key_col])}, "
            f"val {_spark_type(types[val_col])}, cnt bigint")
-    partial = chunks.mapInArrow(task, ddl)
+    partial = _chunk_job(spark, out_dir, needed, partials, ddl, flt,
+                         types=types)
     totals = partial.groupBy("value", "val").agg(F.sum("cnt").alias("cnt"))
 
     def local_prune(pdfs):
@@ -1129,93 +922,54 @@ def encoded_histogram(spark, out_dir: str, column: str, bucket_width: int,
             raise KeyError(f"column {f[0]!r} not in encoded data")
         if f[0] not in needed:
             needed.append(f[0])
-    chunks = pruned_chunks(spark, out_dir, needed, flt)
-    if any_flt:
-        any_keep = (pruned_chunks_any(spark, out_dir, needed, any_flt)
-                    .select("pid", "chunk_id").distinct())
-        chunks = chunks.join(any_keep, ["pid", "chunk_id"], "left_semi")
-    from .deletes import _deletes_dir, has_deletes
-
+    files = planned_files(out_dir, needed, flt, any_flt, types=types)
+    meta_arm = not flt and not any_flt
     deletes_on = has_deletes(out_dir)
     w = int(bucket_width)
 
-    if not flt and not any_flt and "zmin_long" in chunks.columns:
-        z = chunks.filter(F.col("column") == column).select(
-            "pid", "chunk_id", "n_rows", "zmin_long", "zmax_long",
-            F.col("params").contains('"n_total"').alias("has_nulls"))
-        # exact int64 floor division (x - pmod(x, w)) div w — Spark's `/`
-        # is double division and loses integers past 2^53
-        def _fdiv(col: str):
-            return F.expr(f"({col} - pmod({col}, {w})) div {w}")
-
-        full = (F.col("zmin_long").isNotNull() & ~F.col("has_nulls")
-                & (_fdiv("zmin_long") == _fdiv("zmax_long")))
-        cls = z.select("pid", "chunk_id", "n_rows", "zmin_long",
-                       full.alias("full"))
-        if deletes_on:
-            tomb = (spark.read.parquet(_deletes_dir(out_dir))
-                    .groupBy("pid", "chunk_id")
-                    .agg(F.count("*").alias("n_del")))
-            cls = (cls.join(F.broadcast(tomb), ["pid", "chunk_id"], "left")
-                   .na.fill({"n_del": 0}))
-        else:
-            cls = cls.withColumn("n_del", F.lit(0))
-        meta = (cls.filter("full")
-                .select(F.expr(f"(zmin_long - pmod(zmin_long, {w})) div {w}")
-                        .cast("long").alias("bucket"),
-                        (F.col("n_rows") - F.col("n_del")).cast("long")
-                        .alias("cnt")))
-        boundary_keys = cls.filter(~F.col("full")).select("pid", "chunk_id")
-        sub = (chunks.select("pid", "chunk_id", "column", "codec",
-                             "params", "payload")
-               .join(boundary_keys, ["pid", "chunk_id"], "left_semi"))
-    else:
-        meta = None
-        sub = chunks.select("pid", "chunk_id", "column", "codec",
-                            "params", "payload")
-    sub = chunk_repartition(spark, sub, out_dir)
-
     def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from .deletes import DeleteMask
-
         dmask = DeleteMask(out_dir) if deletes_on else None
-        for key, cols in _assembled_chunks(batches, needed, with_keys=True):
-            decoded: dict[str, pa.Array] = {}
-            mask = _conj_mask(cols, flt, types, decoded)
-            if any_flt:
-                omask = None
-                for br in any_flt:
-                    m = _conj_mask(cols, [br], types, decoded)
-                    omask = m if omask is None else (omask | m)
-                mask = omask if mask is None else (mask & omask)
-            arr = decoded.get(column)
-            if arr is None:
-                arr = decode_column(cols[column])
-            n = len(arr)
-            keep = np.ones(n, dtype=bool) if mask is None else mask.copy()
-            if dmask is not None:
-                pos = dmask.positions(*key)
-                if pos is not None and len(pos):
-                    keep[pos[pos < n]] = False
-            if not keep.any():
-                continue
-            valid = pc.is_valid(arr).to_numpy(zero_copy_only=False).astype(bool)
-            vals = arr.cast(pa.int64()).fill_null(0).to_numpy(zero_copy_only=False)
-            sel = keep & valid
-            buckets = np.floor_divide(vals[sel], np.int64(w))
-            ub, cnts = np.unique(buckets, return_counts=True)
-            out_b = [int(b) for b in ub]
-            out_c = [int(c) for c in cnts]
-            n_null = int((keep & ~valid).sum())
-            if n_null:
-                out_b.append(None)
-                out_c.append(n_null)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(out_b, type=pa.int64()),
-                 pa.array(out_c, type=pa.int64())],
-                names=["bucket", "cnt"])
+        for path, keys in task_files(batches):
+            if meta_arm:
+                # single-bucket chunks answer from metadata; the rest decode
+                keys, out_b, out_c = [], [], []
+                for key, z in _file_zones(path, [column]).items():
+                    n, lo, hi, has_nulls = z[column]
+                    if lo is None or has_nulls or lo // w != hi // w:
+                        keys.append(key)
+                        continue
+                    pos = dmask.positions(*key) if dmask is not None else None
+                    out_b.append(lo // w)
+                    out_c.append(n - (0 if pos is None else len(pos)))
+                if out_b:
+                    yield pa.RecordBatch.from_pydict(
+                        {"bucket": out_b, "cnt": out_c}, schema=_HIST_SCHEMA)
+            for key, cols in read_chunks(path, keys, needed):
+                decoded: dict[str, pa.Array] = {}
+                mask = _conj_mask(cols, flt, types, decoded, any_flt)
+                arr = decoded.get(column)
+                if arr is None:
+                    arr = decode_column(cols[column])
+                keep = _keep_rows(mask, len(arr), dmask, key)
+                if not keep.any():
+                    continue
+                valid = pc.is_valid(arr).to_numpy(zero_copy_only=False).astype(bool)
+                vals = arr.cast(pa.int64()).fill_null(0).to_numpy(zero_copy_only=False)
+                sel = keep & valid
+                buckets = np.floor_divide(vals[sel], np.int64(w))
+                ub, cnts = np.unique(buckets, return_counts=True)
+                out_b = [int(b) for b in ub]
+                out_c = [int(c) for c in cnts]
+                n_null = int((keep & ~valid).sum())
+                if n_null:
+                    out_b.append(None)
+                    out_c.append(n_null)
+                yield pa.RecordBatch.from_pydict(
+                    {"bucket": out_b, "cnt": out_c}, schema=_HIST_SCHEMA)
 
-    part = sub.mapInArrow(task, "bucket bigint, cnt bigint")
-    if meta is not None:
-        part = part.unionByName(meta)
-    return part.groupBy("bucket").agg(F.sum("cnt").alias("cnt"))
+    return (file_tasks_df(spark, files)
+            .mapInArrow(task, "bucket bigint, cnt bigint")
+            .groupBy("bucket").agg(F.sum("cnt").alias("cnt")))
+
+
+_HIST_SCHEMA = pa.schema([("bucket", pa.int64()), ("cnt", pa.int64())])

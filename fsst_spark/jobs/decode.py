@@ -18,8 +18,6 @@ import json
 import re
 from typing import Iterator
 
-import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
@@ -119,25 +117,8 @@ def decoded_schema_ddl(spark, out_dir: str, columns: list[str] | None = None,
     return f"pid int, chunk_id int, {ddl}", ordered
 
 
-_ZONE_OPS = {
-    ">=": lambda v: F.col("zmax_long") >= v,
-    ">": lambda v: F.col("zmax_long") > v,
-    "<=": lambda v: F.col("zmin_long") <= v,
-    "<": lambda v: F.col("zmin_long") < v,
-    "==": lambda v: (F.col("zmin_long") <= v) & (F.col("zmax_long") >= v),
-}
-
-# String zones are 8-byte PREFIX bounds (zone_pack8): equal prefixes
-# collapse, so s < X only implies pack(s) <= pack(X) — the strict ops must
-# compare non-strictly or a shared-prefix boundary chunk would be wrongly
-# pruned. Ints use exact zones and keep the strict forms above.
-_ZONE_OPS_PREFIX = {
-    ">=": _ZONE_OPS[">="],
-    ">": _ZONE_OPS[">="],
-    "<=": _ZONE_OPS["<="],
-    "<": _ZONE_OPS["<="],
-    "==": _ZONE_OPS["=="],
-}
+# the comparison ops every zoned column type supports
+_CMP_OPS = ("<", "<=", "==", ">", ">=")
 
 
 _TS_UNIT_PER_SEC = {"s": 1, "ms": 10**3, "us": 10**6, "ns": 10**9}
@@ -178,12 +159,15 @@ _STRINGY = ("string", "large_string", "binary", "large_binary")
 _INTY = ("int8", "int16", "int32", "int64")
 
 
-def _zone_key(arrow_name: str, value) -> tuple[int, dict]:
-    """(packed zone value, zone-op table) for a filter on a column of the
-    given arrow type. Raises TypeError on a value/column type mismatch —
-    silently packing e.g. an int against string-prefix zones would prune
-    every chunk (ints sit below all ASCII pack8 keys) and return an empty
-    result for a predicate that matches rows."""
+def _zone_key(arrow_name: str, value) -> tuple[int, bool]:
+    """(packed zone value, exact) for a filter on a column of the given
+    arrow type: int, timestamp and float zones are exact order keys, while
+    string zones are 8-byte PREFIX bounds (zone_pack8) — equal prefixes
+    collapse, so s < X only implies pack(s) <= pack(X). Raises TypeError on
+    a value/column type mismatch — silently packing e.g. an int against
+    string-prefix zones would prune every chunk (ints sit below all ASCII
+    pack8 keys) and return an empty result for a predicate that matches
+    rows."""
     from .encode import zone_pack8, zone_packf
 
     if arrow_name in _STRINGY:
@@ -191,59 +175,27 @@ def _zone_key(arrow_name: str, value) -> tuple[int, dict]:
             raise TypeError(
                 f"column is {arrow_name} but filter value is "
                 f"{type(value).__name__}; pass a str/bytes value")
-        return zone_pack8(value), _ZONE_OPS_PREFIX
+        return zone_pack8(value), False
     if arrow_name in _INTY:
         if isinstance(value, bool) or not isinstance(value, int):
             raise TypeError(
                 f"column is {arrow_name} but filter value is "
                 f"{type(value).__name__}; pass an int value")
-        return int(value), _ZONE_OPS
+        return int(value), True
     if arrow_name.startswith("timestamp["):
-        return _ts_ticks(arrow_name, value), _ZONE_OPS
+        return _ts_ticks(arrow_name, value), True
     if arrow_name in ("float", "double"):
         if isinstance(value, bool) or not isinstance(value, (int, float)):
             raise TypeError(
                 f"column is {arrow_name} but filter value is "
                 f"{type(value).__name__}; pass a float value")
-        return zone_packf(float(value)), _ZONE_OPS
+        return zone_packf(float(value)), True
     raise ValueError(f"no zone-map support for column type {arrow_name}")
 
 
-def zone_in_keep_pred(arrow_name: str, value):
-    """Spark Column over (zmin_long, zmax_long): the conservative
-    chunk-keep test for ``col IN (values)`` — true iff the chunk's zone
-    interval could contain ANY probed value, for the Spark-side zone
-    classification of ``agg._zone_can_pred``.
-
-    Small lists build the plain OR of per-value containment tests (stays
-    inside codegen/pushdown). Chaining one OR per value grows the
-    Catalyst tree linearly and a few thousand values overflow the JVM
-    analyzer stack, so above 16 probes the test runs as one vectorized
-    binary search (sorted probes, ``np.searchsorted`` per chunk group)
-    in a pandas UDF over the narrow metadata frame — O(log V) per row,
-    constant expression depth."""
-    values = list(value)
-    if not values:
-        raise ValueError("'in' filter needs a non-empty value list")
-    packed = [_zone_key(arrow_name, v) for v in values]
-    if len(packed) <= 16:
-        pred = packed[0][1]["=="](packed[0][0])
-        for zv, ops in packed[1:]:
-            pred = pred | ops["=="](zv)
-        return pred
-    probes = np.array(sorted(zv for zv, _ in packed), dtype=np.int64)
-
-    @F.pandas_udf("boolean")
-    def _contains_any(zmin: pd.Series, zmax: pd.Series) -> pd.Series:
-        # null zones are kept by callers' isNull() arm; make them an
-        # empty interval here so searchsorted stays typed
-        lo_v = zmin.fillna(np.iinfo(np.int64).max).to_numpy(np.int64)
-        hi_v = zmax.fillna(np.iinfo(np.int64).min).to_numpy(np.int64)
-        lo = np.searchsorted(probes, lo_v, side="left")
-        hi = np.searchsorted(probes, hi_v, side="right")
-        return pd.Series(lo < hi)
-
-    return _contains_any(F.col("zmin_long"), F.col("zmax_long"))
+def _zone_op_error(op: str) -> ValueError:
+    return ValueError(f"zone op must be one of "
+                      f"{sorted(_CMP_OPS) + ['in', 'prefix']}, got {op!r}")
 
 
 def _prefix_bytes(arrow_name: str, value, op: str = "prefix") -> bytes:
@@ -362,8 +314,8 @@ def zone_keep(arrow_name: str, op: str, value):
     zones), and a value/column type mismatch or an unknown op raises here,
     before any chunk is read. Conservative: null zones always keep. Each
     op is a key interval [lo, hi] the chunk's zone must meet; string zones
-    are 8-byte prefixes, so strict ops bound non-strictly there (same rule
-    as ``_ZONE_OPS_PREFIX``), while exact int keys tighten them by one.
+    are 8-byte prefixes, so strict ops bound non-strictly there
+    (``_zone_key``), while exact keys tighten them by one.
     ``in`` keeps a chunk whose zone holds ANY probe: one bisection over
     the sorted packed probes, O(log V) per chunk."""
     import bisect
@@ -389,20 +341,65 @@ def zone_keep(arrow_name: str, op: str, value):
             # s LIKE 'p%': every match packs into [pack8(p), pack8(p padded
             # with 0xff)] — exact on the packed keys by bytewise order
             lo, hi = _prefix_zone_bounds(arrow_name, value)
-        elif op in _ZONE_OPS:
-            zval, ops = _zone_key(arrow_name, value)  # typed: raises on mismatch
-            strict = int(ops is _ZONE_OPS)  # exact int keys: > v means >= v+1
+        elif op in _CMP_OPS:
+            zval, exact = _zone_key(arrow_name, value)  # raises on mismatch
+            strict = int(exact)  # exact keys: > v means >= v+1
             lo, hi = {"==": (zval, zval), ">=": (zval, None),
                       ">": (zval + strict, None), "<=": (None, zval),
                       "<": (None, zval - strict)}[op]
         else:
-            raise ValueError(
-                f"zone op must be one of {sorted(_ZONE_OPS) + ['in', 'prefix']}, "
-                f"got {op!r}")
+            raise _zone_op_error(op)
 
         def test(zmin, zmax):
             return (lo is None or zmax >= lo) and (hi is None or zmin <= hi)
     return lambda zmin, zmax: zmin is None or zmax is None or test(zmin, zmax)
+
+
+def zone_all(arrow_name: str, op: str, value):
+    """Compile one filter into its all-rows test ``(zmin, zmax) -> bool``:
+    True iff the zone bounds PROVE every non-null row of the chunk
+    satisfies ``op value`` (the metadata-only state of the tri-state
+    counts; null zones prove nothing). Where :func:`zone_keep` asks whether
+    the zone meets the op's key interval [lo, hi], this asks whether it
+    lies inside it. Int, timestamp and float zones are exact order keys
+    (floats: NaN greatest, Spark/DuckDB comparison semantics). String
+    zones are 8-byte PREFIX bounds: only STRICT pack inequalities transfer
+    to the rows (pack(min) > pack(v) => min > v, but pack equality proves
+    nothing), so equality is never provable and every bound is strict.
+    Ops the chunk-local row masks do not evaluate raise, as in
+    :func:`zone_keep`."""
+    def never(zmin, zmax):
+        return False
+
+    if op == "contains":
+        # a zone interval can never prove every row CONTAINS a substring
+        _prefix_bytes(arrow_name, value, op)  # type check only
+        return never
+    if op == "in":
+        if arrow_name in _STRINGY:
+            return never
+        vals = {_zone_key(arrow_name, v)[0] for v in value}
+        return lambda zmin, zmax: (zmin is not None and zmin == zmax
+                                   and zmin in vals)
+    if op == "prefix":
+        # packs are the rows' first 8 bytes: a zone inside [lo, hi] proves
+        # every row starts with p — only for prefixes that fit the pack
+        lo, hi = _prefix_zone_bounds(arrow_name, value)
+        if len(_prefix_bytes(arrow_name, value)) > 8:
+            return never
+    elif op in _CMP_OPS:
+        zv, exact = _zone_key(arrow_name, value)
+        if op == "==" and not exact:
+            return never
+        loose = int(not exact)  # prefix packs prove only strict bounds
+        lo, hi = {"==": (zv, zv), ">=": (zv + loose, None),
+                  ">": (zv + 1, None), "<=": (None, zv - loose),
+                  "<": (None, zv - 1)}[op]
+    else:
+        raise _zone_op_error(op)
+    return lambda zmin, zmax: (zmin is not None and zmax is not None
+                               and (lo is None or zmin >= lo)
+                               and (hi is None or zmax <= hi))
 
 
 # escapes whose Java-regex meaning is BROADER than (or absent from)
@@ -456,68 +453,6 @@ def _rlike_prunable(pattern: str):
         return None
 
 
-def _keep_keys(spark, chunks: DataFrame, keys: list) -> DataFrame:
-    """``chunks`` left-semi-joined to a broadcast of the planned keys."""
-    kdf = spark.createDataFrame(keys, "pid int, chunk_id int")
-    return chunks.join(F.broadcast(kdf), ["pid", "chunk_id"], "left_semi")
-
-
-def pruned_chunks(spark, out_dir: str, columns: list[str] | None,
-                  filters: list[tuple[str, str, int | str]],
-                  dict_prune: bool = True) -> DataFrame:
-    """Chunk rows for ``columns``, minus every chunk a zone map, a dict
-    dictionary or a bloom proves cannot match the conjunction ``filters``:
-    the JVM chunk-row frame the encoded-store aggregations and deletes
-    still consume, restricted to the keys of the driver-side planner
-    (:mod:`jobs.plan`)."""
-    chunks = _chunks_df(spark, out_dir, columns)
-    if not filters:
-        return chunks
-    from .plan import plan_chunks
-
-    keys = plan_chunks(out_dir, columns, filters, dict_prune=dict_prune,
-                       types=column_arrow_types(spark, out_dir)).keys
-    return _keep_keys(spark, chunks, keys)
-
-
-def pruned_chunks_any(spark, out_dir: str, columns: list[str] | None,
-                      filters: list[tuple[str, str, int | str]],
-                      dict_prune: bool = True) -> DataFrame:
-    """Chunk rows for ``columns``, minus every chunk that NO branch of the
-    disjunction ``filters`` can match — the OR complement of
-    ``pruned_chunks``: a chunk survives if any single branch's full
-    pruning stack (zones, dict sections, blooms) keeps it."""
-    chunks = _chunks_df(spark, out_dir, columns)
-    if not filters:
-        return chunks
-    from .plan import plan_chunks
-
-    keys = plan_chunks(out_dir, columns, any_filters=filters,
-                       dict_prune=dict_prune,
-                       types=column_arrow_types(spark, out_dir)).keys
-    return _keep_keys(spark, chunks, keys)
-
-
-def chunk_repartition(spark, chunks: DataFrame, out_dir: str) -> DataFrame:
-    """Shuffle chunk rows so all column rows of one chunk land in one task.
-
-    Chunk rows are few and fat (payload ~MBs), so the shuffle moves encoded
-    (small) bytes — decoding after the shuffle keeps shuffled volume
-    minimal. Partition count tracks the store size (one manifest file per
-    encode partition — a driver-side listing, no data read): a small encode
-    gets a few real tasks instead of defaultParallelism near-empty ones, a
-    big store still fans out to full parallelism."""
-    import glob as _glob
-    import os as _os
-
-    n_pids = len(_glob.glob(_os.path.join(out_dir, "manifest", "*.parquet")))
-    if n_pids:
-        n_part = min(spark.sparkContext.defaultParallelism * 2, n_pids * 4)
-        return chunks.repartition(n_part, F.col("pid"), F.col("chunk_id"))
-    # non-globbable store: keep the default-parallelism shuffle
-    return chunks.repartition(F.col("pid"), F.col("chunk_id"))
-
-
 def _as_of_pids(store: str, as_of: int) -> list[int]:
     """pids visible as of commit entry ``as_of`` (entries 0..as_of of the
     store's append-only commit log) — the same snapshot rule the fsst
@@ -555,14 +490,12 @@ def decode_job(spark, out_dir: str, columns: list[str] | None = None,
     are immutable, so the same N always yields the same rows).
 
     ``ordered=True`` guarantees the rows come globally ordered by
-    (pid, chunk_id, row position); every decode runs this way. Task i reads the file of the i-th pid
-    and decodes its chunks in file (chunk_id) order, so partition i
-    strictly precedes partition i+1 with no shuffle and no row-level
-    sort. On a store clustered with ``encode_job(sort_key=K)`` this is
-    K-order: a sorted export for the price of a plain decode. Caveat: a
-    store with UNMATERIALIZED schema-log-added columns buffers its pre-add
-    chunks to end-of-stream, which breaks in-partition chunk order —
-    materialize first."""
+    (pid, chunk_id, row position); every decode runs this way. Tasks read
+    runs of files in pid order and emit each file's chunks in file
+    (chunk_id) order, so partition i strictly precedes partition i+1 with
+    no shuffle and no row-level sort. On a store clustered with
+    ``encode_job(sort_key=K)`` this is K-order: a sorted export for the
+    price of a plain decode."""
     ddl, out_cols = decoded_schema_ddl(spark, out_dir, columns)
     filters = list(zone_filters or [])
     if zone_filter is not None:
@@ -586,111 +519,50 @@ def decode_job(spark, out_dir: str, columns: list[str] | None = None,
     # row tombstones (jobs.deletes) apply executor-side: the flag is read
     # once on the driver, each task lazily loads its pids' positions
     from .deletes import has_deletes
-    from .schema import added_columns, dropped_columns
+    from .plan import file_tasks_df, planned_files, task_chunks
+    from .schema import added_columns
 
     deletes_on = has_deletes(out_dir)
     # schema-log-added columns: chunks written before the add have no row
-    # for them — they fill with NULLs at end-of-stream. Chunks written
-    # after the add carry the column physically and keep the streaming
-    # early-emit; a store with UNMATERIALIZED adds buffers its pre-add
-    # chunks per task until the task's input ends (memory ∝ the task's own
-    # input share — rewrite via recluster/materialize to restore
-    # chunk-at-a-time emit everywhere).
+    # for them and fill with NULLs as they emit
     added_types = {c: t for c, t in added_columns(out_dir).items()
                    if c in out_cols}
 
-    def decode_task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def read_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from ..env import madvise_hugepages
         from ..kernel.codecs import parse_arrow_type
         from .deletes import DeleteMask
 
         madvise_hugepages()
         dmask = DeleteMask(out_dir) if deletes_on else None
-        pending: dict[tuple[int, int], dict] = {}
-        for batch in batches:
-            cols = batch.to_pylist()
-            for row in cols:
-                key = (row["pid"], row["chunk_id"])
-                slot = pending.setdefault(key, {"cols": {}})
-                slot["cols"][row["column"]] = decode_column(
-                    {"codec": row["codec"], "params": json.loads(row["params"]),
-                     "payload": row["payload"]}
-                )
-                # membership, not count: the row-count-carrier column of the
-                # all-added corner is scanned but not in `out_cols`
-                if all(c in slot["cols"] for c in out_cols):
-                    out = _emit(key, slot["cols"], out_cols, dmask)
-                    if out is not None:
-                        yield out
-                    del pending[key]
-        for key in sorted(pending):  # pre-add chunks: fill virtual NULLs
-            cols = pending[key]["cols"]
+        for key, chunk in task_chunks(batches, scan_columns or out_cols):
+            cols = {c: decode_column(enc) for c, enc in chunk.items()}
             missing = set(out_cols) - set(cols)
-            assert missing and missing <= set(added_types), \
-                f"incomplete chunk {key}: missing non-added columns {missing}"
-            n = len(next(iter(cols.values())))
-            for c in missing:
-                cols[c] = pa.nulls(n, parse_arrow_type(added_types[c]))
+            if missing:  # a pre-add chunk: fill virtual NULLs
+                assert missing <= set(added_types), \
+                    f"incomplete chunk {key}: missing non-added columns {missing}"
+                n = len(next(iter(cols.values())))
+                for c in missing:
+                    cols[c] = pa.nulls(n, parse_arrow_type(added_types[c]))
             out = _emit(key, cols, out_cols, dmask)
             if out is not None:
                 yield out
 
     # FILE-GRANULAR read: every (pid, chunk_id) group lives whole inside
-    # its pid's single chunk file, so each task reads a run of files
-    # columnar-natively with pyarrow — no chunk-row shuffle, no JVM->Python
-    # hop of a chunk-metadata scan (only file paths and keep-sets cross),
-    # and just the six columns the decode needs. A selective read first
-    # asks the driver-side planner (jobs.plan) which chunks can match:
-    # only files with survivors become tasks, and each task decodes only
-    # its planned keys. Tasks run in pid order, which makes `ordered` free.
-    from .plan import chunk_files, file_tasks_df, plan_chunks
-
+    # its pid's single chunk file, so each task reads a run of files with
+    # the one chunk reader (jobs.plan) — no chunk-row shuffle, and only file
+    # paths and keep-sets cross from the JVM. A selective read first asks
+    # the driver-side planner which chunks can match: only files with
+    # survivors become tasks, and each task decodes only its planned keys.
+    # Tasks run in pid order, which makes `ordered` free.
     if as_of is not None and _pids is not None:
         raise ValueError("pass as_of OR a pid whitelist, not both")
     pids = _as_of_pids(out_dir, as_of) if as_of is not None else _pids
-    if (filters or zone_filters_any or pids is not None
-            or _chunk_keys is not None):
-        plan = plan_chunks(out_dir, scan_columns, filters, zone_filters_any,
-                           pids=pids, dict_prune=dict_prune, keys=_chunk_keys,
-                           types=column_arrow_types(
-                               spark, out_dir, include_added=True))
-        files = [(fp.path, fp.keys) for fp in plan.files]
-    else:
-        files = [(path, None) for _, path in chunk_files(out_dir)]
-    if scan_columns is not None:
-        col_keep, col_drop = list(scan_columns), None
-    else:
-        col_keep = None
-        col_drop = sorted(dropped_columns(out_dir)) or None
-
-    def read_file(path: str, keys: list | None) -> pa.Table:
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        t = pq.read_table(path, columns=["pid", "chunk_id", "column",
-                                         "codec", "params", "payload"])
-        if col_keep is not None:
-            t = t.filter(pc.is_in(t.column("column"),
-                                  pa.array(col_keep, pa.string())))
-        elif col_drop is not None:
-            t = t.filter(pc.invert(pc.is_in(t.column("column"),
-                                            pa.array(col_drop, pa.string()))))
-        if keys is not None:  # the planned keep-set
-            got = pc.add(pc.multiply(t.column("pid").cast(pa.int64()), 1 << 32),
-                         t.column("chunk_id").cast(pa.int64()))
-            t = t.filter(pc.is_in(got, pa.array([p << 32 | c for p, c in keys],
-                                                pa.int64())))
-        return t
-
-    def read_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        def file_batches():
-            for batch in batches:
-                for run in batch.column("files").to_pylist():
-                    for path, keys in json.loads(run):
-                        yield from read_file(path, keys).to_batches()
-
-        yield from decode_task(file_batches())
-
+    types = (column_arrow_types(spark, out_dir, include_added=True)
+             if filters or zone_filters_any else None)
+    files = planned_files(out_dir, scan_columns, filters, zone_filters_any,
+                          pids=pids, dict_prune=dict_prune, keys=_chunk_keys,
+                          types=types)
     return file_tasks_df(spark, files).mapInArrow(read_files, ddl)
 
 

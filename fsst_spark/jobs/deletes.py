@@ -1,9 +1,10 @@
 """Row-level deletes on encoded stores: position tombstones, merge-on-read.
 
 The shape is Iceberg v2's position deletes. ``delete_where`` never
-rewrites a chunk file: it decodes only the predicate columns of the
-chunks that might match (the same zone/dict/bloom pruning stack the
-selective decoder uses), computes the exact row mask chunk-locally, and
+rewrites a chunk file: the driver-side planner (:mod:`jobs.plan`, the
+pruning every selective read uses) picks the chunks that might match,
+file tasks decode only their predicate columns through the one chunk
+reader and compute the exact row mask chunk-locally, and the job
 appends narrow ``(pid, chunk_id, pos)`` tombstone rows under
 ``<store>/deletes/``. Every read that goes through ``decode_job`` /
 ``decode_filtered`` / the ``fsst`` DataSource then applies the
@@ -28,8 +29,9 @@ through the delete-aware decoder.
 PHYSICAL store (per-chunk checksums of what encode wrote), which deletes
 never modify.
 
-At 100 TB: the delete scan is one pass over only the candidate chunks'
-predicate columns (pruned like any selective decode), the tombstone
+At 100 TB: the delete scan is one pass of file tasks over only the
+candidate chunks' predicate columns (pruned like any selective decode,
+no chunk-row shuffle), the tombstone
 write is a distributed parquet append keyed and sorted by (pid,
 chunk_id), and read-side application is per-task and pid-local. The
 driver never sees a row.
@@ -143,23 +145,15 @@ def delete_where(spark, store: str, col: str | None = None,
     conjunction via ``filters``, a disjunction via ``any_filters`` —
     combined as ``AND(filters) AND OR(any_filters)``.
 
-    Plan: zone/dict/bloom pruning -> decode ONLY the predicate columns of
-    surviving chunks -> exact chunk-local row mask (minus already-
-    tombstoned positions, so repeated deletes are idempotent and counts
-    stay exact) -> distributed append of (pid, chunk_id, pos) rows sorted
-    by chunk key (read-side pid filters then prune row groups). A JSON
-    entry per call under ``deletes/_log/`` records the predicate for
-    lineage. ``pids`` restricts the scan to those partitions —
-    ``update_where`` uses it to tombstone only pre-append writes."""
-    from ..kernel.codecs import decode_column
-    from .agg import _arrow_mask, _conj_mask
-    from .decode import (
-        chunk_repartition,
-        column_arrow_types,
-        pruned_chunks,
-        pruned_chunks_any,
-    )
-
+    Plan: zone/dict/bloom pruning by the driver-side planner -> file tasks
+    decode ONLY the predicate columns of surviving chunks -> exact
+    chunk-local row mask (minus already-tombstoned positions, so repeated
+    deletes are idempotent and counts stay exact) -> distributed append of
+    (pid, chunk_id, pos) rows sorted by chunk key (read-side pid filters
+    then prune row groups). A JSON entry per call under ``deletes/_log/``
+    records the predicate for lineage. ``pids`` restricts the plan to
+    those partitions' files — ``update_where`` uses it to tombstone only
+    pre-append writes."""
     flt = list(filters or [])
     if col is not None:
         flt.insert(0, (col, op, value))
@@ -167,90 +161,71 @@ def delete_where(spark, store: str, col: str | None = None,
     if not flt and not any_flt:
         raise ValueError("delete_where needs (col, op, value), "
                          "filters=[...], or any_filters=[...]")
+    tomb = _where_tombstones(spark, store, flt, any_flt, pids)
+    return _append_tombstones(store, tomb, {
+        "filters": [list(f) for f in flt],
+        "any_filters": [list(f) for f in any_flt]})
+
+
+def _where_tombstones(spark, store: str, flt: list[tuple],
+                      any_flt: list[tuple], pids):
+    """``delete_where``'s tombstone frame: the new ``(pid, chunk_id,
+    pos)`` rows of ``AND(flt) AND OR(any_flt)``."""
+    from .agg import _conj_mask
+    from .decode import column_arrow_types
+
     types = column_arrow_types(spark, store)
-    fcols: list[str] = []
-    for f in flt + any_flt:
-        if f[0] not in types:
-            raise KeyError(f"column {f[0]!r} not in encoded data")
-        if f[0] not in fcols:
-            fcols.append(f[0])
+    fcols = list(dict.fromkeys(f[0] for f in flt + any_flt))
+    for c in fcols:
+        if c not in types:
+            raise KeyError(f"column {c!r} not in encoded data")
+    return _tombstones(
+        spark, store, fcols, flt, any_flt, pids, types,
+        lambda cols: _conj_mask(cols, flt, types, {}, any_flt))
 
-    chunks = pruned_chunks(spark, store, fcols, flt, dict_prune=True)
-    if pids is not None:
-        if len(pids) <= 100_000:
-            chunks = chunks.where(chunks["pid"].isin(sorted(pids)))
-        else:
-            from pyspark.sql import functions as F
 
-            pdf = spark.createDataFrame([(p,) for p in sorted(pids)], "pid int")
-            chunks = chunks.join(F.broadcast(pdf), "pid", "left_semi")
-    if any_flt:
-        any_keep = pruned_chunks_any(spark, store, fcols, list(any_flt),
-                                     dict_prune=True) \
-            .select("pid", "chunk_id").distinct()
-        chunks = chunks.join(any_keep, ["pid", "chunk_id"], "left_semi")
-    chunks = chunk_repartition(
-        spark, chunks.select("pid", "chunk_id", "column", "codec",
-                             "params", "payload"), store)
+def _tombstones(spark, store: str, columns: list[str], flt, any_flt, pids,
+                types, row_mask):
+    """File tasks over the planner's surviving chunks of ``columns``:
+    ``row_mask(cols)`` marks each chunk's rows to delete, and the rows not
+    yet tombstoned become ``(pid, chunk_id, pos)`` rows."""
+    from .plan import file_tasks_df, planned_files, task_chunks
+
+    files = planned_files(store, columns, flt, any_flt, pids=pids,
+                          types=types)
 
     def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         mask_cache = DeleteMask(store)
-        # assemble per-chunk predicate columns WITH their keys: inline the
-        # grouping loop (agg._assembled_chunks hides the (pid, chunk_id)
-        # key, which the tombstone rows need)
-        pending: dict[tuple[int, int], dict[str, dict]] = {}
-        for batch in batches:
-            for pid_s, cid_s, col_s, codec_s, params_s, payload_s in zip(
-                    batch.column("pid"), batch.column("chunk_id"),
-                    batch.column("column"), batch.column("codec"),
-                    batch.column("params"), batch.column("payload")):
-                key = (pid_s.as_py(), cid_s.as_py())
-                cols = pending.setdefault(key, {})
-                cols[col_s.as_py()] = {
-                    "codec": codec_s.as_py(),
-                    "params": json.loads(params_s.as_py()),
-                    "payload": payload_s.as_py(),
-                }
-                if len(cols) != len(fcols):
-                    continue
-                del pending[key]
-                decoded: dict[str, pa.Array] = {}
-                mask = _conj_mask(cols, flt, types, decoded)
-                if any_flt:
-                    amask: np.ndarray | None = None
-                    for fc, fop, fval in any_flt:
-                        if fc not in decoded:
-                            decoded[fc] = decode_column(cols[fc])
-                        m = _arrow_mask(decoded[fc], fop, fval, types[fc])
-                        amask = m if amask is None else (amask | m)
-                    mask = amask if mask is None else (mask & amask)
-                if mask is None or not mask.any():
-                    continue
-                already = mask_cache.positions(*key)
-                pos = np.flatnonzero(mask).astype(np.int64)
-                if already is not None:
-                    pos = pos[~np.isin(pos, already)]
-                if not len(pos):
-                    continue
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(np.full(len(pos), key[0], dtype=np.int32)),
-                     pa.array(np.full(len(pos), key[1], dtype=np.int32)),
-                     pa.array(pos)],
-                    names=["pid", "chunk_id", "pos"])
-        if pending:
-            raise RuntimeError(
-                f"incomplete chunks (missing column rows): {sorted(pending)[:4]}")
+        for key, cols in task_chunks(batches, columns):
+            mask = row_mask(cols)
+            if not mask.any():
+                continue
+            already = mask_cache.positions(*key)
+            pos = np.flatnonzero(mask).astype(np.int64)
+            if already is not None:
+                pos = pos[~np.isin(pos, already)]
+            if not len(pos):
+                continue
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(np.full(len(pos), key[0], dtype=np.int32)),
+                 pa.array(np.full(len(pos), key[1], dtype=np.int32)),
+                 pa.array(pos)],
+                names=["pid", "chunk_id", "pos"])
 
+    return (file_tasks_df(spark, files)
+            .mapInArrow(task, "pid int, chunk_id int, pos bigint")
+            # sorted layout => parquet row-group (pid, chunk_id) stats
+            # prune the read-side pushed pid filter
+            .sortWithinPartitions("pid", "chunk_id", "pos"))
+
+
+def _append_tombstones(store: str, tomb, entry: dict) -> dict:
+    """Append ``tomb`` to the store's tombstones (prior ones stay intact)
+    and log the call."""
     before = deleted_count(store)
-    tomb = chunks.mapInArrow(task, "pid int, chunk_id int, pos bigint")
-    # sorted layout => parquet row-group (pid, chunk_id) stats prune the
-    # read-side pushed pid filter; append keeps prior tombstones intact
-    (tomb.sortWithinPartitions("pid", "chunk_id", "pos")
-         .write.mode("append").parquet(_deletes_dir(store)))
+    tomb.write.mode("append").parquet(_deletes_dir(store))
     total = deleted_count(store)
-    _log_delete(store, {"filters": [list(f) for f in flt],
-                        "any_filters": [list(f) for f in any_flt],
-                        "deleted_now": total - before,
+    _log_delete(store, {**entry, "deleted_now": total - before,
                         "deleted_total": total})
     return {"deleted_now": total - before, "deleted_total": total}
 
@@ -266,7 +241,7 @@ def delete_matching(spark, store: str, col: str, keys_df,
     - ≤ ``max_pushdown_keys`` distinct keys: collected and routed through
       ``delete_where(col, 'in', keys)`` — the full zone/dict/bloom chunk
       pruning stack applies (the ``decode_semijoin`` runtime-filter shape).
-    - ≤ ``max_broadcast_keys``: keys broadcast as a set to the scan tasks;
+    - ≤ ``max_broadcast_keys``: keys broadcast as a set to the file tasks;
       every chunk's key column decodes, the mask is a vectorized
       ``is_in``. No pruning (an arbitrary key set has no zone shape), one
       pass over the key column only.
@@ -276,13 +251,7 @@ def delete_matching(spark, store: str, col: str, keys_df,
     from pyspark.sql import DataFrame as SparkDataFrame
 
     from .agg import _packf_np
-    from .decode import (
-        _STRINGY,
-        _zone_key,
-        chunk_repartition,
-        column_arrow_types,
-        pruned_chunks,
-    )
+    from .decode import _STRINGY, _zone_key, column_arrow_types
 
     if isinstance(keys_df, SparkDataFrame):
         if len(keys_df.columns) != 1:
@@ -293,10 +262,7 @@ def delete_matching(spark, store: str, col: str, keys_df,
         vals = sorted(set(k for k in keys_df if k is not None))
         if not vals:
             return {"deleted_now": 0, "deleted_total": deleted_count(store)}
-        import pyspark.sql.functions as F  # local: keep module numpy-only
-
         kdf = spark.createDataFrame([(v,) for v in vals], ["_k"])
-        del F
     head = [r["_k"] for r in kdf.limit(max_pushdown_keys + 1).collect()]
     if not head:
         return {"deleted_now": 0, "deleted_total": deleted_count(store)}
@@ -315,76 +281,34 @@ def delete_matching(spark, store: str, col: str, keys_df,
     arrow_name = types[col]
     bkeys = spark.sparkContext.broadcast(
         sorted(r["_k"] for r in kdf.collect()))
-    chunks = pruned_chunks(spark, store, [col], [], dict_prune=False)
-    if pids is not None:
-        chunks = chunks.where(chunks["pid"].isin(sorted(pids)))
-    chunks = chunk_repartition(
-        spark, chunks.select("pid", "chunk_id", "column", "codec",
-                             "params", "payload"), store)
+    probe = []  # built ONCE per task on first use (never per chunk — 10^7 keys)
 
-    def task(batches):
+    def row_mask(cols):
         import pyarrow.compute as pc
 
         from ..kernel.codecs import decode_column
 
-        mask_cache = DeleteMask(store)
-        keys = bkeys.value
-        # probe set built ONCE per task (never per chunk — 10^7 keys)
-        probe = None
-        for batch in batches:
-            for pid_s, cid_s, codec_s, params_s, payload_s in zip(
-                    batch.column("pid"), batch.column("chunk_id"),
-                    batch.column("codec"), batch.column("params"),
-                    batch.column("payload")):
-                key = (pid_s.as_py(), cid_s.as_py())
-                arr = decode_column({"codec": codec_s.as_py(),
-                                     "params": json.loads(params_s.as_py()),
-                                     "payload": payload_s.as_py()})
-                if arrow_name in _STRINGY:
-                    if probe is None:
-                        probe = pa.array(list(keys), type=arr.type)
-                    mask = (pc.is_in(arr, value_set=probe).fill_null(False)
-                            .to_numpy(zero_copy_only=False).astype(bool))
-                else:
-                    if probe is None:
-                        probe = np.unique(np.array(
-                            [_zone_key(arrow_name, v)[0] for v in keys],
-                            dtype=np.int64))
-                    valid = (pc.is_valid(arr)
-                             .to_numpy(zero_copy_only=False).astype(bool))
-                    if arrow_name.startswith("timestamp["):
-                        lhs = (arr.cast(pa.int64()).fill_null(0)
-                               .to_numpy(zero_copy_only=False))
-                    elif arrow_name in ("float", "double"):
-                        lhs = _packf_np(arr.cast(pa.float64()).fill_null(0.0)
-                                        .to_numpy(zero_copy_only=False))
-                    else:
-                        lhs = (arr.cast(pa.int64()).fill_null(0)
-                               .to_numpy(zero_copy_only=False))
-                    mask = np.isin(lhs, probe) & valid
-                if not mask.any():
-                    continue
-                already = mask_cache.positions(*key)
-                pos = np.flatnonzero(mask).astype(np.int64)
-                if already is not None:
-                    pos = pos[~np.isin(pos, already)]
-                if not len(pos):
-                    continue
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(np.full(len(pos), key[0], dtype=np.int32)),
-                     pa.array(np.full(len(pos), key[1], dtype=np.int32)),
-                     pa.array(pos)],
-                    names=["pid", "chunk_id", "pos"])
+        arr = decode_column(cols[col])
+        if arrow_name in _STRINGY:
+            if not probe:
+                probe.append(pa.array(list(bkeys.value), type=arr.type))
+            return (pc.is_in(arr, value_set=probe[0]).fill_null(False)
+                    .to_numpy(zero_copy_only=False).astype(bool))
+        if not probe:
+            probe.append(np.unique(np.array(
+                [_zone_key(arrow_name, v)[0] for v in bkeys.value],
+                dtype=np.int64)))
+        valid = pc.is_valid(arr).to_numpy(zero_copy_only=False).astype(bool)
+        if arrow_name in ("float", "double"):
+            lhs = _packf_np(arr.cast(pa.float64()).fill_null(0.0)
+                            .to_numpy(zero_copy_only=False))
+        else:  # ints and timestamps (storage-unit ticks)
+            lhs = arr.cast(pa.int64()).fill_null(0).to_numpy(zero_copy_only=False)
+        return np.isin(lhs, probe[0]) & valid
 
-    before = deleted_count(store)
-    tomb = chunks.mapInArrow(task, "pid int, chunk_id int, pos bigint")
-    (tomb.sortWithinPartitions("pid", "chunk_id", "pos")
-         .write.mode("append").parquet(_deletes_dir(store)))
-    total = deleted_count(store)
-    _log_delete(store, {"match_col": col, "n_keys": n_keys,
-                        "deleted_now": total - before,
-                        "deleted_total": total})
-    return {"deleted_now": total - before, "deleted_total": total}
+    tomb = _tombstones(spark, store, [col], [], [], pids, types, row_mask)
+    return _append_tombstones(store, tomb, {"match_col": col,
+                                            "n_keys": n_keys})
 
 
 def _log_delete(store: str, entry: dict) -> None:

@@ -1,13 +1,17 @@
-"""Driver-side chunk planner: which chunks of a store a selective read
-must decode — the one pruning implementation.
+"""Driver-side chunk planner and the one chunk reader: which chunks of a
+store a read must decode (the one pruning implementation), and the file
+tasks that read them.
 
-Every selective read asks it: ``decode_job`` (filters, OR branches,
-``as_of``, pid and chunk-key whitelists), ``decode_plan``,
-``decode_head``, the ``fsst`` DataSource's ``partitions()``,
-``stats.encoded_column_minmax``, and the ``pruned_chunks`` adapters that
-the aggregations and deletes join against. It reads chunk metadata with
-pyarrow and starts no Spark job. Per chunk file it reads the narrow
-columns ``META_COLS``; the ``bloom`` column, only while a chunk of an
+Every selective read asks the planner: ``decode_job`` (filters, OR
+branches, ``as_of``, pid and chunk-key whitelists), ``decode_plan``,
+``decode_head``, the ``fsst`` DataSource's ``partitions()``, the chunk-local
+aggregations of ``jobs.agg``, ``delete_where`` / ``delete_matching`` and
+``stats.encoded_column_minmax``. Their surviving files become file tasks
+(:func:`file_tasks_df`), and every task reads its chunks through
+:func:`read_chunks`: one pyarrow read per file, whole chunks grouped per
+file, no chunk-row shuffle. The planner reads chunk metadata with pyarrow
+and starts no Spark job. Per chunk file it reads the narrow columns
+``META_COLS``; the ``bloom`` column, only while a chunk of an
 ``==``/``in`` filter column that is not dict-coded is still live (only
 those columns' blooms are probed); and ``params, payload`` of the filter
 column's ``str_dict`` rows (a parquet row filter), only while such a
@@ -26,6 +30,7 @@ import json
 import os
 from collections import Counter
 from dataclasses import dataclass, field
+from typing import Iterator
 
 import pyarrow.parquet as pq
 
@@ -41,6 +46,7 @@ from .decode import (
 
 META_COLS = ("pid", "chunk_id", "column", "codec", "n_rows", "enc_bytes",
              "zmin_long", "zmax_long")
+CHUNK_COLS = ("pid", "chunk_id", "column", "codec", "params", "payload")
 
 
 def chunk_files(store: str, pids=None) -> list[tuple[int, str]]:
@@ -90,6 +96,59 @@ def file_tasks_df(spark, files: list):
     if run:
         runs.append(run)
     return file_task_df(spark, [(json.dumps(r),) for r in runs], "files string")
+
+
+def task_files(batches) -> Iterator[tuple[str, list | None]]:
+    """Executor side of a :func:`file_tasks_df` frame: the task's
+    ``(path, keep-set or None)`` in pid order."""
+    for batch in batches:
+        for run in batch.column("files").to_pylist():
+            yield from json.loads(run)
+
+
+def read_chunks(path: str, keys=None, columns=None) -> Iterator[tuple]:
+    """The one chunk reader: ``((pid, chunk_id), {column: {codec, params,
+    payload}})`` per chunk of one chunk file, in file order, restricted to
+    the ``(pid, chunk_id)`` keep-set ``keys`` and to ``columns`` when
+    given (an empty keep-set reads nothing). One pyarrow read of the file;
+    each chunk's payloads convert only when it is yielded. A chunk is
+    whole: every column row of a chunk lives in its pid's file."""
+    if keys is not None and not keys:
+        return
+    t = pq.read_table(path, columns=list(CHUNK_COLS))
+    keys = None if keys is None else set(map(tuple, keys))
+    columns = None if columns is None else set(columns)
+    payload = t.column("payload")
+    rows: dict[tuple[int, int], list] = {}
+    for i, (pid, cid, col, codec, params) in enumerate(zip(
+            *(t.column(c).to_pylist() for c in CHUNK_COLS[:-1]))):
+        if ((columns is None or col in columns)
+                and (keys is None or (pid, cid) in keys)):
+            rows.setdefault((pid, cid), []).append((i, col, codec, params))
+    for key, chunk in rows.items():
+        yield key, {col: {"codec": codec, "params": json.loads(params),
+                          "payload": payload[i].as_py()}
+                    for i, col, codec, params in chunk}
+
+
+def task_chunks(batches, columns=None) -> Iterator[tuple]:
+    """Every planned chunk of a file task's files, through
+    :func:`read_chunks`."""
+    for path, keys in task_files(batches):
+        yield from read_chunks(path, keys, columns)
+
+
+def planned_files(store: str, columns=None, filters=None, any_filters=None,
+                  pids=None, dict_prune: bool = True, keys=None,
+                  types=None) -> list[tuple[str, list | None]]:
+    """``(path, keep-set)`` of the files a read must open: the planner's
+    survivors for a selective read, every chunk file (keep-set None) for
+    an unrestricted one, which then needs no metadata read."""
+    if filters or any_filters or pids is not None or keys is not None:
+        plan = plan_chunks(store, columns, filters, any_filters, pids=pids,
+                           dict_prune=dict_prune, keys=keys, types=types)
+        return [(fp.path, fp.keys) for fp in plan.files]
+    return [(path, None) for _, path in chunk_files(store)]
 
 
 def read_file_meta(path: str) -> tuple[pq.ParquetFile, dict[str, list]]:

@@ -88,7 +88,7 @@ def encoded_column_minmax(spark, out_dir: str, column: str) -> dict:
     column is all null). Float min/max follow Spark/DuckDB NaN ordering
     (NaN greatest; min/max never return NaN unless every value is NaN).
     """
-    from .plan import chunk_files, file_tasks_df, read_file_meta
+    from .plan import chunk_files, file_tasks_df, read_file_meta, task_chunks
 
     _require_no_deletes(out_dir, 'encoded_column_minmax')
     types = column_arrow_types(spark, out_dir)
@@ -126,45 +126,31 @@ def encoded_column_minmax(spark, out_dir: str, column: str) -> dict:
     def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import numpy as np
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
 
         from ..kernel.codecs import decode_column
 
-        for batch in batches:
-            mns, mxs = [], []
-            for path, keys in (f for run in batch.column("files").to_pylist()
-                               for f in json.loads(run)):
-                want = {tuple(k) for k in keys}
-                t = pq.read_table(
-                    path, columns=["pid", "chunk_id", "codec", "params",
-                                   "payload"],
-                    filters=[("column", "==", column)])
-                for row in t.to_pylist():
-                    if (row["pid"], row["chunk_id"]) not in want:
-                        continue
-                    arr = decode_column(
-                        {"codec": row["codec"],
-                         "params": json.loads(row["params"]),
-                         "payload": row["payload"]}).drop_null()
-                    if len(arr) == 0:
-                        continue
-                    if is_float:
-                        # Spark/DuckDB ordering: NaN greatest, so a chunk
-                        # with any NaN has max NaN; min is NaN only when
-                        # all-NaN
-                        v = arr.to_numpy(zero_copy_only=False).astype(np.float64)
-                        finite = v[~np.isnan(v)]
-                        if len(finite) == 0:
-                            mns.append(float("nan"))
-                            mxs.append(float("nan"))
-                        else:
-                            mns.append(float(finite.min()))
-                            mxs.append(float("nan") if len(finite) < len(v)
-                                       else float(finite.max()))
-                    else:
-                        mm = pc.min_max(arr)
-                        mns.append(mm["min"].as_py())
-                        mxs.append(mm["max"].as_py())
+        mns, mxs = [], []
+        for _, cols in task_chunks(batches, [column]):
+            arr = decode_column(cols[column]).drop_null()
+            if len(arr) == 0:
+                continue
+            if is_float:
+                # Spark/DuckDB ordering: NaN greatest, so a chunk with any
+                # NaN has max NaN; min is NaN only when all-NaN
+                v = arr.to_numpy(zero_copy_only=False).astype(np.float64)
+                finite = v[~np.isnan(v)]
+                if len(finite) == 0:
+                    mns.append(float("nan"))
+                    mxs.append(float("nan"))
+                else:
+                    mns.append(float(finite.min()))
+                    mxs.append(float("nan") if len(finite) < len(v)
+                               else float(finite.max()))
+            else:
+                mm = pc.min_max(arr)
+                mns.append(mm["min"].as_py())
+                mxs.append(mm["max"].as_py())
+        if mns:
             yield pa.RecordBatch.from_pylist(
                 [{"mn": a, "mx": b} for a, b in zip(mns, mxs)],
                 schema=out_schema)

@@ -16,3 +16,14 @@ def assert_file_granular_plan(df) -> None:
     assert "Exchange" not in plan, plan
     scans = re.findall(r"ReadSchema: struct<[^>]*>", plan)
     assert not any("payload" in s for s in scans), scans
+
+
+def assert_no_chunk_row_shuffle(df) -> None:
+    """A chunk job fed by file tasks: no chunk-row shuffle on the chunk
+    key and no JVM scan that reads chunk payloads (an NDV-scale
+    ``groupBy`` Exchange is fine)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan, plan
+    assert "Exchange hashpartitioning(pid" not in plan, plan
+    scans = re.findall(r"ReadSchema: struct<[^>]*>", plan)
+    assert not any("payload" in s for s in scans), scans

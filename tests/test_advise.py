@@ -61,17 +61,13 @@ def test_advisor_finds_the_cluster_key(spark, plain, clustered):
 def test_advisor_point_scan_estimate_is_calibrated(spark, docs, clustered):
     """The estimate must track reality: actual chunks surviving a point
     predicate on the clustered column stays within 2x the estimate."""
-    from pyspark.sql import functions as F
-
-    from fsst_spark.jobs.decode import pruned_chunks
+    from fsst_spark.jobs.decode import decode_plan
 
     est = {r["column"]: r["est_chunks_scanned_per_point"]
            for r in advise_layout(spark, clustered).collect()}
     med = docs.approxQuantile("n_chars", [0.5], 0)[0]
-    survivors = (pruned_chunks(spark, clustered, ["n_chars"],
-                               [("n_chars", "==", int(med))])
-                 .where(F.col("column") == "n_chars")
-                 .select("pid", "chunk_id").distinct().count())
+    survivors = decode_plan(spark, clustered, ["n_chars"],
+                            [("n_chars", "==", int(med))])["chunks_kept"]
     assert survivors <= 2 * est["n_chars"] + 1
 
 

@@ -9,8 +9,8 @@ from fsst_spark.jobs.agg import encoded_count_filtered
 from fsst_spark.jobs.decode import (
     _dict_probes,
     decode_filtered,
+    decode_plan,
     dict_payload_has_value,
-    pruned_chunks,
 )
 from fsst_spark.jobs.encode import encode_job
 
@@ -53,9 +53,9 @@ def test_contains_decode_exact(spark, store):
 def test_contains_no_match_dict_prunes_all(spark, store):
     out, df = store
     # no lang dictionary value contains "zz": every dict chunk drops
-    n_kept = pruned_chunks(
-        spark, out, ["lang"], [("lang", "contains", "zz")]).count()
-    n_all = pruned_chunks(spark, out, ["lang"], []).count()
+    n_kept = decode_plan(
+        spark, out, ["lang"], [("lang", "contains", "zz")])["chunks_kept"]
+    n_all = decode_plan(spark, out, ["lang"])["chunks_kept"]
     assert n_kept < n_all  # dict chunks (the population) all dropped
     assert decode_filtered(spark, out, "lang", "contains", "zz").count() == 0
 
@@ -156,9 +156,9 @@ class TestSuffix:
         # no lang value ends with 'ab' (values: abc, def): every DICT
         # chunk drops without decoding codes (non-dict stragglers are
         # conservatively kept, same as the contains tests)
-        n_kept = pruned_chunks(spark, out, ["lang"],
-                               [("lang", "suffix", "ab")]).count()
-        n_all = pruned_chunks(spark, out, ["lang"], []).count()
+        n_kept = decode_plan(spark, out, ["lang"],
+                             [("lang", "suffix", "ab")])["chunks_kept"]
+        n_all = decode_plan(spark, out, ["lang"])["chunks_kept"]
         assert n_kept < n_all
         assert decode_filtered(spark, out, "lang", "suffix", "ab").count() == 0
         # a real suffix keeps chunks and returns exact rows

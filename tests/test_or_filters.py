@@ -4,8 +4,7 @@ branches' keep-sets, rows match SQL OR semantics exactly."""
 import pytest
 from pyspark.sql import functions as F
 
-from fsst_spark.jobs.decode import (decode_filtered, decode_job,
-                                    pruned_chunks_any)
+from fsst_spark.jobs.decode import decode_filtered, decode_job, decode_plan
 from fsst_spark.jobs.encode import encode_job
 
 
@@ -44,10 +43,10 @@ def test_or_of_disjoint_ranges_exact(spark, store):
 
 def test_or_prunes_to_union_of_branches(spark, store):
     full = _n_chunks(decode_job(spark, store))
-    kept = pruned_chunks_any(
-        spark, store, None,
-        [("doc_id", "<", 100), ("doc_id", ">=", 7900)]) \
-        .select("pid", "chunk_id").distinct().count()
+    kept = decode_plan(
+        spark, store,
+        any_filters=[("doc_id", "<", 100), ("doc_id", ">=", 7900)],
+    )["chunks_kept"]
     assert full >= 16 and kept <= max(2, full // 4), (kept, full)
 
 

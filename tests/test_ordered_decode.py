@@ -42,6 +42,32 @@ def test_ordered_decode_is_globally_sorted(spark, store):
         sorted(r["txt"] for r in got.select("txt").collect())
 
 
+def test_ordered_decode_with_unmaterialized_added_column(spark, tmp_path):
+    """Chunks written before a schema-log ADD COLUMN keep their place in
+    (pid, chunk_id) order when a task's run of files spans the add: 9
+    files before the add, 15 after, read by several multi-file tasks."""
+    from fsst_spark.jobs.schema import add_column
+
+    out = str(tmp_path / "store")
+    df = (spark.range(0, 2400).withColumnRenamed("id", "doc_id")
+          .withColumn("txt", F.concat(F.lit("b-"), F.col("doc_id"))))
+    encode_job(spark, df.where("doc_id < 900"), out, num_partitions=9,
+               resume=False, unique_col="doc_id", sort_key="doc_id").collect()
+    add_column(out, "q", "double")
+    encode_job(spark, df.where("doc_id >= 900")
+               .withColumn("q", F.col("doc_id").cast("double")), out,
+               num_partitions=15, pid_offset=9, resume=False,
+               unique_col="doc_id", sort_key="doc_id").collect()
+
+    got = decode_job(spark, out, ordered=True)
+    assert 1 < got.rdd.getNumPartitions() < 24
+    rows = got.collect()  # partition-concat order
+    keys = list(dict.fromkeys((r["pid"], r["chunk_id"]) for r in rows))
+    assert keys == sorted(keys) and len(keys) == 24
+    assert [r["doc_id"] for r in rows] == list(range(2400))
+    assert all((r["q"] is None) == (r["doc_id"] < 900) for r in rows)
+
+
 def test_no_row_level_sort_in_plan(spark, store):
     plan = decode_job(spark, store, ordered=True) \
         ._jdf.queryExecution().executedPlan().toString()

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from fsst_spark.jobs.decode import decode_filtered, decode_job, decode_plan
 from fsst_spark.jobs.encode import encode_job
 from fsst_spark.sources.fsst_source import register
+from tests.plan_checks import assert_no_chunk_row_shuffle
 
 URL = "00001234.example.org/page"
 
@@ -123,3 +124,29 @@ def test_filtered_decode_with_tombstones_and_added_columns(spark, tmp_path):
                            .select(*full.columns).collect())) == want
         src = spark.read.format("fsst").load(store).where(_cond(flt, any_flt))
         assert Counter(map(tuple, src.select(*full.columns).collect())) == want
+
+
+def test_chunk_jobs_read_planned_file_tasks(spark, clustered):
+    """The chunk-local aggregations and deletes read whole chunks through
+    planned file tasks: no chunk-row shuffle on (pid, chunk_id) and no JVM
+    scan of chunk payloads."""
+    from fsst_spark.jobs.agg import (encoded_count_filtered,
+                                     encoded_group_count, encoded_histogram)
+
+    flt = [("doc_id", ">=", 1000), ("doc_id", "<", 3000)]
+    for df in (encoded_count_filtered(spark, clustered, flt),
+               encoded_group_count(spark, clustered, "lang", filters=flt),
+               encoded_histogram(spark, clustered, "doc_id", 500),
+               encoded_histogram(spark, clustered, "doc_id", 500,
+                                 filters=flt)):
+        assert_no_chunk_row_shuffle(df)
+    # delete_where's tombstone frame, built without writing it
+    from fsst_spark.jobs.deletes import _where_tombstones
+
+    assert_no_chunk_row_shuffle(
+        _where_tombstones(spark, clustered, flt, [], None))
+    r = encoded_count_filtered(spark, clustered, flt).collect()[0]
+    assert r["n_rows"] == 2000
+    assert (r["chunks_pruned"] + r["chunks_metadata_only"]
+            + r["chunks_decoded"]) == r["chunks_total"]
+    assert _where_tombstones(spark, clustered, flt, [], None).count() == 2000

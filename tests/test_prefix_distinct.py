@@ -4,7 +4,7 @@ import pytest
 from pyspark.sql import Row, functions as F
 
 from fsst_spark.jobs.agg import encoded_count_filtered
-from fsst_spark.jobs.decode import decode_filtered, pruned_chunks
+from fsst_spark.jobs.decode import decode_filtered, decode_plan
 from fsst_spark.jobs.encode import encode_job
 from fsst_spark.jobs.stats import encoded_distinct
 
@@ -45,9 +45,9 @@ def test_prefix_decode_exact_and_pruned(spark, store):
     assert (got.select("doc_id").exceptAll(want.select("doc_id")).count()
             == 0)
     # clustered on key: the 1/40 slice must prune most chunks
-    n_all = pruned_chunks(spark, out, ["key"], []).count()
-    n_kept = pruned_chunks(
-        spark, out, ["key"], [("key", "prefix", "net.d07/")]).count()
+    n_all = decode_plan(spark, out, ["key"])["chunks_kept"]
+    n_kept = decode_plan(
+        spark, out, ["key"], [("key", "prefix", "net.d07/")])["chunks_kept"]
     assert n_kept < n_all / 4, (n_kept, n_all)
 
 
@@ -81,8 +81,8 @@ def test_prefix_dict_prune_on_dict_column(spark, store):
     out, df = store
     # lang is dict-coded; a prefix no dictionary entry starts with must
     # drop every dict chunk without decoding codes
-    n_kept = pruned_chunks(
-        spark, out, ["lang"], [("lang", "prefix", "zz")]).count()
+    n_kept = decode_plan(
+        spark, out, ["lang"], [("lang", "prefix", "zz")])["chunks_kept"]
     assert n_kept == 0
     got = decode_filtered(spark, out, "lang", "prefix", "d")
     assert got.count() == df.filter(F.col("lang").startswith("d")).count()

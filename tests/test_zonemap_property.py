@@ -16,6 +16,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
+from fsst_spark.jobs.agg import encoded_count_filtered
 from fsst_spark.jobs.decode import decode_filtered
 from fsst_spark.jobs.encode import encode_job
 
@@ -74,6 +75,8 @@ def test_decode_filtered_equals_filter_after_full_decode(
                    pre_partitioned=True, unique_col="rid").collect()
         got = sorted(r["rid"] for r in
                      decode_filtered(spark, out, "v", op, threshold).collect())
+        counted = encoded_count_filtered(
+            spark, out, [("v", op, threshold)]).collect()[0]["n_rows"]
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
@@ -83,6 +86,9 @@ def test_decode_filtered_equals_filter_after_full_decode(
             "<": operator.lt, "==": operator.eq}[op]
     expect = sorted(i for i, v in enumerate(vals) if pyop(v, threshold))
     assert got == expect, (dtype, sortedness, skew, op, threshold)
+    # the tri-state count (zone_keep prunes, zone_all answers from
+    # metadata, boundary chunks decode) agrees with the ground truth
+    assert counted == len(expect), (dtype, sortedness, skew, op, threshold)
 
 
 @settings(max_examples=10, deadline=None,
