@@ -10,10 +10,13 @@ first ask the driver-side planner (:mod:`jobs.plan`) which chunks can
 match: zone maps, dict sections and blooms prune there from metadata,
 only files with survivors become tasks, and each task decodes only its
 planned chunks and columns, so pruned payload bytes are never decoded.
+Tasks and the ``fsst`` DataSource turn chunks into Arrow batches with the
+one emitter, :func:`emit_chunks`.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import re
 from typing import Iterator
@@ -21,7 +24,7 @@ from typing import Iterator
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
-from ..kernel.codecs import decode_column
+from ..kernel.codecs import decode_column, parse_arrow_type
 
 _SPARK_TYPE = {
     "string": "string", "large_string": "string",
@@ -60,7 +63,8 @@ def _chunks_df(spark, out_dir: str, columns: list[str] | None) -> DataFrame:
 
 def column_arrow_types(spark, out_dir: str, columns: list[str] | None = None,
                        include_added: bool = False) -> dict[str, str]:
-    """{column: arrow type name} recovered from ONE chunk file.
+    """{column: arrow type name}: :func:`schema.physical_columns` (one
+    chunk-file footer) folded through the schema log.
 
     ``include_added=True`` merges columns ADDED via the schema log
     (``schema.add_column``) that no chunk carries yet — only the DECODE
@@ -68,23 +72,15 @@ def column_arrow_types(spark, out_dir: str, columns: list[str] | None = None,
     added-but-unmaterialized column fails fast (KeyError) instead of
     answering from per-chunk state that cannot represent virtual nulls.
 
-    Every encode partition writes all its columns into its own chunk file,
-    so any single file carries the full schema — a driver-side footer read,
-    not a cluster scan (at 10^12 rows a groupBy over all chunk rows just to
-    learn five column types would be a full pass over the table)."""
-    import glob
-    import os
+    ``spark`` is needed only for a store whose chunk files cannot be
+    listed, which falls back to a (pushed-down) cluster scan."""
+    from .schema import added_columns, dropped_columns, physical_columns
 
-    files = sorted(glob.glob(os.path.join(out_dir, "chunks", "*.parquet")))
-    if files:
-        import pyarrow.parquet as pq
-
-        t = pq.read_table(files[0], columns=["column", "params"])
-        cols = {
-            c: json.loads(p)["arrow_type"]
-            for c, p in zip(t.column("column").to_pylist(), t.column("params").to_pylist())
-        }
-    else:  # non-globbable store: fall back to a (pushed-down) cluster scan
+    try:
+        cols = physical_columns(out_dir)
+    except FileNotFoundError:
+        if spark is None:
+            raise
         meta = (
             _chunks_df(spark, out_dir, columns)
             .select("column", "params")
@@ -92,8 +88,6 @@ def column_arrow_types(spark, out_dir: str, columns: list[str] | None = None,
             .collect()
         )
         cols = {r["column"]: json.loads(r["params"])["arrow_type"] for r in meta}
-    from .schema import added_columns, dropped_columns
-
     for c in dropped_columns(out_dir):
         cols.pop(c, None)  # dropped columns are not part of the schema
     if include_added:
@@ -104,6 +98,29 @@ def column_arrow_types(spark, out_dir: str, columns: list[str] | None = None,
         if missing:
             raise KeyError(f"columns not present in encoded data: {missing}")
     return cols
+
+
+def shard_column_types(spark, stores: "list[str]",
+                       columns: list[str] | None = None) -> list[dict[str, str]]:
+    """Each shard's decode column types (schema-log adds included), after
+    checking that the shards of one logical table agree on the type of
+    every column they share (only ``columns`` when given) — a drifted
+    shard fails before any read."""
+    seen: dict[str, tuple[str, str]] = {}
+    out = []
+    for s in stores:
+        types = column_arrow_types(spark, s, include_added=True)
+        out.append(types)
+        for c, t in types.items():
+            if columns is not None and c not in columns:
+                continue
+            if c in seen and seen[c][0] != t:
+                raise TypeError(
+                    f"column {c!r} is {seen[c][0]} in {seen[c][1]} but "
+                    f"{t} in {s}; shards of one logical table must agree "
+                    f"— cast and re-encode the drifted store")
+            seen.setdefault(c, (t, s))
+    return out
 
 
 def decoded_schema_ddl(spark, out_dir: str, columns: list[str] | None = None,
@@ -462,6 +479,62 @@ def _as_of_pids(store: str, as_of: int) -> list[int]:
     return commit_range_pids(store, -1, as_of)
 
 
+def scan_columns(store: str, columns: list[str],
+                 added: dict[str, str]) -> list[str]:
+    """The chunk columns a read of ``columns`` scans. When every one of
+    them is schema-log ``added``, no scanned row would carry the chunks'
+    row counts, so one physical column rides along as the row-count
+    carrier (decoded, never emitted). It must exist in EVERY chunk, so
+    every added column is excluded, even one materialized in new files."""
+    if not set(columns) <= set(added):
+        return list(columns)
+    from .schema import dropped_columns, physical_columns
+
+    phys = set(physical_columns(store)) - set(added) - dropped_columns(store)
+    return list(columns) + sorted(phys)[:1]
+
+
+def emit_chunks(store: str, chunks, columns: list[str], added: dict[str, str],
+                deletes: bool, provenance: bool = False
+                ) -> Iterator[pa.RecordBatch]:
+    """The one chunk emitter: each ``(key, {column: encoded})`` of
+    :func:`plan.read_chunks` decodes into one RecordBatch of ``columns``,
+    led by ``pid, chunk_id`` when ``provenance``, one chunk at a time. A
+    chunk written before a schema-log ADD COLUMN (``added``) holds NULLs
+    for it, timestamps convert to the microseconds Spark speaks, and when
+    the store has ``deletes`` tombstoned rows drop (a chunk that loses
+    every row emits nothing)."""
+    import numpy as np
+
+    from ..env import madvise_hugepages
+    from .deletes import DeleteMask, apply_delete_mask
+
+    madvise_hugepages()
+    dmask = DeleteMask(store) if deletes else None
+    names = ["pid", "chunk_id", *columns] if provenance else list(columns)
+    for key, chunk in chunks:
+        cols = {c: decode_column(enc) for c, enc in chunk.items()}
+        n = len(next(iter(cols.values())))
+        arrays = []
+        for c in columns:
+            if c in cols:
+                arr = cols[c]
+            else:  # a pre-add chunk: virtual NULLs
+                assert c in added, f"incomplete chunk {key}: missing {c!r}"
+                arr = pa.nulls(n, parse_arrow_type(added[c]))
+            if pa.types.is_timestamp(arr.type) and arr.type.unit != "us":
+                arr = arr.cast(pa.timestamp("us", tz=arr.type.tz))
+            arrays.append(arr)
+        arrays = apply_delete_mask(dmask, key[0], key[1], arrays)
+        if arrays is None:
+            continue  # every row tombstoned
+        if provenance:
+            n = len(arrays[0])
+            arrays = [pa.array(np.full(n, key[0], dtype=np.int32)),
+                      pa.array(np.full(n, key[1], dtype=np.int32)), *arrays]
+        yield pa.RecordBatch.from_arrays(arrays, names=names)
+
+
 def decode_job(spark, out_dir: str, columns: list[str] | None = None,
                zone_filter: tuple[str, str, int | str] | None = None,
                zone_filters: list[tuple[str, str, int | str]] | None = None,
@@ -500,22 +573,6 @@ def decode_job(spark, out_dir: str, columns: list[str] | None = None,
     filters = list(zone_filters or [])
     if zone_filter is not None:
         filters.append(zone_filter)
-    scan_columns = columns
-    if columns is not None:
-        # decoding ONLY schema-log-added columns: no physical rows would be
-        # scanned at all, so the task couldn't learn chunk row counts —
-        # pull one physical column through the scan as a row-count carrier
-        # (dropped before emit; its decode is the price of the corner)
-        from .schema import added_columns as _added
-
-        if set(out_cols) <= set(_added(out_dir)):
-            # carrier must exist in EVERY chunk: a materialized added
-            # column is physical in new files but absent from pre-add
-            # chunks, so exclude everything in the added log
-            phys = sorted(set(column_arrow_types(spark, out_dir))
-                          - set(_added(out_dir)))
-            if phys:
-                scan_columns = list(columns) + [phys[0]]
     # row tombstones (jobs.deletes) apply executor-side: the flag is read
     # once on the driver, each task lazily loads its pids' positions
     from .deletes import has_deletes
@@ -523,30 +580,12 @@ def decode_job(spark, out_dir: str, columns: list[str] | None = None,
     from .schema import added_columns
 
     deletes_on = has_deletes(out_dir)
-    # schema-log-added columns: chunks written before the add have no row
-    # for them and fill with NULLs as they emit
-    added_types = {c: t for c, t in added_columns(out_dir).items()
-                   if c in out_cols}
+    added = added_columns(out_dir)
+    scan = scan_columns(out_dir, out_cols, added)
 
     def read_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..env import madvise_hugepages
-        from ..kernel.codecs import parse_arrow_type
-        from .deletes import DeleteMask
-
-        madvise_hugepages()
-        dmask = DeleteMask(out_dir) if deletes_on else None
-        for key, chunk in task_chunks(batches, scan_columns or out_cols):
-            cols = {c: decode_column(enc) for c, enc in chunk.items()}
-            missing = set(out_cols) - set(cols)
-            if missing:  # a pre-add chunk: fill virtual NULLs
-                assert missing <= set(added_types), \
-                    f"incomplete chunk {key}: missing non-added columns {missing}"
-                n = len(next(iter(cols.values())))
-                for c in missing:
-                    cols[c] = pa.nulls(n, parse_arrow_type(added_types[c]))
-            out = _emit(key, cols, out_cols, dmask)
-            if out is not None:
-                yield out
+        return emit_chunks(out_dir, task_chunks(batches, scan),
+                           out_cols, added, deletes_on, provenance=True)
 
     # FILE-GRANULAR read: every (pid, chunk_id) group lives whole inside
     # its pid's single chunk file, so each task reads a run of files with
@@ -560,7 +599,7 @@ def decode_job(spark, out_dir: str, columns: list[str] | None = None,
     pids = _as_of_pids(out_dir, as_of) if as_of is not None else _pids
     types = (column_arrow_types(spark, out_dir, include_added=True)
              if filters or zone_filters_any else None)
-    files = planned_files(out_dir, scan_columns, filters, zone_filters_any,
+    files = planned_files(out_dir, scan, filters, zone_filters_any,
                           pids=pids, dict_prune=dict_prune, keys=_chunk_keys,
                           types=types)
     return file_tasks_df(spark, files).mapInArrow(read_files, ddl)
@@ -840,6 +879,13 @@ def decode_head(spark, out_dir: str, n: int,
         k *= 2
 
 
+def _sample_hash(key: tuple[int, int], salt: str) -> str:
+    """``decode_sample``'s chunk hash: the first 8 hex digits of
+    ``md5("pid:chunk_id:salt")``, the value Spark's
+    ``substring(md5(concat_ws(":", pid, chunk_id, salt)), 1, 8)`` gives."""
+    return hashlib.md5(f"{key[0]}:{key[1]}:{salt}".encode()).hexdigest()[:8]
+
+
 def decode_sample(spark, out_dir: str, target_rows: int, key_col: str,
                   columns: list[str] | None = None,
                   salt: str = "sample") -> DataFrame:
@@ -852,9 +898,9 @@ def decode_sample(spark, out_dir: str, target_rows: int, key_col: str,
 
     1. CHUNKS at fraction ``f``: keep chunks where
        ``md5(pid:chunk_id:salt)`` clears a threshold, ``f`` sized from
-       metadata so the selected chunks' exact summed ``n_rows`` covers
-       the target (doubling until it does — each probe is one narrow
-       metadata aggregate). Only these chunks ever decode.
+       the planner's chunk metadata (no Spark job) so the selected
+       chunks' exact summed ``n_rows`` covers the target (doubling until
+       it does). Only these chunks ever decode.
     2. ROWS within selected chunks at rate ``r = target_rows /
        selected_rows``: keep rows where ``md5(key_col:salt)`` clears
        ``r``'s threshold.
@@ -875,22 +921,21 @@ def decode_sample(spark, out_dir: str, target_rows: int, key_col: str,
     distinct-per-row values for the set to be well-defined."""
     if target_rows <= 0:
         raise ValueError(f"target_rows must be positive, got {target_rows}")
-    types = column_arrow_types(spark, out_dir)
-    if key_col not in types:
+    if key_col not in column_arrow_types(spark, out_dir):
         raise KeyError(f"key_col {key_col!r} not in encoded data")
     cols = columns
     if cols is not None:
+        types = column_arrow_types(spark, out_dir, include_added=True)
         for c in cols:
-            if c not in column_arrow_types(spark, out_dir,
-                                           include_added=True):
+            if c not in types:
                 raise KeyError(f"column {c!r} not in encoded data")
         if key_col not in cols:
             cols = list(cols) + [key_col]
-    meta = (_chunks_df(spark, out_dir, [key_col])
-            .where(F.col("column") == key_col)
-            .select("pid", "chunk_id", "n_rows"))
-    tot = meta.agg(F.count("*"), F.sum("n_rows")).collect()[0]
-    n_chunks, rows_total = int(tot[0] or 0), int(tot[1] or 0)
+    from .plan import plan_chunks
+
+    chunks = [(_sample_hash(k, salt), k, fp.n_rows[k])
+              for fp in plan_chunks(out_dir, [key_col]).files for k in fp.keys]
+    rows_total = sum(n for _, _, n in chunks)
     if rows_total == 0:
         return decode_job(spark, out_dir, cols)
 
@@ -900,24 +945,19 @@ def decode_sample(spark, out_dir: str, target_rows: int, key_col: str,
         return ("g" if frac >= 1.0
                 else format(min(int(frac * (1 << 32)), 0xffffffff), "08x"))
 
-    chunk_hash = F.substring(
-        F.md5(F.concat_ws(":", F.col("pid"), F.col("chunk_id"),
-                          F.lit(salt))), 1, 8)
     # size f so the EXPECTED selected rows cover the target with slack,
     # then verify against the exact metadata counts and double on shortfall
     frac = min(1.0, 1.5 * target_rows / rows_total)
     while True:
-        sel = meta.where(chunk_hash < F.lit(_hex_thr(frac)))
-        selected_rows = int(sel.agg(F.sum("n_rows")).collect()[0][0] or 0)
+        sel = [(k, n) for h, k, n in chunks if h < _hex_thr(frac)]
+        selected_rows = sum(n for _, n in sel)
         if selected_rows >= min(target_rows, rows_total) or frac >= 1.0:
             break
         frac = min(1.0, frac * 2)
     if frac >= 1.0:  # every chunk selected: skip the whitelist entirely
         df = decode_job(spark, out_dir, cols)
     else:
-        keys = [(r["pid"], r["chunk_id"])
-                for r in sel.select("pid", "chunk_id").collect()]
-        df = decode_job(spark, out_dir, cols, _chunk_keys=keys)
+        df = decode_job(spark, out_dir, cols, _chunk_keys=[k for k, _ in sel])
     r_rate = min(1.0, target_rows / max(selected_rows, 1))
     row_hash = F.substring(
         F.md5(F.concat(F.col(key_col).cast("string"), F.lit(":" + salt))
@@ -926,30 +966,6 @@ def decode_sample(spark, out_dir: str, target_rows: int, key_col: str,
     if columns is not None and key_col not in columns:
         out = out.drop(key_col)
     return out
-
-
-def _emit(key: tuple[int, int], cols: dict[str, pa.Array], ordered: list[str],
-          dmask=None) -> pa.RecordBatch | None:
-    import numpy as np
-
-    fixed = []
-    for c in ordered:
-        arr = cols[c]
-        if pa.types.is_timestamp(arr.type) and arr.type.unit != "us":
-            arr = arr.cast(pa.timestamp("us", tz=arr.type.tz))  # spark speaks us
-        fixed.append(arr)
-    if dmask is not None:
-        from .deletes import apply_delete_mask
-
-        fixed = apply_delete_mask(dmask, key[0], key[1], fixed)
-        if fixed is None:
-            return None  # every row tombstoned
-    n = len(fixed[0]) if fixed else 0
-    arrays = [
-        pa.array(np.full(n, key[0], dtype=np.int32)),
-        pa.array(np.full(n, key[1], dtype=np.int32)),
-    ] + fixed
-    return pa.RecordBatch.from_arrays(arrays, names=["pid", "chunk_id", *ordered])
 
 
 def decode_semijoin(spark, out_dir: str, col: str, keys,
@@ -1036,20 +1052,9 @@ def decode_stores(spark, out_dirs: "list[str]",
     if not out_dirs:
         raise ValueError("decode_stores needs at least one store dir")
     # type-consistency gate across every manifest BEFORE any decode
-    seen: dict[str, tuple[str, str]] = {}
-    for d in out_dirs:
-        for c, t in column_arrow_types(spark, d, include_added=True).items():
-            if columns is not None and c not in columns:
-                continue
-            if c in seen and seen[c][0] != t:
-                raise TypeError(
-                    f"column {c!r} is {seen[c][0]} in {seen[c][1]} but "
-                    f"{t} in {d}; shards of one logical table must agree "
-                    f"— cast and re-encode the drifted store")
-            seen.setdefault(c, (t, d))
+    shard_types = shard_column_types(spark, out_dirs, columns)
     parts = []
-    for d in out_dirs:
-        have = set(column_arrow_types(spark, d, include_added=True))
+    for d, have in zip(out_dirs, shard_types):
         cols = None
         if columns is not None:
             cols = [c for c in columns if c in have]
@@ -1082,9 +1087,7 @@ def decode_stores(spark, out_dirs: "list[str]",
         # every shard pruned away: empty frame with the full projected schema
         base = decode_job(spark, out_dirs[0],
                           columns if columns is None else
-                          [c for c in columns
-                           if c in column_arrow_types(
-                               spark, out_dirs[0], include_added=True)])
+                          [c for c in columns if c in shard_types[0]])
         base = base.drop("pid", "chunk_id").limit(0)
         if provenance_col is not None:
             base = base.withColumn(provenance_col, F.lit(out_dirs[0]))

@@ -4,12 +4,15 @@ tasks that read them.
 
 Every selective read asks the planner: ``decode_job`` (filters, OR
 branches, ``as_of``, pid and chunk-key whitelists), ``decode_plan``,
-``decode_head``, the ``fsst`` DataSource's ``partitions()``, the chunk-local
+``decode_head``, ``decode_sample`` (chunk row counts for its md5 chunk
+selection), the ``fsst`` DataSource's ``partitions()``, the chunk-local
 aggregations of ``jobs.agg``, ``delete_where`` / ``delete_matching`` and
 ``stats.encoded_column_minmax``. Their surviving files become file tasks
-(:func:`file_tasks_df`), and every task reads its chunks through
-:func:`read_chunks`: one pyarrow read per file, whole chunks grouped per
-file, no chunk-row shuffle. The planner reads chunk metadata with pyarrow
+(:func:`file_tasks_df`) or DataSource partitions, and every one reads its
+chunks through :func:`read_chunks`: one pyarrow read per file, whole
+chunks grouped per file, no chunk-row shuffle. Decode tasks and the
+DataSource's ``read()`` turn those chunks into Arrow batches with
+``decode.emit_chunks``. The planner reads chunk metadata with pyarrow
 and starts no Spark job. Per chunk file it reads the narrow columns
 ``META_COLS``; the ``bloom`` column, only while a chunk of an
 ``==``/``in`` filter column that is not dict-coded is still live (only

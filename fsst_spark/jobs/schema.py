@@ -4,9 +4,9 @@ An encoded store's payloads are immutable chunk files; physically
 removing a column from a 100 TB store would be a full rewrite. Instead
 ``drop_column`` appends one JSON entry to the store's append-only schema
 log (``<store>/schema/``, same O_EXCL-claimed-index protocol as the
-commit and delete logs) and every reader folds the log into the visible
-schema: ``column_arrow_types`` / the fsst source's ``store_column_types``
-exclude dropped columns, the metadata scan filters their chunk rows out
+delete log) and every reader folds the log into the visible schema:
+``column_arrow_types`` (and the fsst source's ``store_column_types`` on
+top of it) exclude dropped columns, the metadata scan filters their chunk rows out
 parquet-side, and their payload bytes are never read again — the Iceberg
 ``ALTER TABLE DROP COLUMN`` semantics (drop is a metadata operation;
 data files are untouched).

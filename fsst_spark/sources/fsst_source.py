@@ -34,9 +34,13 @@ one written by the job API.
 Column pruning: the Python DataSource API has no ``pruneColumns`` hook
 (Spark applies projection after the scan), so narrow reads opt in via
 ``.option("columns", "doc_id,lang")`` — the declared schema shrinks and
-``read()`` row-filters the chunk-file scan to the selected columns'
-rows, so pruned columns' payload bytes are never decompressed (and with
-parquet row-group filtering, largely never read).
+``read()`` decodes only the selected columns' payloads.
+
+``read()`` reads no chunk payload itself: each partition goes through the
+one chunk reader (``jobs.plan.read_chunks``) and the one chunk emitter
+(``jobs.decode.emit_chunks``) that ``decode_job``'s tasks use, so NULL
+fill for added columns, tombstones and timestamp units match the job API,
+and each chunk reaches Spark as soon as it decodes.
 
 Streaming: ``spark.readStream.format("fsst").load(store)`` follows a
 GROWING store. Each completed write appends one atomic entry to
@@ -99,28 +103,13 @@ _FILTER_OPS = {
 
 
 def store_column_types(store: str) -> dict[str, str]:
-    """{column: arrow type name} from ONE chunk-file footer (driver-side,
-    no SparkSession — the DataSource ``schema()`` hook runs before any
-    job exists). Every encode partition writes all columns, so any single
-    file carries the full schema."""
-    import pyarrow.parquet as pq
+    """{column: arrow type name} a decode of ``store`` sees, from ONE
+    chunk-file footer (driver-side, no SparkSession — the DataSource
+    ``schema()`` hook runs before any job exists). Raises
+    FileNotFoundError when the store has no chunk file."""
+    from ..jobs.decode import column_arrow_types
 
-    files = sorted(glob.glob(os.path.join(store, "chunks", "*.parquet")))
-    if not files:
-        raise FileNotFoundError(f"no encoded chunks under {store!r}")
-    t = pq.read_table(files[0], columns=["column", "params"])
-    cols = {
-        c: json.loads(p)["arrow_type"]
-        for c, p in zip(t.column("column").to_pylist(),
-                        t.column("params").to_pylist())
-    }
-    from ..jobs.schema import added_columns, dropped_columns
-
-    for c in dropped_columns(store):
-        cols.pop(c, None)  # metadata-only drops hide the column everywhere
-    for c, t in added_columns(store).items():
-        cols.setdefault(c, t)  # schema-log adds: NULL until materialized
-    return cols
+    return column_arrow_types(None, store, include_added=True)
 
 
 def _store_ddl(col_types: dict[str, str]) -> str:
@@ -188,28 +177,36 @@ def commit_range_pids(store: str, since: int, until: int | None = None) -> list[
 def log_commit(store: str, pids: list[int], mode: str,
                batch_id: int | None = None) -> int:
     """Append one commit entry naming this write's chunk-file pids; returns
-    the entry index. ``os.O_EXCL`` claims the next index atomically, so two
-    concurrent appends serialize instead of clobbering (the loser retries
-    at idx+1). Entries are never rewritten — the log is append-only, which
-    is what makes the streaming offset (a plain entry count) replayable.
+    the entry index. The entry is written whole under a temporary name
+    that :func:`commit_count` does not count, then published by
+    ``os.link`` to the next index — the link fails if the index exists,
+    so two concurrent appends serialize instead of clobbering (the loser
+    retries at idx+1), and no reader ever sees a partly written entry.
+    Entries are never rewritten — the log is append-only, which is what
+    makes the streaming offset (a plain entry count) replayable.
     ``batch_id`` tags entries written by the streaming sink so a replayed
     epoch can be recognized and skipped (see :class:`FsstStreamWriter`)."""
-    os.makedirs(_commits_dir(store), exist_ok=True)
+    import uuid
+
+    d = _commits_dir(store)
+    os.makedirs(d, exist_ok=True)
     entry = {"pids": sorted(pids), "mode": mode}
     if batch_id is not None:
         entry["batch_id"] = batch_id
-    payload = json.dumps(entry).encode()
-    idx = commit_count(store)
-    while True:
-        path = os.path.join(_commits_dir(store), f"{idx:08d}.json")
-        try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
-        except FileExistsError:
-            idx += 1
-            continue
+    tmp = os.path.join(d, f".commit-{uuid.uuid4().hex}.tmp")
+    fd = os.open(tmp, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
+    try:
         with os.fdopen(fd, "wb") as fh:
-            fh.write(payload)
-        return idx
+            fh.write(json.dumps(entry).encode())
+        idx = commit_count(store)
+        while True:
+            try:
+                os.link(tmp, os.path.join(d, f"{idx:08d}.json"))
+                return idx
+            except FileExistsError:
+                idx += 1
+    finally:
+        os.unlink(tmp)
 
 
 def log_commit_snapshot(store: str) -> int | None:
@@ -219,10 +216,8 @@ def log_commit_snapshot(store: str) -> int | None:
     mid-write, since completed_pids would tear the in-flight write."""
     from ..jobs.encode import completed_pids
 
-    logged: set[int] = set()
-    for i in range(commit_count(store)):
-        logged.update(_read_commit(store, i)["pids"])
-    fresh = completed_pids(store) - logged
+    logged = commit_range_pids(store, -1) if commit_count(store) else []
+    fresh = completed_pids(store) - set(logged)
     if not fresh:
         return None
     return log_commit(store, sorted(fresh), mode="snapshot")
@@ -299,9 +294,7 @@ class FsstReader(DataSourceReader):
             from ..jobs.encode import _manifest_mode
 
             if _manifest_mode(self.store) in ("datasource", "stream"):
-                pids = set()
-                for i in range(commit_count(self.store)):
-                    pids.update(_read_commit(self.store, i)["pids"])
+                pids = commit_range_pids(self.store, -1)
         from ..jobs.plan import chunk_files, plan_chunks
 
         if not self.pruning:
@@ -314,103 +307,24 @@ class FsstReader(DataSourceReader):
     def read(self, partition: _ChunkFilePartition | None) -> Iterator["pa.RecordBatch"]:
         if partition is None:  # Spark's stand-in when nothing survived
             return iter(())
-        return _read_chunk_file(partition.path, self.col_types, partition.keys)
+        return _read_partition(self.store, self.col_types, partition)
 
 
-def _read_chunk_file(path: str, col_types: dict[str, str],
-                     keys: list | None = None) -> Iterator["pa.RecordBatch"]:
-    """Decode one chunk file into RecordBatches of ``col_types``' columns
-    (shared by the batch and stream readers), restricted to the planned
-    ``(pid, chunk_id)`` keep-set ``keys`` when given. When ``col_types``
-    is a projection (the ``columns`` read option), the parquet scan
-    row-filters to the selected columns, so pruned columns' payloads are
-    never decompressed."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from ..env import madvise_hugepages
-    from ..jobs.deletes import DeleteMask, has_deletes
-    from ..kernel.codecs import decode_column
-
-    madvise_hugepages()
-    # row tombstones (jobs.deletes) apply here too: chunk files live under
-    # <store>/chunks/, so the store root is two levels up
-    store_root = os.path.dirname(os.path.dirname(path))
-    dmask = DeleteMask(store_root) if has_deletes(store_root) else None
-    live = None if keys is None else {tuple(k) for k in keys}
-    ordered = sorted(col_types)
-    target = _arrow_schema(col_types, ordered)
+def _read_partition(store: str, col_types: dict[str, str],
+                    partition: _ChunkFilePartition) -> Iterator["pa.RecordBatch"]:
+    """One chunk-file partition as RecordBatches of ``col_types``' columns
+    (shared by the batch and stream readers): its planned chunks through
+    the one chunk reader and emitter, one batch per chunk."""
+    from ..jobs.decode import emit_chunks, scan_columns
+    from ..jobs.deletes import has_deletes
+    from ..jobs.plan import read_chunks
     from ..jobs.schema import added_columns
 
-    all_added = set(added_columns(store_root))
-    added = all_added & set(col_types)
-    scan_cols = list(ordered)
-    if added and set(ordered) <= added:
-        # only schema-log-added columns requested: scan one column that
-        # exists in EVERY chunk as the row-count carrier (dropped before
-        # emit) — exclude the whole added log, since a materialized add
-        # is physical in new files but absent from pre-add chunks
-        phys = sorted(set(store_column_types(store_root)) - all_added)
-        if phys:
-            scan_cols.append(phys[0])
-    tbl = pq.read_table(
-        path,
-        columns=["pid", "chunk_id", "column", "codec", "params", "payload"],
-        filters=[("column", "in", scan_cols)])
-    chunks: dict[tuple[int, int], dict] = {}
-    # zip arrow scalars; .as_py() materializes a payload only for
-    # planned chunks
-    for pid_s, cid_s, col_s, codec_s, params_s, payload_s in zip(
-            tbl.column("pid"), tbl.column("chunk_id"), tbl.column("column"),
-            tbl.column("codec"), tbl.column("params"), tbl.column("payload")):
-        key = (pid_s.as_py(), cid_s.as_py())
-        if live is not None and key not in live:
-            continue
-        chunks.setdefault(key, {})[col_s.as_py()] = decode_column(
-            {"codec": codec_s.as_py(), "params": json.loads(params_s.as_py()),
-             "payload": payload_s.as_py()})
-    for key in sorted(chunks):
-        cols = chunks[key]
-        n = len(next(iter(cols.values()))) if cols else 0
-        # pre-add chunks lack rows for schema-log-added columns: virtual NULLs
-        arrays = [(cols[c].cast(target.field(i).type) if c in cols
-                   else pa.nulls(n, target.field(i).type))
-                  for i, c in enumerate(ordered)]
-        if dmask is not None:
-            from ..jobs.deletes import apply_delete_mask
-
-            arrays = apply_delete_mask(dmask, key[0], key[1], arrays)
-            if arrays is None:
-                continue  # every row of the chunk tombstoned
-        yield pa.RecordBatch.from_arrays(arrays, schema=target)
-
-
-def _arrow_schema(col_types: dict[str, str], ordered: list[str]) -> "pa.Schema":
-    """Arrow schema Spark's converter accepts for the declared DDL types
-    (decoded arrays may be large_string/large_binary — cast down; chunk
-    payloads are bounded by chunk_bytes, far under the 2 GiB offset limit)."""
-    import pyarrow as pa
-
-    def t(arrow_name: str) -> "pa.DataType":
-        if arrow_name.startswith("timestamp["):
-            return pa.timestamp("us")
-        if arrow_name.startswith(("list<", "large_list<", "fixed_size_list<")):
-            # "list<element: float>": strip wrapper + child field name;
-            # Spark's converter wants plain list<> whatever was stored
-            inner = arrow_name[arrow_name.index("<") + 1 : arrow_name.rindex(">")]
-            child = (inner.split(": ", 1)[1]
-                     if ": " in inner.split("<", 1)[0] else inner)
-            return pa.list_(t(child))
-        return {
-            "string": pa.string(), "large_string": pa.string(),
-            "binary": pa.binary(), "large_binary": pa.binary(),
-            "int64": pa.int64(), "int32": pa.int32(),
-            "int16": pa.int16(), "int8": pa.int8(),
-            "double": pa.float64(), "float": pa.float32(),
-            "bool": pa.bool_(),
-        }[arrow_name]
-
-    return pa.schema([(c, t(col_types[c])) for c in ordered])
+    columns = sorted(col_types)
+    added = added_columns(store)
+    chunks = read_chunks(partition.path, partition.keys,
+                         scan_columns(store, columns, added))
+    return emit_chunks(store, chunks, columns, added, has_deletes(store))
 
 
 class FsstStreamReader(DataSourceStreamReader):
@@ -431,18 +345,20 @@ class FsstStreamReader(DataSourceStreamReader):
         return {"commit": commit_count(self.store)}
 
     def partitions(self, start: dict, end: dict) -> List[InputPartition]:
-        pids: set[int] = set()
-        for i in range(start["commit"], end["commit"]):
-            pids.update(_read_commit(self.store, i)["pids"])
-        return [
-            _ChunkFilePartition(os.path.join(self.store, "chunks",
-                                             f"part-{pid:05d}.parquet"))
-            for pid in sorted(pids)
-        ]
+        if start["commit"] == end["commit"]:
+            return []
+        pids = commit_range_pids(self.store, start["commit"] - 1,
+                                 end["commit"] - 1)
+        if not pids:
+            return []
+        from ..jobs.plan import chunk_files
+
+        return [_ChunkFilePartition(path)
+                for _, path in chunk_files(self.store, pids)]
 
     def read(self, partition: _ChunkFilePartition) -> Iterator["pa.RecordBatch"]:
         # stream scans have no pushFilters hook; Spark filters rows above
-        return _read_chunk_file(partition.path, self.col_types)
+        return _read_partition(self.store, self.col_types, partition)
 
     def commit(self, end: dict) -> None:
         return None  # progress is tracked by Spark's own checkpoint
@@ -735,25 +651,16 @@ def register_stores_view(spark, stores: "list[str]", name: str,
     one store."""
     if not stores:
         raise ValueError("register_stores_view needs at least one store")
+    from ..jobs.decode import shard_column_types
+
     register(spark)
     wanted = ([c.strip() for c in columns.split(",") if c.strip()]
               if columns else None)
-    seen: dict[str, tuple[str, str]] = {}
-    for s in stores:
-        for c, t in store_column_types(s).items():
-            if wanted is not None and c not in wanted:
-                continue
-            if c in seen and seen[c][0] != t:
-                raise TypeError(
-                    f"column {c!r} is {seen[c][0]} in {seen[c][1]} but "
-                    f"{t} in {s}; shards of one logical table must agree "
-                    f"— cast and re-encode the drifted store")
-            seen.setdefault(c, (t, s))
     parts = []
-    for s in stores:
+    for s, types in zip(stores, shard_column_types(None, stores, wanted)):
         reader = spark.read.format("fsst")
         if wanted is not None:
-            have = [c for c in wanted if c in store_column_types(s)]
+            have = [c for c in wanted if c in types]
             if not have:
                 continue  # shard carries none of the projected columns
             reader = reader.option("columns", ",".join(have))

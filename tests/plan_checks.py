@@ -27,3 +27,14 @@ def assert_no_chunk_row_shuffle(df) -> None:
     assert "Exchange hashpartitioning(pid" not in plan, plan
     scans = re.findall(r"ReadSchema: struct<[^>]*>", plan)
     assert not any("payload" in s for s in scans), scans
+
+
+def run_counting_jobs(spark, group: str, fn):
+    """(``fn()``, number of Spark jobs it started)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -12,8 +12,10 @@ import sys
 import pytest
 from pyspark.sql import functions as F
 
+import fsst_spark.jobs.decode as decode_mod
 from fsst_spark.jobs.decode import decode_plan, decode_sample
 from fsst_spark.jobs.encode import encode_job
+from tests.plan_checks import run_counting_jobs
 
 
 @pytest.fixture(scope="module")
@@ -65,6 +67,50 @@ def test_sample_guards(spark, store):
         decode_sample(spark, store, 100, "doc_id", columns=["nope"])
     with pytest.raises(ValueError):
         decode_sample(spark, store, 0, "doc_id")
+
+
+def _spark_sample_keys(spark, store, target_rows, key_col, salt):
+    """The chunk keys of a sample as Spark's md5 expression selects them:
+    the threshold-doubling loop run as aggregates over the chunk rows."""
+    meta = (spark.read.parquet(f"{store}/chunks")
+            .where(F.col("column") == key_col)
+            .select("pid", "chunk_id", "n_rows"))
+    rows_total = meta.agg(F.sum("n_rows")).collect()[0][0]
+    chunk_hash = F.substring(F.md5(F.concat_ws(
+        ":", F.col("pid"), F.col("chunk_id"), F.lit(salt))), 1, 8)
+    frac = min(1.0, 1.5 * target_rows / rows_total)
+    while True:
+        thr = format(min(int(frac * (1 << 32)), 0xffffffff), "08x")
+        sel = meta.where(chunk_hash < F.lit(thr))
+        got = sel.agg(F.sum("n_rows")).collect()[0][0] or 0
+        if got >= target_rows:
+            return sorted((r["pid"], r["chunk_id"]) for r in sel.collect())
+        frac *= 2
+
+
+@pytest.mark.parametrize("target,salt", [(500, "sample"), (3000, "other"),
+                                         (50, "s\u00e4lt")])
+def test_sample_plans_chunks_on_the_driver(spark, store, monkeypatch,
+                                           target, salt):
+    """Chunk selection reads the planner's metadata (no Spark job before
+    the sample is acted on) and keeps exactly the chunks Spark's
+    ``md5(concat_ws(":", pid, chunk_id, salt))`` threshold keeps."""
+    planned = {}
+    real = decode_mod.decode_job
+
+    def recording(*args, **kwargs):
+        planned["keys"] = kwargs.get("_chunk_keys")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(decode_mod, "decode_job", recording)
+    df, n_jobs = run_counting_jobs(
+        spark, f"sample-{target}",
+        lambda: decode_sample(spark, store, target, "doc_id", salt=salt))
+    assert n_jobs == 0
+    want = _spark_sample_keys(spark, store, target, "doc_id", salt)
+    assert sorted(map(tuple, planned["keys"])) == want
+    assert {(r["pid"], r["chunk_id"]) for r in
+            df.select("pid", "chunk_id").distinct().collect()} <= set(want)
 
 
 def test_cli_sample(store, tmp_path):

@@ -70,6 +70,33 @@ def test_pushed_filters_match_plain_scan(spark, docs, store):
         assert got == want, str(cond)
 
 
+def test_read_emits_each_chunk_before_decoding_the_next(store, monkeypatch):
+    """A partition's first batch reaches Spark before the file's later
+    chunks decode: the reader never buffers a whole file."""
+    import fsst_spark.jobs.decode as decode_mod
+    import fsst_spark.kernel.codecs as codecs
+    from fsst_spark.sources.fsst_source import _ChunkFilePartition
+
+    real = codecs.decode_column
+    calls = []
+
+    def counting(enc):
+        calls.append(enc["codec"])
+        return real(enc)
+
+    monkeypatch.setattr(codecs, "decode_column", counting)
+    monkeypatch.setattr(decode_mod, "decode_column", counting)
+    types = store_column_types(store)
+    path = sorted(glob.glob(os.path.join(store, "chunks", "*.parquet")))[0]
+    n_chunks = len(file_survivors(path, [], types))
+    assert n_chunks > 1
+    batches = iter(FsstReader(store, types).read(_ChunkFilePartition(path)))
+    first = next(batches)
+    assert len(calls) == len(types) and first.num_rows > 0
+    assert 1 + len(list(batches)) == n_chunks
+    assert len(calls) == n_chunks * len(types)
+
+
 def test_zone_pruning_drops_chunks(store):
     """doc_id-clustered store: a selective doc_id range must prune most
     chunks at the metadata level, and an impossible range prunes all."""
@@ -454,3 +481,90 @@ def test_register_stores_view_shard_family(spark, tmp_path):
         "FROM docs_fam3").collect()[0]
     n_docs = docs.count()
     assert r["n"] == 2 * n_docs and r["with_chars"] == n_docs
+
+
+def test_commit_entry_is_published_whole(tmp_path, monkeypatch):
+    """A commit write that fails after its file is opened publishes no
+    entry: the count is unchanged and the next commit takes the index."""
+    import errno
+
+    from fsst_spark.sources.fsst_source import (_read_commit, commit_count,
+                                                log_commit)
+
+    store = str(tmp_path / "store")
+    assert log_commit(store, [0], mode="datasource") == 0
+    real_fdopen = os.fdopen
+
+    class DiskFull:
+        def __init__(self, fh):
+            self.fh = fh
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self.fh.close()
+
+        def write(self, data):
+            raise OSError(errno.ENOSPC, "No space left on device")
+
+    monkeypatch.setattr(
+        os, "fdopen", lambda fd, *a, **kw: DiskFull(real_fdopen(fd, *a, **kw)))
+    with pytest.raises(OSError):
+        log_commit(store, [1], mode="datasource")
+    monkeypatch.undo()
+    assert commit_count(store) == 1
+    assert os.listdir(os.path.join(store, "commits")) == ["00000000.json"]
+    assert log_commit(store, [2], mode="datasource") == 1
+    assert _read_commit(store, 1)["pids"] == [2]
+
+
+def test_concurrent_commits_all_land_whole(tmp_path):
+    """Writers racing for commit indices each get their own entry, and a
+    reader listing the log meanwhile never sees a partial one."""
+    import sys
+    import threading
+
+    from fsst_spark.sources.fsst_source import (_read_commit, commit_count,
+                                                log_commit)
+
+    store = str(tmp_path / "store")
+    n_writers, per_writer = 8, 25
+    stop = threading.Event()
+    errors = []
+
+    def write(w):
+        for i in range(per_writer):
+            log_commit(store, [w * per_writer + i], mode="datasource")
+
+    def read():
+        while not stop.is_set():
+            try:
+                for i in range(commit_count(store)):
+                    _read_commit(store, i)
+            except (ValueError, OSError) as e:  # a partial or missing entry
+                errors.append(e)
+                return
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        reader = threading.Thread(target=read)
+        writers = [threading.Thread(target=write, args=(w,))
+                   for w in range(n_writers)]
+        reader.start()
+        for t in writers:
+            t.start()
+        for t in writers:
+            t.join(timeout=60)
+        stop.set()
+        reader.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in writers + [reader])
+    assert errors == []
+    n = n_writers * per_writer
+    assert commit_count(store) == n
+    pids = sorted(p for i in range(n) for p in _read_commit(store, i)["pids"])
+    assert pids == list(range(n))
+    assert len(os.listdir(os.path.join(store, "commits"))) == n

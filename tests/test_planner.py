@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from fsst_spark.jobs.decode import decode_filtered, decode_job, decode_plan
 from fsst_spark.jobs.encode import encode_job
 from fsst_spark.sources.fsst_source import register
-from tests.plan_checks import assert_no_chunk_row_shuffle
+from tests.plan_checks import assert_no_chunk_row_shuffle, run_counting_jobs
 
 URL = "00001234.example.org/page"
 
@@ -35,19 +35,8 @@ def clustered(spark, tmp_path_factory):
     return out
 
 
-def _run_counting_jobs(spark, group: str, fn):
-    """(``fn()``, number of Spark jobs it started)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_point_lookup_is_one_spark_job(spark, clustered):
-    rows, n_jobs = _run_counting_jobs(
+    rows, n_jobs = run_counting_jobs(
         spark, "planner-point",
         lambda: decode_filtered(spark, clustered, "url", "==", URL).collect())
     assert [r["doc_id"] for r in rows] == [1234]
@@ -62,7 +51,7 @@ def test_source_point_lookup_plans_one_partition(spark, clustered):
 
 
 def test_decode_plan_runs_no_spark_job(spark, clustered):
-    plan, n_jobs = _run_counting_jobs(
+    plan, n_jobs = run_counting_jobs(
         spark, "planner-plan",
         lambda: decode_plan(spark, clustered, filters=[("url", "==", URL)]))
     assert n_jobs == 0
