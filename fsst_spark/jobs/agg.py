@@ -860,8 +860,7 @@ def encoded_group_topk(spark, out_dir: str, key_col: str, val_col: str,
         # than k rows have a strictly higher count — so dropping rows
         # below the in-partition k-th count is exact regardless of tie
         # order, and the window's per-key fan-in is capped at
-        # ~k x shuffle-partitions instead of the key's full value-NDV
-        # (the ivf_topk_batch per-partition combine, guide §2.3).
+        # ~k x shuffle-partitions instead of the key's full value-NDV.
         for pdf in pdfs:
             if len(pdf) <= k:
                 yield pdf

@@ -58,7 +58,7 @@ def _parse_cluster_by(raw: str | None):
         return entries, []
     from pyspark.sql import functions as F
 
-    from fsst_spark.pipeline.textstats import url_sort_key
+    from fsst_spark.jobs.layout import url_sort_key
 
     exprs = []
     for e in entries:
@@ -400,54 +400,6 @@ def main(argv: list[str] | None = None) -> int:
     qtl.add_argument("--q", default="0.25,0.5,0.75",
                      help="comma-separated fractions in [0,1]")
 
-    anb = sub.add_parser("ann-build",
-                         help="encode an embedding table as an IVF-cell-"
-                              "clustered store: chunk zone maps become the "
-                              "inverted index, centroids persist as a "
-                              "sidecar")
-    anb.add_argument("--input", required=True,
-                     help="parquet dir / iceberg: table with an embedding column")
-    anb.add_argument("--out", required=True)
-    anb.add_argument("--vec-col", default="embedding")
-    anb.add_argument("--id-col", default="vec_id")
-    anb.add_argument("--cells", type=int, default=16)
-    anb.add_argument("--partitions", type=int, default=None)
-
-    anq = sub.add_parser("ann-query",
-                         help="top-k cosine over an ann-build store: probed "
-                              "cells decode selectively, the rest never read")
-    anq.add_argument("--data", required=True)
-    anq.add_argument("--vec", required=True,
-                     help="query vector as comma-separated floats")
-    anq.add_argument("-k", type=int, default=10)
-    anq.add_argument("--nprobe", type=int, default=4)
-
-    dix = sub.add_parser("dedup-index",
-                         help="persistent MinHash dedup index: build from a "
-                              "corpus, or probe a new batch against it "
-                              "(join-only on the corpus side)")
-    dix.add_argument("action", choices=["build", "probe"])
-    dix.add_argument("--index", required=True, help="index directory")
-    dix.add_argument("--input", required=True,
-                     help="parquet dir / iceberg: table (corpus or new batch)")
-    dix.add_argument("--id-col", default="doc_id")
-    dix.add_argument("--text-col", default="text")
-    dix.add_argument("--threshold", type=float, default=0.8)
-    dix.add_argument("--survivors-out", default=None,
-                     help="probe only: write surviving rows (parquet) and "
-                          "append them to the index")
-
-    pck = sub.add_parser("pack",
-                         help="sequence packing: assign docs to fixed "
-                              "token-budget training bins (chunks = "
-                              "concat-then-cut, greedy = no straddling)")
-    pck.add_argument("--input", required=True)
-    pck.add_argument("--out", required=True)
-    pck.add_argument("--mode", choices=["chunks", "greedy"], default="chunks")
-    pck.add_argument("--token-col", required=True)
-    pck.add_argument("--order-col", default="doc_id")
-    pck.add_argument("--budget", type=int, required=True)
-
     tpk = sub.add_parser("topk",
                          help="ORDER BY col [DESC] LIMIT k from an encoded "
                               "store — zone maps bound the k-th value and "
@@ -578,20 +530,6 @@ def main(argv: list[str] | None = None) -> int:
     stm.add_argument("--continuous", action="store_true",
                      help="keep running (default: availableNow drain + exit)")
     stm.add_argument("--max-files-per-trigger", type=int, default=None)
-
-    cur = sub.add_parser("curate",
-                         help="quality-filter + dedup + cap + sample a document table")
-    cur.add_argument("--input", required=True,
-                     help="input parquet path or iceberg:<catalog.db.table>")
-    cur.add_argument("--out", required=True, help="curated parquet output dir")
-    cur.add_argument("--text-col", default="text")
-    cur.add_argument("--id-col", default="doc_id")
-    cur.add_argument("--group-col", default=None, help="domain column for per-group cap")
-    cur.add_argument("--cap", type=int, default=50, help="max docs per group")
-    cur.add_argument("--fraction", type=float, default=1.0,
-                     help="deterministic sample fraction")
-    cur.add_argument("--neardup", action="store_true",
-                     help="also resolve MinHash near-dup clusters")
 
     jin = sub.add_parser(
         "join", help="equi-join two encoded stores (two-sided zone "
@@ -983,76 +921,6 @@ def main(argv: list[str] | None = None) -> int:
                               "quantiles": {str(r["q"]): r["val"]
                                             for r in rows},
                               **obs}))
-        elif args.cmd == "ann-build":
-            from fsst_spark.pipeline.ann_store import build_ann_store
-            from fsst_spark.sources import read_table
-
-            df_in = read_table(spark, args.input)
-            C = build_ann_store(spark, df_in, args.out,
-                                vec_col=args.vec_col, id_col=args.id_col,
-                                n_cells=args.cells,
-                                num_partitions=args.partitions)
-            print(json.dumps({"out": args.out, "n_cells": int(len(C)),
-                              "rows": df_in.count()}))
-        elif args.cmd == "ann-query":
-            from fsst_spark.pipeline.ann_store import ann_store_topk
-
-            vec = [float(x) for x in args.vec.split(",")]
-            rows = ann_store_topk(spark, args.data, vec, k=args.k,
-                                  nprobe=args.nprobe).collect()
-            print(json.dumps([r.asDict() for r in rows]))
-        elif args.cmd == "dedup-index":
-            from fsst_spark.pipeline.dedup_index import (dedup_against_index,
-                                                         flag_against_index,
-                                                         minhash_index_write)
-            from fsst_spark.sources import read_table
-
-            df_in = read_table(spark, args.input)
-            if args.action == "build":
-                minhash_index_write(df_in, args.index,
-                                    text_col=args.text_col,
-                                    id_col=args.id_col)
-                print(json.dumps({"built": args.index,
-                                  "n_docs": df_in.count()}))
-            elif args.survivors_out:
-                surv = dedup_against_index(
-                    df_in, args.index, text_col=args.text_col,
-                    id_col=args.id_col, threshold=args.threshold)
-                surv.write.mode("overwrite").parquet(args.survivors_out)
-                n_surv = spark.read.parquet(args.survivors_out).count()
-                print(json.dumps({"n_in": df_in.count(), "n_survivors": n_surv,
-                                  "survivors": args.survivors_out,
-                                  "index_appended": True}))
-            else:
-                from pyspark.sql import functions as F
-
-                flags = flag_against_index(
-                    df_in, args.index, text_col=args.text_col,
-                    id_col=args.id_col, threshold=args.threshold)
-                agg = flags.agg(
-                    F.count("*").alias("n_in"),
-                    F.sum(F.col("index_dup").cast("int")).alias("n_dups"),
-                ).collect()[0]
-                print(json.dumps({"n_in": agg["n_in"],
-                                  "n_index_dups": agg["n_dups"] or 0}))
-        elif args.cmd == "pack":
-            from fsst_spark.pipeline.packing import pack_chunks, pack_greedy
-            from fsst_spark.sources import read_table
-
-            df_in = read_table(spark, args.input)
-            fn = pack_chunks if args.mode == "chunks" else pack_greedy
-            out = fn(df_in, args.token_col, args.order_col, args.budget)
-            out.write.mode("overwrite").parquet(args.out)
-            from pyspark.sql import functions as F
-
-            packed = spark.read.parquet(args.out)
-            bin_cols = (["bin"] if args.mode == "chunks"
-                        else ["shard", "bin"])
-            print(json.dumps({
-                "n_docs": packed.count(),
-                "n_bins": packed.select(*bin_cols).distinct().count(),
-                "out": args.out, "mode": args.mode,
-            }))
         elif args.cmd == "topk":
             from fsst_spark.jobs.stats import encoded_topk
 
@@ -1191,19 +1059,6 @@ def main(argv: list[str] | None = None) -> int:
             m = read_manifest(spark, args.out).agg(
                 F.count("*"), F.sum("n_rows")).collect()[0]
             print(json.dumps({"partitions": m[0], "rows": m[1]}))
-        elif args.cmd == "curate":
-            from fsst_spark.pipeline.curate import curate
-            from fsst_spark.sources import read_table
-
-            stages = curate(
-                read_table(spark, args.input),
-                text_col=args.text_col, id_col=args.id_col,
-                group_col=args.group_col, cap_n=args.cap,
-                sample_fraction=args.fraction, neardup=args.neardup,
-            )
-            stages["sampled"].write.mode("overwrite").parquet(args.out)
-            n_out = spark.read.parquet(args.out).count()
-            print(json.dumps({"curated_to": args.out, "rows": n_out}))
         elif args.cmd == "join":
             from fsst_spark.jobs.join import store_join, store_join_plan
 

@@ -67,15 +67,6 @@ def compact_store(spark, in_dir: str, out_dir: str,
     from .schema import copy_schema_log
 
     copy_schema_log(in_dir, out_dir)
-    # the ANN centroid sidecar describes the LAYOUT (ivf_cell clustering),
-    # which compaction preserves exactly — copy it so probes keep working;
-    # recluster_store deliberately does NOT (a new sort key voids it)
-    ann_side = os.path.join(in_dir, "ann", "centroids.json")
-    if os.path.exists(ann_side):
-        import shutil
-
-        os.makedirs(os.path.join(out_dir, "ann"), exist_ok=True)
-        shutil.copyfile(ann_side, os.path.join(out_dir, "ann", "centroids.json"))
     lineage_json = json.dumps(
         {**(lineage or {}), "mode": "compacted", "source_store": in_dir,
          "source_files": n_in, "target_files": target_files})

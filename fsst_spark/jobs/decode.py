@@ -693,8 +693,7 @@ def decode_filtered(spark, out_dir: str, col: str | None = None, op: str | None 
             raise ValueError(
                 f"cannot filter on nested column {fc!r} ({types[fc]}): "
                 "array columns have no zone maps or scalar predicates — "
-                "filter on a scalar column (e.g. the ivf_cell layout key "
-                "for embedding stores) instead")
+                "filter on a scalar column instead")
     df = decode_job(spark, out_dir, cols, zone_filters=flt,
                     zone_filters_any=any_flt or None, as_of=as_of,
                     _pids=_pids)
@@ -879,6 +878,40 @@ def decode_head(spark, out_dir: str, n: int,
         k *= 2
 
 
+def _hex_thr(frac: float) -> str:
+    """The 8-hex-digit threshold a hash prefix must sort below to pass
+    at rate ``frac``: floor(frac * 2^32), or ``"g"`` (above every
+    lowercase hex digit, so everything passes) at 1.0 — formatting 2^32
+    would give 9 chars, which sort BELOW most 8-char hashes."""
+    # min(): frac < 1.0 can still round up to exactly 2^32 in double
+    # precision — 9 hex digits would defeat the 8-char comparison
+    return ("g" if frac >= 1.0
+            else format(min(int(frac * (1 << 32)), 0xffffffff), "08x"))
+
+
+def deterministic_sample(df: DataFrame, fraction: float,
+                         key_col: str = "doc_id",
+                         salt: str = "sample") -> DataFrame:
+    """Keep a reproducible ~``fraction`` of rows, keyed on content.
+
+    Predicate: the first 8 hex chars of md5(key || ':' || salt) compared
+    lexicographically against the hex threshold floor(fraction * 2^32) —
+    fixed-width lowercase hex compares identically to the numeric value,
+    and md5 agrees byte-for-byte across engines, so DuckDB reproduces the
+    selection exactly (and so does any future re-run, independent of
+    partitioning, cluster size, or row order). Changing ``salt`` draws an
+    independent sample.
+    """
+    if not 0.0 <= fraction <= 1.0:
+        raise ValueError(f"fraction must be in [0, 1], got {fraction}")
+    h = F.substring(
+        F.md5(F.concat(F.col(key_col).cast("string"), F.lit(":" + salt))
+              .cast("binary")),
+        1, 8,
+    )
+    return df.where(h < F.lit(_hex_thr(fraction)))
+
+
 def _sample_hash(key: tuple[int, int], salt: str) -> str:
     """``decode_sample``'s chunk hash: the first 8 hex digits of
     ``md5("pid:chunk_id:salt")``, the value Spark's
@@ -894,7 +927,7 @@ def decode_sample(spark, out_dir: str, target_rows: int, key_col: str,
     of 100 TB" without a full scan.
 
     Two-stage selection, both stages content-keyed (md5 thresholds, the
-    same engine-reproducible trick as ``pipeline.sampling``):
+    same engine-reproducible trick as ``deterministic_sample``):
 
     1. CHUNKS at fraction ``f``: keep chunks where
        ``md5(pid:chunk_id:salt)`` clears a threshold, ``f`` sized from
@@ -903,7 +936,7 @@ def decode_sample(spark, out_dir: str, target_rows: int, key_col: str,
        it does). Only these chunks ever decode.
     2. ROWS within selected chunks at rate ``r = target_rows /
        selected_rows``: keep rows where ``md5(key_col:salt)`` clears
-       ``r``'s threshold.
+       ``r``'s threshold (``deterministic_sample``).
 
     Every chunk is selected with the same probability ``f`` regardless
     of size, and within a realization every row of every selected chunk
@@ -912,10 +945,10 @@ def decode_sample(spark, out_dir: str, target_rows: int, key_col: str,
     so E[rows] = ``target_rows``; with strongly varying chunk sizes the
     marginal per-row inclusion probability deviates slightly from
     ``f·r``, a standard two-stage-sampling property). The set contract
-    matches ``mix_sources`` / ``deterministic_sample``: the same call
-    always returns the same rows, any engine, any cluster size. Rows are clumped by chunk
+    matches ``deterministic_sample``: the same call always returns the
+    same rows, any engine, any cluster size. Rows are clumped by chunk
     (that is where the IO saving comes from) — fine for eyeballing and
-    aggregate estimation; use ``pipeline.sampling`` post-decode when
+    aggregate estimation; use ``deterministic_sample`` post-decode when
     you need row-level independence. Tombstones thin the result below
     target like any decode; ``key_col`` must be a stored column with
     distinct-per-row values for the set to be well-defined."""
@@ -939,12 +972,6 @@ def decode_sample(spark, out_dir: str, target_rows: int, key_col: str,
     if rows_total == 0:
         return decode_job(spark, out_dir, cols)
 
-    def _hex_thr(frac: float) -> str:
-        # min(): frac < 1.0 can still round up to exactly 2^32 in double
-        # precision — 9 hex digits would defeat the 8-char comparison
-        return ("g" if frac >= 1.0
-                else format(min(int(frac * (1 << 32)), 0xffffffff), "08x"))
-
     # size f so the EXPECTED selected rows cover the target with slack,
     # then verify against the exact metadata counts and double on shortfall
     frac = min(1.0, 1.5 * target_rows / rows_total)
@@ -959,10 +986,7 @@ def decode_sample(spark, out_dir: str, target_rows: int, key_col: str,
     else:
         df = decode_job(spark, out_dir, cols, _chunk_keys=[k for k, _ in sel])
     r_rate = min(1.0, target_rows / max(selected_rows, 1))
-    row_hash = F.substring(
-        F.md5(F.concat(F.col(key_col).cast("string"), F.lit(":" + salt))
-              .cast("binary")), 1, 8)
-    out = df.where(row_hash < F.lit(_hex_thr(r_rate)))
+    out = deterministic_sample(df, r_rate, key_col, salt)
     if columns is not None and key_col not in columns:
         out = out.drop(key_col)
     return out

@@ -43,7 +43,6 @@ Reference tie: engine-level surface with no reference analog
 from __future__ import annotations
 
 import glob
-import json
 import os
 import shutil
 from typing import Iterator
@@ -312,22 +311,11 @@ def delete_matching(spark, store: str, col: str, keys_df,
 
 
 def _log_delete(store: str, entry: dict) -> None:
-    """Append-only JSON lineage of delete calls (O_EXCL-claimed index,
-    same protocol as the commit log)."""
-    d = os.path.join(_deletes_dir(store), "_log")
-    os.makedirs(d, exist_ok=True)
-    payload = json.dumps(entry).encode()
-    idx = sum(1 for f in os.listdir(d) if f.endswith(".json"))
-    while True:
-        path = os.path.join(d, f"{idx:08d}.json")
-        try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
-        except FileExistsError:
-            idx += 1
-            continue
-        with os.fdopen(fd, "wb") as fh:
-            fh.write(payload)
-        return
+    """Append-only JSON lineage of delete calls (the commit log's publish
+    step, ``append_log_entry``)."""
+    from .encode import append_log_entry
+
+    append_log_entry(os.path.join(_deletes_dir(store), "_log"), entry)
 
 
 def compact_deletes(spark, store: str,

@@ -405,6 +405,31 @@ def _atomic_write(table: pa.Table, path: str) -> None:
     os.replace(tmp, path)
 
 
+def append_log_entry(log_dir: str, entry: dict) -> int:
+    """Append ``entry`` to an append-only JSON log directory (the commit,
+    schema and delete logs); returns its index. The entry is written whole
+    under a temporary name that no reader counts (not ``*.json``), then
+    published by ``os.link`` to the next index — the link fails if the
+    index exists, so two concurrent appends serialize instead of
+    clobbering (the loser retries at idx+1), and no reader ever sees a
+    partly written entry. A write that fails publishes nothing."""
+    os.makedirs(log_dir, exist_ok=True)
+    tmp = os.path.join(log_dir, f".entry-{uuid.uuid4().hex}.tmp")
+    fd = os.open(tmp, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
+    try:
+        with os.fdopen(fd, "wb") as fh:
+            fh.write(json.dumps(entry).encode())
+        idx = sum(1 for f in os.listdir(log_dir) if f.endswith(".json"))
+        while True:
+            try:
+                os.link(tmp, os.path.join(log_dir, f"{idx:08d}.json"))
+                return idx
+            except FileExistsError:
+                idx += 1
+    finally:
+        os.unlink(tmp)
+
+
 def salted_repartition(df: DataFrame, num_partitions: int,
                        group_cols: list[str] | None = None,
                        unique_col: str = "url",
@@ -467,7 +492,7 @@ def encode_job(
     the tasks themselves); collecting it is only for display/driver logic.
 
     ``sort_key`` (column name, Column expression — e.g.
-    ``textstats.url_sort_key(F.col("url"))`` — or a list of either)
+    ``layout.url_sort_key(F.col("url"))`` — or a list of either)
     physically clusters the layout before encoding, the step that makes
     the per-chunk zone maps selective (``zone_pack8``'s docstring: raw
     URLs collapse to the constant ``https://`` zone; a host-reversed sort

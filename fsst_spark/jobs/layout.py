@@ -1,5 +1,5 @@
-"""Multi-column layout clustering: Z-order (Morton) keys for encode-time
-sorting.
+"""Layout keys for encode-time sorting: the host-reversed URL key and
+multi-column Z-order (Morton) keys.
 
 A single-column ``sort_key`` makes zone maps selective for ONE column;
 queries filtering on any other column still touch every chunk. Z-ordering
@@ -29,6 +29,24 @@ from __future__ import annotations
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, functions as F
+
+
+def url_sort_key(url: Column) -> Column:
+    """Scheme-stripped, host-reversed URL layout key (pure JVM expressions).
+
+    ``https://www.blog.example.com/a/b?q=1`` -> ``com.example.blog.www/a/b?q=1``.
+    Sorting/clustering an encode by this key groups all pages of a site
+    (and its subdomains) contiguously, which is what makes the encoder's
+    8-byte string prefix zones (``zone_pack8``) selective on URL columns —
+    raw URLs collapse to the constant ``https://`` zone (see
+    ``jobs/encode.zone_pack8``). Standard columnar-layout practice
+    (host-reversed URL keys in web-table layouts, e.g. the classic
+    WebTable row-key design)."""
+    c = F.regexp_replace(url, r"^[a-zA-Z][a-zA-Z0-9+.-]*://", "")
+    host = F.regexp_extract(c, r"^([^/]*)", 1)
+    path = c.substr(F.length(host) + 1, F.length(c))
+    rev = F.array_join(F.reverse(F.split(host, r"\.")), ".")
+    return F.concat(rev, path)
 
 
 def _rankable(df: DataFrame, col: str) -> Column:

@@ -69,7 +69,7 @@ CODEC_SUMMARY_DDL = (
 
 def codec_summary(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     """Per (column, codec) totals: rows, raw/encoded bytes, row matches."""
-    from ..jobs.encode import raw_size_of
+    from .encode import raw_size_of
 
     cols = columns or df.columns
 

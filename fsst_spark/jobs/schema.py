@@ -32,6 +32,8 @@ import glob
 import json
 import os
 
+from .encode import append_log_entry
+
 SCHEMA_SUBDIR = "schema"
 
 
@@ -61,23 +63,6 @@ def dropped_columns(store: str) -> set[str]:
         elif e["action"] == "undrop":
             dropped.discard(e["column"])
     return dropped
-
-
-def _append_entry(store: str, entry: dict) -> int:
-    d = _schema_dir(store)
-    os.makedirs(d, exist_ok=True)
-    payload = json.dumps(entry).encode()
-    idx = sum(1 for f in os.listdir(d) if f.endswith(".json"))
-    while True:
-        path = os.path.join(d, f"{idx:08d}.json")
-        try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
-        except FileExistsError:
-            idx += 1
-            continue
-        with os.fdopen(fd, "wb") as fh:
-            fh.write(payload)
-        return idx
 
 
 def physical_columns(store: str) -> dict[str, str]:
@@ -112,14 +97,14 @@ def drop_column(store: str, column: str) -> None:
     if len((set(phys) | set(added)) - dropped) <= 1:
         raise ValueError("cannot drop the last visible column "
                          f"({column!r}); a store needs at least one")
-    _append_entry(store, {"action": "drop", "column": column})
+    append_log_entry(_schema_dir(store), {"action": "drop", "column": column})
 
 
 def undrop_column(store: str, column: str) -> None:
     """Restore a dropped column (its payloads were never deleted)."""
     if column not in dropped_columns(store):
         raise ValueError(f"column {column!r} is not currently dropped")
-    _append_entry(store, {"action": "undrop", "column": column})
+    append_log_entry(_schema_dir(store), {"action": "undrop", "column": column})
 
 
 def added_columns(store: str) -> dict[str, str]:
@@ -173,8 +158,8 @@ def add_column(store: str, column: str, arrow_type: str) -> None:
         raise ValueError(f"column {column!r} is already added")
     if column in dropped_columns(store):
         raise ValueError(f"column {column!r} is dropped; undrop it instead")
-    _append_entry(store, {"action": "add", "column": column,
-                          "arrow_type": arrow_type})
+    append_log_entry(_schema_dir(store), {"action": "add", "column": column,
+                                          "arrow_type": arrow_type})
 
 
 def copy_schema_log(src_store: str, dst_store: str) -> int:

@@ -18,9 +18,10 @@ import json
 from typing import Iterator
 
 import pyarrow as pa
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
-from .decode import _chunks_df, _spark_type, column_arrow_types
+from .decode import (_chunks_df, _spark_type, column_arrow_types,
+                     deterministic_sample)
 from .deletes import require_no_deletes as _require_no_deletes
 
 _EXACT_ZONE_TYPES = ("int8", "int16", "int32", "int64")
@@ -606,6 +607,46 @@ def _ndv_from_src(src: DataFrame, columns: list[str],
     return result
 
 
+def global_cumsum(df: DataFrame, val_col: str, order_col: str,
+                  num_shards: int | None = None,
+                  out_col: str = "cum_before") -> DataFrame:
+    """``out_col`` = exact sum of ``val_col`` over all rows strictly before
+    this one in ``order_col`` order (first row gets 0), plus a ``shard``
+    column (the range-partition id, kept for shard-local consumers).
+
+    ``order_col`` must be unique (ties could split across range
+    partitions, making "strictly before" ambiguous). Nulls in ``val_col``
+    count as 0. One range shuffle + one #shards-row collect."""
+    spark = df.sparkSession
+    num_shards = num_shards or spark.sparkContext.defaultParallelism
+    d = (df.repartitionByRange(num_shards, F.col(order_col))
+           .withColumn("shard", F.spark_partition_id()))
+    w = (Window.partitionBy("shard").orderBy(order_col)
+         .rowsBetween(Window.unboundedPreceding, -1))
+    # double, not long: fractional weights (e.g. quantile-sketch n/k) must
+    # not truncate; integer weights stay exact far past any token count
+    # (2^53) and the final cast below restores a long when safe
+    val = F.coalesce(F.col(val_col).cast("double"), F.lit(0.0))
+    d = d.withColumn("_local_before",
+                     F.coalesce(F.sum(val).over(w), F.lit(0.0)))
+    # per-shard totals: #shards rows — metadata-scale by construction.
+    # RangePartitioner ids are ordered by key range, so a running sum over
+    # ids IS the global prefix at each shard boundary.
+    totals = (d.groupBy("shard").agg(F.sum(val).alias("_tot"))
+              .orderBy("shard").collect())
+    offsets, run = [], 0.0
+    for r in totals:
+        offsets.append((r["shard"], run))
+        run += r["_tot"] or 0.0
+    off = F.broadcast(
+        spark.createDataFrame(offsets, "shard int, _shard_offset double"))
+    return (
+        d.join(off, "shard")
+        .withColumn(out_col, (F.col("_local_before") + F.col("_shard_offset")))
+        .drop("_local_before", "_shard_offset")
+    )
+
+
 def encoded_quantiles(spark, out_dir: str, column: str, qs: list[float],
                       num_shards: int | None = None,
                       observer: dict | None = None) -> DataFrame:
@@ -617,7 +658,7 @@ def encoded_quantiles(spark, out_dir: str, column: str, qs: list[float],
     rank selection: every stored point carries weight ``n_chunk/k``, the
     points sort globally by value (a range shuffle over #chunks×k narrow
     rows — distributed, never one task), an exact prefix sum of weights
-    comes from ``pipeline.packing.global_cumsum``, and the answer for
+    comes from ``global_cumsum``, and the answer for
     target rank ``t = q·N`` is the lowest value whose weight interval
     covers ``t``. Rank error is bounded by 2·N/k total (equi-depth bound:
     one sample spacing plus one weight interval);
@@ -632,8 +673,6 @@ def encoded_quantiles(spark, out_dir: str, column: str, qs: list[float],
     Raises for string columns, sketch-less stores, and chunks with values
     but no sketch (a partial merge would silently mis-rank)."""
     _require_no_deletes(out_dir, 'encoded_quantiles')
-    from ..pipeline.packing import global_cumsum
-
     if not qs or not all(0.0 <= q <= 1.0 for q in qs):
         raise ValueError(f"qs must be fractions in [0, 1], got {qs!r}")
     types = column_arrow_types(spark, out_dir)
@@ -928,8 +967,6 @@ def advise_codecs(df: DataFrame, columns: list[str] | None = None,
         raise KeyError(f"columns not in DataFrame: {missing}")
     proj = df.select(*cols)
     if key_col is not None:
-        from ..pipeline.sampling import deterministic_sample
-
         if key_col not in df.columns:
             raise KeyError(f"key_col {key_col!r} not in DataFrame")
         n = df.count()

@@ -177,36 +177,20 @@ def commit_range_pids(store: str, since: int, until: int | None = None) -> list[
 def log_commit(store: str, pids: list[int], mode: str,
                batch_id: int | None = None) -> int:
     """Append one commit entry naming this write's chunk-file pids; returns
-    the entry index. The entry is written whole under a temporary name
-    that :func:`commit_count` does not count, then published by
-    ``os.link`` to the next index — the link fails if the index exists,
-    so two concurrent appends serialize instead of clobbering (the loser
-    retries at idx+1), and no reader ever sees a partly written entry.
-    Entries are never rewritten — the log is append-only, which is what
-    makes the streaming offset (a plain entry count) replayable.
-    ``batch_id`` tags entries written by the streaming sink so a replayed
-    epoch can be recognized and skipped (see :class:`FsstStreamWriter`)."""
-    import uuid
+    the entry index. The entry is published whole by
+    ``jobs.encode.append_log_entry`` (temp file, then ``os.link`` to the
+    next free index), so concurrent appends each get their own index and
+    no reader ever sees a partly written entry. Entries are never
+    rewritten — the log is append-only, which is what makes the
+    streaming offset (a plain entry count) replayable. ``batch_id`` tags
+    entries written by the streaming sink so a replayed epoch can be
+    recognized and skipped (see :class:`FsstStreamWriter`)."""
+    from ..jobs.encode import append_log_entry
 
-    d = _commits_dir(store)
-    os.makedirs(d, exist_ok=True)
     entry = {"pids": sorted(pids), "mode": mode}
     if batch_id is not None:
         entry["batch_id"] = batch_id
-    tmp = os.path.join(d, f".commit-{uuid.uuid4().hex}.tmp")
-    fd = os.open(tmp, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
-    try:
-        with os.fdopen(fd, "wb") as fh:
-            fh.write(json.dumps(entry).encode())
-        idx = commit_count(store)
-        while True:
-            try:
-                os.link(tmp, os.path.join(d, f"{idx:08d}.json"))
-                return idx
-            except FileExistsError:
-                idx += 1
-    finally:
-        os.unlink(tmp)
+    return append_log_entry(_commits_dir(store), entry)
 
 
 def log_commit_snapshot(store: str) -> int | None:

@@ -1,5 +1,1 @@
 from .encode_stream import encode_stream_job  # noqa: F401
-from .stats_stream import streaming_quality_stats  # noqa: F401
-from .dedup_stream import streaming_dedup  # noqa: F401
-from .quota_stream import quota_filter  # noqa: F401
-from .session_stream import session_window_stats  # noqa: F401

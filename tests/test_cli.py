@@ -19,19 +19,6 @@ def _run(*args):
     return json.loads(out.stdout.strip().splitlines()[-1])
 
 
-def test_cli_synth_then_curate(tmp_path):
-    src = str(tmp_path / "corpus")
-    out = str(tmp_path / "curated")
-    r = _run("synth", "--rows", "300", "--out", src)
-    assert r["rows"] == 300
-    r = _run("curate", "--input", src, "--out", out,
-             "--id-col", "url", "--group-col", "lang",
-             "--cap", "40", "--fraction", "0.5")
-    assert 0 < r["rows"] <= 300
-    import glob
-    assert glob.glob(out + "/*.parquet")
-
-
 def test_cli_encode_then_selective_decode(tmp_path):
     src = str(tmp_path / "corpus2")
     enc = str(tmp_path / "encoded")
@@ -245,9 +232,9 @@ def test_cli_decode_where_any(tmp_path):
     assert got == want > 0
 
 
-def test_cli_quantiles_pack_dedup_index(tmp_path):
-    """Round-5 ops end-to-end via spark-submit entry points: quantile
-    sketches, sequence packing, and the persistent dedup index."""
+def test_cli_quantiles(tmp_path):
+    """Quantiles end-to-end via the spark-submit entry point: percentiles
+    from the per-chunk quantile sketches."""
     src = str(tmp_path / "corpus5")
     enc = str(tmp_path / "encoded5")
     _run("synth", "--rows", "300", "--out", src)
@@ -255,22 +242,6 @@ def test_cli_quantiles_pack_dedup_index(tmp_path):
     r = _run("quantiles", "--data", enc, "--column", "warc_ts",
              "--q", "0.5")
     assert r["n_values"] == 300 and r["quantiles"]["0.5"] > 0
-
-    packed = str(tmp_path / "packed")
-    # warc_ts ticks (~1.8e15 each) stand in for token counts: a budget of
-    # two docs' worth forces many bins
-    r = _run("pack", "--input", src, "--out", packed,
-             "--mode", "greedy", "--token-col", "warc_ts",
-             "--order-col", "url", "--budget", str(4 * 10 ** 15))
-    assert r["n_docs"] == 300 and r["n_bins"] > 1
-
-    idx = str(tmp_path / "mhidx")
-    r = _run("dedup-index", "build", "--index", idx, "--input", src,
-             "--id-col", "url")
-    assert r["n_docs"] == 300
-    r = _run("dedup-index", "probe", "--index", idx, "--input", src,
-             "--id-col", "url")
-    assert r["n_in"] == 300 and r["n_index_dups"] == 300  # self-probe: all dups
 
 
 def test_cli_delete_and_materialize(tmp_path):

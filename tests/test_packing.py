@@ -1,16 +1,14 @@
-"""Sequence packing: scalable global cumsum (boundary-independent),
-chunk packing vs a single-window plan, greedy packing vs a pure-Python
-reference."""
+"""Scalable global cumsum (``jobs.stats.global_cumsum``, the prefix sum
+behind ``encoded_quantiles``): boundary-independent, equal to a
+single-window plan."""
 
 import os
 
 import pytest
-from hypothesis import example, given, settings
-from hypothesis import strategies as st
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from fsst_spark.pipeline.packing import global_cumsum, pack_chunks, pack_greedy
+from fsst_spark.jobs.stats import global_cumsum
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
@@ -36,85 +34,3 @@ def test_global_cumsum_matches_single_window(spark, docs):
             for r in global_cumsum(docs, "n_chars", "doc_id", shards).collect()
         }
         assert got == want, f"shards={shards}"
-
-
-def test_pack_chunks_invariants(spark, docs):
-    out = pack_chunks(docs, "n_chars", "doc_id", budget=5000).collect()
-    total = sum(r["n_chars"] for r in out)
-    by_id = sorted(out, key=lambda r: r["doc_id"])
-    # bins are non-decreasing in corpus order and cover floor(total/budget)
-    bins = [r["bin"] for r in by_id]
-    assert bins == sorted(bins)
-    assert bins[0] == 0 and bins[-1] == (total - by_id[-1]["n_chars"]) // 5000
-    assert all(0 <= r["bin_offset"] < 5000 for r in out)
-
-
-def test_pack_chunks_bad_budget(spark, docs):
-    with pytest.raises(ValueError, match="budget"):
-        pack_chunks(docs, "n_chars", "doc_id", budget=0)
-
-
-def _greedy_ref(tokens, budget):
-    # member-count rollover (not fill): zero-token docs must not let an
-    # oversize doc share their bin — mirrors pack_greedy's pack()
-    bins, fill, members, cur = [], 0, 0, 0
-    for t in tokens:
-        if members > 0 and fill + t > budget:
-            cur, fill, members = cur + 1, 0, 0
-        bins.append(cur)
-        fill, members = fill + t, members + 1
-        if fill >= budget:
-            cur, fill, members = cur + 1, 0, 0
-    return bins
-
-
-def test_pack_greedy_single_shard_matches_reference(spark, docs):
-    got = pack_greedy(docs, "n_chars", "doc_id", budget=4096,
-                      num_shards=1).collect()
-    got.sort(key=lambda r: r["doc_id"])
-    want = _greedy_ref([r["n_chars"] for r in got], 4096)
-    assert [r["bin"] for r in got] == want
-    assert all(r["oversize"] == (r["n_chars"] > 4096) for r in got)
-
-
-def test_pack_greedy_sharded_respects_budget(spark, docs):
-    """Multi-shard run: every non-oversize (shard, bin) stays within
-    budget, and each shard's bins independently match the reference."""
-    out = pack_greedy(docs, "n_chars", "doc_id", budget=4096,
-                      num_shards=4).collect()
-    from collections import defaultdict
-
-    fill = defaultdict(int)
-    shards = defaultdict(list)
-    for r in sorted(out, key=lambda r: r["doc_id"]):
-        if not r["oversize"]:
-            fill[(r["shard"], r["bin"])] += r["n_chars"]
-        shards[r["shard"]].append(r)
-    assert all(v <= 4096 for v in fill.values())
-    for rows in shards.values():
-        assert [r["bin"] for r in rows] == _greedy_ref(
-            [r["n_chars"] for r in rows], 4096)
-
-
-@settings(max_examples=20, deadline=None)
-@given(st.lists(st.integers(min_value=0, max_value=300), min_size=1,
-                max_size=60),
-       st.integers(min_value=1, max_value=500))
-@example(
-    tokens=[0, 2],
-    budget=1,
-).via('discovered failure')
-def test_greedy_reference_properties(tokens, budget):
-    """The reference itself: bins consecutive from 0; no bin over budget
-    unless its (single) doc is oversize; no doc splits."""
-    bins = _greedy_ref(tokens, budget)
-    assert bins[0] == 0
-    assert all(b2 - b1 in (0, 1) for b1, b2 in zip(bins, bins[1:]))
-    from collections import defaultdict
-
-    fill = defaultdict(list)
-    for t, b in zip(tokens, bins):
-        fill[b].append(t)
-    for members in fill.values():
-        assert sum(members) <= budget or (
-            len(members) == 1 and members[0] > budget)

@@ -6,7 +6,6 @@ import glob
 
 import pyarrow.parquet as pq
 import pytest
-from pyspark.sql import functions as F
 
 from fsst_spark.jobs.decode import decode_job, decode_plan
 from fsst_spark.jobs.encode import encode_job, salted_repartition
@@ -67,7 +66,7 @@ def test_salted_repartition_broadcasts_bucket_map(spark):
 
 
 def test_roundtrip_query_prunes_columns(spark):
-    from fsst_spark.pipeline.roundtrip import roundtrip_flags
+    from fsst_spark.jobs.roundtrip import roundtrip_flags
 
     df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     flags = roundtrip_flags(df, "text", keep_cols=["lang"])
@@ -78,122 +77,12 @@ def test_roundtrip_query_prunes_columns(spark):
     assert "doc_id" not in read_schema and "source" not in read_schema, read_schema
 
 
-def test_minhash_shuffles_only_narrow_keys(spark):
-    """The LSH band join must never hash-partition (shuffle) by text —
-    only (band, bucket, id) rows move."""
-    from fsst_spark.pipeline.dedup import minhash_lsh_candidates
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    pairs = minhash_lsh_candidates(docs, "text", "doc_id", n_hashes=32, bands=8)
-    plan = _plan(pairs)
-    for line in plan.splitlines():
-        if "Exchange hashpartitioning" in line:
-            assert "text#" not in line, line
-    assert "Exchange hashpartitioning" in plan  # the band join does shuffle
-
-
-def test_ivf_probe_filters_candidates(spark):
-    """The IVF probe plan filters on the centroid column before any cosine
-    math — the shape that becomes partition pruning on a bucketed table."""
-    from fsst_spark.pipeline.similarity import build_ivf_index, ivf_topk
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = [float(x) for x in emb.select("embedding").first()[0]]
-    idx, cents = build_ivf_index(emb, n_centroids=8)
-    plan = _plan(ivf_topk(idx, cents, q, k=5, nprobe=2))
-    # the centroid assignment UDF is inlined, so the filter references its
-    # output directly: `Filter pythonUDF0#N IN (...)` above ArrowEvalPython
-    filter_lines = [ln for ln in plan.splitlines() if "Filter" in ln and " IN (" in ln]
-    assert filter_lines, plan
-    assert "ArrowEvalPython" in plan
-
-
 def test_pre_partitioned_encode_has_no_shuffle(spark, tmp_path):
     corpus = synth_web_df(spark, 400, parallelism=2)
     out = str(tmp_path / "npenc")
     metrics = encode_job(spark, corpus, out, chunk_bytes=1 << 20, pre_partitioned=True)
     plan = _plan(metrics)
     assert "Exchange" not in plan, plan
-
-
-def test_minhash_estimate_signature_udf_runs_once(spark):
-    """estimate=True references the signature frame 3x (bands + both join
-    sides); the operator must persist it so the expensive pandas-UDF pass
-    runs once — visible as InMemoryTableScan reuse in the plan."""
-    from fsst_spark.pipeline.dedup import minhash_lsh_candidates
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    pairs = minhash_lsh_candidates(docs, "text", "doc_id", n_hashes=32, bands=8,
-                                   estimate=True)
-    plan = _plan(pairs)
-    assert plan.count("InMemoryTableScan") >= 3, plan
-
-
-def test_ivf_batch_joins_on_centroid_no_cartesian(spark):
-    """The k-NN join must broadcast the (small) exploded query side and
-    hash-join on centroid — never a cartesian/nested-loop pairing."""
-    from fsst_spark.pipeline.similarity import build_ivf_index, ivf_topk_batch
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), "embedding")
-    idx, cents = build_ivf_index(emb.filter(F.col("vec_id") >= 4), n_centroids=8)
-    out = ivf_topk_batch(idx, cents, queries, k=5, nprobe=2)
-    plan = _plan(out)
-    assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan, plan
-    assert "BroadcastHashJoin" in plan, plan
-    join_line = next(ln for ln in plan.splitlines() if "BroadcastHashJoin" in ln)
-    assert "centroid" in join_line or "pythonUDF" in join_line, join_line
-
-
-def test_ivf_batch_local_topk_combine(spark):
-    """The batch k-NN join runs a shuffle-free per-partition top-k combine
-    (MapInPandas) BEFORE the global window, and returns the same ranks."""
-    from fsst_spark.pipeline.similarity import build_ivf_index, ivf_topk_batch
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("query_id"), "embedding")
-    idx, cents = build_ivf_index(emb.filter(F.col("vec_id") >= 4), n_centroids=8)
-    with_combine = ivf_topk_batch(idx, cents, queries, k=5, nprobe=8)
-    plan = _plan(with_combine)
-    assert "MapInPandas" in plan, plan
-    # the combine sits below the window's exchange: no extra shuffle added
-    without = ivf_topk_batch(idx, cents, queries, k=5, nprobe=8, local_topk=False)
-    assert _plan(without).count("Exchange") == plan.count("Exchange")
-    a = sorted(map(tuple, with_combine.collect()))
-    b = sorted(map(tuple, without.collect()))
-    assert a == b
-
-
-def test_connected_components_shuffles_only_narrow_keys(spark):
-    """Label propagation moves only (long, long) rows — never text."""
-    from fsst_spark.pipeline.dedup import connected_components, neardup_dedup
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    fp = docs.select("doc_id", F.md5(F.col("text").cast("binary")).alias("fp"))
-    pairs = (fp.alias("a").join(fp.alias("b"),
-             (F.col("a.fp") == F.col("b.fp")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-             .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")))
-    surv = neardup_dedup(docs, pairs=pairs)
-    plan = _plan(surv)
-    for line in plan.splitlines():
-        if "Exchange hashpartitioning" in line:
-            assert "text#" not in line, line
-
-
-def test_gopher_flags_stay_jvm_side(spark):
-    """The Gopher quality rules must compile to pure JVM expressions —
-    no Python/Arrow UDF stage anywhere in the plan."""
-    from fsst_spark.pipeline.textstats import gopher_quality_flags
-
-    df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    plan = _plan(gopher_quality_flags(df))
-    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    # only doc_id + text should reach the scan
-    first_line = plan[plan.index("FileScan"):].split("\n")[0]
-    read_schema = first_line.split("ReadSchema")[-1]
-    assert "text" in read_schema and "source" not in read_schema, read_schema
 
 
 def test_group_count_scan_pushes_column_filter(spark, encoded):

@@ -1,7 +1,4 @@
-"""Structured Streaming tests: streaming encode == batch encode, and
-watermarked windowed stats == batch aggregation on the same input."""
-
-import os
+"""Structured Streaming tests: streaming encode == batch encode."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -9,7 +6,7 @@ from pyspark.sql import functions as F
 from fsst_spark.jobs.decode import decode_job
 from fsst_spark.jobs.encode import completed_pids, read_manifest
 from fsst_spark.jobs.verify import verify_against_source
-from fsst_spark.streaming import encode_stream_job, streaming_quality_stats
+from fsst_spark.streaming import encode_stream_job
 from fsst_spark.synth.webcorpus import synth_web_df
 
 N1, N2 = 800, 400
@@ -55,129 +52,3 @@ def test_streaming_encode_then_incremental(spark, src_dir, tmp_path):
     import json
     epochs = {json.loads(r["lineage"]).get("stream_epoch") for r in lin}
     assert len(epochs) >= 2
-
-
-def test_streaming_stats_match_batch(spark, src_dir, tmp_path):
-    batch_df = spark.read.parquet(src_dir)
-    expected = {
-        (r["win_start"], r["lang"]): (r["n_docs"], r["sum_chars"], r["sum_tokens"], r["sum_punct"])
-        for r in streaming_quality_stats(batch_df).collect()
-    }
-    assert expected
-
-    stream = spark.readStream.schema(batch_df.schema).parquet(src_dir)
-    agg = streaming_quality_stats(stream)
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory").queryName("qstats")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt_stats"))
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["win_start"], r["lang"]): (r["n_docs"], r["sum_chars"], r["sum_tokens"], r["sum_punct"])
-        for r in spark.sql("SELECT * FROM qstats").collect()
-    }
-    assert got == expected
-
-
-def test_streaming_dedup_matches_batch_fingerprints(spark, src_dir, tmp_path):
-    from fsst_spark.streaming import streaming_dedup
-
-    batch_df = spark.read.parquet(src_dir)
-    # inject exact + whitespace-trivial duplicates with later timestamps
-    dups = (
-        batch_df.limit(40)
-        .withColumn("url", F.concat(F.lit("dup://"), F.col("url")))
-        .withColumn("text", F.concat(F.col("text"), F.lit("  ")))
-    )
-    src = batch_df.unionByName(dups)
-    d2 = str(tmp_path / "dedup_src")
-    src.write.parquet(d2)
-
-    batch_out = streaming_dedup(spark.read.parquet(d2))
-    n_expected = batch_out.count()
-    # batch dedup keeps exactly one row per normalized fingerprint
-    from fsst_spark.pipeline.textstats import normalized_fingerprint
-    n_fp = src.select(normalized_fingerprint(F.col("text")).alias("fp")).distinct().count()
-    assert n_expected == n_fp
-
-    stream = spark.readStream.schema(src.schema).parquet(d2)
-    q = (
-        streaming_dedup(stream)
-        .writeStream.outputMode("append")
-        .format("memory").queryName("sdedup")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "ckpt_dedup"))
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("SELECT * FROM sdedup")
-    assert got.count() == n_fp
-    assert got.select(
-        normalized_fingerprint(F.col("text")).alias("fp")
-    ).distinct().count() == n_fp
-    assert got.columns == src.columns
-
-
-def test_quota_filter_stream_matches_batch_across_microbatches(spark, tmp_path):
-    """Custom stateful operator (applyInPandasWithState): the per-host byte
-    counter must PERSIST across micro-batches — a host exhausted in batch
-    1 admits nothing in batch 2 — and the admitted set must equal the
-    batch-mode running-sum window on the same (in-order) input."""
-    from fsst_spark.streaming import quota_filter
-
-    src = str(tmp_path / "quota_src")
-    # two files = two micro-batches (maxFilesPerTrigger=1); ts order
-    # matches file order so stream arrival order == order_col order
-    d1 = synth_web_df(spark, 300, seed=21, parallelism=1)
-    d1.write.mode("append").parquet(src)
-    base_ts = d1.agg(F.max("warc_ts")).collect()[0][0]
-    d2 = (synth_web_df(spark, 300, seed=22, parallelism=1)
-          .withColumn("warc_ts", F.timestamp_micros(
-              F.unix_micros(F.lit(base_ts)) + F.unix_micros("warc_ts") % 10**9)))
-    d2.write.mode("append").parquet(src)
-
-    batch_df = spark.read.parquet(src)
-    quota = 60_000  # bytes of text per lang: exhausts mid-stream
-    expected = sorted(r["url"] for r in
-                      quota_filter(batch_df, quota).select("url").collect())
-    n_all = batch_df.count()
-    assert 0 < len(expected) < n_all, (len(expected), n_all)
-
-    stream = (spark.readStream.schema(batch_df.schema)
-              .option("maxFilesPerTrigger", "1").parquet(src))
-    q = (
-        quota_filter(stream, quota)
-        .writeStream.outputMode("append")
-        .format("memory").queryName("quota_out")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path / "quota_ckpt"))
-        .start()
-    )
-    q.awaitTermination(180)
-    got = sorted(r["url"] for r in
-                 spark.sql("SELECT url FROM quota_out").collect())
-    assert got == expected
-    # state really crossed batches: batch 2 alone under a fresh counter
-    # would admit more rows than the carried-over counter allows
-    fresh_b2 = quota_filter(
-        spark.read.parquet(src).where(F.col("warc_ts") > base_ts), quota)
-    b2_urls = {r["url"] for r in fresh_b2.select("url").collect()}
-    got_b2 = {u for u in got} & b2_urls
-    assert len(got_b2) < len(b2_urls)
-
-
-def test_quota_filter_counts_bytes_not_characters(spark):
-    """The quota is a BYTE budget: multi-byte UTF-8 must count at
-    octet_length, not character length (r4 ADVICE). Three 4-byte rows
-    against an 8-byte quota admit exactly two; character counting (2 chars
-    each) would admit all three."""
-    from fsst_spark.streaming import quota_filter
-
-    rows = [(i, "g", "éé") for i in range(3)]  # 'éé': 2 chars, 4 bytes
-    df = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    out = quota_filter(df, 8, group_col="source", size_col="text",
-                       order_col="doc_id")
-    assert sorted(r["doc_id"] for r in out.collect()) == [0, 1]

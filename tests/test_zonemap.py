@@ -400,7 +400,7 @@ def _url_key_corpus(spark, n=4000):
     """Corpus whose host-reversed keys discriminate within zone_pack8's
     8-byte prefix (50 domains across one TLD: 'net.d07/...'), stored with
     the layout key as a column — the documented practice for URL columns."""
-    from fsst_spark.pipeline.textstats import url_sort_key
+    from fsst_spark.jobs.layout import url_sort_key
 
     df = spark.range(n).select(
         F.concat(F.lit("https://d"),
