@@ -32,8 +32,6 @@ import glob
 import json
 import os
 
-from .encode import append_log_entry
-
 SCHEMA_SUBDIR = "schema"
 
 
@@ -63,6 +61,13 @@ def dropped_columns(store: str) -> set[str]:
         elif e["action"] == "undrop":
             dropped.discard(e["column"])
     return dropped
+
+
+def _append_entry(store: str, entry: dict) -> int:
+    """Publish one schema-log entry whole (``append_log_entry``)."""
+    from .encode import append_log_entry
+
+    return append_log_entry(_schema_dir(store), entry)
 
 
 def physical_columns(store: str) -> dict[str, str]:
@@ -97,14 +102,14 @@ def drop_column(store: str, column: str) -> None:
     if len((set(phys) | set(added)) - dropped) <= 1:
         raise ValueError("cannot drop the last visible column "
                          f"({column!r}); a store needs at least one")
-    append_log_entry(_schema_dir(store), {"action": "drop", "column": column})
+    _append_entry(store, {"action": "drop", "column": column})
 
 
 def undrop_column(store: str, column: str) -> None:
     """Restore a dropped column (its payloads were never deleted)."""
     if column not in dropped_columns(store):
         raise ValueError(f"column {column!r} is not currently dropped")
-    append_log_entry(_schema_dir(store), {"action": "undrop", "column": column})
+    _append_entry(store, {"action": "undrop", "column": column})
 
 
 def added_columns(store: str) -> dict[str, str]:
@@ -158,8 +163,8 @@ def add_column(store: str, column: str, arrow_type: str) -> None:
         raise ValueError(f"column {column!r} is already added")
     if column in dropped_columns(store):
         raise ValueError(f"column {column!r} is dropped; undrop it instead")
-    append_log_entry(_schema_dir(store), {"action": "add", "column": column,
-                                          "arrow_type": arrow_type})
+    _append_entry(store, {"action": "add", "column": column,
+                          "arrow_type": arrow_type})
 
 
 def copy_schema_log(src_store: str, dst_store: str) -> int:
