@@ -4,15 +4,18 @@ oracles ``oracle_sql()`` and the flagship ``entry()``.
 Engine: ``fsst_spark`` — per-column lightweight compression (FSST, dict,
 RLE, FOR, delta, front coding, bit-pack with stats-driven selection per
 chunk) and the jobs over its encoded stores (selective decode, metadata
-answers, aggregations, deletes, updates, schema evolution, joins), run
-on the provided parquet tables.
+answers, aggregations, deletes, updates, schema evolution, joins), plus
+the training-data operators still kept in ``fsst_spark.pipeline`` (dedup,
+text stats, text prep and extraction, sampling, temporal and multimodal
+features), run on the provided parquet tables.
 
 Every query's result is verifiable. Codec queries return per-group row
 counts and ``n_match`` (rows that survived encode->decode
 bit-identically), so the DuckDB oracle — which simply reports
 ``count(*)`` for n_match — only agrees when the round-trip is perfect.
 Store queries encode a table, answer through the engine, and are pinned
-by an exact SQL oracle over the source table.
+by an exact SQL oracle over the source table; pipeline operators use
+exact SQL oracles where expressible.
 """
 
 from __future__ import annotations
@@ -205,9 +208,81 @@ def q_codec_selection_summary(spark, sf_dir):
     )
 
 
+def _augmented_docs(spark, sf_dir):
+    """documents + a deterministic exact-duplicate of every 10th doc.
+
+    The corpus itself has no duplicates, so dedup recall gates would be
+    vacuous; this augmentation is expressible identically in the SQL
+    oracle, making 'every exact duplicate is found' a hard check."""
+    base = _docs(spark, sf_dir).select("doc_id", "text")
+    dups = base.filter(F.col("doc_id") % 10 == 0).withColumn(
+        "doc_id", F.col("doc_id") + F.lit(1000000)
+    )
+    # single-file input scans as 1-2 partitions; spread the (expensive)
+    # signature stage across the cluster
+    return base.unionByName(dups).repartition(
+        spark.sparkContext.defaultParallelism, "doc_id"
+    )
+
+
 # ---------------------------------------------------------------------------
-# encoded-store queries (selective decode, metadata answers, store ops)
+# training-data pipeline queries
 # ---------------------------------------------------------------------------
+def q_dedup_exact(spark, sf_dir):
+    from fsst_spark.pipeline.dedup import exact_dedup_stats
+
+    return exact_dedup_stats(_docs(spark, sf_dir), "text")
+
+
+def q_token_quality_stats(spark, sf_dir):
+    from fsst_spark.pipeline.textstats import quality_stats
+
+    return quality_stats(_docs(spark, sf_dir), "text", "lang")
+
+
+def q_lang_id(spark, sf_dir):
+    from fsst_spark.pipeline.textstats import lang_id
+
+    df = _docs(spark, sf_dir).withColumn("pred", lang_id(F.col("text")))
+    return (
+        df.groupBy("pred")
+        .agg(F.count("*").alias("n_docs"))
+        .orderBy("pred")
+    )
+
+
+def q_split_docs(spark, sf_dir):
+    """Training-window document splitting: every 97th doc cut into 40-word
+    pieces — exact piece ids, text, and word counts vs the SQL window
+    arithmetic (list slicing over the same whitespace split)."""
+    from fsst_spark.pipeline.textprep import split_docs
+
+    docs = _docs(spark, sf_dir).filter(F.col("doc_id") % 97 == 0)
+    return (split_docs(docs, "text", max_words=40)
+            .select("doc_id", "piece_id", "piece_text",
+                    F.col("piece_words").cast("bigint").alias("piece_words"))
+            .orderBy("doc_id", "piece_id"))
+
+
+def q_bpe_pairs(spark, sf_dir):
+    """First-iteration BPE statistic: top-20 adjacent character pairs
+    weighted by word frequency (the pair a BPE trainer merges first is
+    row 1). Deterministic (freq desc, left, right) order."""
+    from fsst_spark.pipeline.textprep import bpe_pair_counts
+
+    return bpe_pair_counts(_docs(spark, sf_dir), "text", k=20)
+
+
+def q_bpe_train(spark, sf_dir):
+    """Distributed BPE training (rows-only gate: the merge loop is
+    iterative, not SQL-expressible — pytest pins it against a pure-Python
+    reference implementation): 12 merges over the corpus vocabulary."""
+    from fsst_spark.pipeline.textprep import bpe_train
+
+    return bpe_train(_docs(spark, sf_dir), "text", n_merges=12,
+                     vocab_cap=65536)
+
+
 def q_zonemap_decode(spark, sf_dir):
     """Selective decode through zone maps: encode (doc_id, n_chars), then
     decode only chunks whose zone can satisfy n_chars >= 300 and apply the
@@ -534,6 +609,61 @@ def q_encoded_quantiles(spark, sf_dir):
         [(r["q"], r["val"]) for r in rows], "q double, val bigint")
 
 
+def q_asof_join(spark, sf_dir):
+    """As-of join, JOIN-FREE: every click attaches its user's most recent
+    view at-or-before it (union + one hash shuffle + last(ignorenulls)
+    running window — no range join, no pair blow-up; the plan test pins
+    zero Join nodes). Tie rule (right rows first at equal ts, largest
+    event_id among tied right rows) is mirrored exactly in the oracle's
+    window SQL."""
+    from fsst_spark.pipeline.temporal import asof_join
+
+    ev = _t(spark, sf_dir, "events")
+    left = ev.where(F.col("event_type") == "click") \
+             .select("user_id", "ts", "event_id")
+    right = ev.where(F.col("event_type") == "view") \
+              .select("user_id", "ts", "event_id", "value")
+    out = asof_join(left, right, on="user_id", ts_col="ts",
+                    right_cols=["event_id", "value"],
+                    tiebreak_col="event_id")
+    return out.select(
+        F.col("event_id").alias("click_id"),
+        F.col("event_id_r").alias("view_id"),
+        F.round(F.col("value_r"), 6).alias("view_value"),
+    )
+
+
+def q_session_stats(spark, sf_dir):
+    """Gaps-and-islands sessionization (6 h inactivity gap) + per-session
+    rollup: one shuffle on user_id, exact integer microsecond gaps
+    (unix_micros, never float seconds), deterministic event_id tiebreak."""
+    from fsst_spark.pipeline.temporal import session_stats
+
+    ev = _t(spark, sf_dir, "events").select("user_id", "ts", "event_id")
+    return session_stats(ev, key_col="user_id", ts_col="ts",
+                         gap_us=6 * 3600 * 1_000_000,
+                         tiebreak_col="event_id") \
+        .select("user_id", "session_seq", "n_events", "dur_us")
+
+
+def q_temperature_sample(spark, sf_dir):
+    """Alpha-tempered domain balancing (the multilingual-sampling recipe
+    over web sources): keep probability q_g ∝ n_g^alpha / n_g, selection
+    content-keyed on md5 so the survivor SET is engine-reproducible —
+    the oracle recomputes thresholds AND the per-row hash test in SQL.
+    Returns per-source survivor counts + id-sums (set-pinning)."""
+    from fsst_spark.pipeline.sampling import temperature_sample
+
+    docs = _docs(spark, sf_dir)
+    kept = temperature_sample(docs, "source", alpha=0.5, target_rows=120)
+    return (
+        kept.groupBy("source")
+        .agg(F.count("*").alias("n_kept"),
+             F.sum("doc_id").alias("sum_ids"))
+        .orderBy("source")
+    )
+
+
 def q_fsst_source_columns(spark, sf_dir):
     """Column-pruned read: ``.option('columns', 'doc_id,lang')`` narrows
     the declared schema so unselected payloads are never decoded; the
@@ -670,6 +800,30 @@ def q_front_roundtrip_url(spark, sf_dir):
         F.sum("n_rows").alias("n_rows"),
         F.sum("n_match").alias("n_match"),
         F.concat_ws(",", F.array_sort(F.collect_list("codec"))).alias("codec"),
+    )
+
+
+def q_repetition_stats(spark, sf_dir):
+    """Gopher/MassiveText repetition signals (dup-line / top-bigram /
+    dup-5-gram character fractions): every 10th document gets a repeated
+    boilerplate line injected twice (the corpus itself is repetition-free),
+    and the per-document integer percentages + keep decisions must match
+    the same computation spelled out in SQL."""
+    from fsst_spark.pipeline.textstats import repetition_stats
+
+    boiler = "repeat me repeat me repeat me repeat me"
+    docs = _docs(spark, sf_dir).select(
+        "doc_id",
+        F.when(F.col("doc_id") % 10 == 0,
+               F.concat(F.col("text"), F.lit("\n" + boiler + "\n" + boiler)))
+        .otherwise(F.col("text")).alias("text"))
+    r = repetition_stats(docs)
+    return r.agg(
+        F.count("*").alias("n_docs"),
+        F.sum("dup_line_char_pct").alias("sum_dup_line_pct"),
+        F.sum("top_bigram_char_pct").alias("sum_top_bigram_pct"),
+        F.sum("dup_5gram_char_pct").alias("sum_dup_5gram_pct"),
+        F.sum(F.when(F.col("rep_keep"), 1).otherwise(0)).alias("n_keep"),
     )
 
 
@@ -905,6 +1059,26 @@ def q_advise_codecs(spark, sf_dir):
         "column string, codec string").orderBy("column")
 
 
+def q_mix_sources(spark, sf_dir):
+    """Deterministic dataset mixing to an explicit recipe (the LLM
+    "data mixture" step): three sources weighted 3:1:1, everything else
+    dropped; the survivor SET is content-keyed (md5 hex thresholds) so
+    DuckDB re-derives the exact same rows — pinned by per-source id
+    sums, not just counts."""
+    from fsst_spark.pipeline.sampling import mix_sources
+
+    docs = _docs(spark, sf_dir)
+    kept = mix_sources(docs, {"src1": 3.0, "src2": 1.0, "src3": 1.0},
+                       group_col="source", target_rows=60,
+                       key_col="doc_id", salt="mix")
+    return (
+        kept.groupBy("source")
+        .agg(F.count("*").alias("n_kept"),
+             F.sum("doc_id").alias("sum_ids"))
+        .orderBy("source")
+    )
+
+
 def q_encoded_ndv(spark, sf_dir):
     """Metadata-only NDV from mergeable per-chunk HLL sketches: the
     estimates must sit within 6% of the exact distinct counts (the exact
@@ -951,6 +1125,85 @@ def q_url_sort_key(spark, sf_dir):
         F.min("key").alias("min_key"),
         F.max("key").alias("max_key"),
         F.sum(F.length("key")).alias("sum_len"),
+    )
+
+
+def q_extract_roundtrip(spark, sf_dir):
+    """input_hint per-row invariant (byte-identical extracted text per
+    url): escape each document's text, embed it in full page boilerplate
+    (title + style + a decoy <script> carrying fake tags + footer),
+    extract main text engine-side (pipeline/textextract.py, pure JVM
+    regexp cascade), count byte-identical matches. The oracle pins
+    n_match == count(*) — any extraction defect is a hash mismatch."""
+    from fsst_spark.pipeline.textextract import escape_html_text, html_to_text
+
+    docs = _docs(spark, sf_dir)
+    html = F.concat(
+        F.lit('<html><head><title>d</title><style>p{color:red}</style>'
+              '</head><body><script>var x = "<p>decoy</p>";</script>'
+              '<main><article><p>'),
+        escape_html_text(F.col("text")),
+        F.lit('</p></article></main><footer>&copy; 2024 example'
+              '</footer></body></html>'),
+    )
+    ok = (html_to_text(html) == F.col("text")).cast("long")
+    return docs.select(ok.alias("ok")).agg(
+        F.count("*").alias("n_rows"), F.sum("ok").alias("n_match"))
+
+
+def q_crawl_frontier(spark, sf_dir):
+    """Crawl-frontier building (pipeline/frontier.py): extracted hrefs ->
+    normalization (fragment strip, protocol/root-relative resolution,
+    non-fetchable scheme drop) -> dedup -> known-URL anti-join -> per-host
+    politeness cap. Spark and DuckDB run the SAME regexes over identically
+    constructed pages (absolute, root-relative, protocol-relative+#frag,
+    mailto links per page); the full frontier row set must agree."""
+    from fsst_spark.pipeline.frontier import crawl_frontier
+
+    docs = _docs(spark, sf_dir)
+    did = F.col("doc_id").cast("string")
+    nid = (F.col("doc_id") + 1).cast("string")
+    cid = (F.col("doc_id") % 7).cast("string")
+    pages = docs.select(
+        F.concat(F.lit("https://"), F.col("source"),
+                 F.lit(".example.org/d"), did).alias("url"),
+        F.concat(
+            F.lit('<p><a href="https://'), F.col("source"),
+            F.lit(".example.org/n"), nid,
+            F.lit('">n</a><a href=\'/rel/'), did,
+            F.lit("'>r</a>"),
+            F.lit('<a href="//cdn.example.net/x'), cid,
+            F.lit('#frag">c</a><a href="mailto:a@b.c">m</a></p>'),
+        ).alias("html"))
+    known = docs.filter(F.col("doc_id") % 3 == 0).select(
+        F.concat(F.lit("https://"), F.col("source"),
+                 F.lit(".example.org/n"), nid).alias("url"))
+    return crawl_frontier(pages, known, per_host_cap=5)
+
+
+def q_extract_links(spark, sf_dir):
+    """<a href> extraction (crawl-frontier building): Spark and DuckDB
+    each run the SAME RE2-compatible patterns over identically
+    constructed pages with one double-quoted and one single-quoted link;
+    counts, distinct first targets, and lexicographic extremes must
+    agree exactly."""
+    from fsst_spark.pipeline.textextract import extract_links
+
+    docs = _docs(spark, sf_dir)
+    did = F.col("doc_id").cast("string")
+    html = F.concat(
+        F.lit('<body><p>see <a href="https://'), F.col("source"),
+        F.lit('.example.org/d'), did,
+        F.lit('">doc</a> and <a href=\'/rel/'), did,
+        F.lit("'>rel</a></p></body>"),
+    )
+    links = docs.select(extract_links(html).alias("links"))
+    return links.agg(
+        F.count("*").alias("n_rows"),
+        F.sum(F.size("links")).alias("n_links"),
+        F.countDistinct(F.element_at("links", 1)).alias("n_first"),
+        F.min(F.element_at("links", 1)).alias("min_link"),
+        F.max(F.element_at("links", 2)).alias("max_link"),
     )
 
 
@@ -1564,6 +1817,59 @@ def q_encoded_topk(spark, sf_dir):
     return spark.createDataFrame([(r["val"],) for r in rows], "val bigint")
 
 
+def q_pii_scrub(spark, sf_dir):
+    """PII redaction (emails / IPv4 / phones, ordered so one pattern's
+    digits never double-count as another): testdata text carries no PII,
+    so both sides inject a deterministic doc_id-derived email + phone +
+    IP, scrub, and compare per-language counts, total scrubbed length,
+    and one full scrubbed document (lexicographic min)."""
+    from fsst_spark.pipeline.textstats import pii_scrub
+
+    docs = _docs(spark, sf_dir)
+    inj = docs.select(
+        "doc_id", "lang",
+        F.concat(
+            F.col("text"), F.lit(" contact user"),
+            F.col("doc_id").cast("string"), F.lit("@mail"),
+            (F.col("doc_id") % 7).cast("string"),
+            F.lit(".com or +1-202-555-0"),
+            F.lpad((F.col("doc_id") % 100).cast("string"), 3, "0"),
+            F.lit(" from 192.168."), (F.col("doc_id") % 256).cast("string"),
+            F.lit("."), ((F.col("doc_id") * 3) % 256).cast("string"),
+        ).alias("text"))
+    return (
+        pii_scrub(inj).groupBy("lang")
+        .agg(F.sum("n_pii_email").alias("n_email"),
+             F.sum("n_pii_phone").alias("n_phone"),
+             F.sum("n_pii_ipv4").alias("n_ipv4"),
+             F.sum(F.length("text")).alias("scrub_len"),
+             F.min("text").alias("min_text"))
+        .orderBy("lang")
+    )
+
+
+def q_para_dedup(spark, sf_dir):
+    """Paragraph-level exact dedup (C4-style): 15-word deterministic
+    segmentation, first-occurrence survivor corpus-wide, documents
+    reassembled from surviving paragraphs; compared per-language on doc
+    count, paragraph/survivor counts, total reassembled length, and one
+    full reassembled document (lexicographic min)."""
+    from fsst_spark.pipeline.dedup import dedup_paragraphs
+
+    docs = _docs(spark, sf_dir)
+    out = dedup_paragraphs(docs).join(
+        docs.select("doc_id", "lang"), "doc_id")
+    return (
+        out.groupBy("lang")
+        .agg(F.count("*").alias("n_docs"),
+             F.sum("n_paras").alias("n_paras"),
+             F.sum("n_kept").alias("n_kept"),
+             F.sum(F.length("text_dedup")).alias("dedup_len"),
+             F.min("text_dedup").alias("min_text"))
+        .orderBy("lang")
+    )
+
+
 def q_prefix_decode(spark, sf_dir):
     """Prefix-predicate selective decode (``key LIKE 'p%'``): documents
     clustered on a host-reversed URL key, then decoded through the zone +
@@ -1623,6 +1929,15 @@ def q_encoded_distinct(spark, sf_dir):
     return spark.createDataFrame([(r["val"],) for r in rows], "val string")
 
 
+def q_token_topk(spark, sf_dir):
+    """Per-language heavy-hitter tokens (top-5 by count, token breaks
+    ties): exact window oracle over the unnested token stream."""
+    from fsst_spark.pipeline.textstats import token_topk
+
+    return token_topk(_docs(spark, sf_dir), k=5).select(
+        F.col("lang"), F.col("tok"), F.col("cnt"), F.col("rank"))
+
+
 def q_deterministic_sample(spark, sf_dir):
     """Content-keyed reproducible sampling: the survivor set is a pure
     function of (doc_id, salt), so DuckDB reproduces it exactly —
@@ -1634,6 +1949,235 @@ def q_deterministic_sample(spark, sf_dir):
     return docs.agg(F.count("*").alias("n_total")).crossJoin(
         samp.agg(F.count("*").alias("n_sampled"),
                  F.sum("doc_id").alias("sum_sampled_ids"))
+    )
+
+
+def q_cap_per_group(spark, sf_dir):
+    """Domain balancing: at most 7 docs per source (ranked by doc_id);
+    sum(doc_id) pins the exact survivor set."""
+    from fsst_spark.pipeline.sampling import cap_per_group
+
+    capped = cap_per_group(_docs(spark, sf_dir), "source", 7, "doc_id")
+    return capped.agg(
+        F.count("*").alias("n_rows"),
+        F.countDistinct("source").alias("n_sources"),
+        F.sum("doc_id").alias("sum_ids"),
+    )
+
+
+def q_gopher_quality(spark, sf_dir):
+    """Gopher-rule quality filter (Rae et al. 2021 A1.1): per-rule pass
+    counts + overall keep count over the documents table; every rule is
+    integer-exact so DuckDB reproduces the flags bit-for-bit."""
+    from fsst_spark.pipeline.textstats import gopher_quality_flags
+
+    flags = gopher_quality_flags(_docs(spark, sf_dir))
+    aggs = [F.count("*").alias("n_docs")]
+    for c in ["word_count_ok", "mean_word_len_ok", "symbol_ratio_ok",
+              "bullet_ratio_ok", "dup_line_ok", "stopword_ok", "keep"]:
+        aggs.append(F.sum(F.col(c).cast("bigint")).alias(f"n_{c}"))
+    return flags.agg(*aggs)
+
+
+def q_minhash_neardup(spark, sf_dir):
+    """MinHash-LSH recall gate: every exact-duplicate pair (known from the
+    deterministic augmentation) must surface as a verified near-dup pair."""
+    from fsst_spark.pipeline.dedup import minhash_lsh_candidates, ngram_jaccard_verify
+
+    aug = _augmented_docs(spark, sf_dir)
+    pairs = minhash_lsh_candidates(aug, "text", "doc_id", n_hashes=64, bands=16,
+                                   estimate=True)
+    # signature-estimate pre-filter (JVM): exact Jaccard only for pairs
+    # plausibly above the 0.7 threshold (0.5 leaves >3 sigma of margin at
+    # 64 hashes, so true >=0.7 pairs are not lost)
+    cand = pairs.filter(F.col("est_jaccard") >= 0.5).select("id_a", "id_b")
+    verified = ngram_jaccard_verify(aug, cand, "text", "doc_id", threshold=0.7)
+    return _exact_pair_recall(aug, verified.select("id_a", "id_b"))
+
+
+def q_ngram_jaccard(spark, sf_dir):
+    """Exact prefix-filtered n-gram Jaccard self-join (PPJoin family):
+    deterministic recall — every exact-duplicate pair MUST be found (no
+    LSH probability involved), pinned against the known augmentation."""
+    from fsst_spark.pipeline.dedup import ngram_jaccard_pairs
+
+    aug = _augmented_docs(spark, sf_dir)
+    pairs = ngram_jaccard_pairs(aug, "text", "doc_id", n=3, threshold=0.8)
+    return _exact_pair_recall(aug, pairs.select("id_a", "id_b"))
+
+
+def _exact_pair_recall(aug, found_pairs):
+    """(n_exact_dup_pairs, n_exact_found, all_exact_found): every known
+    exact-duplicate pair must appear in the operator's found pairs."""
+    fp = aug.select(F.col("doc_id"), F.md5(F.col("text").cast("binary")).alias("fp"))
+    exact = (
+        fp.alias("a")
+        .join(fp.alias("b"), (F.col("a.fp") == F.col("b.fp")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
+    )
+    n_exact = exact.agg(F.count("*").alias("n_exact_dup_pairs"))
+    n_found = (
+        exact.join(found_pairs, ["id_a", "id_b"], "left_semi")
+        .agg(F.count("*").alias("n_exact_found"))
+    )
+    return n_exact.crossJoin(n_found).withColumn(
+        "all_exact_found", F.col("n_exact_found") == F.col("n_exact_dup_pairs")
+    )
+
+
+def q_simhash_neardup(spark, sf_dir):
+    """Banded SimHash near-dup (hamming <= 3 via 4x16-bit pigeonhole bands):
+    exact duplicates have hamming 0, so the same recall gate applies."""
+    from fsst_spark.pipeline.dedup import simhash_neardup_pairs
+
+    aug = _augmented_docs(spark, sf_dir)
+    pairs = simhash_neardup_pairs(aug, "text", "doc_id", max_hamming=3)
+    return _exact_pair_recall(aug, pairs.select("id_a", "id_b"))
+
+
+def q_winnow_neardup(spark, sf_dir):
+    """Winnowing (rolling-hash fingerprint) near-dup recall gate: exact
+    duplicates share their entire selected-hash fingerprint, so every
+    injected exact-dup pair must surface from the hash self-join."""
+    from fsst_spark.pipeline.dedup import winnow_neardup_pairs
+
+    aug = _augmented_docs(spark, sf_dir)
+    pairs = winnow_neardup_pairs(aug, "text", "doc_id", min_shared=2)
+    return _exact_pair_recall(aug, pairs.select("id_a", "id_b"))
+
+
+def q_simhash_stats(spark, sf_dir):
+    """SimHash invariants: identical texts hash identically, and distinct
+    fingerprints never exceed distinct texts."""
+    from fsst_spark.pipeline.dedup import simhash_udf
+
+    aug = _augmented_docs(spark, sf_dir)
+    df = aug.withColumn("sh", simhash_udf()(F.col("text"))).withColumn(
+        "fp", F.md5(F.col("text").cast("binary"))
+    )
+    per_text = df.groupBy("fp").agg(F.countDistinct("sh").alias("k"))
+    totals = df.agg(
+        F.count("*").alias("n_docs"),
+        F.countDistinct("sh").alias("n_sh"),
+        F.countDistinct("fp").alias("n_fp"),
+    )
+    mk = per_text.agg(F.max("k").alias("max_k"))
+    return totals.crossJoin(mk).select(
+        F.col("n_docs"),
+        (F.col("n_sh") <= F.col("n_fp")).alias("simhash_distinct_le_texts"),
+        (F.col("max_k") == 1).alias("exact_dups_same_simhash"),
+    )
+
+
+def q_neardup_dedup(spark, sf_dir):
+    """Near-dup RESOLUTION gate (pairs -> connected components -> min-id
+    survivor -> anti-join): driven by the exact-duplicate pair relation so
+    the surviving set — not just its size — is exactly expressible in SQL
+    (count + sum of survivor ids pins WHICH docs survive)."""
+    from fsst_spark.pipeline.dedup import neardup_dedup
+
+    aug = _augmented_docs(spark, sf_dir)
+    fp = aug.select("doc_id", F.md5(F.col("text").cast("binary")).alias("fp"))
+    pairs = (
+        fp.alias("a")
+        .join(fp.alias("b"), (F.col("a.fp") == F.col("b.fp")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
+    )
+    surv = neardup_dedup(aug, pairs=pairs)
+    return surv.agg(
+        F.count("*").alias("n_survivors"),
+        F.sum("doc_id").alias("sum_survivor_ids"),
+        F.sum((F.col("doc_id") >= 1000000).cast("long")).alias("n_injected_surviving"),
+    )
+
+
+def q_neardup_dedup_minhash(spark, sf_dir):
+    """End-to-end near-dup dedup (MinHash LSH -> est prefilter -> exact
+    Jaccard -> components -> survivors). The corpus has genuine near-dups
+    among originals (not SQL-expressible), so the oracle checks hard
+    invariants: every injected exact duplicate is dropped, no two survivors
+    share identical text, and the doc count is exact."""
+    from fsst_spark.pipeline.dedup import neardup_dedup
+
+    aug = _augmented_docs(spark, sf_dir)
+    surv = neardup_dedup(aug, method="minhash", threshold=0.7)
+    fp = surv.select(F.md5(F.col("text").cast("binary")).alias("fp"))
+    n_docs = aug.agg(F.count("*").alias("n_docs"))
+    checks = surv.agg(
+        F.sum((F.col("doc_id") >= 1000000).cast("long")).alias("_inj"),
+        F.count("*").alias("_n_surv"),
+    )
+    distinct_fp = fp.agg(F.countDistinct("fp").alias("_n_fp"))
+    return (
+        n_docs.crossJoin(checks).crossJoin(distinct_fp)
+        .select(
+            "n_docs",
+            (F.col("_inj") == 0).alias("all_injected_dropped"),
+            (F.col("_n_fp") == F.col("_n_surv")).alias("survivors_text_distinct"),
+        )
+    )
+
+
+def q_img_neardup(spark, sf_dir):
+    """Perceptual-hash (aHash) image near-dup over binary payloads: every
+    10th doc's payload is duplicated, and byte-identical payloads must
+    collide at hamming 0 through decode -> aHash -> banded hamming join.
+    The oracle counts exactly the identical-payload pairs (the fake
+    decoder is payload-deterministic, and unrelated payloads land ~32 bits
+    apart, far beyond the max_hamming=6 gate)."""
+    from fsst_spark.pipeline.multimodal import (FakeMediaDecoder,
+                                                image_neardup_pairs)
+
+    aug = _augmented_docs(spark, sf_dir).withColumn(
+        "payload", F.col("text").cast("binary"))
+    pairs = image_neardup_pairs(aug, "payload", "doc_id",
+                                decoder=FakeMediaDecoder())
+    return pairs.agg(
+        F.count("*").alias("n_pairs"),
+        F.sum(F.col("id_a") + F.col("id_b")).alias("sum_ids"),
+        F.max("hamming").cast("int").alias("max_hamming"),
+    )
+
+
+def q_media_pipeline(spark, sf_dir):
+    """Resize + video frame-sample plumbing: every doc's payload resizes
+    to a fixed 4x6 RGB buffer (72 bytes) and 'decodes' to 24 fake frames
+    sampled every 8th (indices 0/8/16). Counts, byte volumes and index
+    sums are exact SQL; the pixel/feature VALUES are pinned by unit tests
+    (payload-deterministic)."""
+    from fsst_spark.pipeline.multimodal import (FakeMediaDecoder,
+                                                FakeVideoDecoder,
+                                                image_resize,
+                                                video_frame_sample)
+
+    docs = _docs(spark, sf_dir).withColumn(
+        "payload", F.col("text").cast("binary"))
+    imgs = image_resize(docs, 4, 6, "payload", "doc_id",
+                        decoder=FakeMediaDecoder())
+    vids = video_frame_sample(docs, every_k=8, payload_col="payload",
+                              decoder=FakeVideoDecoder(n_frames=24))
+    a = imgs.agg(F.count("*").alias("n_imgs"),
+                 F.sum(F.octet_length("rgb")).alias("rgb_bytes")).collect()[0]
+    b = vids.agg(F.count("*").alias("n_frames"),
+                 F.sum("frame_idx").alias("sum_frame_idx")).collect()[0]
+    return spark.createDataFrame(
+        [(a["n_imgs"], a["rgb_bytes"], b["n_frames"], b["sum_frame_idx"])],
+        "n_imgs bigint, rgb_bytes bigint, n_frames bigint, sum_frame_idx bigint")
+
+
+def q_multimodal_features(spark, sf_dir):
+    from fsst_spark.pipeline.multimodal import FakeMediaDecoder, extract_features
+
+    ev = _docs(spark, sf_dir).withColumn("payload", F.col("text").cast("binary"))
+    # payloads are text bytes, not real images: pin the deterministic fake
+    # decoder (the default would pick PIL when installed and reject them)
+    feats = extract_features(ev, "payload", "doc_id", feat_dim=8,
+                             decoder=FakeMediaDecoder())
+    return feats.agg(
+        F.count("*").alias("n_docs"),
+        F.sum("payload_bytes").alias("sum_payload_bytes"),
+        F.min(F.size("feat")).cast("long").alias("min_feat_len"),
+        F.countDistinct("feat_dim").alias("n_dims"),
     )
 
 
@@ -2115,6 +2659,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ts_roundtrip_events": q_ts_roundtrip_events,
         "codec_selection_summary": q_codec_selection_summary,
         "codec_selection_detail": q_codec_selection_detail,
+        "dedup_exact": q_dedup_exact,
+        "token_quality_stats": q_token_quality_stats,
+        "lang_id": q_lang_id,
+        "split_docs": q_split_docs,
+        "bpe_pairs": q_bpe_pairs,
+        "bpe_train": q_bpe_train,
         "zonemap_decode": q_zonemap_decode,
         "zonemap_decode_multi": q_zonemap_decode_multi,
         "dict_prune_decode": q_dict_prune_decode,
@@ -2139,19 +2689,27 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "updated_decode": q_updated_decode,
         "merged_decode": q_merged_decode,
         "materialized_deletes": q_materialized_deletes,
+        "asof_join": q_asof_join,
+        "session_stats": q_session_stats,
+        "temperature_sample": q_temperature_sample,
         "encoded_quantiles": q_encoded_quantiles,
         "front_roundtrip_url": q_front_roundtrip_url,
         "encoded_profile": q_encoded_profile,
         "recluster_decode": q_recluster_decode,
         "or_filter_decode": q_or_filter_decode,
+        "repetition_stats": q_repetition_stats,
         "decode_semijoin": q_decode_semijoin,
         "store_join": q_store_join,
         "store_join_df": q_store_join_df,
         "multi_store_decode": q_multi_store_decode,
         "family_stats": q_family_stats,
         "advise_codecs": q_advise_codecs,
+        "mix_sources": q_mix_sources,
         "encoded_ndv": q_encoded_ndv,
         "url_sort_key": q_url_sort_key,
+        "extract_roundtrip": q_extract_roundtrip,
+        "extract_links": q_extract_links,
+        "crawl_frontier": q_crawl_frontier,
         "clustered_decode": q_clustered_decode,
         "encoded_stats": q_encoded_stats,
         "encoded_minmax": q_encoded_minmax,
@@ -2174,10 +2732,69 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "suffix_decode": q_suffix_decode,
         "zorder_count": q_zorder_count,
         "encoded_topk": q_encoded_topk,
+        "pii_scrub": q_pii_scrub,
+        "para_dedup": q_para_dedup,
         "prefix_decode": q_prefix_decode,
         "encoded_distinct": q_encoded_distinct,
+        "token_topk": q_token_topk,
         "deterministic_sample": q_deterministic_sample,
+        "cap_per_group": q_cap_per_group,
+        "gopher_quality": q_gopher_quality,
+        "minhash_neardup": q_minhash_neardup,
+        "ngram_jaccard": q_ngram_jaccard,
+        "simhash_neardup": q_simhash_neardup,
+        "simhash_stats": q_simhash_stats,
+        "winnow_neardup": q_winnow_neardup,
+        "neardup_dedup": q_neardup_dedup,
+        "neardup_dedup_minhash": q_neardup_dedup_minhash,
+        "img_neardup": q_img_neardup,
+        "media_pipeline": q_media_pipeline,
+        "multimodal_features": q_multimodal_features,
     }
+
+
+_NORM_FP = "md5(lower(regexp_replace(trim(text), '\\s+', ' ', 'g')))"
+
+# Same deterministic duplicate augmentation as _augmented_docs (Spark side).
+_AUG_SQL = (
+    "SELECT doc_id, text FROM documents "
+    "UNION ALL SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 10 = 0"
+)
+
+
+# Per-document Gopher rule metrics (shared by the gopher_quality and
+# curation_pipeline oracles); keeps doc_id/source so downstream stages
+# can chain off the keep predicate.
+_GOPHER_F_SQL = (
+    "SELECT doc_id, source, text, "
+    "CASE WHEN trim(text) = '' THEN 0 ELSE "
+    "len(regexp_split_to_array(trim(text), '\\s+')) END AS n_words, "
+    "CASE WHEN trim(text) = '' THEN 0 ELSE "
+    "list_sum(list_transform(regexp_split_to_array(trim(text), '\\s+'), "
+    "w -> len(w))) END AS sum_wl, "
+    "len(trim(text)) - len(replace(trim(text), '#', '')) AS n_hash, "
+    "len(regexp_extract_all(trim(text), '\\.\\.\\.')) AS n_ell, "
+    "CASE WHEN trim(text) = '' THEN 0 ELSE "
+    "len(regexp_split_to_array(trim(text), '\\n')) END AS n_lines, "
+    "CASE WHEN trim(text) = '' THEN 0 ELSE "
+    "len(list_filter(regexp_split_to_array(trim(text), '\\n'), "
+    "ln -> regexp_matches(trim(ln), '^[-*•]'))) END AS n_bullet, "
+    "CASE WHEN trim(text) = '' THEN 0 ELSE "
+    "len(regexp_split_to_array(trim(text), '\\n')) - "
+    "len(list_distinct(regexp_split_to_array(trim(text), '\\n'))) END AS n_dup, "
+    "CASE WHEN trim(text) = '' THEN 0 ELSE "
+    "len(list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'), "
+    "x -> x IN ('the','and','of','to','is','in','a','that','it','for'))) "
+    "END AS n_stop FROM documents"
+)
+
+_GOPHER_KEEP_SQL = (
+    "n_words BETWEEN 50 AND 100000 "
+    "AND 3 * n_words <= sum_wl AND sum_wl <= 10 * n_words "
+    "AND 10 * (n_hash + n_ell) <= n_words "
+    "AND 10 * n_bullet < 9 * n_lines "
+    "AND 10 * n_dup <= 3 * n_lines AND n_stop >= 2"
+)
 
 
 def oracle_sql() -> dict[str, str]:
@@ -2222,6 +2839,67 @@ def oracle_sql() -> dict[str, str]:
             "CAST(sum(vec_id) AS BIGINT) AS sum_vec_id, "
             "CAST(sum(label) AS BIGINT) AS sum_label FROM embeddings"
         ),
+        "dedup_exact": (
+            f"WITH g AS (SELECT {_NORM_FP} AS fp, count(*) AS cnt "
+            "FROM documents GROUP BY 1) "
+            "SELECT CAST(sum(cnt) AS BIGINT) AS n_docs, count(*) AS n_distinct, "
+            "CAST(sum(CASE WHEN cnt > 1 THEN cnt ELSE 0 END) AS BIGINT) AS n_dup_docs FROM g"
+        ),
+        "token_quality_stats": (
+            "SELECT lang, count(*) AS n_docs, CAST(sum(length(text)) AS BIGINT) AS sum_chars, "
+            "CAST(sum(CASE WHEN trim(text) = '' THEN 0 "
+            "    ELSE len(regexp_split_to_array(trim(text), '\\s+')) END) AS BIGINT) AS sum_tokens, "
+            "CAST(sum(len(regexp_extract_all(text, "
+            "'[A-Za-z]+|[0-9]+|[^A-Za-z0-9 \\t\\n\\r]+'))) AS BIGINT) AS sum_bpe_tokens, "
+            "CAST(sum(length(text) - length(regexp_replace(text, '[.!?,;:]', '', 'g'))) AS BIGINT) AS sum_punct, "
+            "CAST(sum(CASE WHEN trim(text) = '' THEN 0 ELSE "
+            "len(list_filter(regexp_split_to_array(lower(trim(text)), '\\s+'), "
+            "x -> x IN ('the','and','of','to','is','in','a','that','it','for'))) "
+            "END) AS BIGINT) AS sum_stopwords, "
+            "CAST(sum(CASE WHEN length(text) = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_empty "
+            "FROM documents GROUP BY lang ORDER BY lang"
+        ),
+        "split_docs": (
+            "WITH w AS (SELECT doc_id, list_filter("
+            "regexp_split_to_array(text, '\\s+'), x -> x <> '') AS words "
+            "FROM documents WHERE doc_id % 97 = 0), "
+            "nz AS (SELECT doc_id, words, len(words) AS nw FROM w "
+            "WHERE len(words) > 0), "
+            "e AS (SELECT doc_id, words, nw, unnest(range(0, "
+            "CAST(floor((nw - 1) / 40) AS BIGINT) + 1)) AS piece FROM nz) "
+            "SELECT doc_id, piece AS piece_id, "
+            "array_to_string(words[piece * 40 + 1 : piece * 40 + 40], ' ') "
+            "AS piece_text, "
+            "CAST(least(40, nw - piece * 40) AS BIGINT) AS piece_words "
+            "FROM e ORDER BY doc_id, piece_id"
+        ),
+        "bpe_pairs": (
+            "WITH words AS (SELECT unnest(list_filter("
+            "regexp_split_to_array(text, '\\s+'), x -> x <> '')) AS word "
+            "FROM documents), "
+            "wf AS (SELECT word, count(*) AS f FROM words GROUP BY word "
+            "HAVING length(word) >= 2), "
+            "p AS (SELECT word[i + 1 : i + 1] AS \"left\", "
+            "word[i + 2 : i + 2] AS \"right\", f "
+            "FROM wf, unnest(range(0, length(word) - 1)) AS t(i)) "
+            "SELECT \"left\", \"right\", CAST(sum(f) AS BIGINT) AS freq "
+            "FROM p GROUP BY \"left\", \"right\" "
+            "ORDER BY freq DESC, \"left\", \"right\" LIMIT 20"
+        ),
+        "lang_id": (
+            "SELECT CASE "
+            "WHEN regexp_matches(text, '[一-鿿]') THEN 'zh' "
+            "WHEN regexp_matches(text, '[぀-ヿ]') THEN 'ja' "
+            "WHEN regexp_matches(text, '[가-힯]') THEN 'ko' "
+            "WHEN regexp_matches(text, '[Ѐ-ӿ]') THEN 'ru' "
+            "WHEN regexp_matches(text, '[؀-ۿ]') THEN 'ar' "
+            "WHEN regexp_matches(text, '(?i)\\b(der|die|und|nicht|ist)\\b') THEN 'de' "
+            "WHEN regexp_matches(text, '(?i)\\b(le|la|les|est|dans)\\b') THEN 'fr' "
+            "WHEN regexp_matches(text, '(?i)\\b(el|los|las|es|para)\\b') THEN 'es' "
+            "WHEN regexp_matches(text, '(?i)\\b(the|and|of|to|is)\\b') THEN 'en' "
+            "ELSE 'und' END AS pred, count(*) AS n_docs "
+            "FROM documents GROUP BY 1 ORDER BY 1"
+        ),
         "codec_selection_summary": (
             "WITH c(col) AS (VALUES ('doc_id'), ('lang'), ('n_chars'), ('source'), ('text')) "
             'SELECT col AS "column", (SELECT count(*) FROM documents) AS n_rows, '
@@ -2234,6 +2912,31 @@ def oracle_sql() -> dict[str, str]:
             "SELECT (SELECT CAST(count(*) AS BIGINT) FROM documents) AS n_total, "
             "CAST(count(*) AS BIGINT) AS n_sampled, "
             "CAST(sum(doc_id) AS BIGINT) AS sum_sampled_ids FROM s"
+        ),
+        "cap_per_group": (
+            "WITH c AS (SELECT doc_id, source FROM documents "
+            "QUALIFY row_number() OVER (PARTITION BY source ORDER BY doc_id) <= 7) "
+            "SELECT CAST(count(*) AS BIGINT) AS n_rows, "
+            "CAST(count(DISTINCT source) AS BIGINT) AS n_sources, "
+            "CAST(sum(doc_id) AS BIGINT) AS sum_ids FROM c"
+        ),
+        "gopher_quality": (
+            f"WITH f AS ({_GOPHER_F_SQL}), "
+            "g AS (SELECT (n_words BETWEEN 50 AND 100000) AS wc, "
+            "(3 * n_words <= sum_wl AND sum_wl <= 10 * n_words) AS mwl, "
+            "(10 * (n_hash + n_ell) <= n_words) AS sym, "
+            "(10 * n_bullet < 9 * n_lines) AS bul, "
+            "(10 * n_dup <= 3 * n_lines) AS dup, "
+            "(n_stop >= 2) AS stw FROM f) "
+            "SELECT CAST(count(*) AS BIGINT) AS n_docs, "
+            "CAST(sum(CASE WHEN wc THEN 1 ELSE 0 END) AS BIGINT) AS n_word_count_ok, "
+            "CAST(sum(CASE WHEN mwl THEN 1 ELSE 0 END) AS BIGINT) AS n_mean_word_len_ok, "
+            "CAST(sum(CASE WHEN sym THEN 1 ELSE 0 END) AS BIGINT) AS n_symbol_ratio_ok, "
+            "CAST(sum(CASE WHEN bul THEN 1 ELSE 0 END) AS BIGINT) AS n_bullet_ratio_ok, "
+            "CAST(sum(CASE WHEN dup THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_line_ok, "
+            "CAST(sum(CASE WHEN stw THEN 1 ELSE 0 END) AS BIGINT) AS n_stopword_ok, "
+            "CAST(sum(CASE WHEN wc AND mwl AND sym AND bul AND dup AND stw "
+            "THEN 1 ELSE 0 END) AS BIGINT) AS n_keep FROM g"
         ),
         "zonemap_decode": (
             "SELECT CAST(count(*) AS BIGINT) AS n_rows, "
@@ -2313,6 +3016,59 @@ def oracle_sql() -> dict[str, str]:
             "SELECT q, CAST(min(v) AS BIGINT) AS val FROM o, qs "
             "WHERE r = CAST(ceil(q * n) AS BIGINT) GROUP BY q ORDER BY q"
         ),
+        "asof_join": (
+            # the exact mirror of the union+window plan, tie rule included:
+            # right rows sort first at equal ts (inclusive bound), largest
+            # event_id wins among tied right rows, match rides in ONE struct
+            "WITH u AS ("
+            "  SELECT user_id, ts, 0 AS side, event_id AS tb, NULL::BIGINT AS click_id, "
+            "         struct_pack(eid := event_id, val := value) AS r "
+            "  FROM events WHERE event_type = 'view' AND ts IS NOT NULL "
+            "  UNION ALL "
+            "  SELECT user_id, ts, 1, NULL, event_id, NULL "
+            "  FROM events WHERE event_type = 'click'"
+            "), c AS ("
+            "  SELECT *, last_value(r IGNORE NULLS) OVER ("
+            "    PARTITION BY user_id "
+            "    ORDER BY ts ASC NULLS FIRST, side ASC, tb ASC NULLS FIRST "
+            "    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS m "
+            "  FROM u) "
+            "SELECT click_id, m.eid AS view_id, "
+            "round(m.val, 6) AS view_value "
+            "FROM c WHERE side = 1"
+        ),
+        "session_stats": (
+            "WITH e AS (SELECT user_id, ts, event_id, epoch_us(ts) AS us "
+            "           FROM events WHERE ts IS NOT NULL), "
+            "l AS (SELECT *, lag(us) OVER "
+            "      (PARTITION BY user_id ORDER BY ts, event_id) AS pus FROM e), "
+            "s AS (SELECT *, CAST(sum(CASE WHEN pus IS NULL "
+            "      OR us - pus > 21600000000 THEN 1 ELSE 0 END) OVER "
+            "      (PARTITION BY user_id ORDER BY ts, event_id "
+            "       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) "
+            "      AS session_seq FROM l) "
+            "SELECT user_id, session_seq, "
+            "CAST(count(*) AS BIGINT) AS n_events, "
+            "CAST(max(us) - min(us) AS BIGINT) AS dur_us "
+            "FROM s GROUP BY user_id, session_seq"
+        ),
+        "temperature_sample": (
+            # thresholds AND the per-row md5 test re-derived in SQL: the
+            # survivor SET (pinned by sum_ids) must match, not just counts
+            "WITH n AS (SELECT source, CAST(count(*) AS DOUBLE) AS n "
+            "           FROM documents GROUP BY source), "
+            "z AS (SELECT sum(pow(n, 0.5)) AS z FROM n), "
+            "t AS (SELECT source, CASE WHEN q >= 1.0 THEN 'g' ELSE "
+            "      lower(lpad(to_hex(CAST(floor(q * 4294967296.0) AS BIGINT)), 8, '0')) END AS thr "
+            "      FROM (SELECT source, "
+            "            least(1.0, 120.0 * pow(n, 0.5) / (z * n)) AS q "
+            "            FROM n, z)), "
+            "k AS (SELECT d.source, d.doc_id FROM documents d JOIN t USING (source) "
+            "      WHERE substr(md5(d.doc_id || ':temp'), 1, 8) < t.thr) "
+            "SELECT source, CAST(count(*) AS BIGINT) AS n_kept, "
+            "CAST(sum(doc_id) AS BIGINT) AS sum_ids "
+            "FROM k GROUP BY source ORDER BY source"
+        ),
         "advise_codecs": (
             # the selector's choices are content properties of the corpus,
             # stable across sf — pinned literally (see q_advise_codecs)
@@ -2320,6 +3076,24 @@ def oracle_sql() -> dict[str, str]:
             "('lang', 'str_dict'), ('n_chars', 'int_for'), "
             "('source', 'str_dict'), ('text', 'str_fsst')) "
             "AS t(\"column\", codec) ORDER BY \"column\""
+        ),
+        "mix_sources": (
+            # weights {src1:3, src2:1, src3:1} normalized to {0.6,0.2,0.2};
+            # thresholds + per-row md5 test re-derived in SQL so the
+            # survivor SET matches (sum_ids), not just counts
+            "WITH w AS (SELECT * FROM (VALUES ('src1', 0.6), ('src2', 0.2), "
+            "           ('src3', 0.2)) AS t(source, w)), "
+            "n AS (SELECT source, CAST(count(*) AS DOUBLE) AS n "
+            "      FROM documents GROUP BY source), "
+            "t AS (SELECT source, CASE WHEN q >= 1.0 THEN 'g' ELSE "
+            "      lower(lpad(to_hex(CAST(floor(q * 4294967296.0) AS BIGINT)), 8, '0')) END AS thr "
+            "      FROM (SELECT n.source, least(1.0, 60.0 * w.w / n.n) AS q "
+            "            FROM n JOIN w USING (source))), "
+            "k AS (SELECT d.source, d.doc_id FROM documents d JOIN t USING (source) "
+            "      WHERE substr(md5(d.doc_id || ':mix'), 1, 8) < t.thr) "
+            "SELECT source, CAST(count(*) AS BIGINT) AS n_kept, "
+            "CAST(sum(doc_id) AS BIGINT) AS sum_ids "
+            "FROM k GROUP BY source ORDER BY source"
         ),
         "fsst_source_columns": (
             "SELECT lang, CAST(count(*) AS BIGINT) AS n_rows, "
@@ -2442,6 +3216,43 @@ def oracle_sql() -> dict[str, str]:
             "CAST(count(*) FILTER (doc_id % 7 = 0) AS BIGINT), 'str_dict' "
             "FROM documents) ORDER BY \"column\""
         ),
+        "repetition_stats": (
+            "WITH d AS (SELECT doc_id, trim(CASE WHEN doc_id % 10 = 0 "
+            "THEN text || chr(10) || 'repeat me repeat me repeat me repeat me'"
+            " || chr(10) || 'repeat me repeat me repeat me repeat me' "
+            "ELSE text END) AS t FROM documents), "
+            "w AS (SELECT doc_id, length(t) AS n_chars, "
+            "regexp_split_to_array(t, '\\s+') AS wd, "
+            "string_split(t, chr(10)) AS ln FROM d), "
+            "grams AS ("
+            "SELECT doc_id, n_chars, 'N' AS kind, '' AS g FROM w "
+            "UNION ALL SELECT doc_id, n_chars, 'L', unnest(ln) FROM w "
+            "UNION ALL SELECT doc_id, n_chars, '2', unnest(CASE WHEN "
+            "len(wd) >= 2 THEN list_transform(generate_series(1, len(wd)-1), "
+            "i -> wd[i] || ' ' || wd[i+1]) ELSE [] END) FROM w "
+            "UNION ALL SELECT doc_id, n_chars, '5', unnest(CASE WHEN "
+            "len(wd) >= 5 THEN list_transform(generate_series(1, len(wd)-4), "
+            "i -> array_to_string(wd[i:i+4], ' ')) ELSE [] END) FROM w), "
+            "c AS (SELECT doc_id, kind, g, count(*) AS cnt, "
+            "any_value(n_chars) AS n_chars FROM grams GROUP BY 1, 2, 3), "
+            "a AS (SELECT doc_id, any_value(n_chars) AS n_chars, "
+            "coalesce(sum(CASE WHEN kind='L' AND cnt>1 THEN cnt*length(g) "
+            "END), 0) AS lc, "
+            "coalesce(max(CASE WHEN kind='2' THEN cnt*length(g) END), 0) AS g2, "
+            "coalesce(sum(CASE WHEN kind='5' AND cnt>1 THEN cnt*length(g) "
+            "END), 0) AS g5 FROM c GROUP BY doc_id), "
+            "p AS (SELECT doc_id, "
+            "CASE WHEN n_chars=0 THEN 0 ELSE (lc*100)//n_chars END AS dlp, "
+            "CASE WHEN n_chars=0 THEN 0 ELSE (g2*100)//n_chars END AS tbp, "
+            "CASE WHEN n_chars=0 THEN 0 ELSE (g5*100)//n_chars END AS d5p "
+            "FROM a) "
+            "SELECT CAST(count(*) AS BIGINT) AS n_docs, "
+            "CAST(sum(dlp) AS BIGINT) AS sum_dup_line_pct, "
+            "CAST(sum(tbp) AS BIGINT) AS sum_top_bigram_pct, "
+            "CAST(sum(d5p) AS BIGINT) AS sum_dup_5gram_pct, "
+            "CAST(count(*) FILTER (dlp <= 20 AND tbp <= 20 AND d5p <= 15) "
+            "AS BIGINT) AS n_keep FROM p"
+        ),
         "decode_semijoin": (
             "WITH u AS (SELECT doc_id, lang, 'https://d' || "
             "CAST(doc_id % 97 AS VARCHAR) || '.example.net/' || "
@@ -2506,6 +3317,17 @@ def oracle_sql() -> dict[str, str]:
             "('source', (SELECT CAST(count(DISTINCT source) AS BIGINT) "
             "FROM documents), TRUE)) "
             "AS t(\"column\", exact_ndv, est_within_6pct)"
+        ),
+        "token_topk": (
+            "WITH t AS (SELECT lang, unnest(regexp_split_to_array("
+            "lower(trim(text)), '\\s+')) AS tok FROM documents "
+            "WHERE trim(text) <> ''), "
+            "c AS (SELECT lang, tok, count(*) AS cnt FROM t "
+            "WHERE tok <> '' GROUP BY 1, 2), "
+            "r AS (SELECT lang, tok, CAST(cnt AS BIGINT) AS cnt, "
+            "CAST(row_number() OVER (PARTITION BY lang "
+            "ORDER BY cnt DESC, tok) AS INTEGER) AS rank FROM c) "
+            "SELECT lang, tok, cnt, rank FROM r WHERE rank <= 5"
         ),
         "encoded_stats": (
             "SELECT * FROM ("
@@ -2650,6 +3472,60 @@ def oracle_sql() -> dict[str, str]:
         "encoded_distinct": (
             "SELECT DISTINCT lang AS val FROM documents"
         ),
+        "pii_scrub": (
+            r"""WITH inj AS (
+  SELECT doc_id, lang,
+    text || ' contact user' || doc_id || '@mail' || (doc_id % 7) ||
+    '.com or +1-202-555-0' || lpad(CAST(doc_id % 100 AS VARCHAR), 3, '0') ||
+    ' from 192.168.' || (doc_id % 256) || '.' || ((doc_id * 3) % 256) AS text
+  FROM documents),
+s1 AS (SELECT doc_id, lang,
+  len(regexp_extract_all(text,
+      '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS n_email,
+  regexp_replace(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
+                 '[EMAIL]', 'g') AS t FROM inj),
+s2 AS (SELECT doc_id, lang, n_email,
+  len(regexp_extract_all(t, '\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\b')) AS n_ipv4,
+  regexp_replace(t, '\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\b', '[IP]', 'g') AS t
+  FROM s1),
+s3 AS (SELECT doc_id, lang, n_email, n_ipv4,
+  len(regexp_extract_all(t, '\+?[0-9][0-9.-]{6,}[0-9]')) AS n_phone,
+  regexp_replace(t, '\+?[0-9][0-9.-]{6,}[0-9]', '[PHONE]', 'g') AS t FROM s2)
+SELECT lang, CAST(sum(n_email) AS BIGINT) AS n_email,
+       CAST(sum(n_phone) AS BIGINT) AS n_phone,
+       CAST(sum(n_ipv4) AS BIGINT) AS n_ipv4,
+       CAST(sum(len(t)) AS BIGINT) AS scrub_len, min(t) AS min_text
+FROM s3 GROUP BY lang ORDER BY lang"""
+        ),
+        "para_dedup": (
+            """WITH toks AS (
+  SELECT doc_id, unnest(str_split(text, ' ')) AS tok,
+         unnest(range(1, len(str_split(text, ' ')) + 1)) AS ord
+  FROM documents),
+paras AS (
+  SELECT doc_id, CAST((ord - 1) // 15 AS BIGINT) AS pos,
+         string_agg(tok, ' ' ORDER BY ord) AS para
+  FROM toks GROUP BY doc_id, (ord - 1) // 15),
+flagged AS (
+  SELECT doc_id, pos, para,
+         row_number() OVER (PARTITION BY para ORDER BY doc_id, pos) = 1
+           AS kept
+  FROM paras),
+docsout AS (
+  SELECT doc_id, count(*) AS n_paras,
+         sum(CASE WHEN kept THEN 1 ELSE 0 END) AS n_kept,
+         coalesce(string_agg(CASE WHEN kept THEN para END,
+                             chr(10) || chr(10) ORDER BY pos), '')
+           AS text_dedup
+  FROM flagged GROUP BY doc_id)
+SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
+       CAST(sum(n_paras) AS BIGINT) AS n_paras,
+       CAST(sum(n_kept) AS BIGINT) AS n_kept,
+       CAST(sum(len(text_dedup)) AS BIGINT) AS dedup_len,
+       min(text_dedup) AS min_text
+FROM docsout JOIN documents USING (doc_id)
+GROUP BY lang ORDER BY lang"""
+        ),
         "encoded_minmax": (
             "SELECT min(source) AS min_source, max(source) AS max_source, "
             "CAST(min(doc_id * 0.25 + 100.0) AS DOUBLE) AS min_price, "
@@ -2683,6 +3559,85 @@ def oracle_sql() -> dict[str, str]:
             "min(key) AS min_key, max(key) AS max_key, "
             "CAST(sum(length(key)) AS BIGINT) AS sum_len FROM k"
         ),
+        "extract_roundtrip": (
+            # the Spark side REALLY extracts (escape -> embed -> regexp
+            # cascade); the oracle pins the invariant: every row matches
+            "SELECT CAST(count(*) AS BIGINT) AS n_rows, "
+            "CAST(count(*) AS BIGINT) AS n_match FROM documents"
+        ),
+        "crawl_frontier": (
+            "WITH p AS (SELECT 'https://' || source || '.example.org/d' || doc_id AS base, "
+            "'<p><a href=\"https://' || source || '.example.org/n' || (doc_id + 1) || "
+            "'\">n</a><a href=''/rel/' || doc_id || '''>r</a>"
+            "<a href=\"//cdn.example.net/x' || (doc_id % 7) || "
+            "'#frag\">c</a><a href=\"mailto:a@b.c\">m</a></p>' AS html FROM documents), "
+            "l AS (SELECT base, unnest(list_concat("
+            "regexp_extract_all(html, '(?i)<a\\s[^>]*href\\s*=\\s*\"([^\"]*)\"', 1), "
+            "regexp_extract_all(html, '(?i)<a\\s[^>]*href\\s*=\\s*''([^'']*)''', 1))) AS raw FROM p), "
+            "n AS (SELECT DISTINCT CASE "
+            "WHEN regexp_matches(split_part(raw, '#', 1), '^https?://') THEN split_part(raw, '#', 1) "
+            "WHEN starts_with(split_part(raw, '#', 1), '//') THEN 'https:' || split_part(raw, '#', 1) "
+            "WHEN starts_with(split_part(raw, '#', 1), '/') THEN "
+            "'https://' || regexp_extract(base, '^https?://([^/]+)', 1) || split_part(raw, '#', 1) "
+            "ELSE NULL END AS url FROM l), "
+            "k AS (SELECT 'https://' || source || '.example.org/n' || (doc_id + 1) AS url "
+            "FROM documents WHERE doc_id % 3 = 0), "
+            "f AS (SELECT url, regexp_extract(url, '^https?://([^/]+)', 1) AS host FROM n "
+            "WHERE url IS NOT NULL AND url NOT IN (SELECT url FROM k)), "
+            "r AS (SELECT url, host, row_number() OVER (PARTITION BY host ORDER BY url) AS rn FROM f) "
+            "SELECT url, host FROM r WHERE rn <= 5 ORDER BY url"
+        ),
+        "extract_links": (
+            "WITH h AS (SELECT '<body><p>see <a href=\"https://' || source "
+            "|| '.example.org/d' || doc_id || '\">doc</a> and "
+            "<a href=''/rel/' || doc_id || '''>rel</a></p></body>' AS html "
+            "FROM documents), "
+            "l AS (SELECT list_concat("
+            "regexp_extract_all(html, '(?i)<a\\s[^>]*href\\s*=\\s*\"([^\"]*)\"', 1), "
+            "regexp_extract_all(html, '(?i)<a\\s[^>]*href\\s*=\\s*''([^'']*)''', 1)"
+            ") AS links FROM h) "
+            "SELECT CAST(count(*) AS BIGINT) AS n_rows, "
+            "CAST(sum(len(links)) AS BIGINT) AS n_links, "
+            "CAST(count(DISTINCT links[1]) AS BIGINT) AS n_first, "
+            "min(links[1]) AS min_link, max(links[2]) AS max_link FROM l"
+        ),
+        "ngram_jaccard": (
+            f"WITH aug AS ({_AUG_SQL}), "
+            "g AS (SELECT md5(text) AS fp, count(*) AS cnt FROM aug GROUP BY 1), "
+            "p AS (SELECT COALESCE(CAST(sum(cnt * (cnt - 1) // 2) AS BIGINT), 0) AS np "
+            "FROM g WHERE cnt > 1) "
+            "SELECT np AS n_exact_dup_pairs, np AS n_exact_found, "
+            "TRUE AS all_exact_found FROM p"
+        ),
+        "minhash_neardup": (
+            f"WITH aug AS ({_AUG_SQL}), "
+            "g AS (SELECT md5(text) AS fp, count(*) AS cnt FROM aug GROUP BY 1), "
+            "p AS (SELECT COALESCE(CAST(sum(cnt * (cnt - 1) // 2) AS BIGINT), 0) AS np "
+            "FROM g WHERE cnt > 1) "
+            "SELECT np AS n_exact_dup_pairs, np AS n_exact_found, "
+            "TRUE AS all_exact_found FROM p"
+        ),
+        "winnow_neardup": (
+            f"WITH aug AS ({_AUG_SQL}), "
+            "g AS (SELECT md5(text) AS fp, count(*) AS cnt FROM aug GROUP BY 1), "
+            "p AS (SELECT COALESCE(CAST(sum(cnt * (cnt - 1) // 2) AS BIGINT), 0) AS np "
+            "FROM g WHERE cnt > 1) "
+            "SELECT np AS n_exact_dup_pairs, np AS n_exact_found, "
+            "TRUE AS all_exact_found FROM p"
+        ),
+        "simhash_neardup": (
+            f"WITH aug AS ({_AUG_SQL}), "
+            "g AS (SELECT md5(text) AS fp, count(*) AS cnt FROM aug GROUP BY 1), "
+            "p AS (SELECT COALESCE(CAST(sum(cnt * (cnt - 1) // 2) AS BIGINT), 0) AS np "
+            "FROM g WHERE cnt > 1) "
+            "SELECT np AS n_exact_dup_pairs, np AS n_exact_found, "
+            "TRUE AS all_exact_found FROM p"
+        ),
+        "simhash_stats": (
+            f"WITH aug AS ({_AUG_SQL}) "
+            "SELECT count(*) AS n_docs, TRUE AS simhash_distinct_le_texts, "
+            "TRUE AS exact_dups_same_simhash FROM aug"
+        ),
         "codec_selection_detail": (
             'WITH c("column", codec) AS (VALUES '
             "('doc_id', 'int_delta'), ('lang', 'str_dict'), ('n_chars', 'int_for'), "
@@ -2690,5 +3645,45 @@ def oracle_sql() -> dict[str, str]:
             'SELECT "column", codec, (SELECT count(*) FROM documents) AS n_rows, '
             "(SELECT count(*) FROM documents) AS n_match "
             'FROM c ORDER BY "column", codec'
+        ),
+        "neardup_dedup": (
+            f"WITH aug AS ({_AUG_SQL}), "
+            "s AS (SELECT min(doc_id) AS doc_id FROM aug GROUP BY md5(text)) "
+            "SELECT count(*) AS n_survivors, "
+            "CAST(sum(doc_id) AS BIGINT) AS sum_survivor_ids, "
+            "CAST(sum(CASE WHEN doc_id >= 1000000 THEN 1 ELSE 0 END) AS BIGINT) "
+            "AS n_injected_surviving FROM s"
+        ),
+        "neardup_dedup_minhash": (
+            f"WITH aug AS ({_AUG_SQL}) "
+            "SELECT count(*) AS n_docs, TRUE AS all_injected_dropped, "
+            "TRUE AS survivors_text_distinct FROM aug"
+        ),
+        "media_pipeline": (
+            # 4x6 RGB = 72 bytes per image; 24 frames sampled every 8th
+            # -> 3 frames/doc at indices 0+8+16 = 24 per doc
+            "SELECT CAST(count(*) AS BIGINT) AS n_imgs, "
+            "CAST(count(*) * 72 AS BIGINT) AS rgb_bytes, "
+            "CAST(count(*) * 3 AS BIGINT) AS n_frames, "
+            "CAST(count(*) * 24 AS BIGINT) AS sum_frame_idx FROM documents"
+        ),
+        "img_neardup": (
+            # identical payloads (text bytes) are the only pairs the
+            # perceptual path may emit at max_hamming=6: the fake decoder
+            # is a pure function of payload bytes and unrelated payloads
+            # hash ~32 bits apart
+            f"WITH aug AS ({_AUG_SQL}), "
+            "p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b "
+            "FROM aug a JOIN aug b ON a.text = b.text "
+            "AND a.doc_id < b.doc_id) "
+            "SELECT CAST(count(*) AS BIGINT) AS n_pairs, "
+            "CAST(sum(id_a + id_b) AS BIGINT) AS sum_ids, "
+            "CAST(0 AS INT) AS max_hamming FROM p"
+        ),
+        "multimodal_features": (
+            "SELECT count(*) AS n_docs, "
+            "CAST(sum(octet_length(encode(text))) AS BIGINT) AS sum_payload_bytes, "
+            "CAST(8 AS BIGINT) AS min_feat_len, CAST(1 AS BIGINT) AS n_dims "
+            "FROM documents"
         ),
     }

@@ -1,41 +1,16 @@
-"""Reproducible sampling and per-group capping for training-data curation.
+"""Per-group capping and group-rebalanced sampling for training-data
+curation.
 
-Both operators are pure JVM expressions (no UDFs, no RNG state): a
+The operators are pure JVM expressions (no UDFs, no RNG state): a
 training pipeline must be able to re-run months later — or on a different
 cluster size — and select the EXACT same rows. Spark's ``sample()`` is
-seed-dependent on partitioning; these are content-keyed instead.
+seed-dependent on partitioning; these are content-keyed instead, on the
+md5 predicate of ``jobs.decode.deterministic_sample``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-
-
-def deterministic_sample(df: DataFrame, fraction: float,
-                         key_col: str = "doc_id",
-                         salt: str = "sample") -> DataFrame:
-    """Keep a reproducible ~``fraction`` of rows, keyed on content.
-
-    Predicate: the first 8 hex chars of md5(key || ':' || salt) compared
-    lexicographically against the hex threshold floor(fraction * 2^32) —
-    fixed-width lowercase hex compares identically to the numeric value,
-    and md5 agrees byte-for-byte across engines, so DuckDB reproduces the
-    selection exactly (and so does any future re-run, independent of
-    partitioning, cluster size, or row order). Changing ``salt`` draws an
-    independent sample.
-    """
-    if not 0.0 <= fraction <= 1.0:
-        raise ValueError(f"fraction must be in [0, 1], got {fraction}")
-    # fraction == 1.0 would format to 9 chars ('100000000'), which sorts
-    # BELOW most 8-char hashes lexicographically; 'g' is > every lowercase
-    # hex digit, so every row passes
-    threshold = "g" if fraction == 1.0 else format(int(fraction * (1 << 32)), "08x")
-    h = F.substring(
-        F.md5(F.concat(F.col(key_col).cast("string"), F.lit(":" + salt))
-              .cast("binary")),
-        1, 8,
-    )
-    return df.where(h < F.lit(threshold))
 
 
 def cap_per_group(df: DataFrame, group_col: str = "source", n: int = 10,

@@ -3,9 +3,9 @@
 Both operators are corpus-scale Spark plans with JVM-side hot paths:
 
 - :func:`split_docs` cuts long documents into bounded word windows (the
-  pre-tokenization step before sequence packing — ``pipeline.packing``
-  consumes its output). Pure built-in expressions (split/sequence/slice/
-  posexplode), no Python in the row path.
+  pre-tokenization step before sequence packing). Pure built-in
+  expressions (split/sequence/slice/posexplode), no Python in the row
+  path.
 - :func:`bpe_pair_counts` / :func:`bpe_train` implement byte-pair-encoding
   tokenizer training the way large-corpus BPE trainers actually work
   (Sennrich et al. 2016; HF tokenizers): the CORPUS reduces to a

@@ -165,24 +165,6 @@ def gopher_quality_flags(df: DataFrame, text_col: str = "text",
     )
 
 
-def url_sort_key(url: Column) -> Column:
-    """Scheme-stripped, host-reversed URL layout key (pure JVM expressions).
-
-    ``https://www.blog.example.com/a/b?q=1`` -> ``com.example.blog.www/a/b?q=1``.
-    Sorting/clustering an encode by this key groups all pages of a site
-    (and its subdomains) contiguously, which is what makes the encoder's
-    8-byte string prefix zones (``zone_pack8``) selective on URL columns —
-    raw URLs collapse to the constant ``https://`` zone (see
-    ``jobs/encode.zone_pack8``). Standard columnar-layout practice
-    (host-reversed URL keys in web-table layouts, e.g. the classic
-    WebTable row-key design)."""
-    c = F.regexp_replace(url, r"^[a-zA-Z][a-zA-Z0-9+.-]*://", "")
-    host = F.regexp_extract(c, r"^([^/]*)", 1)
-    path = c.substr(F.length(host) + 1, F.length(c))
-    rev = F.array_join(F.reverse(F.split(host, r"\.")), ".")
-    return F.concat(rev, path)
-
-
 def token_topk(df: DataFrame, k: int = 5, text_col: str = "text",
                group_col: str = "lang") -> DataFrame:
     """Top-``k`` most frequent whitespace tokens per group (vocabulary

@@ -1,7 +1,7 @@
 """Bucket-size caps on the pair-generating self-joins.
 
 Real web corpora have pathological keys (boilerplate pages, cookie
-banners): one shared LSH bucket / winnowing hash / IVF cell with m members
+banners): one shared LSH bucket or winnowing hash with m members
 emits m^2 candidate rows before any filter. These tests inject a
 mega-bucket and assert the candidate count stays bounded with caps on,
 while ordinary near-dup pairs are still found.
@@ -11,7 +11,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from fsst_spark.pipeline.dedup import minhash_lsh_candidates, winnow_neardup_pairs
-from fsst_spark.pipeline.similarity import embedding_neardup_pairs
 
 BOILER = ("404 not found — the page you requested could not be located on "
           "this server. Please check the address and try again soon. " * 4)
@@ -62,37 +61,3 @@ def test_simhash_bucket_cap_bounds_candidates(spark):
     assert uncapped >= 7140  # identical docs: hamming 0, every band collides
     capped = simhash_neardup_pairs(df, bucket_cap=20).count()
     assert capped < 100, capped
-
-
-def test_embedding_cell_cap_bounds_candidates(spark):
-    import numpy as np
-
-    rng = np.random.default_rng(11)
-    # 200 identical vectors (one mega-cell) + 60 scattered vectors
-    mega = rng.standard_normal(8).astype("float32")
-    rows = [(i, [float(x) for x in mega]) for i in range(200)]
-    rows += [(1000 + i, [float(x) for x in rng.standard_normal(8)])
-             for i in range(60)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    pairs = embedding_neardup_pairs(df, threshold=0.999, n_centroids=4,
-                                    cell_cap=25)
-    n = pairs.count()
-    # uncapped the mega-cell alone is 200*199/2 = 19900 candidate pairs;
-    # capped: ceil(200/25)=8 sub-cells of ~25 -> <= 8 * C(25+slack,2)
-    assert 0 < n < 4000, n
-    # within-sub-cell identical pairs still collapse clusters: every id in
-    # some pair
-    ids = {r["id_a"] for r in pairs.collect()} | {r["id_b"] for r in pairs.collect()}
-    assert len(ids) > 150  # most mega-cell members participate in pairs
-
-
-def test_embedding_cell_cap_off_finds_all(spark):
-    import numpy as np
-
-    rng = np.random.default_rng(12)
-    v = rng.standard_normal(8).astype("float32")
-    rows = [(i, [float(x) for x in v]) for i in range(30)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    n = embedding_neardup_pairs(df, threshold=0.999, n_centroids=2,
-                                cell_cap=None).count()
-    assert n == 30 * 29 // 2

@@ -485,17 +485,12 @@ def test_register_stores_view_shard_family(spark, tmp_path):
 
 def _log_cases():
     """(write entry tagged i, the entries a reader sees, log dir) per
-    append-only log of a store: commits, schema changes, delete lineage."""
+    append-only store log that shares the commit log's writer: schema
+    changes and delete lineage."""
     from fsst_spark.jobs.deletes import _log_delete
     from fsst_spark.jobs.schema import add_column, schema_log, store_history
-    from fsst_spark.sources.fsst_source import (_read_commit, commit_count,
-                                                log_commit)
 
     return {
-        "commit": (lambda st, i: log_commit(st, [i], mode="datasource"),
-                   lambda st: [_read_commit(st, k)["pids"][0]
-                               for k in range(commit_count(st))],
-                   "commits"),
         "schema": (lambda st, i: add_column(st, f"c{i}", "int64"),
                    lambda st: [int(e["column"][1:]) for e in schema_log(st)],
                    "schema"),
@@ -505,11 +500,11 @@ def _log_cases():
     }
 
 
-@pytest.mark.parametrize("log", ["commit", "schema", "delete"])
-def test_commit_entry_is_published_whole(tmp_path, monkeypatch, log):
-    """A log write that fails after its file is opened publishes no
-    entry: readers see the log unchanged and the next write takes the
-    index."""
+@pytest.mark.parametrize("log", ["schema", "delete"])
+def test_log_entry_is_published_whole(tmp_path, monkeypatch, log):
+    """Like the commit log: a schema or delete write that fails after its
+    file is opened publishes no entry, readers see the log unchanged and
+    the next write takes the index."""
     import errno
     import json
 
@@ -523,7 +518,7 @@ def test_commit_entry_is_published_whole(tmp_path, monkeypatch, log):
     pq.write_table(pa.table({"column": ["a"], "params": [
         json.dumps({"arrow_type": "int64"})]}),
         os.path.join(store, "chunks", "part-00000.parquet"))
-    first = write(store, 0)
+    write(store, 0)
     real_fdopen = os.fdopen
 
     class DiskFull:
@@ -546,10 +541,44 @@ def test_commit_entry_is_published_whole(tmp_path, monkeypatch, log):
     monkeypatch.undo()
     assert entries(store) == [0]
     assert os.listdir(os.path.join(store, sub)) == ["00000000.json"]
-    second = write(store, 2)
+    write(store, 2)
     assert entries(store) == [0, 2]
-    if log == "commit":  # log_commit returns the index it published
-        assert (first, second) == (0, 1)
+
+
+def test_commit_entry_is_published_whole(tmp_path, monkeypatch):
+    """A commit write that fails after its file is opened publishes no
+    entry: the count is unchanged and the next commit takes the index."""
+    import errno
+
+    from fsst_spark.sources.fsst_source import (_read_commit, commit_count,
+                                                log_commit)
+
+    store = str(tmp_path / "store")
+    assert log_commit(store, [0], mode="datasource") == 0
+    real_fdopen = os.fdopen
+
+    class DiskFull:
+        def __init__(self, fh):
+            self.fh = fh
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self.fh.close()
+
+        def write(self, data):
+            raise OSError(errno.ENOSPC, "No space left on device")
+
+    monkeypatch.setattr(
+        os, "fdopen", lambda fd, *a, **kw: DiskFull(real_fdopen(fd, *a, **kw)))
+    with pytest.raises(OSError):
+        log_commit(store, [1], mode="datasource")
+    monkeypatch.undo()
+    assert commit_count(store) == 1
+    assert os.listdir(os.path.join(store, "commits")) == ["00000000.json"]
+    assert log_commit(store, [2], mode="datasource") == 1
+    assert _read_commit(store, 1)["pids"] == [2]
 
 
 def test_concurrent_commits_all_land_whole(tmp_path):

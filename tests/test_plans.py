@@ -6,6 +6,7 @@ import glob
 
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from fsst_spark.jobs.decode import decode_job, decode_plan
 from fsst_spark.jobs.encode import encode_job, salted_repartition
@@ -77,12 +78,69 @@ def test_roundtrip_query_prunes_columns(spark):
     assert "doc_id" not in read_schema and "source" not in read_schema, read_schema
 
 
+def test_minhash_shuffles_only_narrow_keys(spark):
+    """The LSH band join must never hash-partition (shuffle) by text —
+    only (band, bucket, id) rows move."""
+    from fsst_spark.pipeline.dedup import minhash_lsh_candidates
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    pairs = minhash_lsh_candidates(docs, "text", "doc_id", n_hashes=32, bands=8)
+    plan = _plan(pairs)
+    for line in plan.splitlines():
+        if "Exchange hashpartitioning" in line:
+            assert "text#" not in line, line
+    assert "Exchange hashpartitioning" in plan  # the band join does shuffle
+
+
 def test_pre_partitioned_encode_has_no_shuffle(spark, tmp_path):
     corpus = synth_web_df(spark, 400, parallelism=2)
     out = str(tmp_path / "npenc")
     metrics = encode_job(spark, corpus, out, chunk_bytes=1 << 20, pre_partitioned=True)
     plan = _plan(metrics)
     assert "Exchange" not in plan, plan
+
+
+def test_minhash_estimate_signature_udf_runs_once(spark):
+    """estimate=True references the signature frame 3x (bands + both join
+    sides); the operator must persist it so the expensive pandas-UDF pass
+    runs once — visible as InMemoryTableScan reuse in the plan."""
+    from fsst_spark.pipeline.dedup import minhash_lsh_candidates
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    pairs = minhash_lsh_candidates(docs, "text", "doc_id", n_hashes=32, bands=8,
+                                   estimate=True)
+    plan = _plan(pairs)
+    assert plan.count("InMemoryTableScan") >= 3, plan
+
+
+def test_connected_components_shuffles_only_narrow_keys(spark):
+    """Label propagation moves only (long, long) rows — never text."""
+    from fsst_spark.pipeline.dedup import connected_components, neardup_dedup
+
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    fp = docs.select("doc_id", F.md5(F.col("text").cast("binary")).alias("fp"))
+    pairs = (fp.alias("a").join(fp.alias("b"),
+             (F.col("a.fp") == F.col("b.fp")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+             .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")))
+    surv = neardup_dedup(docs, pairs=pairs)
+    plan = _plan(surv)
+    for line in plan.splitlines():
+        if "Exchange hashpartitioning" in line:
+            assert "text#" not in line, line
+
+
+def test_gopher_flags_stay_jvm_side(spark):
+    """The Gopher quality rules must compile to pure JVM expressions —
+    no Python/Arrow UDF stage anywhere in the plan."""
+    from fsst_spark.pipeline.textstats import gopher_quality_flags
+
+    df = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    plan = _plan(gopher_quality_flags(df))
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    # only doc_id + text should reach the scan
+    first_line = plan[plan.index("FileScan"):].split("\n")[0]
+    read_schema = first_line.split("ReadSchema")[-1]
+    assert "text" in read_schema and "source" not in read_schema, read_schema
 
 
 def test_group_count_scan_pushes_column_filter(spark, encoded):

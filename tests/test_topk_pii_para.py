@@ -1,10 +1,12 @@
-"""encoded_topk zone pruning and edge cases."""
+"""encoded_topk zone pruning, PII scrub ordering, paragraph dedup edges."""
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import Row, functions as F
 
 from fsst_spark.jobs.encode import encode_job
 from fsst_spark.jobs.stats import encoded_topk
+from fsst_spark.pipeline.dedup import dedup_paragraphs
+from fsst_spark.pipeline.textstats import pii_scrub
 
 
 @pytest.fixture(scope="module")
@@ -81,3 +83,42 @@ def test_topk_guards(spark, store):
         encoded_topk(spark, out, "v", 10 ** 6)
     with pytest.raises(KeyError):
         encoded_topk(spark, out, "nope", 5)
+
+
+def test_pii_scrub_order_prevents_double_count(spark):
+    df = spark.createDataFrame([Row(
+        text="mail a1@b.co ip 10.0.0.1 tel +1-555-123-4567 end")])
+    r = pii_scrub(df).collect()[0]
+    # the email's and IP's digits must NOT also count as phones
+    assert (r["n_pii_email"], r["n_pii_ipv4"], r["n_pii_phone"]) == (1, 1, 1)
+    assert r["text"] == "mail [EMAIL] ip [IP] tel [PHONE] end"
+
+
+def test_pii_scrub_clean_text_untouched(spark):
+    df = spark.createDataFrame([Row(text="plain words only here")])
+    r = pii_scrub(df).collect()[0]
+    assert r["text"] == "plain words only here"
+    assert r["n_pii_email"] == r["n_pii_phone"] == r["n_pii_ipv4"] == 0
+
+
+def test_para_dedup_first_occurrence_survives(spark):
+    # 3-word paragraphs; doc 2 repeats doc 1's first paragraph
+    df = spark.createDataFrame([
+        Row(doc_id=1, text="a b c d e f"),
+        Row(doc_id=2, text="a b c x y z"),
+        Row(doc_id=3, text="a b c"),  # loses its ONLY paragraph
+    ])
+    out = {r["doc_id"]: r for r in
+           dedup_paragraphs(df, words_per_para=3).collect()}
+    assert out[1]["n_kept"] == 2 and out[1]["text_dedup"] == "a b c\n\nd e f"
+    assert out[2]["n_kept"] == 1 and out[2]["text_dedup"] == "x y z"
+    assert out[3]["n_kept"] == 0 and out[3]["text_dedup"] == ""
+
+
+def test_para_dedup_tail_paragraph_and_counts(spark):
+    df = spark.createDataFrame([Row(doc_id=7, text="p q r s")])
+    r = dedup_paragraphs(df, words_per_para=3).collect()[0]
+    assert r["n_paras"] == 2 and r["n_kept"] == 2
+    assert r["text_dedup"] == "p q r\n\ns"
+    with pytest.raises(ValueError):
+        dedup_paragraphs(df, words_per_para=0)
