@@ -7,17 +7,32 @@ importers over the 1,328-entry ``pyspark.zip``, ~0.2 CPU-s per task, more
 than a small ``mapInArrow`` task spends on its data. CPython 3.12 made the
 re-read lazy (gh-103200).
 
-This module patches ``zipimport.zipimporter.invalidate_caches`` to re-read
-an archive only when its ``(st_mtime_ns, st_size, st_ino)`` stamp changes,
-reads each archive once so the stamps are known, and then runs
-``pyspark.daemon`` as ``__main__``. Workers are forked from the daemon, so
-they carry the patch and the stamps from their first task. Run it with::
+:func:`install` patches ``zipimport.zipimporter.invalidate_caches`` to
+re-read an archive only when its ``(st_mtime_ns, st_size, st_ino)`` stamp
+changes. It has two callers:
 
-    --conf spark.python.daemon.module=fsst_spark.daemon
+- Importing ``fsst_spark`` installs it, so every Python process that
+  unpickles an engine object carries it from its next task on. That covers
+  the workers Spark forks from a fixed ``pyspark.daemon`` whatever
+  ``spark.python.daemon.module`` says: the fsst DataSource's planner
+  workers (``create_data_source`` at ``load()``, filter pushdown, read
+  planning) and its write and commit workers. It also covers plain
+  ``pyspark.daemon`` workers on non-local masters, ``--py-files`` archives
+  included. Spark's setup runs before the unpickle, so a freshly forked
+  worker still re-reads on its first task, and its second task's read
+  takes the stamps; a reused worker (``spark.python.worker.reuse``) skips
+  the read from then on.
+- Run as the worker daemon (``python -m fsst_spark.daemon``, through
+  ``__main__.py``), :func:`main` installs the patch, reads each archive
+  once so the stamps are known, and then runs ``pyspark.daemon`` as
+  ``__main__``. Workers forked from it carry the patch and the stamps
+  from their first task. Run it with::
 
-``jobs.session.get_spark`` sets that for ``local`` masters. On a cluster it
-needs ``fsst_spark`` installed on the executors: ``--py-files`` archives are
-not on the daemon's path when it starts.
+      --conf spark.python.daemon.module=fsst_spark.daemon
+
+  ``jobs.session.get_spark`` sets that for ``local`` masters. On a cluster
+  it needs ``fsst_spark`` installed on the executors: ``--py-files``
+  archives are not on the daemon's path when it starts.
 """
 
 from __future__ import annotations
@@ -76,11 +91,3 @@ def main() -> None:
     if install():
         importlib.invalidate_caches()  # read each archive once, pre-fork
     runpy.run_module("pyspark.daemon", run_name="__main__", alter_sys=True)
-
-
-if __name__ == "__main__":
-    # Run from the imported module, not this ``__main__`` copy, so workers
-    # see the wrapper as ``fsst_spark.daemon.invalidate_caches``.
-    from fsst_spark import daemon
-
-    daemon.main()

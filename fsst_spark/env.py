@@ -8,7 +8,8 @@ page churn. Keeping freed memory in the heap (no mmap, no trim) makes
 numpy temp buffers reusable at memcpy speed.
 
 Called from ``fsst_spark.__init__`` so it applies to the driver *and* to
-every Spark Python worker the moment the package is imported there.
+every Spark Python worker the moment the package is imported there —
+beside ``fsst_spark.daemon.install()``, which the same import runs.
 """
 
 from __future__ import annotations

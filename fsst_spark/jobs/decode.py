@@ -123,14 +123,17 @@ def shard_column_types(spark, stores: "list[str]",
     return out
 
 
-def decoded_schema_ddl(spark, out_dir: str, columns: list[str] | None = None,
-                       include_added: bool = True) -> tuple[str, list[str]]:
-    """(Spark DDL of the decoded frame, ordered column list). Decode
-    readers see schema-log-added columns (NULL until materialized)."""
-    cols = column_arrow_types(spark, out_dir, columns,
-                              include_added=include_added)
-    ordered = columns or sorted(cols)
-    ddl = ", ".join(f"{c} {_spark_type(cols[c])}" for c in ordered)
+def decoded_schema_ddl(types: dict[str, str], columns: list[str] | None = None
+                       ) -> tuple[str, list[str]]:
+    """(Spark DDL of the decoded frame, ordered column list) from the
+    store's decode ``types`` (:func:`column_arrow_types` with
+    ``include_added=True``: schema-log-added columns read as NULL until
+    materialized)."""
+    missing = [c for c in columns or [] if c not in types]
+    if missing:
+        raise KeyError(f"columns not present in encoded data: {missing}")
+    ordered = columns or sorted(types)
+    ddl = ", ".join(f"{c} {_spark_type(types[c])}" for c in ordered)
     return f"pid int, chunk_id int, {ddl}", ordered
 
 
@@ -543,7 +546,8 @@ def decode_job(spark, out_dir: str, columns: list[str] | None = None,
                as_of: int | None = None,
                ordered: bool = False,
                _pids: list[int] | None = None,
-               _chunk_keys: list[tuple[int, int]] | None = None) -> DataFrame:
+               _chunk_keys: list[tuple[int, int]] | None = None,
+               _types: dict[str, str] | None = None) -> DataFrame:
     """DataFrame of the decoded table (plus pid/chunk_id provenance cols).
 
     ``zone_filter=(col, op, value)`` — or a conjunction via
@@ -569,7 +573,9 @@ def decode_job(spark, out_dir: str, columns: list[str] | None = None,
     no shuffle and no row-level sort. On a store clustered with
     ``encode_job(sort_key=K)`` this is K-order: a sorted export for the
     price of a plain decode."""
-    ddl, out_cols = decoded_schema_ddl(spark, out_dir, columns)
+    types = (_types if _types is not None
+             else column_arrow_types(spark, out_dir, include_added=True))
+    ddl, out_cols = decoded_schema_ddl(types, columns)
     filters = list(zone_filters or [])
     if zone_filter is not None:
         filters.append(zone_filter)
@@ -597,8 +603,6 @@ def decode_job(spark, out_dir: str, columns: list[str] | None = None,
     if as_of is not None and _pids is not None:
         raise ValueError("pass as_of OR a pid whitelist, not both")
     pids = _as_of_pids(out_dir, as_of) if as_of is not None else _pids
-    types = (column_arrow_types(spark, out_dir, include_added=True)
-             if filters or zone_filters_any else None)
     files = planned_files(out_dir, scan, filters, zone_filters_any,
                           pids=pids, dict_prune=dict_prune, keys=_chunk_keys,
                           types=types)
@@ -696,7 +700,7 @@ def decode_filtered(spark, out_dir: str, col: str | None = None, op: str | None 
                 "filter on a scalar column instead")
     df = decode_job(spark, out_dir, cols, zone_filters=flt,
                     zone_filters_any=any_flt or None, as_of=as_of,
-                    _pids=_pids)
+                    _pids=_pids, _types=types)
     for fc, fop, fval in flt:
         df = df.where(_row_predicate(fc, fop, fval, types[fc]))
     if any_flt:

@@ -462,6 +462,9 @@ class FsstDataSource(DataSource):
     """spark.read.format("fsst") / df.write.format("fsst") over encoded
     chunk stores. ``load(path)``/``save(path)`` name the store directory."""
 
+    # the types schema() read (see there)
+    _schema_types: dict[str, str] | None = None
+
     @classmethod
     def name(cls) -> str:
         return "fsst"
@@ -490,12 +493,23 @@ class FsstDataSource(DataSource):
         return {c: types[c] for c in wanted}
 
     def schema(self) -> str:
-        return _store_ddl(self._types())
+        # Spark pickles this instance after schema() and plans the read
+        # from the copy, so the reader decodes the types the DataFrame's
+        # schema was built from, without reading them again.
+        self._schema_types = self._types()
+        return _store_ddl(self._schema_types)
+
+    def _read_types(self) -> dict[str, str]:
+        """The types ``schema()`` read, or a fresh read when Spark never
+        called it (the user supplied a schema)."""
+        if self._schema_types is None:
+            return self._types()
+        return self._schema_types
 
     def reader(self, schema) -> FsstReader:
         as_of = self.options.get("as_of")
         since = self.options.get("since_commit")
-        return FsstReader(self._path(), self._types(),
+        return FsstReader(self._path(), self._read_types(),
                           as_of=None if as_of is None else int(as_of),
                           since=None if since is None else int(since))
 
@@ -507,7 +521,7 @@ class FsstDataSource(DataSource):
                 "committed writes only. Write it via df.write.format('fsst') "
                 "or call fsst_source.log_commit_snapshot(store) after an "
                 "encode job finishes.")
-        return FsstStreamReader(store, self._types())
+        return FsstStreamReader(store, self._read_types())
 
     def streamWriter(self, schema, overwrite: bool) -> FsstStreamWriter:
         from ..jobs.encode import _manifest_mode

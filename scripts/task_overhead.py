@@ -1,22 +1,30 @@
 #!/usr/bin/env python3
-"""Per-task fixed cost of a Python ``mapInArrow`` task under ``get_spark``.
+"""Per-task fixed cost of a Python ``mapInArrow`` task under ``get_spark``,
+and the cost of planning an fsst DataSource read.
 
 Times a no-op ``mapInArrow`` job of N = ``TASKS`` tasks and the same job on
 the JVM alone (both written to the ``noop`` sink), each as the median of
 warm repetitions, and prints one JSON line. ``per_task_ms`` is the extra
 task-slot time a Python task costs: ``(python_s - jvm_s) * min(N, slots)
-/ N``. A worker-startup regression (daemon, imports, per-task setup) shows
-here without a full benchmark run.
+/ N``. ``plan_read_ms`` is the median wall time of a plan-only point read
+through the fsst source on a tiny store the script writes:
+``load().where(...)`` and its query plan, no action. Spark runs those
+planning steps in its own Python workers. A worker-startup regression
+(daemon, imports, per-task or per-planner-call setup) shows here without a
+full benchmark run.
 
 Usage: python scripts/task_overhead.py [--master local[4]]
 """
 from __future__ import annotations
 
 import argparse
+import contextlib
+import io
 import json
 import os
 import statistics
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -28,6 +36,7 @@ from fsst_spark.jobs.session import get_spark  # noqa: E402
 TASKS = 16
 REPS = 5
 ROWS_PER_TASK = 1000
+STORE_ROWS = 400
 
 
 def _identity(batches):
@@ -42,6 +51,26 @@ def _median_s(run) -> float:
         run()
         walls.append(time.perf_counter() - t0)
     return statistics.median(walls)
+
+
+def _plan_read_s(spark, store: str) -> float:
+    """Median wall time of ``load().where(url == X)`` plus its query plan
+    through the fsst source; Spark plans it in Python planner workers."""
+    from pyspark.sql import functions as F
+
+    from fsst_spark.sources.fsst_source import register
+    from fsst_spark.synth.webcorpus import synth_web_df
+
+    register(spark)
+    synth_web_df(spark, STORE_ROWS, seed=7).write.format("fsst").mode("overwrite").save(store)
+    url = spark.read.format("fsst").load(store).select("url").first()["url"]
+
+    def plan():
+        df = spark.read.format("fsst").load(store).where(F.col("url") == url)
+        with contextlib.redirect_stdout(io.StringIO()):
+            df.explain()
+
+    return _median_s(plan)
 
 
 def main() -> None:
@@ -63,6 +92,8 @@ def main() -> None:
 
         jvm_s = _median_s(jvm)
         python_s = _median_s(python)
+        with tempfile.TemporaryDirectory(prefix="task_overhead_") as tmp:
+            plan_s = _plan_read_s(spark, os.path.join(tmp, "store"))
         conf = spark.sparkContext.getConf()
         slots = spark.sparkContext.defaultParallelism
         print(json.dumps({
@@ -72,6 +103,7 @@ def main() -> None:
             "python_s": round(python_s, 4),
             "jvm_s": round(jvm_s, 4),
             "per_task_ms": round((python_s - jvm_s) * min(n, slots) / n * 1000, 1),
+            "plan_read_ms": round(plan_s * 1000, 1),
         }))
     finally:
         spark.stop()

@@ -13,11 +13,13 @@ Every CLI subcommand works unchanged (decode/verify/stats/advise/...).
 whatever master/conf spark-submit supplies — the same entry point runs
 at N and 4N executors with no code change.
 
-Where ``fsst_spark`` is installed on the executors (not only shipped via
-``--py-files``, which the worker daemon cannot see at startup), add
-``--conf spark.python.daemon.module=fsst_spark.daemon`` to skip the
-per-task re-read of ``pyspark.zip``'s directory on Python < 3.12; see
-``fsst_spark.daemon``.
+On Python < 3.12 each Spark Python task re-reads ``pyspark.zip``'s
+directory. Importing ``fsst_spark`` stops that in every worker that
+unpickles an engine object, ``--py-files`` shipping included, from its
+next task on. Where ``fsst_spark`` is installed on the executors (not only
+shipped via ``--py-files``, which the worker daemon cannot see at
+startup), also add ``--conf spark.python.daemon.module=fsst_spark.daemon``
+so workers skip it from their first task; see ``fsst_spark.daemon``.
 """
 
 from fsst_spark.jobs.cli import main

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from fsst_spark.jobs.encode import encode_job, read_manifest
 from fsst_spark.jobs.stats import advise_codecs
+from tests import REPO_ROOT
 
 
 @pytest.fixture(scope="module")
@@ -76,7 +77,7 @@ def test_cli_advise_codecs():
         [sys.executable, "-m", "fsst_spark.jobs.cli", "advise-codecs",
          "--input", "/root/testdata/sf0.001/documents.parquet",
          "--columns", "text,lang", "--sample-rows", "300"],
-        capture_output=True, text=True, timeout=600, cwd="/root/repo")
+        capture_output=True, text=True, timeout=600, cwd=REPO_ROOT)
     assert r.returncode == 0, r.stderr[-2000:]
     advice = json.loads(r.stdout.strip().splitlines()[-1])
     by = {a["column"]: a for a in advice}

@@ -7,13 +7,15 @@ import os
 import subprocess
 import sys
 
+from tests import REPO_ROOT
+
 
 def _run(*args):
     env = dict(os.environ, SPARK_GRAFT_CPUS="4")
     out = subprocess.run(
         [sys.executable, "-m", "fsst_spark.jobs.cli", *args],
         capture_output=True, text=True, timeout=420, env=env,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
     )
     assert out.returncode == 0, out.stderr[-2000:]
     return json.loads(out.stdout.strip().splitlines()[-1])
@@ -110,11 +112,11 @@ def test_spark_submit_py_files_packaging(tmp_path):
 
     pkg_zip = str(tmp_path / "fsst_spark.zip")
     with zipfile.ZipFile(pkg_zip, "w") as zf:
-        for root, _dirs, files in os.walk("/root/repo/fsst_spark"):
+        for root, _dirs, files in os.walk(os.path.join(REPO_ROOT, "fsst_spark")):
             for f in files:
                 if f.endswith(".py"):
                     p = os.path.join(root, f)
-                    zf.write(p, os.path.relpath(p, "/root/repo"))
+                    zf.write(p, os.path.relpath(p, REPO_ROOT))
     # driver script lives OUTSIDE the repo so nothing resolves accidentally
     driver = str(tmp_path / "driver.py")
     src, enc = str(tmp_path / "corpus"), str(tmp_path / "encoded")

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from fsst_spark.jobs.decode import decode_filtered, decode_plan
 from fsst_spark.jobs.encode import encode_job
+from tests import REPO_ROOT
 
 
 @pytest.fixture(scope="module")
@@ -149,7 +150,7 @@ def test_cli_family_plan_only(family):
     r = subprocess.run(
         [sys.executable, "-m", "fsst_spark.jobs.cli", "decode",
          "--data", f"{a},{b}", "--where", "doc_id:<:100", "--plan-only"],
-        capture_output=True, text=True, timeout=600, cwd="/root/repo")
+        capture_output=True, text=True, timeout=600, cwd=REPO_ROOT)
     assert r.returncode == 0, r.stderr[-2000:]
     plan = json.loads(r.stdout.strip().splitlines()[-1])
     assert plan["stores"] == 2 and plan["chunks_kept"] > 0
@@ -159,7 +160,7 @@ def test_cli_plan_only(store):
     r = subprocess.run(
         [sys.executable, "-m", "fsst_spark.jobs.cli", "decode",
          "--data", store, "--where", "doc_id:<:1000", "--plan-only"],
-        capture_output=True, text=True, timeout=600, cwd="/root/repo")
+        capture_output=True, text=True, timeout=600, cwd=REPO_ROOT)
     assert r.returncode == 0, r.stderr[-2000:]
     plan = json.loads(r.stdout.strip().splitlines()[-1])
     assert plan["chunks_kept"] < plan["chunks_total"]
@@ -170,6 +171,6 @@ def test_cli_decode_without_out_or_plan_fails(store):
     r = subprocess.run(
         [sys.executable, "-m", "fsst_spark.jobs.cli", "decode",
          "--data", store],
-        capture_output=True, text=True, timeout=600, cwd="/root/repo")
+        capture_output=True, text=True, timeout=600, cwd=REPO_ROOT)
     assert r.returncode != 0
     assert "--out" in (r.stderr + r.stdout)

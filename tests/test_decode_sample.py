@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 import fsst_spark.jobs.decode as decode_mod
 from fsst_spark.jobs.decode import decode_plan, decode_sample
 from fsst_spark.jobs.encode import encode_job
+from tests import REPO_ROOT
 from tests.plan_checks import run_counting_jobs
 
 
@@ -119,7 +120,7 @@ def test_cli_sample(store, tmp_path):
         [sys.executable, "-m", "fsst_spark.jobs.cli", "decode",
          "--data", store, "--sample", "400", "--sample-key", "doc_id",
          "--out", out],
-        capture_output=True, text=True, timeout=600, cwd="/root/repo")
+        capture_output=True, text=True, timeout=600, cwd=REPO_ROOT)
     assert r.returncode == 0, r.stderr[-2000:]
     assert json.loads(r.stdout.strip().splitlines()[-1])["decoded_to"] == out
     import duckdb
@@ -129,5 +130,5 @@ def test_cli_sample(store, tmp_path):
     bad = subprocess.run(
         [sys.executable, "-m", "fsst_spark.jobs.cli", "decode",
          "--data", store, "--sample", "400", "--out", out],
-        capture_output=True, text=True, timeout=600, cwd="/root/repo")
+        capture_output=True, text=True, timeout=600, cwd=REPO_ROOT)
     assert bad.returncode != 0 and "--sample-key" in (bad.stderr + bad.stdout)

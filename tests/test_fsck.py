@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from fsst_spark.jobs.admin import fsck_store
 from fsst_spark.jobs.encode import encode_job
+from tests import REPO_ROOT
 
 
 @pytest.fixture()
@@ -116,14 +117,14 @@ def test_cli_fsck_exit_codes(store):
     ok = subprocess.run(
         [sys.executable, "-m", "fsst_spark.jobs.cli", "fsck",
          "--data", store, "--deep"],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo")
+        capture_output=True, text=True, timeout=300, cwd=REPO_ROOT)
     assert ok.returncode == 0, ok.stderr[-2000:]
     assert json.loads(ok.stdout.strip().splitlines()[-1])["ok"] is True
     os.remove(os.path.join(store, "chunks", "part-00000.parquet"))
     bad = subprocess.run(
         [sys.executable, "-m", "fsst_spark.jobs.cli", "fsck",
          "--data", store],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo")
+        capture_output=True, text=True, timeout=300, cwd=REPO_ROOT)
     assert bad.returncode == 3
     rep = json.loads(bad.stdout.strip().splitlines()[-1])
     assert rep["n_issues"] > 0
@@ -142,7 +143,7 @@ def test_cli_fsck_family(spark, tmp_path):
     ok = subprocess.run(
         [sys.executable, "-m", "fsst_spark.jobs.cli", "fsck",
          "--data", ",".join(stores)],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo")
+        capture_output=True, text=True, timeout=300, cwd=REPO_ROOT)
     assert ok.returncode == 0, ok.stderr[-2000:]
     rep = json.loads(ok.stdout.strip().splitlines()[-1])
     assert rep["ok"] is True and rep["stores"] == 2
@@ -150,7 +151,7 @@ def test_cli_fsck_family(spark, tmp_path):
     bad = subprocess.run(
         [sys.executable, "-m", "fsst_spark.jobs.cli", "fsck",
          "--data", ",".join(stores)],
-        capture_output=True, text=True, timeout=300, cwd="/root/repo")
+        capture_output=True, text=True, timeout=300, cwd=REPO_ROOT)
     assert bad.returncode == 3
     rep = json.loads(bad.stdout.strip().splitlines()[-1])
     assert rep["n_issues"] == 1

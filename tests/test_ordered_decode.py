@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from fsst_spark.jobs.decode import decode_job
 from fsst_spark.jobs.encode import encode_job
+from tests import REPO_ROOT
 
 
 @pytest.fixture(scope="module")
@@ -85,7 +86,7 @@ def test_cli_ordered_export(spark, store, tmp_path):
     r = subprocess.run(
         [sys.executable, "-m", "fsst_spark.jobs.cli", "decode",
          "--data", store, "--ordered", "--out", out],
-        capture_output=True, text=True, timeout=600, cwd="/root/repo")
+        capture_output=True, text=True, timeout=600, cwd=REPO_ROOT)
     assert r.returncode == 0, r.stderr[-2000:]
     import duckdb
     # parquet part files concatenate in name order == partition order:
@@ -98,5 +99,5 @@ def test_cli_ordered_export(spark, store, tmp_path):
         [sys.executable, "-m", "fsst_spark.jobs.cli", "decode",
          "--data", store, "--ordered", "--where", "doc_id:<:10",
          "--out", out],
-        capture_output=True, text=True, timeout=600, cwd="/root/repo")
+        capture_output=True, text=True, timeout=600, cwd=REPO_ROOT)
     assert bad.returncode != 0

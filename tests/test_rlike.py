@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from fsst_spark.jobs.decode import (_rlike_prunable, decode_filtered,
                                     decode_job, decode_plan)
 from fsst_spark.jobs.encode import encode_job
+from tests import REPO_ROOT
 
 
 @pytest.fixture(scope="module")
@@ -94,7 +95,7 @@ def test_cli_rlike(spark, store, tmp_path):
     r = subprocess.run(
         [sys.executable, "-m", "fsst_spark.jobs.cli", "decode",
          "--data", store, "--where", "lang:rlike:^(de|fr)$", "--out", out],
-        capture_output=True, text=True, timeout=600, cwd="/root/repo")
+        capture_output=True, text=True, timeout=600, cwd=REPO_ROOT)
     assert r.returncode == 0, r.stderr[-2000:]
     import duckdb
     n = duckdb.sql(f"SELECT count(*) FROM read_parquet('{out}/*.parquet') "

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from fsst_spark.jobs.encode import encode_job
 from fsst_spark.jobs.join import store_join_df
+from tests import REPO_ROOT
 
 
 @pytest.fixture(scope="module")
@@ -106,14 +107,14 @@ def test_cli_join_right_parquet(spark, setup, tmp_path):
         [sys.executable, "-m", "fsst_spark.jobs.cli", "join",
          "--left", out_store, "--right-parquet", probe_path,
          "--on", "doc_id", "--out", out],
-        capture_output=True, text=True, timeout=600, cwd="/root/repo")
+        capture_output=True, text=True, timeout=600, cwd=REPO_ROOT)
     assert r.returncode == 0, r.stderr[-2000:]
     assert json.loads(r.stdout.strip().splitlines()[-1])["rows"] == 200
     # exactly one right side must be given
     bad = subprocess.run(
         [sys.executable, "-m", "fsst_spark.jobs.cli", "join",
          "--left", out_store, "--on", "doc_id", "--out", out],
-        capture_output=True, text=True, timeout=600, cwd="/root/repo")
+        capture_output=True, text=True, timeout=600, cwd=REPO_ROOT)
     assert bad.returncode != 0
 
 

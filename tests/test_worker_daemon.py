@@ -1,5 +1,6 @@
 """The engine's Python worker daemon: zipimport directories are re-read
-only when the archive changes, and local sessions fork workers from it."""
+only when the archive changes, local sessions fork workers from it, and
+importing the engine installs the same patch in any other worker."""
 
 import importlib
 import os
@@ -89,3 +90,16 @@ def test_local_session_forks_workers_from_engine_daemon(spark):
         assert fn == "fsst_spark.daemon.invalidate_caches"
     if parent is not None:
         assert parent[1:4] == [b"-m", b"fsst_spark.daemon", b"pyspark.worker"]
+
+
+@pytest.mark.skipif(not daemon.PATCHES_ZIPIMPORT,
+                    reason="Python >= 3.12 re-reads zip directories lazily")
+def test_planner_worker_runs_engine_invalidate_caches(spark):
+    # Spark forks data-source planner workers from a fixed pyspark.daemon,
+    # whatever spark.python.daemon.module says; importing the engine there
+    # must still install the patch.
+    from tests.daemon_probe_source import DaemonProbeSource
+
+    spark.dataSource.register(DaemonProbeSource)
+    df = spark.read.format("daemon_probe").load()
+    assert df.columns == ["fsst_spark.daemon.invalidate_caches"]
