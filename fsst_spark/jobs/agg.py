@@ -30,7 +30,6 @@ for codecs with no structural shortcut (fsst/plain strings, floats).
 
 from __future__ import annotations
 
-import json
 from typing import Iterator
 
 import numpy as np
@@ -48,7 +47,6 @@ from ..kernel.codecs import (
 )
 from .decode import (
     _STRINGY,
-    _chunks_df,
     _prefix_bytes,
     _spark_type,
     _zone_key,
@@ -57,12 +55,12 @@ from .decode import (
 )
 from .deletes import DeleteMask, has_deletes
 from .plan import (
+    chunk_job,
     file_tasks_df,
     plan_chunks,
     planned_files,
     read_chunks,
     read_file_meta,
-    task_chunks,
     task_files,
 )
 
@@ -210,34 +208,16 @@ def _keep_rows(mask: np.ndarray | None, n: int, dmask, key) -> np.ndarray:
     return keep
 
 
-def _chunk_job(spark, out_dir: str, columns: list[str], fn, ddl: str,
-               filters=None, any_filters=None, types=None) -> DataFrame:
-    """File tasks over the planner's surviving chunks of ``columns`` under
-    ``AND(filters) AND OR(any_filters)`` (every chunk without filters):
-    ``fn(chunks, dmask)`` maps a task's ``((pid, chunk_id), cols)`` stream
-    from the one chunk reader to partial batches; ``dmask`` is the task's
-    tombstone cache (None on a store without deletes)."""
-    files = planned_files(out_dir, columns, filters, any_filters, types=types)
-    deletes_on = has_deletes(out_dir)
-
-    def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        dmask = DeleteMask(out_dir) if deletes_on else None
-        yield from fn(task_chunks(batches, columns), dmask)
-
-    return file_tasks_df(spark, files).mapInArrow(task, ddl)
-
-
 def _file_zones(path: str, columns) -> dict:
     """``{(pid, chunk_id): {column: (n_rows, zmin, zmax, has_nulls)}}`` of
     one chunk file's rows for ``columns``, from its metadata columns and
     params (the key ``"n_total"`` is written only when a chunk has nulls);
     no payload read."""
-    pf, m = read_file_meta(path)
-    params = pf.read(columns=["params"]).column("params").to_pylist()
+    _, m = read_file_meta(path, ("params",))
     zones: dict = {}
     for pid, cid, col, n, lo, hi, pj in zip(
             m["pid"], m["chunk_id"], m["column"], m["n_rows"],
-            m["zmin_long"], m["zmax_long"], params):
+            m["zmin_long"], m["zmax_long"], m["params"]):
         if col in columns:
             zones.setdefault((pid, cid), {})[col] = (n, lo, hi, '"n_total"' in pj)
     return zones
@@ -301,7 +281,7 @@ def _group_agg(spark, out_dir: str, key_col: str, val_col: str | None,
     before any payload read, file tasks read the surviving chunks whole,
     the exact row mask and the per-key partials happen chunk-locally, and
     the one shuffle is NDV-scale."""
-    types = column_arrow_types(spark, out_dir)
+    types = column_arrow_types(out_dir)
     needed = [key_col] + ([val_col] if val_col and val_col != key_col else [])
     needed += [c for c in dict.fromkeys(f[0] for f in filters)
                if c not in needed]
@@ -331,8 +311,8 @@ def _group_agg(spark, out_dir: str, key_col: str, val_col: str | None,
     if val_col is not None:
         ddl += f", sum_val {'bigint' if int_sum else 'double'}"
         aggs.append(F.sum("sum_val").alias("sum_val"))
-    return (_chunk_job(spark, out_dir, needed, partials, ddl, filters,
-                       types=types)
+    return (chunk_job(spark, out_dir, needed, partials, ddl,
+                      filters=filters, types=types)
             .groupBy("value").agg(*aggs))
 
 
@@ -357,45 +337,31 @@ def encoded_group_count(spark, out_dir: str, column: str,
     codec-structural fast path."""
     if filters:
         return _group_agg(spark, out_dir, column, None, filters)
-    deletes_on = has_deletes(out_dir)
-    types = column_arrow_types(spark, out_dir, [column])
-    if column not in types:
-        raise KeyError(f"column {column!r} not in encoded data")
+    types = column_arrow_types(out_dir, [column])
     arrow_name = types[column]
     t = parse_arrow_type(arrow_name)
-    chunks = _chunks_df(spark, out_dir, [column]).select(
-        "pid", "chunk_id", "codec", "params", "payload")
     out_schema = pa.schema([("value", t), ("cnt", pa.int64())])
 
-    def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        dmask = DeleteMask(out_dir) if deletes_on else None
-        for batch in batches:
-            tbl = pa.Table.from_batches([batch])
-            for pid, cid, codec, pjson, payload in zip(
-                tbl.column("pid").to_pylist(),
-                tbl.column("chunk_id").to_pylist(),
-                tbl.column("codec").to_pylist(),
-                tbl.column("params").to_pylist(),
-                (s.as_py() for s in tbl.column("payload")),
-            ):
-                pos = dmask.positions(pid, cid) if dmask is not None else None
-                if pos is None:
-                    # tombstone-free chunk: codec-structural counts (dict
-                    # codes bincount / RLE run pairs), no row expansion
-                    values, counts = _chunk_value_counts(
-                        codec, json.loads(pjson), payload, t)
-                    yield pa.RecordBatch.from_arrays(
-                        [values, pa.array(counts, type=pa.int64())],
-                        schema=out_schema)
-                else:
-                    # tombstoned chunk: per-position mask needed — group
-                    # on the (dict-fast-path) code array minus tombstones
-                    yield _group_partial(
-                        {"codec": codec, "params": json.loads(pjson),
-                         "payload": payload}, t, None, drop_pos=pos)
+    def partials(chunks, dmask) -> Iterator[pa.RecordBatch]:
+        for key, cols in chunks:
+            enc = cols[column]
+            pos = dmask.positions(*key) if dmask is not None else None
+            if pos is None:
+                # tombstone-free chunk: codec-structural counts (dict
+                # codes bincount / RLE run pairs), no row expansion
+                values, counts = _chunk_value_counts(
+                    enc["codec"], enc["params"], enc["payload"], t)
+                yield pa.RecordBatch.from_arrays(
+                    [values, pa.array(counts, type=pa.int64())],
+                    schema=out_schema)
+            else:
+                # tombstoned chunk: per-position mask needed — group
+                # on the (dict-fast-path) code array minus tombstones
+                yield _group_partial(enc, t, None, drop_pos=pos)
 
-    partial = chunks.mapInArrow(task, f"value {_spark_type(arrow_name)}, cnt bigint")
-    return partial.groupBy("value").agg(F.sum("cnt").alias("cnt"))
+    return (chunk_job(spark, out_dir, [column], partials,
+                      f"value {_spark_type(arrow_name)}, cnt bigint")
+            .groupBy("value").agg(F.sum("cnt").alias("cnt")))
 
 
 def _group_codes(karr: pa.Array) -> tuple[np.ndarray, pa.Array, int]:
@@ -464,7 +430,7 @@ def encoded_count_filtered(spark, out_dir: str,
     if not flt and not any_flt:
         raise ValueError("encoded_count_filtered needs filters=[(col, op, "
                          "value), ...] and/or any_filters=[...]")
-    types = column_arrow_types(spark, out_dir)
+    types = column_arrow_types(out_dir)
     fcols = list(dict.fromkeys(f[0] for f in flt + any_flt))
     for c in fcols:
         if c not in types:
@@ -545,7 +511,7 @@ def encoded_group_strlen(spark, out_dir: str, key_col: str, str_col: str,
     conjunctive WHERE with the shared zone/dict/bloom chunk pruning.
     Delete-aware: tombstoned positions drop out of every aggregate
     chunk-locally."""
-    types = column_arrow_types(spark, out_dir)
+    types = column_arrow_types(out_dir)
     for c in (key_col, str_col):
         if c not in types:
             raise KeyError(f"column {c!r} not in encoded data")
@@ -625,7 +591,8 @@ def _group_value_stats(spark, out_dir: str, key_col: str, val_col: str,
 
     ddl = (f"value {_spark_type(types[key_col])}, n_rows bigint, "
            "n_values bigint, s bigint, mn bigint, mx bigint")
-    part = _chunk_job(spark, out_dir, needed, partials, ddl, flt, types=types)
+    part = chunk_job(spark, out_dir, needed, partials, ddl, filters=flt,
+                     types=types)
     agg = part.groupBy("value").agg(
         F.sum("n_rows").alias("n_rows"),
         F.sum("n_values").alias("n_values"),
@@ -654,7 +621,7 @@ def encoded_group_stats(spark, out_dir: str, key_col: str, val_col: str,
     Restricted to int columns so min/max/sum have exact integer semantics
     DuckDB and Spark agree on (floats would drag NaN-ordering differences
     into min/max; use a full decode for those)."""
-    types = column_arrow_types(spark, out_dir)
+    types = column_arrow_types(out_dir)
     for c in (key_col, val_col):
         if c not in types:
             raise KeyError(f"column {c!r} not in encoded data")
@@ -698,7 +665,7 @@ def _group_distinct_pairs(spark, out_dir: str, key_col: str, val_col: str,
     appear only as key-presence rows (ndv ignores them, min/max skip
     them). ``filters`` adds a conjunctive WHERE with zone/dict/bloom
     chunk pruning; delete tombstones drop chunk-locally."""
-    types = column_arrow_types(spark, out_dir)
+    types = column_arrow_types(out_dir)
     for c in (key_col, val_col):
         if c not in types:
             raise KeyError(f"column {c!r} not in encoded data")
@@ -752,7 +719,8 @@ def _group_distinct_pairs(spark, out_dir: str, key_col: str, val_col: str,
 
     ddl = (f"value {_spark_type(types[key_col])}, "
            f"val {_spark_type(types[val_col])}")
-    return _chunk_job(spark, out_dir, needed, partials, ddl, flt, types=types)
+    return chunk_job(spark, out_dir, needed, partials, ddl, filters=flt,
+                     types=types)
 
 
 def encoded_group_ndv(spark, out_dir: str, key_col: str, val_col: str,
@@ -804,7 +772,7 @@ def encoded_group_topk(spark, out_dir: str, key_col: str, val_col: str,
 
     if k <= 0:
         raise ValueError("k must be a positive int")
-    types = column_arrow_types(spark, out_dir)
+    types = column_arrow_types(out_dir)
     for c in (key_col, val_col):
         if c not in types:
             raise KeyError(f"column {c!r} not in encoded data")
@@ -850,7 +818,7 @@ def encoded_group_topk(spark, out_dir: str, key_col: str, val_col: str,
 
     ddl = (f"value {_spark_type(types[key_col])}, "
            f"val {_spark_type(types[val_col])}, cnt bigint")
-    partial = _chunk_job(spark, out_dir, needed, partials, ddl, flt,
+    partial = chunk_job(spark, out_dir, needed, partials, ddl, filters=flt,
                          types=types)
     totals = partial.groupBy("value", "val").agg(F.sum("cnt").alias("cnt"))
 
@@ -902,7 +870,7 @@ def encoded_histogram(spark, out_dir: str, column: str, bucket_width: int,
     zone/dict/bloom CHUNK pruning still applies per branch."""
     if bucket_width <= 0:
         raise ValueError("bucket_width must be a positive int")
-    types = column_arrow_types(spark, out_dir)
+    types = column_arrow_types(out_dir)
     if column not in types:
         raise KeyError(f"column {column!r} not in encoded data")
     if (types[column] not in _INT_LIKE

@@ -109,7 +109,7 @@ def _parse_where(spark, data_dir: str, where: list[str]) -> list[tuple]:
     return nothing)."""
     from fsst_spark.jobs.decode import column_arrow_types
 
-    types = column_arrow_types(spark, data_dir)
+    types = column_arrow_types(data_dir)
     filters = []
     for clause in where:
         col, op, raw = clause.split(":", 2)

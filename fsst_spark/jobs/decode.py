@@ -17,7 +17,6 @@ one emitter, :func:`emit_chunks`.
 from __future__ import annotations
 
 import hashlib
-import json
 import re
 from typing import Iterator
 
@@ -47,47 +46,20 @@ def _spark_type(arrow_name: str) -> str:
     return _SPARK_TYPE[arrow_name]
 
 
-def _chunks_df(spark, out_dir: str, columns: list[str] | None) -> DataFrame:
-    df = spark.read.parquet(f"{out_dir}/chunks")
-    if columns:
-        df = df.filter(F.col("column").isin(columns))  # pushed to parquet scan
-    else:
-        from .schema import dropped_columns
-
-        dropped = dropped_columns(out_dir)
-        if dropped:  # schema-evolved store: dropped columns' rows are
-            # invisible (and their payload bytes never read)
-            df = df.filter(~F.col("column").isin(sorted(dropped)))
-    return df
-
-
-def column_arrow_types(spark, out_dir: str, columns: list[str] | None = None,
+def column_arrow_types(out_dir: str, columns: list[str] | None = None,
                        include_added: bool = False) -> dict[str, str]:
     """{column: arrow type name}: :func:`schema.physical_columns` (one
-    chunk-file footer) folded through the schema log.
+    chunk-file footer) folded through the schema log. Raises
+    FileNotFoundError when the store has no chunk file.
 
     ``include_added=True`` merges columns ADDED via the schema log
     (``schema.add_column``) that no chunk carries yet — only the DECODE
     paths pass it: the metadata/sketch fast paths keep the default so an
     added-but-unmaterialized column fails fast (KeyError) instead of
-    answering from per-chunk state that cannot represent virtual nulls.
-
-    ``spark`` is needed only for a store whose chunk files cannot be
-    listed, which falls back to a (pushed-down) cluster scan."""
+    answering from per-chunk state that cannot represent virtual nulls."""
     from .schema import added_columns, dropped_columns, physical_columns
 
-    try:
-        cols = physical_columns(out_dir)
-    except FileNotFoundError:
-        if spark is None:
-            raise
-        meta = (
-            _chunks_df(spark, out_dir, columns)
-            .select("column", "params")
-            .groupBy("column").agg(F.first("params").alias("params"))
-            .collect()
-        )
-        cols = {r["column"]: json.loads(r["params"])["arrow_type"] for r in meta}
+    cols = physical_columns(out_dir)
     for c in dropped_columns(out_dir):
         cols.pop(c, None)  # dropped columns are not part of the schema
     if include_added:
@@ -100,7 +72,7 @@ def column_arrow_types(spark, out_dir: str, columns: list[str] | None = None,
     return cols
 
 
-def shard_column_types(spark, stores: "list[str]",
+def shard_column_types(stores: "list[str]",
                        columns: list[str] | None = None) -> list[dict[str, str]]:
     """Each shard's decode column types (schema-log adds included), after
     checking that the shards of one logical table agree on the type of
@@ -109,7 +81,7 @@ def shard_column_types(spark, stores: "list[str]",
     seen: dict[str, tuple[str, str]] = {}
     out = []
     for s in stores:
-        types = column_arrow_types(spark, s, include_added=True)
+        types = column_arrow_types(s, include_added=True)
         out.append(types)
         for c, t in types.items():
             if columns is not None and c not in columns:
@@ -574,7 +546,7 @@ def decode_job(spark, out_dir: str, columns: list[str] | None = None,
     ``encode_job(sort_key=K)`` this is K-order: a sorted export for the
     price of a plain decode."""
     types = (_types if _types is not None
-             else column_arrow_types(spark, out_dir, include_added=True))
+             else column_arrow_types(out_dir, include_added=True))
     ddl, out_cols = decoded_schema_ddl(types, columns)
     filters = list(zone_filters or [])
     if zone_filter is not None:
@@ -690,7 +662,7 @@ def decode_filtered(spark, out_dir: str, col: str | None = None, op: str | None 
     cols = columns
     if cols is not None:
         cols = cols + [c for c in fcols if c not in cols]
-    types = column_arrow_types(spark, out_dir, include_added=True)
+    types = column_arrow_types(out_dir, include_added=True)
     for fc in fcols:
         if fc in types and types[fc].startswith(
                 ("list<", "large_list<", "fixed_size_list<")):
@@ -750,7 +722,7 @@ def decode_plan(spark, out_dir: str, columns: list[str] | None = None,
 
     flt = list(filters or [])
     any_flt = list(any_filters or [])
-    types = column_arrow_types(spark, out_dir, include_added=True)
+    types = column_arrow_types(out_dir, include_added=True)
     for c in list(columns or []) + [f[0] for f in flt + any_flt]:
         if c not in types:
             raise KeyError(f"column {c!r} not in encoded data")
@@ -854,7 +826,7 @@ def decode_head(spark, out_dir: str, n: int,
     cols = columns
     if cols is not None:
         cols = cols + [c for c in fcols if c not in cols]
-    types = column_arrow_types(spark, out_dir, include_added=True)
+    types = column_arrow_types(out_dir, include_added=True)
     plan = plan_chunks(out_dir, None, flt, types=types)
     chunks = [(k, fp.n_rows[k]) for fp in plan.files for k in fp.keys]
 
@@ -958,11 +930,11 @@ def decode_sample(spark, out_dir: str, target_rows: int, key_col: str,
     distinct-per-row values for the set to be well-defined."""
     if target_rows <= 0:
         raise ValueError(f"target_rows must be positive, got {target_rows}")
-    if key_col not in column_arrow_types(spark, out_dir):
+    if key_col not in column_arrow_types(out_dir):
         raise KeyError(f"key_col {key_col!r} not in encoded data")
     cols = columns
     if cols is not None:
-        types = column_arrow_types(spark, out_dir, include_added=True)
+        types = column_arrow_types(out_dir, include_added=True)
         for c in cols:
             if c not in types:
                 raise KeyError(f"column {c!r} not in encoded data")
@@ -1080,7 +1052,7 @@ def decode_stores(spark, out_dirs: "list[str]",
     if not out_dirs:
         raise ValueError("decode_stores needs at least one store dir")
     # type-consistency gate across every manifest BEFORE any decode
-    shard_types = shard_column_types(spark, out_dirs, columns)
+    shard_types = shard_column_types(out_dirs, columns)
     parts = []
     for d, have in zip(out_dirs, shard_types):
         cols = None
@@ -1145,7 +1117,7 @@ def decode_stores_plan(spark, out_dirs: "list[str]",
     plans, skipped = [], []
     denom_bytes = 0
     for d in out_dirs:
-        have = set(column_arrow_types(spark, d, include_added=True))
+        have = set(column_arrow_types(d, include_added=True))
         cols = None
         if columns is not None:
             cols = [c for c in columns if c in have]

@@ -13,12 +13,12 @@ pushed ``pid`` filter once per pid it touches, so merge-on-read costs
 one narrow-side lookup, never a shuffle or a driver collect.
 
 What deletes do NOT compose with, by design: the metadata-only /
-sketch-answering fast paths (``encoded_stats``, group-by pushdown,
-encoded top-k/distinct/NDV/quantiles, store profiling). Their answers
-come from encode-time chunk statistics, which tombstones invalidate;
-each of those entry points calls :func:`require_no_deletes` and fails
-fast with instructions instead of silently returning pre-delete
-numbers. ``compact_store`` likewise refuses: it remaps (pid, chunk_id)
+sketch-answering fast paths of ``jobs.stats`` (column stats and exact
+min/max, octet-length stats, top-k, distinct, NDV, quantiles, store
+profiling and layout advice). Their answers come from encode-time chunk
+statistics, which tombstones invalidate; each of those entry points
+calls :func:`require_no_deletes` and fails fast with instructions
+instead of silently returning pre-delete numbers. ``compact_store`` likewise refuses: it remaps (pid, chunk_id)
 keys while copying payloads verbatim, which would orphan the tombstones.
 ``materialize_deletes`` (decode -> re-encode, the Iceberg
 ``rewrite_data_files`` analog) folds tombstones into a new store and
@@ -84,6 +84,20 @@ def deleted_count(store: str) -> int:
     import pyarrow.parquet as pq
 
     return sum(pq.ParquetFile(f).metadata.num_rows for f in _delete_files(store))
+
+
+def tombstoned_chunks(store: str) -> set[tuple[int, int]]:
+    """``(pid, chunk_id)`` of every chunk carrying a tombstone: one
+    driver-side pyarrow read of the narrow key columns."""
+    import pyarrow.dataset as ds
+
+    files = _delete_files(store)
+    if not files:
+        return set()
+    t = ds.dataset(files, format="parquet").to_table(
+        columns=["pid", "chunk_id"])
+    return set(zip(t.column("pid").to_pylist(),
+                   t.column("chunk_id").to_pylist()))
 
 
 def load_delete_positions(store: str, pid: int) -> dict[int, np.ndarray]:
@@ -173,7 +187,7 @@ def _where_tombstones(spark, store: str, flt: list[tuple],
     from .agg import _conj_mask
     from .decode import column_arrow_types
 
-    types = column_arrow_types(spark, store)
+    types = column_arrow_types(store)
     fcols = list(dict.fromkeys(f[0] for f in flt + any_flt))
     for c in fcols:
         if c not in types:
@@ -274,7 +288,7 @@ def delete_matching(spark, store: str, col: str, keys_df,
             f"delete_matching got {n_keys} distinct keys (> "
             f"{max_broadcast_keys}); at that scale a merge is a full "
             "rewrite — recluster/re-encode instead")
-    types = column_arrow_types(spark, store)
+    types = column_arrow_types(store)
     if col not in types:
         raise KeyError(f"column {col!r} not in encoded data")
     arrow_name = types[col]

@@ -9,8 +9,8 @@ chunk interval on the other side provably contains no joinable row and
 its payload never needs to be read, shipped, or decoded.
 
 ``store_join`` implements exactly that — the encoded-store analog of a
-storage-partitioned join: both manifests' zone intervals are read
-(metadata-scale), each side's interval union is merged driver-side into a
+storage-partitioned join: both stores' zone intervals come from the
+planner's driver-side metadata read (no Spark job), each side's interval union is merged driver-side into a
 disjoint sorted set, and the opposite side keeps only chunks that
 intersect it. Surviving chunks decode through the normal ``decode_job``
 path (zone/dict/bloom machinery intact) and the exact equi-join runs as a
@@ -29,7 +29,7 @@ only when its non-matching rows cannot reach the output: both sides for
 ``inner``/``left_semi``, the right side for ``left``/``left_anti``, the
 left side for ``right``, neither for ``full``.
 
-At 10^12-document scale the collects here are chunk-METADATA-scale
+At 10^12-document scale the metadata read here is chunk-METADATA-scale
 (#chunk-groups tuples of four ints — ~3M groups at 100 TB / 32 MiB
 chunks), the same order as the manifest listing the store already
 requires; payload bytes of pruned chunks are never touched.
@@ -44,77 +44,48 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
-from .decode import _chunks_df, column_arrow_types, decode_job
+from .decode import column_arrow_types, decode_job
+from .plan import store_meta
 
 _PRUNE_LEFT = {"inner", "left_semi", "right"}
 _PRUNE_RIGHT = {"inner", "left_semi", "left", "left_anti"}
 _HOW = {"inner", "left", "right", "full", "left_semi", "left_anti"}
 
 
-def _key_zones(spark, out_dir: str, on: str):
-    """Per-chunk-group metadata for the join key: list of
-    (pid, chunk_id, zmin, zmax, n_rows) with None bounds for null-zone
-    chunks, or None when the store predates zone maps (no pruning
-    possible). One narrow metadata collect (#chunk-groups rows)."""
-    ch = _chunks_df(spark, out_dir, [on]).filter(F.col("column") == on)
-    if "zmin_long" not in ch.columns:
-        return None
-    rows = ch.select("pid", "chunk_id", "zmin_long", "zmax_long",
-                     "n_rows").collect()
-    return [(r["pid"], r["chunk_id"], r["zmin_long"], r["zmax_long"],
-             r["n_rows"])
-            for r in rows]
-
-
-def _side_meta(spark, out_dir: str, keys: "list[str]") -> dict:
-    """ONE metadata collect per store covering everything the join planner
-    needs: per chunk group, each key column's zone bounds + row count and
-    every column's raw_bytes. Replaces one Spark job per key column
-    (``_key_zones``) plus one aggregate per side (``_kept_bytes``) with a
-    single metadata-scale groupBy collect — still one row per chunk group
-    on the driver (per-column bytes ride along as a small struct list,
-    #columns entries each).
+def _side_meta(out_dir: str, keys: "list[str]") -> dict:
+    """Everything the join planner needs from one store, from ONE
+    driver-side fold of the planner's metadata read (no Spark job): per
+    chunk group, each key column's zone bounds + row count and every
+    column's raw_bytes.
 
     Returns ``{"zones": {key: zones-list | None}, "col_bytes":
-    [(pid, chunk_id, {column: raw_bytes}), ...]}`` with ``zones``
-    semantics identical to ``_key_zones`` (None when the store predates
-    zone maps; groups missing a key column's row are absent from that
-    key's list)."""
-    ch = _chunks_df(spark, out_dir, None)
-    has_zones = "zmin_long" in ch.columns
-    aggs = [F.collect_list(F.struct("column", "raw_bytes")).alias("_rb")]
-    for i, k in enumerate(keys):
-        kmatch = F.col("column") == k
-        aggs.append(F.max(F.when(kmatch, F.col("n_rows"))).alias(f"_n{i}"))
-        aggs.append(F.max(F.when(kmatch, 1)).alias(f"_has{i}"))
-        if has_zones:
-            aggs.append(F.min(F.when(kmatch, F.col("zmin_long")))
-                        .alias(f"_zmin{i}"))
-            aggs.append(F.min(F.when(kmatch, F.col("zmax_long")))
-                        .alias(f"_zmax{i}"))
-    rows = ch.groupBy("pid", "chunk_id").agg(*aggs).collect()
-    zones: dict = {}
-    for i, k in enumerate(keys):
-        if not has_zones:
-            zones[k] = None
-            continue
-        zones[k] = [
-            (r["pid"], r["chunk_id"], r[f"_zmin{i}"], r[f"_zmax{i}"],
-             r[f"_n{i}"])
-            for r in rows if r[f"_has{i}"]
-        ]
-    col_bytes = [(r["pid"], r["chunk_id"],
-                  {e["column"]: e["raw_bytes"] for e in r["_rb"]})
-                 for r in rows]
-    return {"zones": zones, "col_bytes": col_bytes}
+    [(pid, chunk_id, {column: raw_bytes}), ...]}``. A zones list holds
+    ``(pid, chunk_id, zmin, zmax, n_rows)`` per chunk group, with None
+    bounds for null-zone chunks; it is None when the store predates zone
+    maps (no pruning possible), and groups missing a key column's row are
+    absent from that key's list."""
+    m, missing = store_meta(out_dir, None, ("raw_bytes",))
+    key_rows: dict = {k: [] for k in keys}
+    col_bytes: dict = {}
+    for pid, cid, col, n, lo, hi, rb in zip(
+            m["pid"], m["chunk_id"], m["column"], m["n_rows"],
+            m["zmin_long"], m["zmax_long"], m["raw_bytes"]):
+        col_bytes.setdefault((pid, cid), {})[col] = rb
+        if col in key_rows:
+            key_rows[col].append((pid, cid, lo, hi, n))
+    has_zones = "zmin_long" not in missing
+    return {"zones": {k: key_rows[k] if has_zones else None for k in keys},
+            "col_bytes": [(p, c, b) for (p, c), b in col_bytes.items()]}
 
 
-def _kept_bytes_local(meta: dict, columns: "list[str] | None",
-                      kept, rows_kept: "int | None") -> "int | None":
-    """Driver-side twin of ``_kept_bytes`` computed from the already
-    collected ``_side_meta`` — no extra Spark job. Same contract: upper
-    bound on decoded bytes (raw_bytes of the projected columns over kept
-    chunk groups, plus 16 bytes/row slack); None when rows are unknown."""
+def _kept_bytes(meta: dict, columns: "list[str] | None",
+                kept, rows_kept: "int | None") -> "int | None":
+    """Upper bound on the DECODED bytes a side will produce, from its
+    ``_side_meta``: raw_bytes of the projected columns (all columns when
+    unprojected) over kept chunk groups, plus 16 bytes/row slack for
+    metadata-less virtual columns (ADD COLUMN NULL fills carry no chunk
+    rows). raw_bytes is pre-tombstone, so deletes only make the bound
+    more conservative. None when rows are unknown (pre-zone store)."""
     if rows_kept is None:
         return None
     ks = set(kept) if kept is not None else None
@@ -186,29 +157,6 @@ def _rows_kept(zones, kept) -> "int | None":
     return int(sum(n for p, c, _, _, n in zones if (p, c) in ks))
 
 
-def _kept_bytes(spark, out_dir: str, columns: "list[str] | None",
-                kept, rows_kept: "int | None") -> "int | None":
-    """Upper bound on the DECODED bytes a side will produce: sum of kept
-    chunk groups' raw_bytes over the projected columns (all columns when
-    unprojected), plus 16 bytes/row slack for metadata-less virtual
-    columns (ADD COLUMN NULL fills carry no chunk rows). One narrow
-    metadata aggregate — raw_bytes is pre-tombstone, so deletes only make
-    the bound more conservative. None when rows are unknown (pre-zone
-    store)."""
-    if rows_kept is None:
-        return None
-    ch = _chunks_df(spark, out_dir, columns)
-    if columns is not None:
-        ch = ch.filter(F.col("column").isin(list(columns)))
-    if kept is not None:
-        if not kept:
-            return rows_kept * 16
-        keys = spark.createDataFrame(kept, "pid int, chunk_id int")
-        ch = ch.join(F.broadcast(keys), ["pid", "chunk_id"], "left_semi")
-    total = ch.agg(F.sum("raw_bytes")).first()[0]
-    return int(total or 0) + rows_kept * 16
-
-
 def _norm_on(on) -> "list[str]":
     keys = [on] if isinstance(on, str) else list(on)
     if not keys:
@@ -246,22 +194,15 @@ def store_join_plan(spark, left_dir: str, right_dir: str, on,
     if how not in _HOW:
         raise ValueError(f"how must be one of {sorted(_HOW)}, got {how!r}")
     keys = _norm_on(on)
-    lts = column_arrow_types(spark, left_dir, keys)
-    rts = column_arrow_types(spark, right_dir, keys)
+    lts = column_arrow_types(left_dir, keys)
+    rts = column_arrow_types(right_dir, keys)
     for c in keys:
         if lts[c] != rts[c]:
             raise TypeError(
                 f"join key {c!r} is {lts[c]} in {left_dir} but {rts[c]} in "
                 f"{right_dir}; packed zone keys are only comparable within "
                 f"one arrow type — cast and re-encode one side")
-    # the two sides' metadata collects are independent Spark jobs —
-    # overlap them (optimization-guide §2.6)
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as _pool:
-        _fl = _pool.submit(_side_meta, spark, left_dir, keys)
-        _fr = _pool.submit(_side_meta, spark, right_dir, keys)
-        lmeta, rmeta = _fl.result(), _fr.result()
+    lmeta, rmeta = _side_meta(left_dir, keys), _side_meta(right_dir, keys)
     lz_all, rz_all = lmeta["zones"], rmeta["zones"]
     lz, rz = lz_all[keys[0]], rz_all[keys[0]]
     lk = _side_kept(lz_all, rz_all, keys) if how in _PRUNE_LEFT else None
@@ -399,12 +340,11 @@ def store_join(spark, left_dir: str, right_dir: str, on, *,
 
         def side_bytes(ok, meta, columns, keys, rows):
             # rows*16 is the slack floor: a side that fails on rows alone
-            # can never pass. Bytes come from the plan's already-collected
-            # metadata (_side_meta) — no Spark job here.
+            # can never pass. Bytes come from the plan's metadata read
+            # (_side_meta) — no Spark job here.
             if not ok or rows is None or rows * 16 > broadcast_threshold_bytes:
                 return None
-            return _kept_bytes_local(meta, columns,
-                                     keys if prune else None, rows)
+            return _kept_bytes(meta, columns, keys if prune else None, rows)
 
         lb = side_bytes(can_b_left, plan["_left_meta"], left_columns,
                         plan["_left_keys"], plan["left_rows_kept"])
@@ -462,7 +402,7 @@ def store_join_df(spark, store_dir: str, df, on, *, how: str = "inner",
     if how not in ("inner", "left", "left_semi", "left_anti"):
         raise ValueError(f"unsupported how={how!r} (store is the left "
                          "side; use inner/left/left_semi/left_anti)")
-    types = column_arrow_types(spark, store_dir, include_added=True)
+    types = column_arrow_types(store_dir, include_added=True)
     for c in on_cols:
         if c not in types:
             raise KeyError(f"join column {c!r} not in encoded data")

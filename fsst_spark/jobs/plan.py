@@ -2,23 +2,27 @@
 store a read must decode (the one pruning implementation), and the file
 tasks that read them.
 
-Every selective read asks the planner: ``decode_job`` (filters, OR
-branches, ``as_of``, pid and chunk-key whitelists), ``decode_plan``,
-``decode_head``, ``decode_sample`` (chunk row counts for its md5 chunk
-selection), the ``fsst`` DataSource's ``partitions()``, the chunk-local
-aggregations of ``jobs.agg``, ``delete_where`` / ``delete_matching`` and
-``stats.encoded_column_minmax``. Their surviving files become file tasks
-(:func:`file_tasks_df`) or DataSource partitions, and every one reads its
-chunks through :func:`read_chunks`: one pyarrow read per file, whole
-chunks grouped per file, no chunk-row shuffle. Decode tasks and the
-DataSource's ``read()`` turn those chunks into Arrow batches with
-``decode.emit_chunks``. The planner reads chunk metadata with pyarrow
-and starts no Spark job. Per chunk file it reads the narrow columns
-``META_COLS``; the ``bloom`` column, only while a chunk of an
-``==``/``in`` filter column that is not dict-coded is still live (only
-those columns' blooms are probed); and ``params, payload`` of the filter
-column's ``str_dict`` rows (a parquet row filter), only while such a
-chunk is still live — only its dictionary section decodes.
+Every read of the chunk table goes through here: ``decode_job``
+(filters, OR branches, ``as_of``, pid and chunk-key whitelists),
+``decode_plan``, ``decode_head``, ``decode_sample`` (chunk row counts for
+its md5 chunk selection), the ``fsst`` DataSource's ``partitions()``, the
+chunk-local aggregations of ``jobs.agg``, ``delete_where`` /
+``delete_matching``, ``verify_chunks``, every ``jobs.stats`` answer and
+``store_join``'s planning. Answers that need only metadata and sketches
+fold :func:`store_meta` on the driver. Files that must be read become
+file tasks (:func:`file_tasks_df`, :func:`chunk_job`) or DataSource
+partitions, which read their chunks through :func:`read_chunks` (one
+pyarrow read per file, whole chunks grouped per file, no chunk-row
+shuffle); only ``verify_chunks`` reads its files itself, for the
+checksum column. Decode tasks and the DataSource's ``read()`` turn those
+chunks into Arrow batches with ``decode.emit_chunks``. The planner reads
+chunk metadata with pyarrow and starts no Spark job. Per chunk file it
+reads the narrow columns ``META_COLS`` (plus the sketch columns a
+``store_meta`` caller asks for); the ``bloom`` column, only while a
+chunk of an ``==``/``in`` filter column that is not dict-coded is still
+live (only those columns' blooms are probed); and ``params, payload`` of
+the filter column's ``str_dict`` rows (a parquet row filter), only while
+such a chunk is still live — only its dictionary section decodes.
 
 Every stage is conservative: null zones (all-null chunks) keep, and so do
 stores written before zone maps or blooms. A chunk with no row for a
@@ -154,15 +158,71 @@ def planned_files(store: str, columns=None, filters=None, any_filters=None,
     return [(path, None) for _, path in chunk_files(store)]
 
 
-def read_file_meta(path: str) -> tuple[pq.ParquetFile, dict[str, list]]:
-    """(the open chunk file, its ``META_COLS`` as Python lists); a
-    metadata column missing from a file written before it existed reads
-    as nulls."""
+def read_file_meta(path: str, extra=()) -> tuple[pq.ParquetFile, dict[str, list]]:
+    """(the open chunk file, its ``META_COLS`` plus the ``extra`` metadata
+    columns — ``raw_bytes``, ``zsum_long``, ``hll``, ``qsketch``,
+    ``params`` — as Python lists); a metadata column missing from a file
+    written before it existed reads as nulls."""
     pf = pq.ParquetFile(path)
     names = pf.schema_arrow.names
-    t = pf.read(columns=[c for c in META_COLS if c in names])
+    cols = (*META_COLS, *extra)
+    t = pf.read(columns=[c for c in cols if c in names])
     return pf, {c: (t.column(c).to_pylist() if c in names
-                    else [None] * t.num_rows) for c in META_COLS}
+                    else [None] * t.num_rows) for c in cols}
+
+
+def store_meta(store: str, columns=None, extra=()) -> tuple[dict, set]:
+    """The planner's metadata read for answers that need nothing else:
+    ``({name: list}, missing)`` over every chunk row of ``columns`` (None:
+    every column not dropped) in pid order, with ``META_COLS``, ``extra``
+    (see :func:`read_file_meta`) and ``path`` (the row's chunk file) as
+    names; ``missing`` names the metadata columns some chunk file lacks
+    (they read as nulls there). No payload byte is read and no Spark job
+    starts."""
+    col_ok = _column_filter(store, columns)
+    names = (*META_COLS, *extra)
+    out: dict[str, list] = {c: [] for c in (*names, "path")}
+    missing: set[str] = set()
+    for _, path in chunk_files(store):
+        pf, m = read_file_meta(path, extra)
+        missing.update(c for c in names if c not in pf.schema_arrow.names)
+        keep = [i for i, col in enumerate(m["column"]) if col_ok(col)]
+        for c in names:
+            out[c] += [m[c][i] for i in keep]
+        out["path"] += [path] * len(keep)
+    return out, missing
+
+
+def keep_sets(meta: dict, rows) -> list[tuple[str, list]]:
+    """``(path, keep-set)`` of the chunks at the indices ``rows`` of a
+    :func:`store_meta` read, in pid order: the file list of
+    :func:`file_tasks_df` and :func:`chunk_job`."""
+    files: dict[str, dict] = {}
+    for i in rows:
+        key = (meta["pid"][i], meta["chunk_id"][i])
+        files.setdefault(meta["path"][i], {})[key] = None
+    return [(path, list(keys)) for path, keys in files.items()]
+
+
+def chunk_job(spark, store: str, columns: list[str], fn, ddl: str,
+              files=None, **plan):
+    """File tasks over ``files`` (``(path, keep-set)``; by default the
+    planner's survivors of ``columns`` under the :func:`planned_files`
+    arguments ``plan``, every chunk without filters): ``fn(chunks,
+    dmask)`` maps a task's ``((pid, chunk_id), cols)`` stream from the one
+    chunk reader to partial batches of ``ddl``; ``dmask`` is the task's
+    tombstone cache (None on a store without deletes)."""
+    from .deletes import DeleteMask, has_deletes
+
+    if files is None:
+        files = planned_files(store, columns, **plan)
+    deletes_on = has_deletes(store)
+
+    def task(batches):
+        dmask = DeleteMask(store) if deletes_on else None
+        yield from fn(task_chunks(batches, columns), dmask)
+
+    return file_tasks_df(spark, files).mapInArrow(task, ddl)
 
 
 def _bloom_probes(arrow_name: str, value) -> list | None:
@@ -343,6 +403,17 @@ def _plan_file(path: str, col_ok, conj: list[_Filter], disj: list[_Filter],
     return FilePlan(path, sorted(kept), {k: n_rows[k] for k in kept}), counts
 
 
+def _column_filter(store: str, columns):
+    """Membership test for the chunk rows a read of ``columns`` sees
+    (None: every column the schema log has not dropped)."""
+    if columns is not None:
+        return set(columns).__contains__
+    from .schema import dropped_columns
+
+    dropped = dropped_columns(store)
+    return lambda c: c not in dropped
+
+
 def plan_chunks(store: str, columns: list[str] | None = None,
                 filters=None, any_filters=None, pids=None,
                 dict_prune: bool = True, keys=None,
@@ -356,13 +427,7 @@ def plan_chunks(store: str, columns: list[str] | None = None,
     mistyped filter value TypeError, before any file is read."""
     conj = [_Filter.compile(types, f, dict_prune) for f in filters or []]
     disj = [_Filter.compile(types, f, dict_prune) for f in any_filters or []]
-    if columns is not None:
-        col_ok = set(columns).__contains__
-    else:
-        from .schema import dropped_columns
-
-        dropped = dropped_columns(store)
-        col_ok = lambda c: c not in dropped  # noqa: E731
+    col_ok = _column_filter(store, columns)
     key_set = None if keys is None else set(map(tuple, keys))
     if key_set is not None:
         kp = {p for p, _ in key_set}

@@ -6,8 +6,8 @@ removing a column from a 100 TB store would be a full rewrite. Instead
 log (``<store>/schema/``, same O_EXCL-claimed-index protocol as the
 delete log) and every reader folds the log into the visible schema:
 ``column_arrow_types`` (and the fsst source's ``store_column_types`` on
-top of it) exclude dropped columns, the metadata scan filters their chunk rows out
-parquet-side, and their payload bytes are never read again — the Iceberg
+top of it) exclude dropped columns, the planner's metadata read skips
+their chunk rows, and their payload bytes are never read again — the Iceberg
 ``ALTER TABLE DROP COLUMN`` semantics (drop is a metadata operation;
 data files are untouched).
 

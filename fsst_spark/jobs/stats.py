@@ -1,36 +1,94 @@
-"""Stats-only queries answered from encode-time metadata — no payload
-reads, no decode — plus exact min/max for string/float columns by decoding
-ONLY the zone-boundary chunks.
+"""Stats, sketch and extreme-value answers over an encoded store, read
+the way every reader reads: through the driver-side planner
+(:mod:`jobs.plan`).
 
-The chunk table stores exact per-chunk min/max for integer and timestamp
-columns (``encode._zone_bounds``) and per-chunk row counts; min/max/count
-over the whole store is therefore a pure metadata aggregation over the
-narrow (column, n_rows, zmin, zmax) projection — the parquet scan never
-touches a payload byte. At 100 TB this answers ``SELECT count(*),
-min(c), max(c)`` in seconds from footers instead of a full decode — the
-standard lakehouse stats-pushdown shape, here against our own chunk
-format.
+The chunk table stores per-chunk row counts, zone bounds (exact min/max
+for integer and timestamp columns, ``encode._zone_bounds``), sums of
+null-free int chunks, HLL and quantile sketches, and each chunk's params
+(null counts, codec, arrow type). Answers that need nothing more — column
+stats, profiles, layout advice, NDV, quantiles, top-k thresholds, the
+metadata arm of a sum — fold the planner's pyarrow metadata read
+(``plan.store_meta``) on the driver and start no Spark job; a DataFrame
+answer is a local Arrow table (a ``LocalTableScan``). Answers that need
+payloads — exact string/float min/max, octet-length stats, top-k
+candidates, distinct sets, the chunks a sum cannot answer from metadata —
+run file tasks (``plan.chunk_job``) that read only those chunks through
+the one chunk reader, so no chunk row is shuffled.
 """
 
 from __future__ import annotations
 
 import json
+from operator import add
 from typing import Iterator
 
+import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from .decode import (_chunks_df, _spark_type, column_arrow_types,
-                     deterministic_sample)
+from .decode import _spark_type, column_arrow_types, deterministic_sample
 from .deletes import require_no_deletes as _require_no_deletes
+from .plan import chunk_job, keep_sets, store_meta
 
 _EXACT_ZONE_TYPES = ("int8", "int16", "int32", "int64")
 
 
+def _local_df(spark, schema: pa.Schema, rows: list[tuple]) -> DataFrame:
+    """A driver-side answer as a DataFrame: a local Arrow table, which
+    Spark plans as a ``LocalTableScan`` and runs without a job (a list of
+    Python rows would become a pickled RDD and a job)."""
+    cols = list(zip(*rows)) if rows else [[] for _ in schema]
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+        schema=schema))
+
+
+def _fold(op, acc, v):
+    """One step of the SQL aggregate ``op`` (min, max, add): nulls are
+    skipped, and only all-null input folds to null."""
+    return v if acc is None else acc if v is None else op(acc, v)
+
+
+def _n_nulls(params: str) -> int:
+    """A chunk's null count from its params: ``n_total`` (rows) is written
+    only for null-bearing chunks, beside ``n`` (non-null values)."""
+    p = json.loads(params)
+    return p["n_total"] - p["n"] if "n_total" in p and "n" in p else 0
+
+
+_STATS_SCHEMA = pa.schema([("column", pa.string()), ("n_rows", pa.int64()),
+                           ("min_long", pa.int64()), ("max_long", pa.int64())])
+
+
+def _zone_stats(spark, out_dirs: "list[str]", columns: list[str]) -> DataFrame:
+    """``encoded_column_stats`` folded over one store or a shard family."""
+    out: dict = {}  # column -> [n_rows, min_long, max_long]
+    for d in out_dirs:
+        _require_no_deletes(d, 'encoded_column_stats')
+        types = column_arrow_types(d, columns)
+        for c in columns:
+            t = types[c]
+            if t not in _EXACT_ZONE_TYPES and not t.startswith("timestamp["):
+                raise ValueError(
+                    f"exact metadata stats need int/timestamp zones; column "
+                    f"{c!r} is {t} (string/float zones are conservative "
+                    "bounds only)")
+        meta, missing = store_meta(d, columns)
+        if "zmin_long" in missing:
+            raise ValueError("store has no zone maps (pre-zone encode)")
+        for col, n, lo, hi in zip(meta["column"], meta["n_rows"],
+                                  meta["zmin_long"], meta["zmax_long"]):
+            acc = out.setdefault(col, [0, None, None])
+            acc[0] += n
+            acc[1], acc[2] = _fold(min, acc[1], lo), _fold(max, acc[2], hi)
+    return _local_df(spark, _STATS_SCHEMA,
+                     [(c, *out[c]) for c in sorted(out)])
+
+
 def encoded_column_stats(spark, out_dir: str, columns: list[str]) -> DataFrame:
-    """(column, n_rows, n_nonnull_min... ) -> one row per requested column
+    """(column, n_rows, min_long, max_long) -> one row per requested column
     with exact ``n_rows``, ``min_long`` and ``max_long`` recovered from
-    chunk metadata only.
+    chunk metadata only, on the driver (no Spark job).
 
     Supported for integer and timestamp columns (their zones are exact
     value bounds; timestamps report in storage-unit ticks). String prefix
@@ -40,31 +98,7 @@ def encoded_column_stats(spark, out_dir: str, columns: list[str]) -> DataFrame:
     from min/max (they contribute no values), matching SQL min/max
     semantics; a store written before zone maps existed has no zone
     columns at all and also raises."""
-    _require_no_deletes(out_dir, 'encoded_column_stats')
-    types = column_arrow_types(spark, out_dir)
-    for c in columns:
-        if c not in types:
-            raise KeyError(f"column {c!r} not in encoded data")
-        t = types[c]
-        if t not in _EXACT_ZONE_TYPES and not t.startswith("timestamp["):
-            raise ValueError(
-                f"exact metadata stats need int/timestamp zones; column {c!r} "
-                f"is {t} (string/float zones are conservative bounds only)")
-    chunks = _chunks_df(spark, out_dir, list(columns))
-    # column-presence check BEFORE the projection: selecting a missing
-    # column raises AnalysisException first, making a post-select guard dead
-    if "zmin_long" not in chunks.columns:
-        raise ValueError("store has no zone maps (pre-zone encode)")
-    chunks = chunks.select("column", "n_rows", "zmin_long", "zmax_long")
-    return (
-        chunks.groupBy("column")
-        .agg(
-            F.sum("n_rows").alias("n_rows"),
-            F.min("zmin_long").alias("min_long"),
-            F.max("zmax_long").alias("max_long"),
-        )
-        .orderBy("column")
-    )
+    return _zone_stats(spark, [out_dir], columns)
 
 
 def encoded_column_minmax(spark, out_dir: str, column: str) -> dict:
@@ -89,49 +123,37 @@ def encoded_column_minmax(spark, out_dir: str, column: str) -> dict:
     column is all null). Float min/max follow Spark/DuckDB NaN ordering
     (NaN greatest; min/max never return NaN unless every value is NaN).
     """
-    from .plan import chunk_files, file_tasks_df, read_file_meta, task_chunks
-
     _require_no_deletes(out_dir, 'encoded_column_minmax')
-    types = column_arrow_types(spark, out_dir)
-    if column not in types:
-        raise KeyError(f"column {column!r} not in encoded data")
-    arrow_name = types[column]
-    rows = []  # (path, key, zmin, zmax, n_rows) of the column's chunks
-    for _, path in chunk_files(out_dir):
-        pf, m = read_file_meta(path)
-        if "zmin_long" not in pf.schema_arrow.names:
-            raise ValueError("store has no zone maps (pre-zone encode)")
-        rows += [(path, (p, c), lo, hi, n) for p, c, col, lo, hi, n in zip(
-            m["pid"], m["chunk_id"], m["column"], m["zmin_long"],
-            m["zmax_long"], m["n_rows"]) if col == column]
-    out = {"n_rows": sum(r[4] for r in rows), "n_chunks_total": len(rows),
+    arrow_name = column_arrow_types(out_dir, [column])[column]
+    m, missing = store_meta(out_dir, [column])
+    if "zmin_long" in missing:
+        raise ValueError("store has no zone maps (pre-zone encode)")
+    out = {"n_rows": sum(m["n_rows"]), "n_chunks_total": len(m["n_rows"]),
            "n_chunks_decoded": 0, "min": None, "max": None}
-    zmins = [r[2] for r in rows if r[2] is not None]
+    zmins = [lo for lo in m["zmin_long"] if lo is not None]
     if not zmins:  # every chunk all-null
         return out
-    gmin, gmax = min(zmins), max(r[3] for r in rows if r[3] is not None)
+    gmin = min(zmins)
+    gmax = max(hi for hi in m["zmax_long"] if hi is not None)
     if arrow_name in _EXACT_ZONE_TYPES or arrow_name.startswith("timestamp["):
         # int/timestamp zones ARE the exact bounds (ts in storage ticks)
         out["min"], out["max"] = gmin, gmax
         return out
     # boundary candidates: chunks whose zone touches a global extreme
-    cand: dict[str, list] = {}
-    for path, key, lo, hi, _ in rows:
-        if lo == gmin or hi == gmax:
-            cand.setdefault(path, []).append(key)
+    cand = [i for i, (lo, hi) in enumerate(zip(m["zmin_long"], m["zmax_long"]))
+            if lo == gmin or hi == gmax]
     spark_t = _spark_type(arrow_name)
     is_float = arrow_name in ("float", "double")
     out_schema = pa.schema([("mn", _PA_BY_SPARK[spark_t]),
                             ("mx", _PA_BY_SPARK[spark_t])])
 
-    def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import numpy as np
+    def partials(chunks, _dmask) -> Iterator[pa.RecordBatch]:
         import pyarrow.compute as pc
 
         from ..kernel.codecs import decode_column
 
         mns, mxs = [], []
-        for _, cols in task_chunks(batches, [column]):
+        for _, cols in chunks:
             arr = decode_column(cols[column]).drop_null()
             if len(arr) == 0:
                 continue
@@ -156,8 +178,9 @@ def encoded_column_minmax(spark, out_dir: str, column: str) -> dict:
                 [{"mn": a, "mx": b} for a, b in zip(mns, mxs)],
                 schema=out_schema)
 
-    per_chunk = (file_tasks_df(spark, list(cand.items()))
-                 .mapInArrow(task, f"mn {spark_t}, mx {spark_t}").collect())
+    per_chunk = chunk_job(spark, out_dir, [column], partials,
+                          f"mn {spark_t}, mx {spark_t}",
+                          files=keep_sets(m, cand)).collect()
     if per_chunk:
         # NaN sorts greatest (Spark/DuckDB); other types compare natively
         order = (lambda v: (v != v, v)) if is_float else None  # noqa: E731
@@ -173,96 +196,69 @@ def encoded_column_sum(spark, out_dir: str, column: str) -> dict:
 
     The encode job stores a per-chunk ``zsum_long`` (exact int64 sum) for
     every NULL-FREE int chunk, so on a typical store the whole answer is
-    one payload-free metadata aggregation — ``sum(n_chars)`` over 100 TB
-    reads parquet footers and two narrow columns. Chunks that cannot
-    answer from metadata decode individually and exactly: chunks with
-    nulls (their non-null count is not in metadata), chunks carrying
-    delete tombstones (the deleted rows' values must be subtracted), and
-    chunks from pre-``zsum`` stores or whose sum overflowed int64. The
-    store-wide sum accumulates in Python int on the driver from per-arm
-    partials, so it is exact even past int64.
+    a driver-side fold of the planner's metadata read — ``sum(n_chars)``
+    over 100 TB reads parquet footers and narrow columns, and starts no
+    Spark job. Chunks that cannot answer from metadata decode individually
+    and exactly in file tasks: chunks with nulls (their non-null count is
+    not in metadata), chunks carrying delete tombstones (the deleted rows'
+    values must be subtracted; the tombstoned chunk keys come from a
+    pyarrow read of the deletes parquet), and chunks from pre-``zsum``
+    stores or whose sum overflowed int64. The store-wide sum accumulates
+    in Python int on the driver from per-chunk partials, so it is exact
+    even past int64.
 
     Returns ``{"sum", "n_values", "avg", "n_chunks_total",
     "n_chunks_decoded"}`` (sum/avg None when the column is all null)."""
-    types = column_arrow_types(spark, out_dir)
-    if column not in types:
-        raise KeyError(f"column {column!r} not in encoded data")
+    from .deletes import tombstoned_chunks
+
+    types = column_arrow_types(out_dir, [column])
     if types[column] not in _EXACT_ZONE_TYPES:
         raise ValueError(
             f"encoded_column_sum needs an int column; {column!r} is "
             f"{types[column]}")
-    meta = _chunks_df(spark, out_dir, [column])
-    if "zsum_long" not in meta.columns:
+    m, missing = store_meta(out_dir, [column], ("zsum_long",))
+    if "zsum_long" in missing:
         raise ValueError("store has no chunk sums (pre-zsum encode); "
                          "re-encode or use a full decode")
-    from .deletes import _deletes_dir, has_deletes
+    tomb = tombstoned_chunks(out_dir)
+    total = n_values = 0
+    dec = []  # chunks without a usable stored sum, all-null ones aside
+    for i, (pid, cid, n, lo, zsum) in enumerate(zip(
+            m["pid"], m["chunk_id"], m["n_rows"], m["zmin_long"],
+            m["zsum_long"])):
+        if (pid, cid) in tomb or (zsum is None and lo is not None):
+            dec.append(i)
+        elif zsum is not None:
+            total += zsum
+            n_values += n
+    out = {"n_chunks_total": len(m["pid"]), "n_chunks_decoded": len(dec)}
+    if dec:
+        out_schema = pa.schema([("s", pa.int64()), ("n", pa.int64())])
 
-    if has_deletes(out_dir):
-        tomb = (spark.read.parquet(_deletes_dir(out_dir))
-                .select("pid", "chunk_id").distinct()
-                .withColumn("_tomb", F.lit(True)))
-        meta = (meta.join(F.broadcast(tomb), ["pid", "chunk_id"], "left")
-                .na.fill({"_tomb": False}))
-    else:
-        meta = meta.withColumn("_tomb", F.lit(False))
-    # all-null chunks (zmin null AND zsum null) contribute nothing; chunks
-    # with a stored sum and no tombstones answer from metadata; the rest
-    # decode. The metadata arm projects NO payload bytes.
-    can_meta = F.col("zsum_long").isNotNull() & ~F.col("_tomb")
-    is_allnull = (F.col("zsum_long").isNull() & F.col("zmin_long").isNull()
-                  & ~F.col("_tomb"))
-    agg = meta.agg(
-        F.count("*").alias("n_chunks"),
-        F.sum(F.when(can_meta, F.col("zsum_long"))).alias("meta_sum"),
-        F.sum(F.when(can_meta, F.col("n_rows"))).alias("meta_n"),
-        F.sum(F.when(~can_meta & ~is_allnull, 1).otherwise(0)).alias("n_dec"),
-    ).collect()[0]
-    total = int(agg["meta_sum"]) if agg["meta_sum"] is not None else 0
-    n_values = int(agg["meta_n"]) if agg["meta_n"] is not None else 0
-    out = {"n_chunks_total": agg["n_chunks"],
-           "n_chunks_decoded": int(agg["n_dec"] or 0)}
-    if agg["n_dec"]:
-        sub = (meta.filter(~can_meta & ~is_allnull)
-               .select("pid", "chunk_id", "codec", "params", "payload"))
-        deletes_on = has_deletes(out_dir)
-
-        def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            import numpy as np
-
+        def partials(chunks, dmask) -> Iterator[pa.RecordBatch]:
             from ..kernel.codecs import decode_column
-            from .deletes import DeleteMask
 
-            dmask = DeleteMask(out_dir) if deletes_on else None
-            for batch in batches:
-                rows = []
-                for row in batch.to_pylist():
-                    arr = decode_column(
-                        {"codec": row["codec"],
-                         "params": json.loads(row["params"]),
-                         "payload": row["payload"]})
-                    valid = arr.is_valid().to_numpy(zero_copy_only=False).astype(bool)
-                    if dmask is not None:
-                        pos = dmask.positions(row["pid"], row["chunk_id"])
-                        if pos is not None and len(pos):
-                            valid[pos[pos < len(valid)]] = False
-                    v = arr.fill_null(0).to_numpy(zero_copy_only=False)
-                    s = int(np.sum(v[valid], dtype=object)) if valid.any() else 0
-                    if not -(1 << 63) <= s < (1 << 63):
-                        # same contract as the stored zsum: refuse loudly
-                        # rather than wrap (Spark's non-ANSI sum would)
-                        raise OverflowError(
-                            f"chunk ({row['pid']},{row['chunk_id']}) sum "
-                            "exceeds int64")
-                    rows.append({"s": s, "n": int(valid.sum())})
-                yield pa.RecordBatch.from_pylist(
-                    rows, schema=pa.schema([("s", pa.int64()),
-                                            ("n", pa.int64())]))
+            rows = []
+            for key, cols in chunks:
+                arr = decode_column(cols[column])
+                valid = arr.is_valid().to_numpy(zero_copy_only=False).astype(bool)
+                pos = dmask.positions(*key) if dmask is not None else None
+                if pos is not None:
+                    valid[pos[pos < len(valid)]] = False
+                v = arr.fill_null(0).to_numpy(zero_copy_only=False)
+                s = int(np.sum(v[valid], dtype=object)) if valid.any() else 0
+                if not -(1 << 63) <= s < (1 << 63):
+                    # same contract as the stored zsum: refuse loudly
+                    # rather than wrap
+                    raise OverflowError(f"chunk {key} sum exceeds int64")
+                rows.append({"s": s, "n": int(valid.sum())})
+            yield pa.RecordBatch.from_pylist(rows, schema=out_schema)
 
-        part = (sub.mapInArrow(task, "s bigint, n bigint")
-                .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
-                .collect()[0])
-        total += int(part["s"] or 0)
-        n_values += int(part["n"] or 0)
+        for r in chunk_job(spark, out_dir, [column], partials,
+                           "s bigint, n bigint",
+                           files=keep_sets(m, dec)).collect():
+            total += r["s"]
+            n_values += r["n"]
     out["n_values"] = n_values
     out["sum"] = total if n_values else None
     out["avg"] = (total / n_values) if n_values else None
@@ -284,48 +280,40 @@ def encoded_strlen_stats(spark, out_dir: str, columns: list[str]) -> DataFrame:
     ``sum(octet_length(text))`` over a 100 TB store reads the same chunk
     payloads a decode would but skips the two scatter passes AND the Arrow
     string build — the dominant costs — and ships back four ints per chunk
-    instead of the chunk's text. Per-chunk partials aggregate JVM-side.
+    instead of the chunk's text. File tasks read the chunks; per-chunk
+    partials aggregate JVM-side.
 
     Returns one row per column: ``(column, n_values, sum_bytes, avg_bytes,
     min_bytes, max_bytes)`` with SQL semantics (nulls excluded; min/max
     null on an all-null column; avg a double)."""
     _require_no_deletes(out_dir, "encoded_strlen_stats")
-    types = column_arrow_types(spark, out_dir)
+    types = column_arrow_types(out_dir, columns)
     for c in columns:
-        if c not in types:
-            raise KeyError(f"column {c!r} not in encoded data")
         if types[c] not in _STRLEN_TYPES:
             raise ValueError(
                 f"octet_length stats are for string/binary columns; "
                 f"column {c!r} is {types[c]}")
-    chunks = _chunks_df(spark, out_dir, list(columns)).select(
-        "column", "codec", "params", "payload")
     out_schema = pa.schema([("column", pa.string()), ("n", pa.int64()),
                             ("s", pa.int64()), ("mn", pa.int64()),
                             ("mx", pa.int64())])
 
-    def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def partials(chunks, _dmask) -> Iterator[pa.RecordBatch]:
         from ..kernel.codecs import decoded_strlens
 
-        for batch in batches:
-            names = batch.column("column").to_pylist()
-            codecs_ = batch.column("codec").to_pylist()
-            params_ = batch.column("params").to_pylist()
-            payloads = batch.column("payload")
-            rows = []
-            for i in range(batch.num_rows):
-                lens, _ = decoded_strlens(
-                    {"codec": codecs_[i], "params": json.loads(params_[i]),
-                     "payload": payloads[i].as_py()})
+        rows = []
+        for _, cols in chunks:
+            for col, enc in cols.items():
+                lens, _ = decoded_strlens(enc)
                 n = int(len(lens))
-                rows.append({"column": names[i], "n": n,
+                rows.append({"column": col, "n": n,
                              "s": int(lens.sum()) if n else 0,
                              "mn": int(lens.min()) if n else None,
                              "mx": int(lens.max()) if n else None})
-            yield pa.RecordBatch.from_pylist(rows, schema=out_schema)
+        yield pa.RecordBatch.from_pylist(rows, schema=out_schema)
 
-    per_chunk = chunks.mapInArrow(
-        task, "column string, n bigint, s bigint, mn bigint, mx bigint")
+    per_chunk = chunk_job(
+        spark, out_dir, list(columns), partials,
+        "column string, n bigint, s bigint, mn bigint, mx bigint")
     return (
         per_chunk.groupBy("column")
         .agg(F.sum("n").alias("n_values"),
@@ -369,12 +357,13 @@ def encoded_topk(spark, out_dir: str, column: str, k: int,
     and float total-order keys are monotone, so the same comparison is
     safe for every zoned type. On a store clustered by ``column`` a top-k
     touches O(k / rows-per-chunk) chunks at any table size; the threshold
-    scan itself is a distributed sort-limit over chunk METADATA (never a
-    single-reducer window, never a payload read).
+    scan itself is a driver-side sort of the planner's chunk METADATA
+    (never a payload read, no Spark job).
 
-    Survivor chunks reduce to ≤k rows each inside the scan task (per-chunk
-    top-k), then one global sort-limit — TakeOrdered over ≤ k·candidates
-    rows. Float ordering follows Spark/DuckDB semantics (NaN greatest).
+    Survivor chunks reduce to ≤k rows each inside their file task
+    (per-chunk top-k), then one global sort-limit — TakeOrdered over ≤
+    k·candidates rows. Float ordering follows Spark/DuckDB semantics (NaN
+    greatest).
 
     Returns a one-column DataFrame ``val`` with the k extreme values
     (multiset-deterministic under ties). ``observer``, if given, is filled
@@ -385,75 +374,58 @@ def encoded_topk(spark, out_dir: str, column: str, k: int,
         raise ValueError("k must be in [1, 100000]; larger top-k should "
                          "go through decode_job + a regular sort")
     k = int(k)
-    types = column_arrow_types(spark, out_dir)
-    if column not in types:
-        raise KeyError(f"column {column!r} not in encoded data")
-    arrow_name = types[column]
-    meta = _chunks_df(spark, out_dir, [column])
-    has_zones = "zmin_long" in meta.columns
-    if has_zones:
+    arrow_name = column_arrow_types(out_dir, [column])[column]
+    m, missing = store_meta(out_dir, [column], ("params",))
+    cand = range(len(m["pid"]))
+    if "zmin_long" not in missing:
         # all-null chunks (null zones) contribute no values: always pruned
-        zoned = meta.filter(F.col("zmin_long").isNotNull())
-        guard = zoned.select(
-            "n_rows", "zmin_long", "zmax_long",
-            F.col("params").contains('"n_total"').alias("has_nulls"))
-        edge = "zmin_long" if not ascending else "zmax_long"
-        order = (F.col(edge).desc() if not ascending else F.col(edge).asc())
-        head = guard.select(edge, "n_rows", "has_nulls") \
-            .orderBy(order).limit(k).collect()
+        zmin, zmax = m["zmin_long"], m["zmax_long"]
+        cand = [i for i in cand if zmin[i] is not None]
+        edge = zmax if ascending else zmin
         thresh, cum = None, 0
-        for r in head:
-            cum += 1 if r["has_nulls"] else r["n_rows"]
+        for i in sorted(cand, key=edge.__getitem__, reverse=not ascending):
+            cum += 1 if '"n_total"' in m["params"][i] else m["n_rows"][i]
             if cum >= k:
-                thresh = r[edge]
+                thresh = edge[i]
                 break
-        if thresh is None:
-            cand = zoned  # fewer guaranteed values than k: no safe cutoff
-        elif ascending:
-            cand = zoned.filter(F.col("zmin_long") <= F.lit(thresh))
-        else:
-            cand = zoned.filter(F.col("zmax_long") >= F.lit(thresh))
-    else:
-        cand = meta
+        # fewer guaranteed values than k: no safe cutoff
+        if thresh is not None and ascending:
+            cand = [i for i in cand if zmin[i] <= thresh]
+        elif thresh is not None:
+            cand = [i for i in cand if zmax[i] >= thresh]
     if observer is not None:
-        observer["n_chunks_total"] = meta.count()
-        observer["n_chunks_decoded"] = cand.count()
+        observer["n_chunks_total"] = len(m["pid"])
+        observer["n_chunks_decoded"] = len(cand)
 
     spark_t = _spark_type(arrow_name)
     is_float = arrow_name in ("float", "double")
     asc = bool(ascending)
-    kk = k
 
-    def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        import numpy as np
+    def partials(chunks, _dmask) -> Iterator[pa.RecordBatch]:
         import pyarrow.compute as pc
 
         from ..kernel.codecs import decode_column
 
-        for batch in batches:
-            for row in batch.to_pylist():
-                arr = decode_column(
-                    {"codec": row["codec"], "params": json.loads(row["params"]),
-                     "payload": row["payload"]}).drop_null()
-                if len(arr) == 0:
-                    continue
-                if is_float:
-                    v = arr.to_numpy(zero_copy_only=False)
-                    nan = v[np.isnan(v)]
-                    fin = np.sort(v[~np.isnan(v)])
-                    # Spark/DuckDB order: NaN greatest
-                    full = np.concatenate([fin, nan])
-                    top = full[:kk] if asc else full[::-1][:kk]
-                    out = pa.array(top, type=arr.type)
-                else:
-                    idx = pc.array_sort_indices(
-                        arr, order="ascending" if asc else "descending")
-                    out = arr.take(idx[:kk])
-                yield pa.RecordBatch.from_arrays([_spark_us(out)],
-                                                 names=["val"])
+        for _, cols in chunks:
+            arr = decode_column(cols[column]).drop_null()
+            if len(arr) == 0:
+                continue
+            if is_float:
+                v = arr.to_numpy(zero_copy_only=False)
+                nan = v[np.isnan(v)]
+                fin = np.sort(v[~np.isnan(v)])
+                # Spark/DuckDB order: NaN greatest
+                full = np.concatenate([fin, nan])
+                top = full[:k] if asc else full[::-1][:k]
+                out = pa.array(top, type=arr.type)
+            else:
+                idx = pc.array_sort_indices(
+                    arr, order="ascending" if asc else "descending")
+                out = arr.take(idx[:k])
+            yield pa.RecordBatch.from_arrays([_spark_us(out)], names=["val"])
 
-    vals = cand.select("codec", "params", "payload") \
-        .mapInArrow(task, f"val {spark_t}")
+    vals = chunk_job(spark, out_dir, [column], partials, f"val {spark_t}",
+                     files=keep_sets(m, cand))
     order = F.col("val").asc() if asc else F.col("val").desc()
     return vals.orderBy(order).limit(k)
 
@@ -467,7 +439,7 @@ def encoded_distinct(spark, out_dir: str, column: str,
     per-chunk dictionary is built by factorizing the chunk's own non-null
     values, so it IS the chunk's distinct set — the (much larger) code
     array stays encoded and unread. Every other codec decodes its chunk
-    and reduces to a per-chunk ``unique()`` INSIDE the scan task. Either
+    and reduces to a per-chunk ``unique()`` INSIDE its file task. Either
     way the one shuffle moves per-chunk distinct sets (NDV-scale), never
     rows — on a categorical 100 TB column this is a near-metadata query,
     and on any column the shuffle is bounded by sum of chunk NDVs.
@@ -475,195 +447,121 @@ def encoded_distinct(spark, out_dir: str, column: str,
     Null semantics match SQL DISTINCT: a null row appears iff some chunk
     holds a null (the encode appends validity bits only then, so presence
     is read from ``params`` without decoding). ``observer`` reports
-    ``n_dict_chunks`` / ``n_decoded_chunks`` for pruning assertions.
+    ``n_dict_chunks`` / ``n_decoded_chunks`` for pruning assertions,
+    counted from the planner's metadata read.
     """
     _require_no_deletes(out_dir, 'encoded_distinct')
-    types = column_arrow_types(spark, out_dir)
-    if column not in types:
-        raise KeyError(f"column {column!r} not in encoded data")
-    spark_t = _spark_type(types[column])
-    meta = _chunks_df(spark, out_dir, [column])
+    spark_t = _spark_type(column_arrow_types(out_dir, [column])[column])
     if observer is not None:
-        by_codec = {r["codec"]: r["n"] for r in
-                    meta.groupBy("codec").agg(F.count("*").alias("n")).collect()}
-        observer["n_dict_chunks"] = by_codec.get("str_dict", 0)
-        observer["n_decoded_chunks"] = sum(
-            n for c, n in by_codec.items() if c != "str_dict")
+        codecs = store_meta(out_dir, [column])[0]["codec"]
+        observer["n_dict_chunks"] = codecs.count("str_dict")
+        observer["n_decoded_chunks"] = len(codecs) - codecs.count("str_dict")
 
-    def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def partials(chunks, _dmask) -> Iterator[pa.RecordBatch]:
         from ..kernel.codecs import (_bytes_to_arrow, _split_sections,
                                      decode_bytes_like, decode_column,
                                      parse_arrow_type)
 
-        for batch in batches:
-            for row in batch.to_pylist():
-                p = json.loads(row["params"])
-                has_null = "n_total" in p
-                if row["codec"] == "str_dict":
-                    payload = row["payload"]
-                    if has_null:  # strip appended validity bits
-                        payload = payload[: p["validity_len"]]
-                    _, up = _split_sections(p, payload)
-                    buf, off = decode_bytes_like(
-                        {"codec": p["values"]["codec"],
-                         "params": p["values"]["params"], "payload": up},
-                        kind="str")
-                    out = _bytes_to_arrow(
-                        buf, off, parse_arrow_type(p["arrow_type"]), None)
-                    if has_null:
-                        out = pa.concat_arrays(
-                            [out, pa.nulls(1, type=out.type)])
-                else:
-                    out = decode_column(
-                        {"codec": row["codec"], "params": p,
-                         "payload": row["payload"]}).unique()
-                yield pa.RecordBatch.from_arrays([_spark_us(out)],
-                                                 names=["val"])
+        for _, cols in chunks:
+            enc = cols[column]
+            p = enc["params"]
+            has_null = "n_total" in p
+            if enc["codec"] == "str_dict":
+                payload = enc["payload"]
+                if has_null:  # strip appended validity bits
+                    payload = payload[: p["validity_len"]]
+                _, up = _split_sections(p, payload)
+                buf, off = decode_bytes_like(
+                    {"codec": p["values"]["codec"],
+                     "params": p["values"]["params"], "payload": up},
+                    kind="str")
+                out = _bytes_to_arrow(
+                    buf, off, parse_arrow_type(p["arrow_type"]), None)
+                if has_null:
+                    out = pa.concat_arrays([out, pa.nulls(1, type=out.type)])
+            else:
+                out = decode_column(enc).unique()
+            yield pa.RecordBatch.from_arrays([_spark_us(out)], names=["val"])
 
-    vals = meta.select("codec", "params", "payload") \
-        .mapInArrow(task, f"val {spark_t}")
-    return vals.distinct()
+    return chunk_job(spark, out_dir, [column], partials,
+                     f"val {spark_t}").distinct()
+
+
+def _ndv(out_dirs: "list[str]", columns: list[str], op: str) -> dict:
+    """``{column: estimated_ndv}`` from the HLL sketches of every chunk of
+    one store or a shard family, merged on the driver (register max is
+    associative, so sketches from different stores fold exactly like
+    chunks of one store)."""
+    from ..kernel.hll import hll_estimate, hll_merge
+
+    seen: dict[str, tuple[str, str]] = {}  # column -> (type, first store)
+    blobs: dict[str, list] = {}
+    for d in out_dirs:
+        _require_no_deletes(d, op)
+        types = column_arrow_types(d, columns)
+        for c in columns:
+            if c in seen and seen[c][0] != types[c]:
+                raise TypeError(
+                    f"column {c!r} is {seen[c][0]} in {seen[c][1]} but "
+                    f"{types[c]} in {d}; NDV sketches only merge within "
+                    f"one type — cast and re-encode the drifted store")
+            seen.setdefault(c, (types[c], d))
+        m, missing = store_meta(d, columns, ("hll",))
+        if "hll" in missing:
+            raise ValueError(f"store {d} has no HLL sketches "
+                             f"(pre-sketch encode)")
+        for col, blob in zip(m["column"], m["hll"]):
+            blobs.setdefault(col, []).append(blob)
+    result: dict[str, int] = {}
+    for c in columns:
+        merged = hll_merge(blobs.get(c, []))  # None if any chunk lacks one
+        if merged is None:
+            raise ValueError(
+                f"column {c!r} has chunks without HLL sketches "
+                f"({seen[c][0]}; hll-disabled or pre-sketch encode) — "
+                f"estimate would under-count; decode instead")
+        result[c] = hll_estimate(merged)
+    return result
 
 
 def encoded_ndv(spark, out_dir: str, columns: list[str]) -> dict:
     """Approximate distinct counts from per-chunk HyperLogLog sketches —
-    a metadata-only query: no payload byte is read or decoded.
+    a metadata-only query: no payload byte is read or decoded, and no
+    Spark job starts.
 
     HLL merge is an elementwise register max (associative/commutative),
-    so the plan is a tree reduction: each scan partition folds its chunks'
-    ~1 KiB blobs into one partial per column inside ``mapInArrow``, the
-    driver merges the ≤ #partitions partials and runs the bias-corrected
-    estimator (``kernel.hll.hll_estimate``, ~3.2% standard error at
-    p=10). At 100 TB that's KBs to the driver regardless of table size —
-    the exact shape warehouse NDV statistics use.
+    so the driver folds the ~1 KiB blobs of the planner's metadata read
+    per column and runs the bias-corrected estimator
+    (``kernel.hll.hll_estimate``, ~3.2% standard error at p=10) — the
+    exact shape warehouse NDV statistics use.
 
     Returns ``{column: estimated_ndv}`` (non-null values). Raises if any
     requested column has a chunk without a sketch (hll-disabled encode,
     unsupported type, pre-sketch store): a partial merge would silently
     under-count, which is worse than telling the caller to decode.
     """
-    _require_no_deletes(out_dir, 'encoded_ndv')
-    types = column_arrow_types(spark, out_dir)
-    for c in columns:
-        if c not in types:
-            raise KeyError(f"column {c!r} not in encoded data")
-    meta = _chunks_df(spark, out_dir, list(columns))
-    if "hll" not in meta.columns:
-        raise ValueError("store has no HLL sketches (pre-sketch encode)")
-    return _ndv_from_src(meta.select("column", "hll"), columns, types)
-
-
-def _ndv_from_src(src: DataFrame, columns: list[str],
-                  types: dict[str, str]) -> dict:
-    """Tree-reduce (column, hll) sketch rows into per-column NDV
-    estimates — the shared tail of ``encoded_ndv`` (one store) and
-    ``stores_ndv`` (a shard family; HLL merge is associative, so sketches
-    from different stores fold exactly like chunks of one store)."""
-    from ..kernel.hll import hll_estimate, hll_merge
-
-    # schema must match the DDL exactly (large_binary would crash the
-    # JVM ArrowColumnVector against a declared 'binary')
-    out_schema = pa.schema([("column", pa.string()), ("hll", pa.binary()),
-                            ("missing", pa.bool_())])
-
-    def partial_merge(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        acc: dict[str, bytes | None] = {}
-        missing: set[str] = set()
-        for batch in batches:
-            for col_s, blob_s in zip(batch.column("column"),
-                                     batch.column("hll")):
-                col = col_s.as_py()
-                blob = blob_s.as_py()
-                if blob is None:
-                    missing.add(col)
-                    continue
-                prev = acc.get(col)
-                acc[col] = blob if prev is None else hll_merge([prev, blob])
-        rows = [{"column": c, "hll": b, "missing": c in missing}
-                for c, b in acc.items()]
-        rows += [{"column": c, "hll": None, "missing": True}
-                 for c in missing if c not in acc]
-        yield pa.RecordBatch.from_pylist(rows, schema=out_schema)
-
-    partials = src.mapInArrow(
-        partial_merge, "column string, hll binary, missing boolean").collect()
-    merged: dict[str, bytes | None] = {}
-    incomplete: set[str] = set()
-    for r in partials:
-        if r["missing"]:
-            incomplete.add(r["column"])
-        if r["hll"] is not None:
-            prev = merged.get(r["column"])
-            merged[r["column"]] = (r["hll"] if prev is None
-                                   else hll_merge([prev, r["hll"]]))
-    result: dict[str, int] = {}
-    for c in columns:
-        if c in incomplete or merged.get(c) is None:
-            raise ValueError(
-                f"column {c!r} has chunks without HLL sketches "
-                f"({types[c]}; hll-disabled or pre-sketch encode) — "
-                f"estimate would under-count; decode instead")
-        result[c] = hll_estimate(merged[c])
-    return result
-
-
-def global_cumsum(df: DataFrame, val_col: str, order_col: str,
-                  num_shards: int | None = None,
-                  out_col: str = "cum_before") -> DataFrame:
-    """``out_col`` = exact sum of ``val_col`` over all rows strictly before
-    this one in ``order_col`` order (first row gets 0), plus a ``shard``
-    column (the range-partition id, kept for shard-local consumers).
-
-    ``order_col`` must be unique (ties could split across range
-    partitions, making "strictly before" ambiguous). Nulls in ``val_col``
-    count as 0. One range shuffle + one #shards-row collect."""
-    spark = df.sparkSession
-    num_shards = num_shards or spark.sparkContext.defaultParallelism
-    d = (df.repartitionByRange(num_shards, F.col(order_col))
-           .withColumn("shard", F.spark_partition_id()))
-    w = (Window.partitionBy("shard").orderBy(order_col)
-         .rowsBetween(Window.unboundedPreceding, -1))
-    # double, not long: fractional weights (e.g. quantile-sketch n/k) must
-    # not truncate; integer weights stay exact far past any token count
-    # (2^53) and the final cast below restores a long when safe
-    val = F.coalesce(F.col(val_col).cast("double"), F.lit(0.0))
-    d = d.withColumn("_local_before",
-                     F.coalesce(F.sum(val).over(w), F.lit(0.0)))
-    # per-shard totals: #shards rows — metadata-scale by construction.
-    # RangePartitioner ids are ordered by key range, so a running sum over
-    # ids IS the global prefix at each shard boundary.
-    totals = (d.groupBy("shard").agg(F.sum(val).alias("_tot"))
-              .orderBy("shard").collect())
-    offsets, run = [], 0.0
-    for r in totals:
-        offsets.append((r["shard"], run))
-        run += r["_tot"] or 0.0
-    off = F.broadcast(
-        spark.createDataFrame(offsets, "shard int, _shard_offset double"))
-    return (
-        d.join(off, "shard")
-        .withColumn(out_col, (F.col("_local_before") + F.col("_shard_offset")))
-        .drop("_local_before", "_shard_offset")
-    )
+    return _ndv([out_dir], columns, "encoded_ndv")
 
 
 def encoded_quantiles(spark, out_dir: str, column: str, qs: list[float],
-                      num_shards: int | None = None,
                       observer: dict | None = None) -> DataFrame:
     """Percentiles of a numeric column from per-chunk quantile sketches —
-    payload-free: only the narrow ``qsketch`` metadata column is read.
+    payload-free: only the ``qsketch`` metadata column (and the narrow
+    planner columns) is read, and the merge runs on the driver without a
+    Spark job.
 
     Each chunk stores a sorted equi-spaced ``k``-point sample of its own
     values (``kernel.qsample``), so the store-wide quantile is a weighted
     rank selection: every stored point carries weight ``n_chunk/k``, the
-    points sort globally by value (a range shuffle over #chunks×k narrow
-    rows — distributed, never one task), an exact prefix sum of weights
-    comes from ``global_cumsum``, and the answer for
-    target rank ``t = q·N`` is the lowest value whose weight interval
-    covers ``t``. Rank error is bounded by 2·N/k total (equi-depth bound:
-    one sample spacing plus one weight interval);
-    when every chunk has ≤ k values the sketches ARE the sorted data and
-    the result is EXACT — the driver gate pins that case against DuckDB.
+    #chunks×k points (k = 256 by default: 256k points, a few MB of numpy
+    arrays, at 1k chunks) sort by value with numpy, a prefix sum of their
+    weights gives
+    each point's rank interval, and the answer for target rank ``t = q·N``
+    is the value whose interval covers ``t``. Rank error is bounded by
+    2·N/k total (equi-depth bound: one sample spacing plus one weight
+    interval); when every chunk has ≤ k values the sketches ARE the sorted
+    data and the result is EXACT — the driver gate pins that case against
+    DuckDB.
 
     N (non-null count) comes exactly from chunk params metadata, not from
     summing float weights. Returns a DataFrame (q double, val <coltype>);
@@ -675,77 +573,63 @@ def encoded_quantiles(spark, out_dir: str, column: str, qs: list[float],
     _require_no_deletes(out_dir, 'encoded_quantiles')
     if not qs or not all(0.0 <= q <= 1.0 for q in qs):
         raise ValueError(f"qs must be fractions in [0, 1], got {qs!r}")
-    types = column_arrow_types(spark, out_dir)
-    if column not in types:
-        raise KeyError(f"column {column!r} not in encoded data")
-    arrow_name = types[column]
+    arrow_name = column_arrow_types(out_dir, [column])[column]
     is_int = arrow_name in _EXACT_ZONE_TYPES or arrow_name.startswith("timestamp[")
     if not is_int and arrow_name not in ("float", "double"):
         raise ValueError(
             f"quantile sketches cover numeric/timestamp columns; {column!r} "
             f"is {arrow_name}")
-    meta = _chunks_df(spark, out_dir, [column])
-    if "qsketch" not in meta.columns:
+    m, missing = store_meta(out_dir, [column], ("params", "qsketch"))
+    if "qsketch" in missing:
         raise ValueError("store has no quantile sketches (pre-qsample encode)")
     # a chunk with non-null values (non-null zones) must carry a sketch
-    n_bad = meta.filter(F.col("qsketch").isNull()
-                        & F.col("zmin_long").isNotNull()).count()
+    n_bad = sum(1 for blob, lo in zip(m["qsketch"], m["zmin_long"])
+                if blob is None and lo is not None)
     if n_bad:
         raise ValueError(
             f"{n_bad} chunks of {column!r} lack quantile sketches "
             "(qsample-disabled encode) — merged ranks would be wrong; "
             "decode instead")
-    n_vals = F.get_json_object("params", "$.n").cast("long")
-    n_total = F.get_json_object("params", "$.n_total").cast("long")
-    stats = meta.agg(
-        (F.sum("n_rows") - F.sum(F.coalesce(n_total - n_vals, F.lit(0))))
-        .alias("n")).collect()[0]
-    n_values = int(stats["n"] or 0)
-    val_t = "bigint" if is_int else "double"
+    n_values = sum(m["n_rows"]) - sum(map(_n_nulls, m["params"]))
+    from ..kernel.qsample import qsample_parse
 
-    def points(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ..kernel.qsample import qsample_parse
-
-        for batch in batches:
-            vals, ws, fulls = [], [], []
-            for blob_s in batch.column("qsketch"):
-                blob = blob_s.as_py()
-                if blob is None:
-                    continue  # all-null chunk
-                _, n, pts = qsample_parse(blob)
-                vals.extend(pts.tolist())
-                w = n / len(pts)
-                ws.extend([w] * len(pts))
-                fulls.extend([len(pts) == n] * len(pts))
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(vals, type=pa.int64() if is_int else pa.float64()),
-                 pa.array(ws, type=pa.float64()),
-                 pa.array(fulls, type=pa.bool_())],
-                names=["val", "w", "full"])
-
-    pts = meta.select("qsketch").mapInArrow(
-        points, f"val {val_t}, w double, full boolean")
+    pts, ws, exact = [], [], True
+    for blob in m["qsketch"]:
+        if blob is None:
+            continue  # all-null chunk
+        _, n, p = qsample_parse(blob)
+        pts.append(p)
+        ws.append(np.full(len(p), n / len(p)))
+        exact &= len(p) == n
     if observer is not None:
         observer["n_values"] = n_values
-        observer["exact"] = bool(
-            pts.agg(F.min("full")).collect()[0][0]) if n_values else True
+        observer["exact"] = exact
+    val_t = pa.int64() if is_int else pa.float64()
+    schema = pa.schema([("q", pa.float64()), ("val", val_t)])
     if n_values == 0:
-        return spark.createDataFrame(
-            [(float(q), None) for q in sorted(qs)], f"q double, val {val_t}")
-    # exact global weighted prefix sums by value (ties are interchangeable
-    # for rank selection: tied rows share the value the rank resolves to)
-    cum = global_cumsum(pts.select("val", "w"), "w", "val", num_shards)
-    targets = spark.createDataFrame(
-        [(float(q), max(q * n_values, 1e-9)) for q in sorted(set(qs))],
-        "q double, t double")
-    hit = (
-        cum.crossJoin(F.broadcast(targets))
-        .where((F.col("cum_before") < F.col("t"))
-               & (F.col("t") <= F.col("cum_before") + F.col("w")))
-        .groupBy("q").agg(F.min("val").alias("val"))
-        .orderBy("q")
-    )
-    return hit
+        return _local_df(spark, schema, [(float(q), None) for q in sorted(qs)])
+    vals = np.concatenate(pts)
+    order = np.argsort(vals, kind="stable")  # NaN sorts last (greatest)
+    vals = vals[order]
+    cum = np.cumsum(np.concatenate(ws)[order])
+    # the point whose rank interval (cum - w, cum] covers each target rank
+    # (ties are interchangeable: tied points share the value)
+    targets = sorted(set(float(q) for q in qs))
+    hit = np.searchsorted(cum, [max(q * n_values, 1e-9) for q in targets])
+    # with weights n/k not dyadic (k not a power of two) the summed total
+    # can round below N, past which t = N would find no point
+    hit = np.minimum(hit, len(vals) - 1)
+    return _local_df(spark, schema,
+                     [(q, vals[i].item()) for q, i in zip(targets, hit)])
+
+
+_PROFILE_SCHEMA = pa.schema(
+    [("column", pa.string()), ("arrow_type", pa.string()),
+     ("n_rows", pa.int64()), ("n_nulls", pa.int64()),
+     ("n_chunks", pa.int64()), ("codecs", pa.string()),
+     ("raw_bytes", pa.int64()), ("enc_bytes", pa.int64()),
+     ("ratio_x100", pa.int64()), ("zmin_long", pa.int64()),
+     ("zmax_long", pa.int64())])
 
 
 def encoded_profile(spark, out_dir: str,
@@ -754,8 +638,8 @@ def encoded_profile(spark, out_dir: str,
     ``DESCRIBE``/profiling pass a pipeline runs before deciding layouts,
     filters, and codecs, answered without reading a payload byte.
 
-    One payload-free scan of the chunk table (parquet prunes to the
-    narrow metadata columns) aggregates per column:
+    One driver-side fold of the planner's metadata read (no Spark job)
+    gives per column:
 
       n_rows, n_nulls   exact (null counts come from each chunk's params:
                         ``n_total`` is written only for null-bearing
@@ -770,29 +654,41 @@ def encoded_profile(spark, out_dir: str,
     metadata-light, so the full profile of a 100 TB store is seconds of
     footer reads."""
     _require_no_deletes(out_dir, 'encoded_profile')
-    types = column_arrow_types(spark, out_dir)
-    for c in columns or []:
-        if c not in types:
-            raise KeyError(f"column {c!r} not in encoded data")
-    meta = _chunks_df(spark, out_dir, list(columns) if columns else None)
-    has_zones = "zmin_long" in meta.columns
-    n_vals = F.get_json_object("params", "$.n").cast("long")
-    n_total = F.get_json_object("params", "$.n_total").cast("long")
-    agg = [
-        F.first(F.get_json_object("params", "$.arrow_type")).alias("arrow_type"),
-        F.sum("n_rows").alias("n_rows"),
-        F.sum(F.coalesce(n_total - n_vals, F.lit(0))).alias("n_nulls"),
-        F.count("*").alias("n_chunks"),
-        F.concat_ws(",", F.array_sort(F.collect_set("codec"))).alias("codecs"),
-        F.sum("raw_bytes").alias("raw_bytes"),
-        F.sum("enc_bytes").alias("enc_bytes"),
-        (F.sum("raw_bytes") * 100 / F.greatest(F.sum("enc_bytes"), F.lit(1)))
-        .cast("bigint").alias("ratio_x100"),
-    ]
-    if has_zones:
-        agg += [F.min("zmin_long").alias("zmin_long"),
-                F.max("zmax_long").alias("zmax_long")]
-    return meta.groupBy("column").agg(*agg).orderBy("column")
+    column_arrow_types(out_dir, columns)
+    m, missing = store_meta(out_dir, columns or None, ("raw_bytes", "params"))
+    per: dict = {}
+    for col, codec, n, enc, raw, lo, hi, params in zip(
+            m["column"], m["codec"], m["n_rows"], m["enc_bytes"],
+            m["raw_bytes"], m["zmin_long"], m["zmax_long"], m["params"]):
+        if col not in per:
+            per[col] = [json.loads(params).get("arrow_type"), 0, 0, 0, set(),
+                        None, None, None, None]
+        acc = per[col]
+        acc[1] += n
+        acc[2] += _n_nulls(params)
+        acc[3] += 1
+        acc[4].add(codec)
+        acc[5], acc[6] = _fold(add, acc[5], raw), _fold(add, acc[6], enc)
+        acc[7], acc[8] = _fold(min, acc[7], lo), _fold(max, acc[8], hi)
+    rows = []
+    for col in sorted(per):
+        atype, n, nulls, chunks, codecs, raw, enc, lo, hi = per[col]
+        # Spark's arithmetic: double division, then truncation to bigint
+        ratio = None if raw is None else int(
+            float(raw * 100) / float(max(enc or 1, 1)))
+        rows.append((col, atype, n, nulls, chunks,
+                     ",".join(sorted(c for c in codecs if c is not None)),
+                     raw, enc, ratio, lo, hi))
+    df = _local_df(spark, _PROFILE_SCHEMA, rows)
+    # a store written before zone maps reports no zone columns
+    return df.drop("zmin_long", "zmax_long") if "zmin_long" in missing else df
+
+
+_ADVICE_SCHEMA = pa.schema(
+    [("column", pa.string()), ("n_chunks", pa.int64()),
+     ("span_frac_x1000", pa.int64()),
+     ("est_chunks_scanned_per_point", pa.int64()),
+     ("clustered", pa.bool_())])
 
 
 def advise_layout(spark, out_dir: str,
@@ -813,61 +709,49 @@ def advise_layout(spark, out_dir: str,
     float zones total-order keys, so the fraction is a faithful proxy for
     exactly the pruning ``decode_filtered`` would achieve.
 
-    One payload-free metadata aggregation (same scan shape as
-    ``encoded_profile``): seconds against a 100 TB store. Constant
-    columns (zero global range) prune perfectly by equality already and
-    report span 0 / clustered true."""
+    One driver-side fold of the planner's metadata read (same read as
+    ``encoded_profile``, no Spark job): seconds against a 100 TB store.
+    Widths and ranges are exact Python ints, so zone keys spanning more
+    than the int64 range cannot overflow. Constant columns (zero global
+    range) prune perfectly by equality already and report span 0 /
+    clustered true."""
     _require_no_deletes(out_dir, 'advise_layout')
-    types = column_arrow_types(spark, out_dir)
-    for c in columns or []:
-        if c not in types:
-            raise KeyError(f"column {c!r} not in encoded data")
-    meta = _chunks_df(spark, out_dir, list(columns) if columns else None)
-    if "zmin_long" not in meta.columns:
+    column_arrow_types(out_dir, columns)
+    m, missing = store_meta(out_dir, columns or None)
+    if "zmin_long" in missing:
         raise ValueError("store has no zone maps (pre-zone encode); "
                          "advise_layout reads zone keys")
-    # columns whose chunks carry no zone keys can't be advised — drop
-    # their rows rather than reporting a fake perfect score
-    meta = meta.where(F.col("zmin_long").isNotNull()
-                      & F.col("zmax_long").isNotNull())
-    rng = F.greatest(F.max("zmax_long") - F.min("zmin_long"), F.lit(0))
-    span = (F.avg(F.col("zmax_long") - F.col("zmin_long")) * 1000
-            / F.greatest(rng, F.lit(1))).cast("bigint")
-    per = meta.groupBy("column").agg(
-        F.count("*").alias("n_chunks"),
-        F.when(rng == 0, F.lit(0)).otherwise(span).alias("span_frac_x1000"),
-    )
-    ideal = F.lit(1000) / F.col("n_chunks")
-    return (per
-            .withColumn("est_chunks_scanned_per_point",
-                        F.greatest(
-                            (F.col("span_frac_x1000") * F.col("n_chunks")
-                             / 1000).cast("bigint"), F.lit(1)))
-            .withColumn("clustered",
-                        F.col("span_frac_x1000") <= 4 * ideal)
-            .orderBy("span_frac_x1000", "column"))
+    per: dict = {}  # column -> [n_chunks, sum of widths, zmin, zmax]
+    for col, lo, hi in zip(m["column"], m["zmin_long"], m["zmax_long"]):
+        # columns whose chunks carry no zone keys can't be advised — skip
+        # their rows rather than reporting a fake perfect score
+        if lo is None or hi is None:
+            continue
+        acc = per.setdefault(col, [0, 0.0, lo, hi])
+        acc[0] += 1
+        acc[1] += float(hi - lo)  # Spark's avg sums doubles
+        acc[2], acc[3] = min(acc[2], lo), max(acc[3], hi)
+    rows = []
+    for col, (n, widths, lo, hi) in per.items():
+        rng = max(hi - lo, 0)
+        span = 0 if rng == 0 else int(widths / n * 1000 / max(rng, 1))
+        rows.append((col, n, span, max(int(span * n / 1000), 1),
+                     span <= 4 * (1000 / n)))
+    rows.sort(key=lambda r: (r[2], r[0]))
+    return _local_df(spark, _ADVICE_SCHEMA, rows)
 
 
 def stores_column_stats(spark, out_dirs: "list[str]",
                         columns: list[str]) -> DataFrame:
     """``encoded_column_stats`` over a FAMILY of shard stores: per-store
-    metadata aggregates (payload-free) re-reduced into one row per
-    column — sum of row counts, min of zone minima, max of zone maxima.
-    Exactness follows from each store's own guarantee (exact int/ts
-    zones); a shard missing the column, lacking zones, or carrying
+    metadata folds (payload-free, no Spark job) re-reduced into one row
+    per column — sum of row counts, min of zone minima, max of zone
+    maxima. Exactness follows from each store's own guarantee (exact
+    int/ts zones); a shard missing the column, lacking zones, or carrying
     deletes raises exactly as the single-store form does."""
     if not out_dirs:
         raise ValueError("stores_column_stats needs at least one store")
-    out = encoded_column_stats(spark, out_dirs[0], columns)
-    for d in out_dirs[1:]:
-        out = out.unionByName(encoded_column_stats(spark, d, columns))
-    return (
-        out.groupBy("column")
-        .agg(F.sum("n_rows").alias("n_rows"),
-             F.min("min_long").alias("min_long"),
-             F.max("max_long").alias("max_long"))
-        .orderBy("column")
-    )
+    return _zone_stats(spark, out_dirs, columns)
 
 
 def stores_column_minmax(spark, out_dirs: "list[str]", column: str) -> dict:
@@ -892,40 +776,18 @@ def stores_column_minmax(spark, out_dirs: "list[str]", column: str) -> dict:
 
 def stores_ndv(spark, out_dirs: "list[str]", columns: list[str]) -> dict:
     """Whole-family approximate distinct counts from sketches only: every
-    shard's per-chunk HLL blobs union into one metadata frame and
-    tree-reduce exactly like chunks of a single store (register max is
-    associative across stores). Values repeated across shards — the same
-    url re-crawled on many days — count ONCE, matching
-    ``COUNT(DISTINCT)`` over the unioned family: that's HLL's set-union
-    semantics, not an assumption of shard disjointness. No payload byte
-    is read anywhere. Shards must agree on the column's type (a drifted
-    shard hashes the same logical value differently, which would
-    over-count) and every chunk must carry a sketch."""
+    shard's per-chunk HLL blobs merge on the driver exactly like chunks of
+    a single store (register max is associative across stores). Values
+    repeated across shards — the same url re-crawled on many days — count
+    ONCE, matching ``COUNT(DISTINCT)`` over the unioned family: that's
+    HLL's set-union semantics, not an assumption of shard disjointness.
+    No payload byte is read anywhere, and no Spark job starts. Shards must
+    agree on the column's type (a drifted shard hashes the same logical
+    value differently, which would over-count) and every chunk must carry
+    a sketch."""
     if not out_dirs:
         raise ValueError("stores_ndv needs at least one store")
-    seen: dict[str, tuple[str, str]] = {}
-    metas = []
-    for d in out_dirs:
-        _require_no_deletes(d, 'stores_ndv')
-        types = column_arrow_types(spark, d)
-        for c in columns:
-            if c not in types:
-                raise KeyError(f"column {c!r} not in encoded data at {d}")
-            if c in seen and seen[c][0] != types[c]:
-                raise TypeError(
-                    f"column {c!r} is {seen[c][0]} in {seen[c][1]} but "
-                    f"{types[c]} in {d}; NDV sketches only merge within "
-                    f"one type — cast and re-encode the drifted store")
-            seen.setdefault(c, (types[c], d))
-        meta = _chunks_df(spark, d, list(columns))
-        if "hll" not in meta.columns:
-            raise ValueError(f"store {d} has no HLL sketches "
-                             f"(pre-sketch encode)")
-        metas.append(meta.select("column", "hll"))
-    src = metas[0]
-    for m in metas[1:]:
-        src = src.unionByName(m)
-    return _ndv_from_src(src, columns, {c: t for c, (t, _) in seen.items()})
+    return _ndv(out_dirs, columns, "stores_ndv")
 
 
 def advise_codecs(df: DataFrame, columns: list[str] | None = None,

@@ -155,7 +155,7 @@ def merge_upsert(spark, store: str, source, key_col: str,
             f"{store!r} is mode {mode!r}")
     from .decode import column_arrow_types
 
-    store_cols = sorted(column_arrow_types(spark, store))
+    store_cols = sorted(column_arrow_types(store))
     if sorted(source.columns) != store_cols:
         raise ValueError(
             f"source schema {sorted(source.columns)} != store schema "

@@ -28,57 +28,35 @@ from .encode import canonical_bytes
 def verify_chunks(spark, out_dir: str) -> DataFrame:
     """Per-chunk checksum verification. Returns (pid, chunk_id, column, ok).
 
-    Parallelizes over chunk FILES (one pyarrow read per task) when the
-    store is locally globbable: the check touches exactly the six columns
-    it needs and no payload byte crosses the JVM — ``mapInArrow`` over a
-    JVM parquet scan would ship every chunk column (zones, blooms, HLLs)
-    through the row->Arrow hop because the function is opaque to column
-    pruning. Falls back to the scan path for non-globbable stores."""
-    import glob
-    import os
+    File tasks (``plan.file_tasks_df``) over the store's chunk files, one
+    pyarrow read per file: the check touches exactly the columns it needs
+    and no payload byte crosses the JVM. Raises FileNotFoundError when the
+    store has no chunk file."""
+    from .plan import chunk_files, file_tasks_df, task_files
 
-    _CHECK_DDL = "pid int, chunk_id int, column string, n_rows bigint, ok boolean"
-    _READ = ["pid", "chunk_id", "column", "codec", "params", "payload",
-             "n_rows", "checksum"]
+    read = ["pid", "chunk_id", "column", "codec", "params", "payload",
+            "n_rows", "checksum"]
 
-    def check_rows(rows) -> Iterator[pa.RecordBatch]:
-        out = []
-        for row in rows:
-            arr = decode_column(
-                {"codec": row["codec"], "params": json.loads(row["params"]),
-                 "payload": row["payload"]}
-            )
-            out.append(
-                {"pid": row["pid"], "chunk_id": row["chunk_id"], "column": row["column"],
-                 "n_rows": row["n_rows"], "ok": canonical_bytes(arr) == row["checksum"]}
-            )
-        if out:
-            yield pa.RecordBatch.from_pylist(out, schema=_CHECK_SCHEMA)
+    def check_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        import pyarrow.parquet as pq
 
-    files = sorted(glob.glob(os.path.join(out_dir, "chunks", "*.parquet")))
-    if files:
-        from .encode import file_task_df
+        for path, _ in task_files(batches):
+            out = []
+            for row in pq.read_table(path, columns=read).to_pylist():
+                arr = decode_column(
+                    {"codec": row["codec"], "params": json.loads(row["params"]),
+                     "payload": row["payload"]})
+                out.append(
+                    {"pid": row["pid"], "chunk_id": row["chunk_id"],
+                     "column": row["column"], "n_rows": row["n_rows"],
+                     "ok": canonical_bytes(arr) == row["checksum"]})
+            if out:
+                yield pa.RecordBatch.from_pylist(out, schema=_CHECK_SCHEMA)
 
-        task_df = file_task_df(spark, list(enumerate(files)),
-                               "i int, path string")
-
-        def check_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-            import pyarrow.parquet as _pq
-
-            for batch in batches:
-                for path in batch.column("path").to_pylist():
-                    t = _pq.read_table(path, columns=_READ)
-                    yield from check_rows(t.to_pylist())
-
-        return task_df.mapInArrow(check_files, _CHECK_DDL)
-
-    chunks = spark.read.parquet(f"{out_dir}/chunks")
-
-    def check(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            yield from check_rows(batch.to_pylist())
-
-    return chunks.mapInArrow(check, _CHECK_DDL)
+    files = [(path, None) for _, path in chunk_files(out_dir)]
+    return file_tasks_df(spark, files).mapInArrow(
+        check_files,
+        "pid int, chunk_id int, column string, n_rows bigint, ok boolean")
 
 
 _CHECK_SCHEMA = pa.schema(

@@ -109,7 +109,7 @@ def store_column_types(store: str) -> dict[str, str]:
     FileNotFoundError when the store has no chunk file."""
     from ..jobs.decode import column_arrow_types
 
-    return column_arrow_types(None, store, include_added=True)
+    return column_arrow_types(store, include_added=True)
 
 
 def _store_ddl(col_types: dict[str, str]) -> str:
@@ -655,7 +655,7 @@ def register_stores_view(spark, stores: "list[str]", name: str,
     wanted = ([c.strip() for c in columns.split(",") if c.strip()]
               if columns else None)
     parts = []
-    for s, types in zip(stores, shard_column_types(None, stores, wanted)):
+    for s, types in zip(stores, shard_column_types(stores, wanted)):
         reader = spark.read.format("fsst")
         if wanted is not None:
             have = [c for c in wanted if c in types]

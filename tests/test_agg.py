@@ -362,15 +362,13 @@ def test_histogram_matches_sql_semantics(spark, hist_store):
 
 def test_histogram_metadata_arm_dominates(spark, hist_store):
     docs, out = hist_store
-    from fsst_spark.jobs.decode import _chunks_df
+    from fsst_spark.jobs.plan import store_meta
 
-    z = (_chunks_df(spark, out, ["n"])
-         .select("n_rows", "zmin_long", "zmax_long",
-                 F.col("params").contains('"n_total"').alias("has_nulls"))
-         .collect())
-    full = sum(1 for r in z
-               if r["zmin_long"] is not None and not r["has_nulls"]
-               and r["zmin_long"] // 5000 == r["zmax_long"] // 5000)
+    m, _ = store_meta(out, ["n"], ("params",))
+    z = list(zip(m["zmin_long"], m["zmax_long"], m["params"]))
+    full = sum(1 for lo, hi, params in z
+               if lo is not None and '"n_total"' not in params
+               and lo // 5000 == hi // 5000)
     # the clustered layout must make most chunks provably single-bucket,
     # i.e. answered from n_rows metadata with no payload read
     assert len(z) > 10 and full / len(z) > 0.5

@@ -7,6 +7,8 @@ import os
 import subprocess
 import sys
 
+import pytest
+
 from tests import REPO_ROOT
 
 
@@ -19,6 +21,16 @@ def _run(*args):
     )
     assert out.returncode == 0, out.stderr[-2000:]
     return json.loads(out.stdout.strip().splitlines()[-1])
+
+
+@pytest.fixture(scope="module")
+def synth_encoded(tmp_path_factory):
+    """One ``synth --rows 400`` corpus and its default encode, shared by
+    the CLI tests that only read them: ``(src, enc, encode JSON)``."""
+    d = tmp_path_factory.mktemp("cli_synth")
+    src, enc = str(d / "corpus"), str(d / "encoded")
+    _run("synth", "--rows", "400", "--out", src)
+    return src, enc, _run("encode", "--input", src, "--out", enc)
 
 
 def test_cli_encode_then_selective_decode(tmp_path):
@@ -35,15 +47,12 @@ def test_cli_encode_then_selective_decode(tmp_path):
     assert n == 400  # every synthetic url matches; selective path exercised
 
 
-def test_cli_encode_fast_path_and_conjunctive_where(tmp_path):
+def test_cli_encode_fast_path_and_conjunctive_where(tmp_path, synth_encoded):
     """Without --partitions/--group-by a parquet input routes to the
     file-granular columnar encode (no JVM row hop); repeated --where
     clauses AND at the chunk level with values coerced by column type."""
-    src = str(tmp_path / "corpus3")
-    enc = str(tmp_path / "encoded3")
+    src, enc, r = synth_encoded
     dec = str(tmp_path / "decoded3")
-    _run("synth", "--rows", "400", "--out", src)
-    r = _run("encode", "--input", src, "--out", enc)
     assert r["rows"] == 400 and r["ratio"] > 1.5
     _run("decode", "--data", enc, "--out", dec,
          "--where", "url:>=:https://", "--where", "url:<=:zzzz")
@@ -106,8 +115,6 @@ def test_spark_submit_py_files_packaging(tmp_path):
 
     spark_submit = shutil.which("spark-submit") or "/opt/spark/bin/spark-submit"
     if not os.path.exists(spark_submit):
-        import pytest
-
         pytest.skip("spark-submit not on this host")
 
     pkg_zip = str(tmp_path / "fsst_spark.zip")
@@ -177,13 +184,10 @@ def test_cli_stats_and_cluster_by(tmp_path):
     assert sl["text"]["sum_bytes"] >= sl["text"]["n_values"]
 
 
-def test_cli_topk_and_distinct(tmp_path):
+def test_cli_topk_and_distinct(synth_encoded):
     """topk answers ORDER BY..LIMIT from zone-candidate chunks; distinct
     answers from dict sections; both verified against the raw corpus."""
-    src = str(tmp_path / "corpus5")
-    enc = str(tmp_path / "encoded5")
-    _run("synth", "--rows", "400", "--out", src)
-    _run("encode", "--input", src, "--out", enc)
+    src, enc, _ = synth_encoded
     t = _run("topk", "--data", enc, "--column", "warc_ts", "-k", "7")
     d = _run("distinct", "--data", enc, "--column", "lang")
     import duckdb
@@ -200,13 +204,10 @@ def test_cli_topk_and_distinct(tmp_path):
     assert d["values"] == want_d and d["n_distinct"] == len(want_d)
 
 
-def test_cli_ndv(tmp_path):
+def test_cli_ndv(synth_encoded):
     """ndv answers approx distinct counts from HLL sketches alone; at test
     cardinalities (linear-counting regime) the estimates are near-exact."""
-    src = str(tmp_path / "corpus6")
-    enc = str(tmp_path / "encoded6")
-    _run("synth", "--rows", "400", "--out", src)
-    _run("encode", "--input", src, "--out", enc)
+    src, enc, _ = synth_encoded
     n = _run("ndv", "--data", enc, "--columns", "url,lang")
     import duckdb
     want_url, want_lang = duckdb.sql(
@@ -216,13 +217,10 @@ def test_cli_ndv(tmp_path):
     assert n["lang"] == want_lang
 
 
-def test_cli_decode_where_any(tmp_path):
+def test_cli_decode_where_any(tmp_path, synth_encoded):
     """--where-any ORs predicates (combined with --where as CNF)."""
-    src = str(tmp_path / "corpus7")
-    enc = str(tmp_path / "encoded7")
+    src, enc, _ = synth_encoded
     dec = str(tmp_path / "decoded7")
-    _run("synth", "--rows", "400", "--out", src)
-    _run("encode", "--input", src, "--out", enc)
     _run("decode", "--data", enc, "--out", dec,
          "--where-any", "lang:==:de", "--where-any", "lang:==:fr")
     import duckdb

@@ -39,7 +39,7 @@ def store(spark, docs, tmp_path):
 def test_drop_hides_column_everywhere(spark, docs, store):
     drop_column(store, "source")
     assert dropped_columns(store) == {"source"}
-    assert "source" not in column_arrow_types(spark, store)
+    assert "source" not in column_arrow_types(store)
     dec = decode_job(spark, store)
     assert "source" not in dec.columns
     # remaining values bit-identical
@@ -107,7 +107,7 @@ def test_compact_preserves_drop(spark, docs, store, tmp_path):
     out = str(tmp_path / "compacted")
     compact_store(spark, store, out, target_files=1).collect()
     assert dropped_columns(out) == {"source"}
-    assert "source" not in column_arrow_types(spark, out)
+    assert "source" not in column_arrow_types(out)
     assert "source" in physical_columns(out)  # verbatim copy
     assert decode_job(spark, out).count() == docs.count()
 
