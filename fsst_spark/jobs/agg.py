@@ -56,11 +56,11 @@ from .decode import (
 from .deletes import DeleteMask, has_deletes
 from .plan import (
     chunk_job,
+    file_meta,
     file_tasks_df,
     plan_chunks,
     planned_files,
     read_chunks,
-    read_file_meta,
     task_files,
 )
 
@@ -213,7 +213,7 @@ def _file_zones(path: str, columns) -> dict:
     one chunk file's rows for ``columns``, from its metadata columns and
     params (the key ``"n_total"`` is written only when a chunk has nulls);
     no payload read."""
-    _, m = read_file_meta(path, ("params",))
+    m = file_meta(path).columns(("params",))
     zones: dict = {}
     for pid, cid, col, n, lo, hi, pj in zip(
             m["pid"], m["chunk_id"], m["column"], m["n_rows"],

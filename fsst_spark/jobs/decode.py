@@ -17,6 +17,7 @@ one emitter, :func:`emit_chunks`.
 from __future__ import annotations
 
 import hashlib
+import operator
 import re
 from typing import Iterator
 
@@ -238,28 +239,33 @@ def _dict_probes(value: "str | bytes | list",
     return by_len, pfx, sub, sfx
 
 
-def dict_payload_has_value(params: dict, payload: bytes,
-                           by_len: dict[int, set],
-                           pfx: bytes | None,
-                           sub: bytes | None = None,
-                           sfx: bytes | None = None,
-                           rx=None) -> bool:
-    """True iff a ``str_dict`` chunk's DICTIONARY contains any probed value
-    (with ``pfx``: any value starting with those bytes; with ``sub``: any
-    value containing those bytes; with ``sfx``: any value ending with
-    those bytes; with ``rx``: any value the compiled regex matches —
-    partial match, Spark ``rlike`` semantics). Decodes only the
-    dictionary section — codes stay encoded. ``by_len``/``pfx``/``sub``/
-    ``sfx`` come from ``_dict_probes``; ``rx`` from ``_rlike_prunable``."""
+def dict_section(params: dict, payload: bytes):
+    """A ``str_dict`` chunk's DICTIONARY decoded to ``(bytes, offsets)``
+    numpy arrays; the codes stay encoded."""
     from ..kernel.codecs import _split_sections, decode_bytes_like
 
     if "n_total" in params:  # strip the appended validity bits
         payload = payload[: params["validity_len"]]
     _, up = _split_sections(params, payload)
-    buf, off = decode_bytes_like(
+    return decode_bytes_like(
         {"codec": params["values"]["codec"],
          "params": params["values"]["params"], "payload": up},
         kind="str")
+
+
+def dict_has_value(section: tuple, by_len: dict[int, set],
+                   pfx: bytes | None,
+                   sub: bytes | None = None,
+                   sfx: bytes | None = None,
+                   rx=None) -> bool:
+    """True iff a ``str_dict`` chunk's dictionary (:func:`dict_section`)
+    contains any probed value (with ``pfx``: any value starting with those
+    bytes; with ``sub``: any value containing those bytes; with ``sfx``:
+    any value ending with those bytes; with ``rx``: any value the compiled
+    regex matches — partial match, Spark ``rlike`` semantics).
+    ``by_len``/``pfx``/``sub``/``sfx`` come from ``_dict_probes``; ``rx``
+    from ``_rlike_prunable``."""
+    buf, off = section
     lens = off[1:] - off[:-1]
     if rx is not None:
         return any(
@@ -595,40 +601,27 @@ def _row_predicate(col: str, op: str, value, arrow_name: str):
         _zone_key(arrow_name, v)  # type check only
         return float(v) if arrow_name in ("float", "double") else v
 
-    lhs = (F.unix_micros(F.col(col)) if arrow_name.startswith("timestamp[")
-           else F.col(col))
     if op == "rlike":
         if arrow_name not in ("string", "large_string"):
             raise ValueError(
                 f"'rlike' needs a string column; {col!r} is {arrow_name}")
         return F.col(col).rlike(value)
-    if op == "prefix":
-        _prefix_bytes(arrow_name, value)  # type check only
-        pv = value.decode("utf-8") if isinstance(value, bytes) else value
-        return F.col(col).startswith(pv)
-    if op == "contains":
-        _prefix_bytes(arrow_name, value, op)  # type check only
-        if arrow_name in ("binary", "large_binary"):
-            return F.contains(F.col(col), F.lit(
-                value.encode("utf-8", "surrogatepass")
-                if isinstance(value, str) else bytes(value)))
-        pv = value.decode("utf-8") if isinstance(value, bytes) else value
-        return F.col(col).contains(pv)
-    if op == "suffix":
-        _prefix_bytes(arrow_name, value, op)  # type check only
-        if arrow_name in ("binary", "large_binary"):
-            return F.endswith(F.col(col), F.lit(
-                value.encode("utf-8", "surrogatepass")
-                if isinstance(value, str) else bytes(value)))
-        pv = value.decode("utf-8") if isinstance(value, bytes) else value
-        return F.col(col).endswith(pv)
+    name = {"prefix": "startswith", "contains": "contains",
+            "suffix": "endswith"}.get(op)
+    if name is not None:
+        raw = _prefix_bytes(arrow_name, value, op)  # type check
+        if op != "prefix" and arrow_name in ("binary", "large_binary"):
+            return getattr(F, name)(F.col(col), F.lit(raw))
+        return getattr(F.col(col), name)(
+            value.decode("utf-8") if isinstance(value, bytes) else value)
+    # each Column operation is several py4j round trips: build only the
+    # one comparison asked for
+    lhs = (F.unix_micros(F.col(col)) if arrow_name.startswith("timestamp[")
+           else F.col(col))
     if op == "in":
         return lhs.isin(*[coerce(v) for v in value])
-    rhs = F.lit(coerce(value))
-    return {
-        ">=": lhs >= rhs, ">": lhs > rhs,
-        "<=": lhs <= rhs, "<": lhs < rhs, "==": lhs == rhs,
-    }[op]
+    return {">=": operator.ge, ">": operator.gt, "<=": operator.le,
+            "<": operator.lt, "==": operator.eq}[op](lhs, F.lit(coerce(value)))
 
 
 def decode_filtered(spark, out_dir: str, col: str | None = None, op: str | None = None,

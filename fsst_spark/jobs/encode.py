@@ -387,16 +387,28 @@ def _parquet_scan_files(df: DataFrame) -> list[str] | None:
     return paths
 
 
+def _sql_literal(v) -> str:
+    """An int or a str as a Spark SQL literal; a str goes as its UTF-8 hex
+    (a binary literal), so no quoting or escaping setting applies."""
+    return f"X'{v.encode().hex()}'" if isinstance(v, str) else str(int(v))
+
+
 def file_task_df(spark, rows: list, schema: str) -> DataFrame:
-    """One-partition-per-task DataFrame over a small driver-side task list
-    WITHOUT a shuffle: ``parallelize(numSlices=len(rows))`` pins one row
-    per partition deterministically by list position, where
-    ``createDataFrame(...).repartitionByRange`` pays a range-sampling job
-    plus an Exchange for the same layout. Used by every file-granular job
-    (encode, decode, verify)."""
-    n = max(1, len(rows))
-    return spark.createDataFrame(spark.sparkContext.parallelize(rows, n),
-                                 schema)
+    """One-partition-per-task DataFrame over a small driver-side task list,
+    built on the JVM alone: ``range(0, n, 1, n)`` (``spark.range(n,
+    numPartitions=n)``) gives partition i the single row ``id = i``, and
+    each field of the flat DDL ``schema`` selects element ``id`` of a
+    literal array of the rows' values. Rows keep list order with no
+    shuffle, and no row crosses a Python worker (``createDataFrame`` over a
+    pickled ``parallelize`` RDD would run each partition through one before
+    the job's own Python task). Used by every file-granular job (encode,
+    decode, verify, deletes, aggregations)."""
+    n = len(rows)
+    cols = ", ".join(
+        f"CAST(element_at(array({', '.join(_sql_literal(r[i]) for r in rows)}),"
+        f" CAST(id AS INT) + 1) AS {t}) AS {c}"
+        for i, (c, t) in enumerate(f.split() for f in schema.split(",")))
+    return spark.sql(f"SELECT {cols} FROM range(0, {n}, 1, {max(1, n)})")
 
 
 def _atomic_write(table: pa.Table, path: str) -> None:

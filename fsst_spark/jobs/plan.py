@@ -18,11 +18,20 @@ checksum column. Decode tasks and the DataSource's ``read()`` turn those
 chunks into Arrow batches with ``decode.emit_chunks``. The planner reads
 chunk metadata with pyarrow and starts no Spark job. Per chunk file it
 reads the narrow columns ``META_COLS`` (plus the sketch columns a
-``store_meta`` caller asks for); the ``bloom`` column, only while a
-chunk of an ``==``/``in`` filter column that is not dict-coded is still
-live (only those columns' blooms are probed); and ``params, payload`` of
-the filter column's ``str_dict`` rows (a parquet row filter), only while
-such a chunk is still live — only its dictionary section decodes.
+``store_meta`` caller asks for); the ``bloom`` cells of an ``==``/``in``
+filter column's rows, only while a chunk of it that is not dict-coded is
+still live; and ``params, payload`` of the filter column's ``str_dict``
+rows, only while such a chunk is still live — only its dictionary
+section decodes. Both are parquet row-filtered reads.
+
+Each process caches what it read per chunk file (:func:`file_meta`: the
+metadata columns, bloom cells and decoded dictionaries), keyed by the
+file's ``(path, st_mtime_ns, st_size, st_ino)`` stamp, for at most
+``META_CACHE_FILES`` files. Chunk files are immutable once
+``encode._atomic_write`` publishes them (a rewrite is a new inode), so a
+repeated plan over unchanged files — on the driver or in a reused
+DataSource planner worker — reads nothing, and a replaced file is read
+again.
 
 Every stage is conservative: null zones (all-null chunks) keep, and so do
 stores written before zone maps or blooms. A chunk with no row for a
@@ -35,6 +44,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import threading
 from collections import Counter
 from dataclasses import dataclass, field
 from typing import Iterator
@@ -47,12 +57,18 @@ from .decode import (
     _dict_probes,
     _rlike_prunable,
     _ts_ticks,
-    dict_payload_has_value,
+    dict_has_value,
+    dict_section,
     zone_keep,
 )
 
 META_COLS = ("pid", "chunk_id", "column", "codec", "n_rows", "enc_bytes",
              "zmin_long", "zmax_long")
+# chunk files whose planner metadata a process keeps, least recently used
+# out first
+META_CACHE_FILES = 1024
+_meta_cache: dict[str, tuple] = {}  # path -> (stamp, _FileState)
+_meta_lock = threading.Lock()  # driver threads may plan at once
 CHUNK_COLS = ("pid", "chunk_id", "column", "codec", "params", "payload")
 
 
@@ -158,24 +174,11 @@ def planned_files(store: str, columns=None, filters=None, any_filters=None,
     return [(path, None) for _, path in chunk_files(store)]
 
 
-def read_file_meta(path: str, extra=()) -> tuple[pq.ParquetFile, dict[str, list]]:
-    """(the open chunk file, its ``META_COLS`` plus the ``extra`` metadata
-    columns — ``raw_bytes``, ``zsum_long``, ``hll``, ``qsketch``,
-    ``params`` — as Python lists); a metadata column missing from a file
-    written before it existed reads as nulls."""
-    pf = pq.ParquetFile(path)
-    names = pf.schema_arrow.names
-    cols = (*META_COLS, *extra)
-    t = pf.read(columns=[c for c in cols if c in names])
-    return pf, {c: (t.column(c).to_pylist() if c in names
-                    else [None] * t.num_rows) for c in cols}
-
-
 def store_meta(store: str, columns=None, extra=()) -> tuple[dict, set]:
     """The planner's metadata read for answers that need nothing else:
     ``({name: list}, missing)`` over every chunk row of ``columns`` (None:
     every column not dropped) in pid order, with ``META_COLS``, ``extra``
-    (see :func:`read_file_meta`) and ``path`` (the row's chunk file) as
+    (see :meth:`_FileState.columns`) and ``path`` (the row's chunk file) as
     names; ``missing`` names the metadata columns some chunk file lacks
     (they read as nulls there). No payload byte is read and no Spark job
     starts."""
@@ -184,8 +187,9 @@ def store_meta(store: str, columns=None, extra=()) -> tuple[dict, set]:
     out: dict[str, list] = {c: [] for c in (*names, "path")}
     missing: set[str] = set()
     for _, path in chunk_files(store):
-        pf, m = read_file_meta(path, extra)
-        missing.update(c for c in names if c not in pf.schema_arrow.names)
+        fm = file_meta(path)
+        m = fm.columns(extra)
+        missing.update(c for c in names if c not in fm.names)
         keep = [i for i, col in enumerate(m["column"]) if col_ok(col)]
         for c in names:
             out[c] += [m[c][i] for i in keep]
@@ -246,7 +250,7 @@ class _Filter:
     col: str
     zone: object            # (zmin, zmax) -> may the chunk match?
     bloom: list | None      # typed bloom probes (==/in only)
-    dict_args: dict | None  # dict_payload_has_value probe arguments
+    dict_args: dict | None  # dict_has_value probe arguments
 
     @classmethod
     def compile(cls, types: dict[str, str], f: tuple,
@@ -274,14 +278,15 @@ class _Filter:
 
 
 class _FileState:
-    """Metadata of one chunk file plus the sketch cells read lazily from
-    it, keyed by ``(column, (pid, chunk_id))``."""
+    """One chunk file's planner metadata: its metadata columns, and per
+    filter column its bloom cells and decoded dictionaries, keyed by
+    ``(column, (pid, chunk_id))``; each is read on first use and kept
+    with the cache entry (:func:`file_meta`)."""
 
-    def __init__(self, path: str, bloom_cols: set[str]):
+    def __init__(self, path: str):
         self.path = path
-        self.pf, self.meta = read_file_meta(path)
-        meta = self.meta
-        self.bloom_cols = bloom_cols  # the ==/in filter columns
+        self.cols: dict[str, list] = {}
+        meta = self.columns()
         self.zones: dict = {}
         self.codecs: dict = {}
         for pid, cid, col, codec, zmin, zmax in zip(
@@ -289,36 +294,51 @@ class _FileState:
                 meta["codec"], meta["zmin_long"], meta["zmax_long"]):
             self.zones[(col, (pid, cid))] = (zmin, zmax)
             self.codecs[(col, (pid, cid))] = codec
-        self._blooms: dict | None = None
+        self._blooms: dict[str, dict] = {}
         self._dicts: dict[str, dict] = {}
+
+    def columns(self, extra=()) -> dict[str, list]:
+        """``META_COLS`` plus the ``extra`` metadata columns (``raw_bytes``,
+        ``zsum_long``, ``hll``, ``qsketch``, ``params``) as Python lists by
+        name, reading the ones not read yet; a column missing from a file
+        written before it existed reads as nulls."""
+        names = (*META_COLS, *extra)
+        if want := [c for c in names if c not in self.cols]:
+            pf = pq.ParquetFile(self.path)
+            self.names = set(pf.schema_arrow.names)
+            t = pf.read(columns=[c for c in want if c in self.names])
+            for c in want:
+                self.cols[c] = (t.column(c).to_pylist() if c in self.names
+                                else [None] * t.num_rows)
+        return {c: self.cols[c] for c in names}
 
     def zone_ok(self, f: _Filter, key) -> bool:
         z = self.zones.get((f.col, key))
         return z is not None and f.zone(*z)
 
-    def blooms(self) -> dict:
-        if self._blooms is None:
-            self._blooms = {}
-            if "bloom" in self.pf.schema_arrow.names:
-                m = self.meta
-                blobs = self.pf.read(columns=["bloom"]).column("bloom")
-                for i, (pid, cid, col) in enumerate(
-                        zip(m["pid"], m["chunk_id"], m["column"])):
-                    if col in self.bloom_cols:
-                        self._blooms[(col, (pid, cid))] = blobs[i].as_py()
-        return self._blooms
+    def _cells(self, col: str, cells: list[str], filters=None) -> dict:
+        """``{(pid, chunk_id): row}`` of ``col``'s rows of ``cells``; the
+        keys come from the same read as the cells."""
+        t = pq.read_table(self.path, columns=["pid", "chunk_id", *cells],
+                          filters=[("column", "==", col), *(filters or [])])
+        return {(pid, cid): row for pid, cid, *row in zip(
+            *(t.column(c).to_pylist() for c in t.column_names))}
+
+    def blooms(self, col: str) -> dict:
+        if col not in self._blooms:
+            self._blooms[col] = (
+                {k: blob for k, (blob,) in self._cells(col, ["bloom"]).items()}
+                if "bloom" in self.names else {})
+        return self._blooms[col]
 
     def dicts(self, col: str) -> dict:
+        """Each ``str_dict`` chunk's decoded dictionary (``dict_section``)."""
         if col not in self._dicts:
-            t = pq.read_table(self.path,
-                              columns=["pid", "chunk_id", "params", "payload"],
-                              filters=[("column", "==", col),
-                                       ("codec", "==", "str_dict")])
             self._dicts[col] = {
-                (pid, cid): (params, payload)
-                for pid, cid, params, payload in zip(
-                    *(t.column(c).to_pylist()
-                      for c in ("pid", "chunk_id", "params", "payload")))}
+                k: dict_section(json.loads(params), payload)
+                for k, (params, payload) in self._cells(
+                    col, ["params", "payload"],
+                    [("codec", "==", "str_dict")]).items()}
         return self._dicts[col]
 
     def sketch_keep(self, f: _Filter, live: set) -> set:
@@ -330,19 +350,32 @@ class _FileState:
         # dict-coded chunks carry no bloom (their dictionary prunes exactly)
         if f.bloom is not None and any(
                 self.codecs.get((f.col, k)) != "str_dict" for k in out):
-            blooms = self.blooms()
-            out = {k for k in out
-                   if bloom_might_contain(blooms.get((f.col, k)), f.bloom)}
+            blooms = self.blooms(f.col)
+            out = {k for k in out if bloom_might_contain(blooms.get(k), f.bloom)}
         if f.dict_args is not None:
             cand = [k for k in out if self.codecs.get((f.col, k)) == "str_dict"]
             if cand:
                 dicts = self.dicts(f.col)
-                for k in cand:
-                    params, payload = dicts[k]
-                    if not dict_payload_has_value(json.loads(params), payload,
-                                                  **f.dict_args):
-                        out.discard(k)
+                out -= {k for k in cand
+                        if not dict_has_value(dicts[k], **f.dict_args)}
         return out
+
+
+def file_meta(path: str) -> _FileState:
+    """``path``'s planner metadata from the process cache, read again when
+    its stamp has changed. The stamp is taken before any read, so a file
+    replaced during a read is stamped older than what was read and is read
+    again next time."""
+    st = os.stat(path)
+    stamp = (st.st_mtime_ns, st.st_size, st.st_ino)
+    with _meta_lock:
+        hit = _meta_cache.pop(path, None)
+    state = hit[1] if hit is not None and hit[0] == stamp else _FileState(path)
+    with _meta_lock:
+        _meta_cache[path] = (stamp, state)
+        while len(_meta_cache) > META_CACHE_FILES:
+            del _meta_cache[next(iter(_meta_cache))]
+    return state
 
 
 @dataclass
@@ -368,8 +401,8 @@ class ChunkPlan:
 def _plan_file(path: str, col_ok, conj: list[_Filter], disj: list[_Filter],
                dict_prune: bool, keys=None) -> tuple[FilePlan, dict]:
     """(the file's keep-set, its per-stage counts)."""
-    state = _FileState(path, {f.col for f in conj + disj if f.bloom is not None})
-    meta = state.meta
+    state = file_meta(path)
+    meta = state.columns()
     n_rows: dict = {}
     nbytes: dict = {}
     for pid, cid, col, n, b in zip(meta["pid"], meta["chunk_id"],

@@ -72,19 +72,14 @@ def _append_entry(store: str, entry: dict) -> int:
 
 def physical_columns(store: str) -> dict[str, str]:
     """{column: arrow type} actually present in the chunk files, schema
-    log IGNORED — one driver-side footer read (every encode partition
-    writes all columns, so any single file carries the full schema)."""
-    import pyarrow.parquet as pq
+    log IGNORED — one chunk file's metadata through the planner cache
+    (every encode partition writes all columns, so any single file carries
+    the full schema)."""
+    from .plan import chunk_files, file_meta
 
-    files = sorted(glob.glob(os.path.join(store, "chunks", "*.parquet")))
-    if not files:
-        raise FileNotFoundError(f"no encoded chunks under {store!r}")
-    t = pq.read_table(files[0], columns=["column", "params"])
-    return {
-        c: json.loads(p)["arrow_type"]
-        for c, p in zip(t.column("column").to_pylist(),
-                        t.column("params").to_pylist())
-    }
+    m = file_meta(chunk_files(store)[0][1]).columns(("params",))
+    return {c: json.loads(p)["arrow_type"]
+            for c, p in zip(m["column"], m["params"])}
 
 
 def drop_column(store: str, column: str) -> None:

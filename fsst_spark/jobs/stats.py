@@ -26,7 +26,8 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
-from .decode import _spark_type, column_arrow_types, deterministic_sample
+from .decode import (_spark_type, column_arrow_types, deterministic_sample,
+                     dict_section)
 from .deletes import require_no_deletes as _require_no_deletes
 from .plan import chunk_job, keep_sets, store_meta
 
@@ -56,6 +57,10 @@ def _n_nulls(params: str) -> int:
     return p["n_total"] - p["n"] if "n_total" in p and "n" in p else 0
 
 
+_STRLEN_SCHEMA = pa.schema([
+    ("column", pa.string()), ("n_values", pa.int64()), ("sum_bytes", pa.int64()),
+    ("avg_bytes", pa.float64()), ("min_bytes", pa.int64()),
+    ("max_bytes", pa.int64())])
 _STATS_SCHEMA = pa.schema([("column", pa.string()), ("n_rows", pa.int64()),
                            ("min_long", pa.int64()), ("max_long", pa.int64())])
 
@@ -280,8 +285,8 @@ def encoded_strlen_stats(spark, out_dir: str, columns: list[str]) -> DataFrame:
     ``sum(octet_length(text))`` over a 100 TB store reads the same chunk
     payloads a decode would but skips the two scatter passes AND the Arrow
     string build — the dominant costs — and ships back four ints per chunk
-    instead of the chunk's text. File tasks read the chunks; per-chunk
-    partials aggregate JVM-side.
+    instead of the chunk's text. File tasks read the chunks (one Spark
+    job); the per-chunk partials fold on the driver into a local table.
 
     Returns one row per column: ``(column, n_values, sum_bytes, avg_bytes,
     min_bytes, max_bytes)`` with SQL semantics (nulls excluded; min/max
@@ -313,16 +318,15 @@ def encoded_strlen_stats(spark, out_dir: str, columns: list[str]) -> DataFrame:
 
     per_chunk = chunk_job(
         spark, out_dir, list(columns), partials,
-        "column string, n bigint, s bigint, mn bigint, mx bigint")
-    return (
-        per_chunk.groupBy("column")
-        .agg(F.sum("n").alias("n_values"),
-             F.sum("s").alias("sum_bytes"),
-             (F.sum("s") / F.sum("n")).alias("avg_bytes"),
-             F.min("mn").alias("min_bytes"),
-             F.max("mx").alias("max_bytes"))
-        .orderBy("column")
-    )
+        "column string, n bigint, s bigint, mn bigint, mx bigint").toArrow()
+    acc: dict[str, list] = {}
+    for col, n, s, mn, mx in zip(*(per_chunk.column(c).to_pylist()
+                                   for c in out_schema.names)):
+        a = acc.setdefault(col, [0, 0, None, None])
+        a[:] = (a[0] + n, a[1] + s, _fold(min, a[2], mn), _fold(max, a[3], mx))
+    return _local_df(spark, _STRLEN_SCHEMA, [
+        (col, n, s, s / n if n else None, mn, mx)
+        for col, (n, s, mn, mx) in sorted(acc.items())])
 
 
 # mapInArrow batches must match the declared DDL exactly (a large_string
@@ -458,26 +462,16 @@ def encoded_distinct(spark, out_dir: str, column: str,
         observer["n_decoded_chunks"] = len(codecs) - codecs.count("str_dict")
 
     def partials(chunks, _dmask) -> Iterator[pa.RecordBatch]:
-        from ..kernel.codecs import (_bytes_to_arrow, _split_sections,
-                                     decode_bytes_like, decode_column,
+        from ..kernel.codecs import (_bytes_to_arrow, decode_column,
                                      parse_arrow_type)
 
         for _, cols in chunks:
             enc = cols[column]
             p = enc["params"]
-            has_null = "n_total" in p
             if enc["codec"] == "str_dict":
-                payload = enc["payload"]
-                if has_null:  # strip appended validity bits
-                    payload = payload[: p["validity_len"]]
-                _, up = _split_sections(p, payload)
-                buf, off = decode_bytes_like(
-                    {"codec": p["values"]["codec"],
-                     "params": p["values"]["params"], "payload": up},
-                    kind="str")
-                out = _bytes_to_arrow(
-                    buf, off, parse_arrow_type(p["arrow_type"]), None)
-                if has_null:
+                out = _bytes_to_arrow(*dict_section(p, enc["payload"]),
+                                      parse_arrow_type(p["arrow_type"]), None)
+                if "n_total" in p:
                     out = pa.concat_arrays([out, pa.nulls(1, type=out.type)])
             else:
                 out = decode_column(enc).unique()

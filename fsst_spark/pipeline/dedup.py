@@ -426,15 +426,6 @@ def simhash_udf(seed: int = 2):
     return sh
 
 
-def hash_bytes(data: bytes, seed: int) -> int:
-    """FNV-1a 64-bit scalar — the spec the vectorized pass implements
-    (kept for property tests)."""
-    h = 0xCBF29CE484222325 ^ (seed * 0x9E3779B97F4A7C15 & 0xFFFFFFFFFFFFFFFF)
-    for byte in data:
-        h = ((h ^ byte) * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
-    return h
-
-
 # ---------------------------------------------------------------------------
 # Near-dup resolution: pairs -> connected components -> one survivor each
 # ---------------------------------------------------------------------------

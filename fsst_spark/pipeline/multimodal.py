@@ -15,7 +15,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 MEDIA_META_DDL = "media_type string, width int, height int, n_bytes bigint"
 FEATURE_DDL = (
@@ -324,14 +324,3 @@ def audio_features(df: DataFrame, payload_col: str = "html",
     return df.select(id_col, payload_col).mapInPandas(
         run, f"{id_col} bigint, duration_sec double, rms double, "
              "zero_crossing_rate double, band_energy array<float>")
-
-
-def media_metadata(df: DataFrame, payload_col: str = "html") -> DataFrame:
-    """Typed metadata over opaque binary columns — all JVM built-ins."""
-    p = F.col(payload_col)
-    return df.select(
-        F.lit("text/html").alias("media_type"),
-        F.lit(None).cast("int").alias("width"),
-        F.lit(None).cast("int").alias("height"),
-        F.length(p).cast("bigint").alias("n_bytes"),
-    )

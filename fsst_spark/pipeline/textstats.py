@@ -20,14 +20,6 @@ def punct_count(text: Column) -> Column:
     return F.length(text) - F.length(F.regexp_replace(text, r"[.!?,;:]", ""))
 
 
-def digit_ratio_pct(text: Column) -> Column:
-    """Integer percent of digit chars (stable across engines, no floats)."""
-    digits = F.length(text) - F.length(F.regexp_replace(text, r"[0-9]", ""))
-    return F.when(F.length(text) == 0, F.lit(0)).otherwise(
-        (digits * 100) / F.length(text)
-    ).cast("bigint")
-
-
 _STOPWORDS = ["the", "and", "of", "to", "is", "in", "a", "that", "it", "for"]
 
 

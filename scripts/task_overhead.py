@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
 """Per-task fixed cost of a Python ``mapInArrow`` task under ``get_spark``,
-and the cost of planning an fsst DataSource read.
+the cost of planning an fsst DataSource read, and of a one-task file job.
 
 Times a no-op ``mapInArrow`` job of N = ``TASKS`` tasks and the same job on
 the JVM alone (both written to the ``noop`` sink), each as the median of
@@ -9,9 +9,11 @@ task-slot time a Python task costs: ``(python_s - jvm_s) * min(N, slots)
 / N``. ``plan_read_ms`` is the median wall time of a plan-only point read
 through the fsst source on a tiny store the script writes:
 ``load().where(...)`` and its query plan, no action. Spark runs those
-planning steps in its own Python workers. A worker-startup regression
-(daemon, imports, per-task or per-planner-call setup) shows here without a
-full benchmark run.
+planning steps in its own Python workers. ``file_job_ms`` is the median
+wall time of a one-task no-op job over ``plan.file_tasks_df`` (the task
+frame of every file-granular job) on one of that store's chunk files. A
+worker-startup or task-frame regression (daemon, imports, per-task or
+per-planner-call setup) shows here without a full benchmark run.
 
 Usage: python scripts/task_overhead.py [--master local[4]]
 """
@@ -73,6 +75,19 @@ def _plan_read_s(spark, store: str) -> float:
     return _median_s(plan)
 
 
+def _file_job_s(spark, store: str) -> float:
+    """Median wall time of a one-task no-op job over the file-task frame."""
+    from fsst_spark.jobs.plan import chunk_files, file_tasks_df
+
+    files = [(path, None) for _, path in chunk_files(store)[:1]]
+
+    def run():
+        (file_tasks_df(spark, files).mapInArrow(_identity, "files string")
+         .write.format("noop").mode("overwrite").save())
+
+    return _median_s(run)
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--master", default=None)
@@ -93,7 +108,9 @@ def main() -> None:
         jvm_s = _median_s(jvm)
         python_s = _median_s(python)
         with tempfile.TemporaryDirectory(prefix="task_overhead_") as tmp:
-            plan_s = _plan_read_s(spark, os.path.join(tmp, "store"))
+            store = os.path.join(tmp, "store")
+            plan_s = _plan_read_s(spark, store)
+            file_job_s = _file_job_s(spark, store)
         conf = spark.sparkContext.getConf()
         slots = spark.sparkContext.defaultParallelism
         print(json.dumps({
@@ -104,6 +121,7 @@ def main() -> None:
             "jvm_s": round(jvm_s, 4),
             "per_task_ms": round((python_s - jvm_s) * min(n, slots) / n * 1000, 1),
             "plan_read_ms": round(plan_s * 1000, 1),
+            "file_job_ms": round(file_job_s * 1000, 1),
         }))
     finally:
         spark.stop()

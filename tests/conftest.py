@@ -16,9 +16,13 @@ def spark():
 def parquet_reads(monkeypatch):
     """Records ``(columns, filters)`` of every pyarrow parquet read this
     process makes (``columns`` None means every column): the driver-side
-    chunk planner's metadata reads."""
+    chunk planner's metadata reads. Empties the planner's metadata cache
+    first, so the reads of a cold plan happen."""
     import pyarrow.parquet as pq
 
+    from fsst_spark.jobs import plan
+
+    plan._meta_cache.clear()
     calls = []
     read_table, pf_read = pq.read_table, pq.ParquetFile.read
 

@@ -38,3 +38,27 @@ def run_counting_jobs(spark, group: str, fn):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def run_counting_py4j(spark, fn):
+    """(``fn()``, number of py4j commands the driver sent the JVM). The
+    deletes of garbage-collected Java references are not counted: they are
+    sent whenever Python's collector runs."""
+    import gc
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    n = 0
+
+    def counting(command, *args, **kw):
+        nonlocal n
+        n += not command.startswith("m\nd\n")
+        return send(command, *args, **kw)
+
+    gc.collect()
+    client.send_command = counting
+    try:
+        out = fn()
+    finally:
+        del client.send_command
+    return out, n

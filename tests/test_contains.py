@@ -10,7 +10,8 @@ from fsst_spark.jobs.decode import (
     _dict_probes,
     decode_filtered,
     decode_plan,
-    dict_payload_has_value,
+    dict_has_value,
+    dict_section,
 )
 from fsst_spark.jobs.encode import encode_job
 
@@ -73,7 +74,7 @@ def test_contains_boundary_spanning_substring_not_matched(spark, store):
 
 
 def test_dict_payload_boundary_kernel():
-    """dict_payload_has_value: substring spanning two dictionary entries
+    """dict_has_value: substring spanning two dictionary entries
     is rejected; substring inside one entry is found."""
     import json
 
@@ -86,17 +87,18 @@ def test_dict_payload_boundary_kernel():
     assert enc["codec"] == "str_dict"
     params = (json.loads(enc["params"]) if isinstance(enc["params"], str)
               else enc["params"])
+    section = dict_section(params, enc["payload"])
     by_len, pfx, sub, sfx = _dict_probes("cd", contains=True)
-    assert not dict_payload_has_value(params, enc["payload"], by_len, pfx, sub)
+    assert not dict_has_value(section, by_len, pfx, sub)
     by_len, pfx, sub, sfx = _dict_probes("bc", contains=True)
-    assert dict_payload_has_value(params, enc["payload"], by_len, pfx, sub)
+    assert dict_has_value(section, by_len, pfx, sub)
     by_len, pfx, sub, sfx = _dict_probes("abc", contains=True)
-    assert dict_payload_has_value(params, enc["payload"], by_len, pfx, sub)
+    assert dict_has_value(section, by_len, pfx, sub)
     # suffix mode on the same dictionary: "bc" ends abc, "ab" ends nothing
     by_len, pfx, sub, sfx = _dict_probes("bc", suffix=True)
-    assert dict_payload_has_value(params, enc["payload"], by_len, pfx, sub, sfx)
+    assert dict_has_value(section, by_len, pfx, sub, sfx)
     by_len, pfx, sub, sfx = _dict_probes("ab", suffix=True)
-    assert not dict_payload_has_value(params, enc["payload"], by_len, pfx, sub, sfx)
+    assert not dict_has_value(section, by_len, pfx, sub, sfx)
 
 
 def test_contains_type_guards(spark, store):

@@ -65,7 +65,8 @@ METADATA_ONLY = {
 
 # call -> (jobs the JVM chunk-table scan it replaced started, its answer)
 PAYLOAD = {
-    "encoded_strlen_stats": (5, lambda sp, a: stats.encoded_strlen_stats(
+    # its per-chunk partials fold on the driver: one job, not the scan's 5
+    "encoded_strlen_stats": (1, lambda sp, a: stats.encoded_strlen_stats(
         sp, a, ["text", "lang"]).collect()),
     "encoded_topk": (3, lambda sp, a: stats.encoded_topk(
         sp, a, "n", 10, observer={}).collect()),

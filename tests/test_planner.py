@@ -2,6 +2,7 @@
 planned from chunk metadata without any Spark job, and then runs as ONE
 job of file tasks that decode only the planned chunks."""
 
+import os
 from collections import Counter
 
 import pytest
@@ -10,9 +11,15 @@ from pyspark.sql import functions as F
 from fsst_spark.jobs.decode import decode_filtered, decode_job, decode_plan
 from fsst_spark.jobs.encode import encode_job
 from fsst_spark.sources.fsst_source import register
-from tests.plan_checks import assert_no_chunk_row_shuffle, run_counting_jobs
+from tests.plan_checks import (assert_no_chunk_row_shuffle, run_counting_jobs,
+                               run_counting_py4j)
 
 URL = "00001234.example.org/page"
+# py4j commands the driver sends per call (test_py4j_round_trips_per_call);
+# a task frame built from a pickled RDD and a row predicate that built every
+# comparison made them 165 and 79
+POINT_PY4J = 90
+ENCODE_PY4J = 48
 
 
 def _lang(col):
@@ -139,3 +146,75 @@ def test_chunk_jobs_read_planned_file_tasks(spark, clustered):
     assert (r["chunks_pruned"] + r["chunks_metadata_only"]
             + r["chunks_decoded"]) == r["chunks_total"]
     assert _where_tombstones(spark, clustered, flt, [], None).count() == 2000
+
+
+def test_metadata_cache_rereads_replaced_files(spark, tmp_path,
+                                               parquet_reads):
+    """The planner's metadata cache serves a repeated plan without a
+    parquet read; once ``_atomic_write`` replaces the chunk files (the same
+    pids written again with other rows) they are read again, and the plan
+    equals a cold plan of the rewritten store."""
+    from fsst_spark.jobs import plan
+    from fsst_spark.jobs.decode import column_arrow_types
+
+    store = str(tmp_path / "store")
+
+    def write(lo):
+        df = spark.range(lo, lo + 2000).select(
+            F.col("id").alias("doc_id"), _lang(F.col("id")).alias("lang"))
+        encode_job(spark, df, store, num_partitions=2, chunk_bytes=4 << 10,
+                   resume=False, unique_col="doc_id",
+                   sort_key="doc_id").collect()
+
+    # zones, blooms (doc_id) and dictionaries (lang) all take part
+    flt = [("doc_id", "in", [10, 2500, 3999]), ("lang", "==", "de")]
+
+    def planned():
+        return plan.plan_chunks(store, None, flt,
+                                types=column_arrow_types(store))
+
+    write(0)
+    old = planned()
+    parquet_reads.clear()
+    assert planned() == old
+    assert parquet_reads == []
+    paths = [fp.path for fp in old.files]
+    stamps = {p: plan._meta_cache[p][0] for p in paths}
+    write(2000)
+    warm = planned()
+    assert parquet_reads, "the replaced files were not read again"
+    assert all(plan._meta_cache[p][0] != stamps[p] for p in paths)
+    plan._meta_cache.clear()
+    assert warm == planned() != old
+    got = decode_filtered(spark, store, filters=flt).select("doc_id").collect()
+    assert [r["doc_id"] for r in got] == [3999]
+
+
+def test_py4j_round_trips_per_call(spark, clustered, tmp_path):
+    """The driver's py4j traffic per call stays pinned: a point lookup
+    (plan, task frame, row predicate, collect) and a file-granular encode
+    job's build and run."""
+    from fsst_spark.jobs.encode import encode_files_job
+
+    def point():
+        return decode_filtered(spark, clustered, "url", "==", URL).toArrow()
+
+    point()  # warm: column types and chunk metadata cached
+    t, n_point = run_counting_py4j(spark, point)
+    assert t.column("doc_id").to_pylist() == [1234]
+    assert n_point <= POINT_PY4J, n_point
+
+    src = str(tmp_path / "in")
+    spark.range(0, 200).selectExpr("id AS doc_id", "uuid() AS text") \
+        .repartition(2).write.parquet(src)
+    files = sorted(os.path.join(src, f) for f in os.listdir(src)
+                   if f.endswith(".parquet"))
+
+    def encode(out):
+        return encode_files_job(spark, "", out, files=files).collect()
+
+    encode(str(tmp_path / "warm"))
+    rows, n_encode = run_counting_py4j(spark, lambda: encode(
+        str(tmp_path / "store")))
+    assert sorted(r["pid"] for r in rows) == [0, 1]
+    assert n_encode <= ENCODE_PY4J, n_encode
