@@ -24,6 +24,12 @@ weights). The tri-state ``encoded_count_filtered`` and
 file's own zones, row counts and params, and read payloads only for the
 chunks their metadata cannot answer.
 
+A ``filters`` WHERE is the one exact row predicate of every read,
+:class:`decode.RowFilter`: compiled on the driver (a bad filter, or an
+``rlike`` — Java regex, which only ``decode_filtered`` evaluates — raises
+before any job) and run on each chunk's lazily decoded filter columns,
+with tombstones folded in by :func:`decode.keep_rows`.
+
 Falls back to a full chunk decode (still chunk-local partial aggregation)
 for codecs with no structural shortcut (fsst/plain strings, floats).
 """
@@ -47,10 +53,11 @@ from ..kernel.codecs import (
 )
 from .decode import (
     _STRINGY,
-    _prefix_bytes,
+    DecodedChunk,
+    RowFilter,
     _spark_type,
-    _zone_key,
     column_arrow_types,
+    keep_rows,
     zone_all,
 )
 from .deletes import DeleteMask, has_deletes
@@ -121,93 +128,6 @@ def _chunk_value_counts(codec: str, params: dict, payload: bytes,
     return values.cast(t), counts
 
 
-def _packf_np(x: np.ndarray) -> np.ndarray:
-    """Vectorized ``encode.zone_packf``: order-preserving int64 keys for a
-    float64 array under SQL comparison semantics (NaN above everything and
-    equal to itself, -0.0 == +0.0) — both Spark and DuckDB order floats
-    this way, so comparing packed keys reproduces their WHERE semantics
-    exactly, where raw IEEE comparison (NaN always false) would not."""
-    x = np.where(x == 0.0, 0.0, x.astype(np.float64))  # collapse -0.0
-    bits = x.view(np.uint64)
-    key = np.where(bits >> np.uint64(63) != 0,
-                   ~bits, bits | np.uint64(1 << 63))
-    key[np.isnan(x)] = np.uint64(0xFFFFFFFFFFFFFFFF)
-    return (key ^ np.uint64(1 << 63)).view(np.int64)
-
-
-_NP_OPS = {">=": np.greater_equal, ">": np.greater,
-           "<=": np.less_equal, "<": np.less, "==": np.equal}
-
-
-def _arrow_mask(arr: pa.Array, op: str, value, arrow_name: str) -> np.ndarray:
-    """Exact row mask for ``arr op value`` with SQL predicate semantics
-    (null -> False, NaN greatest / NaN == NaN, -0.0 == +0.0) — must agree
-    with ``decode._row_predicate``, which evaluates the same filter in
-    Spark after a full decode."""
-    if arrow_name in _STRINGY:
-        if op == "prefix":
-            _prefix_bytes(arrow_name, value)  # type check only
-            pv = value.decode("utf-8") if isinstance(value, bytes) else value
-            m = pc.starts_with(arr, pattern=pv)
-        elif op == "contains":
-            _prefix_bytes(arrow_name, value, op)  # type check only
-            pv = value.decode("utf-8") if isinstance(value, bytes) else value
-            m = pc.match_substring(arr, pattern=pv)
-        elif op == "in":
-            m = pc.is_in(arr, value_set=pa.array(list(value), type=arr.type))
-        else:
-            _zone_key(arrow_name, value)  # type check: raises on mismatch
-            m = getattr(pc, {">=": "greater_equal", ">": "greater",
-                             "<=": "less_equal", "<": "less",
-                             "==": "equal"}[op])(arr, pa.scalar(value, type=arr.type))
-        return m.fill_null(False).to_numpy(zero_copy_only=False).astype(bool)
-    valid = pc.is_valid(arr).to_numpy(zero_copy_only=False).astype(bool)
-    if arrow_name.startswith("timestamp["):
-        lhs = arr.cast(pa.int64()).fill_null(0).to_numpy(zero_copy_only=False)
-    elif arrow_name in ("float", "double"):
-        lhs = _packf_np(arr.cast(pa.float64()).fill_null(0.0)
-                        .to_numpy(zero_copy_only=False))
-    else:
-        lhs = arr.cast(pa.int64()).fill_null(0).to_numpy(zero_copy_only=False)
-    if op == "in":
-        rhs = np.array([_zone_key(arrow_name, v)[0] for v in value], dtype=np.int64)
-        m = np.isin(lhs, rhs)
-    else:
-        m = _NP_OPS[op](lhs, np.int64(_zone_key(arrow_name, value)[0]))
-    return m & valid
-
-
-def _conj_mask(cols: dict[str, dict], filters: list[tuple],
-               types: dict[str, str], decoded: dict[str, pa.Array],
-               any_filters: list[tuple] = ()) -> np.ndarray | None:
-    """Exact row mask of ``AND(filters) AND OR(any_filters)`` over one
-    chunk (None when there are no filters); decodes each filter column at
-    most once (cached in ``decoded``)."""
-    def pred(f):
-        fc, fop, fval = f
-        if fc not in decoded:
-            decoded[fc] = decode_column(cols[fc])
-        return _arrow_mask(decoded[fc], fop, fval, types[fc])
-
-    mask = None
-    for f in filters:
-        mask = pred(f) if mask is None else (mask & pred(f))
-    if any_filters:
-        omask = np.logical_or.reduce([pred(f) for f in any_filters])
-        mask = omask if mask is None else (mask & omask)
-    return mask
-
-
-def _keep_rows(mask: np.ndarray | None, n: int, dmask, key) -> np.ndarray:
-    """The chunk's rows ``mask`` keeps (every row when None), minus its
-    tombstoned positions."""
-    keep = np.ones(n, dtype=bool) if mask is None else mask.copy()
-    pos = dmask.positions(*key) if dmask is not None else None
-    if pos is not None:
-        keep[pos[pos < n]] = False
-    return keep
-
-
 def _file_zones(path: str, columns) -> dict:
     """``{(pid, chunk_id): {column: (n_rows, zmin, zmax, has_nulls)}}`` of
     one chunk file's rows for ``columns``, from its metadata columns and
@@ -239,29 +159,23 @@ def _chunk_key_codes(kenc: dict, kt: pa.DataType,
 
 
 def _group_partial(kenc: dict, kt: pa.DataType, mask: np.ndarray | None,
-                   karr: pa.Array | None = None,
-                   venc: dict | None = None, varr: pa.Array | None = None,
+                   karr: pa.Array | None = None, varr: pa.Array | None = None,
                    int_sum: bool | None = None,
-                   drop_pos: np.ndarray | None = None) -> pa.RecordBatch:
+                   dmask=None, key=None) -> pa.RecordBatch:
     """One chunk -> per-key partial rows (value, cnt[, sum_val]) under an
-    optional row mask. Dict-coded null-free key chunks group on the CODE
-    array — the expanded key strings are never materialized.
-    ``drop_pos`` (row positions to exclude — delete tombstones) folds
-    into the mask once the chunk length is known."""
+    optional row mask, less chunk ``key``'s tombstones in ``dmask``
+    (:func:`decode.keep_rows`). Dict-coded null-free key chunks group on
+    the CODE array — the expanded key strings are never materialized."""
     codes, dictv, k = _chunk_key_codes(kenc, kt, karr)
-    if drop_pos is not None and len(drop_pos):
-        keep = np.ones(len(codes), dtype=bool)
-        keep[drop_pos[drop_pos < len(codes)]] = False
-        mask = keep if mask is None else (mask & keep)
+    if dmask is not None:
+        mask = keep_rows(mask, len(codes), dmask, key)
     mcodes = codes if mask is None else codes[mask]
     cnt = np.bincount(mcodes, minlength=k + 1).astype(np.int64)
     values = pa.concat_arrays([dictv.cast(kt), pa.nulls(1, kt)])
     keep = cnt > 0
     arrays = [values.filter(pa.array(keep)), pa.array(cnt[keep], type=pa.int64())]
     names = ["value", "cnt"]
-    if venc is not None or varr is not None:
-        if varr is None:
-            varr = decode_column(venc)
+    if varr is not None:
         valid = pc.is_valid(varr).to_numpy(zero_copy_only=False).astype(bool)
         if mask is not None:
             valid &= mask
@@ -293,18 +207,18 @@ def _group_agg(spark, out_dir: str, key_col: str, val_col: str | None,
     if val_col is not None and not int_sum and types[val_col] not in ("float", "double"):
         raise ValueError(f"sum column must be int or float, got {types[val_col]}")
 
+    where = RowFilter(types, filters)
+
     def partials(chunks, dmask) -> Iterator[pa.RecordBatch]:
         for key, cols in chunks:
-            decoded: dict[str, pa.Array] = {}
-            mask = _conj_mask(cols, filters, types, decoded)
+            decoded = DecodedChunk(cols)
+            mask = where(decoded)
             if mask is not None and not mask.any():
                 continue
             yield _group_partial(
                 cols[key_col], kt, mask, karr=decoded.get(key_col),
-                venc=cols[val_col] if val_col else None,
-                varr=decoded.get(val_col) if val_col else None,
-                int_sum=int_sum,
-                drop_pos=dmask.positions(*key) if dmask is not None else None)
+                varr=decoded[val_col] if val_col else None,
+                int_sum=int_sum, dmask=dmask, key=key)
 
     ddl = f"value {_spark_type(types[key_col])}, cnt bigint"
     aggs = [F.sum("cnt").alias("cnt")]
@@ -345,8 +259,7 @@ def encoded_group_count(spark, out_dir: str, column: str,
     def partials(chunks, dmask) -> Iterator[pa.RecordBatch]:
         for key, cols in chunks:
             enc = cols[column]
-            pos = dmask.positions(*key) if dmask is not None else None
-            if pos is None:
+            if dmask is None or dmask.positions(*key) is None:
                 # tombstone-free chunk: codec-structural counts (dict
                 # codes bincount / RLE run pairs), no row expansion
                 values, counts = _chunk_value_counts(
@@ -357,7 +270,7 @@ def encoded_group_count(spark, out_dir: str, column: str,
             else:
                 # tombstoned chunk: per-position mask needed — group
                 # on the (dict-fast-path) code array minus tombstones
-                yield _group_partial(enc, t, None, drop_pos=pos)
+                yield _group_partial(enc, t, None, dmask=dmask, key=key)
 
     return (chunk_job(spark, out_dir, [column], partials,
                       f"value {_spark_type(arrow_name)}, cnt bigint")
@@ -431,10 +344,8 @@ def encoded_count_filtered(spark, out_dir: str,
         raise ValueError("encoded_count_filtered needs filters=[(col, op, "
                          "value), ...] and/or any_filters=[...]")
     types = column_arrow_types(out_dir)
-    fcols = list(dict.fromkeys(f[0] for f in flt + any_flt))
-    for c in fcols:
-        if c not in types:
-            raise KeyError(f"column {c!r} not in encoded data")
+    where = RowFilter(types, flt, any_flt)
+    fcols = where.columns
     plan = plan_chunks(out_dir, fcols, flt, any_flt, dict_prune=False,
                        types=types)
     conj = [(c, zone_all(types[c], op, v)) for c, op, v in flt]
@@ -459,8 +370,8 @@ def encoded_count_filtered(spark, out_dir: str,
                 else:
                     boundary.append(key)
             for key, cols in read_chunks(path, boundary, fcols):
-                mask = _conj_mask(cols, flt, types, {}, any_flt)
-                n += int(_keep_rows(mask, len(mask), dmask, key).sum())
+                mask = where(DecodedChunk(cols))
+                n += int(keep_rows(mask, len(mask), dmask, key).sum())
             yield pa.RecordBatch.from_pydict(
                 {"n": [n], "meta": [n_meta], "dec": [len(boundary)]})
 
@@ -542,26 +453,20 @@ def _group_value_stats(spark, out_dir: str, key_col: str, val_col: str,
     shuffle. ``value_fn(cols, decoded, n) -> (int64[n], valid bool[n])``
     supplies the per-row values (decoded lengths, decoded ints, ...)."""
     kt = parse_arrow_type(types[key_col])
-    needed = [key_col]
-    if val_col != key_col:
-        needed.append(val_col)
-    for f in flt:
-        if f[0] not in types:
-            raise KeyError(f"column {f[0]!r} not in encoded data")
-        if f[0] not in needed:
-            needed.append(f[0])
+    where = RowFilter(types, flt)
+    needed = list(dict.fromkeys([key_col, val_col, *where.columns]))
 
     def partials(chunks, dmask) -> Iterator[pa.RecordBatch]:
         for key, cols in chunks:
-            decoded: dict[str, pa.Array] = {}
-            mask = _conj_mask(cols, flt, types, decoded)
+            decoded = DecodedChunk(cols)
+            mask = where(decoded)
             if mask is not None and not mask.any():
                 continue
             codes, dictv, k = _chunk_key_codes(
                 cols[key_col], kt, decoded.get(key_col))
             n = len(codes)
             full, valid = value_fn(cols, decoded, n)
-            keep = _keep_rows(mask, n, dmask, key)
+            keep = keep_rows(mask, n, dmask, key)
             if not keep.any():
                 continue
             sel = keep & valid
@@ -631,9 +536,7 @@ def encoded_group_stats(spark, out_dir: str, key_col: str, val_col: str,
             f"is {types[val_col]}")
 
     def int_values(cols, decoded, n):
-        arr = decoded.get(val_col)
-        if arr is None:
-            arr = decode_column(cols[val_col])
+        arr = decoded[val_col]
         valid = pc.is_valid(arr).to_numpy(zero_copy_only=False).astype(bool)
         full = (arr.cast(pa.int64()).fill_null(0)
                 .to_numpy(zero_copy_only=False).astype(np.int64))
@@ -672,19 +575,13 @@ def _group_distinct_pairs(spark, out_dir: str, key_col: str, val_col: str,
     kt = parse_arrow_type(types[key_col])
     vt = parse_arrow_type(types[val_col])
     flt = list(filters or [])
-    needed = [key_col]
-    if val_col != key_col:
-        needed.append(val_col)
-    for f in flt:
-        if f[0] not in types:
-            raise KeyError(f"column {f[0]!r} not in encoded data")
-        if f[0] not in needed:
-            needed.append(f[0])
+    where = RowFilter(types, flt)
+    needed = list(dict.fromkeys([key_col, val_col, *where.columns]))
 
     def partials(chunks, dmask) -> Iterator[pa.RecordBatch]:
         for key, cols in chunks:
-            decoded: dict[str, pa.Array] = {}
-            mask = _conj_mask(cols, flt, types, decoded)
+            decoded = DecodedChunk(cols)
+            mask = where(decoded)
             if mask is not None and not mask.any():
                 continue
             kcodes, kdict, k = _chunk_key_codes(
@@ -694,7 +591,7 @@ def _group_distinct_pairs(spark, out_dir: str, key_col: str, val_col: str,
             else:
                 vcodes, vdict, kv = _chunk_key_codes(
                     cols[val_col], vt, decoded.get(val_col))
-            keep = _keep_rows(mask, len(kcodes), dmask, key)
+            keep = keep_rows(mask, len(kcodes), dmask, key)
             if not keep.any():
                 continue
             kvals = pa.concat_arrays([kdict.cast(kt), pa.nulls(1, kt)])
@@ -779,19 +676,13 @@ def encoded_group_topk(spark, out_dir: str, key_col: str, val_col: str,
     kt = parse_arrow_type(types[key_col])
     vt = parse_arrow_type(types[val_col])
     flt = list(filters or [])
-    needed = [key_col]
-    if val_col != key_col:
-        needed.append(val_col)
-    for f in flt:
-        if f[0] not in types:
-            raise KeyError(f"column {f[0]!r} not in encoded data")
-        if f[0] not in needed:
-            needed.append(f[0])
+    where = RowFilter(types, flt)
+    needed = list(dict.fromkeys([key_col, val_col, *where.columns]))
 
     def partials(chunks, dmask) -> Iterator[pa.RecordBatch]:
         for key, cols in chunks:
-            decoded: dict[str, pa.Array] = {}
-            mask = _conj_mask(cols, flt, types, decoded)
+            decoded = DecodedChunk(cols)
+            mask = where(decoded)
             if mask is not None and not mask.any():
                 continue
             kcodes, kdict, kk = _chunk_key_codes(
@@ -801,7 +692,7 @@ def encoded_group_topk(spark, out_dir: str, key_col: str, val_col: str,
             else:
                 vcodes, vdict, kv = _chunk_key_codes(
                     cols[val_col], vt, decoded.get(val_col))
-            keep = _keep_rows(mask, len(kcodes), dmask, key)
+            keep = keep_rows(mask, len(kcodes), dmask, key)
             sel = keep & (vcodes < kv)  # null values are not ranked
             if not sel.any():
                 continue
@@ -883,12 +774,8 @@ def encoded_histogram(spark, out_dir: str, column: str, bucket_width: int,
     # w=3_600_000_000 = hourly crawl counts) — zones already store ticks
     flt = list(filters or [])
     any_flt = list(any_filters or [])
-    needed = [column]
-    for f in flt + any_flt:
-        if f[0] not in types:
-            raise KeyError(f"column {f[0]!r} not in encoded data")
-        if f[0] not in needed:
-            needed.append(f[0])
+    where = RowFilter(types, flt, any_flt)
+    needed = list(dict.fromkeys([column, *where.columns]))
     files = planned_files(out_dir, needed, flt, any_flt, types=types)
     meta_arm = not flt and not any_flt
     deletes_on = has_deletes(out_dir)
@@ -912,12 +799,10 @@ def encoded_histogram(spark, out_dir: str, column: str, bucket_width: int,
                     yield pa.RecordBatch.from_pydict(
                         {"bucket": out_b, "cnt": out_c}, schema=_HIST_SCHEMA)
             for key, cols in read_chunks(path, keys, needed):
-                decoded: dict[str, pa.Array] = {}
-                mask = _conj_mask(cols, flt, types, decoded, any_flt)
-                arr = decoded.get(column)
-                if arr is None:
-                    arr = decode_column(cols[column])
-                keep = _keep_rows(mask, len(arr), dmask, key)
+                decoded = DecodedChunk(cols)
+                mask = where(decoded)
+                arr = decoded[column]
+                keep = keep_rows(mask, len(arr), dmask, key)
                 if not keep.any():
                     continue
                 valid = pc.is_valid(arr).to_numpy(zero_copy_only=False).astype(bool)

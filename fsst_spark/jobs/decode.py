@@ -17,11 +17,12 @@ one emitter, :func:`emit_chunks`.
 from __future__ import annotations
 
 import hashlib
-import operator
 import re
 from typing import Iterator
 
+import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
 from ..kernel.codecs import decode_column, parse_arrow_type
@@ -187,8 +188,8 @@ def _zone_key(arrow_name: str, value) -> tuple[int, bool]:
 
 
 def _zone_op_error(op: str) -> ValueError:
-    return ValueError(f"zone op must be one of "
-                      f"{sorted(_CMP_OPS) + ['in', 'prefix']}, got {op!r}")
+    ops = sorted(_CMP_OPS) + ["contains", "in", "prefix", "rlike", "suffix"]
+    return ValueError(f"filter op must be one of {ops}, got {op!r}")
 
 
 def _prefix_bytes(arrow_name: str, value, op: str = "prefix") -> bytes:
@@ -364,13 +365,14 @@ def zone_all(arrow_name: str, op: str, value):
     zones are 8-byte PREFIX bounds: only STRICT pack inequalities transfer
     to the rows (pack(min) > pack(v) => min > v, but pack equality proves
     nothing), so equality is never provable and every bound is strict.
-    Ops the chunk-local row masks do not evaluate raise, as in
-    :func:`zone_keep`."""
+    ``rlike``, which the chunk-local row masks do not evaluate, raises as
+    in :func:`row_mask`."""
     def never(zmin, zmax):
         return False
 
-    if op == "contains":
-        # a zone interval can never prove every row CONTAINS a substring
+    if op in ("contains", "suffix"):
+        # a zone interval (prefix bounds) can never prove every row
+        # contains or ends with a byte string
         _prefix_bytes(arrow_name, value, op)  # type check only
         return never
     if op == "in":
@@ -393,11 +395,169 @@ def zone_all(arrow_name: str, op: str, value):
         lo, hi = {"==": (zv, zv), ">=": (zv + loose, None),
                   ">": (zv + 1, None), "<=": (None, zv - loose),
                   "<": (None, zv - 1)}[op]
+    elif op == "rlike":
+        raise _rlike_error()
     else:
         raise _zone_op_error(op)
     return lambda zmin, zmax: (zmin is not None and zmax is not None
                                and (lo is None or zmin >= lo)
                                and (hi is None or zmax <= hi))
+
+
+def _packf_np(x: np.ndarray) -> np.ndarray:
+    """Vectorized ``encode.zone_packf``: order-preserving int64 keys for a
+    float64 array under SQL comparison semantics (NaN above everything and
+    equal to itself, -0.0 == +0.0) — both Spark and DuckDB order floats
+    this way, so comparing packed keys reproduces their WHERE semantics
+    exactly, where raw IEEE comparison (NaN always false) would not."""
+    x = np.where(x == 0.0, 0.0, x.astype(np.float64))  # collapse -0.0
+    bits = x.view(np.uint64)
+    key = np.where(bits >> np.uint64(63) != 0,
+                   ~bits, bits | np.uint64(1 << 63))
+    key[np.isnan(x)] = np.uint64(0xFFFFFFFFFFFFFFFF)
+    return (key ^ np.uint64(1 << 63)).view(np.int64)
+
+
+_NP_OPS = {">=": np.greater_equal, ">": np.greater,
+           "<=": np.less_equal, "<": np.less, "==": np.equal}
+_PC_OPS = {">=": pc.greater_equal, ">": pc.greater, "<=": pc.less_equal,
+           "<": pc.less, "==": pc.equal}
+_PC_BYTES_OPS = {"prefix": pc.starts_with, "contains": pc.match_substring,
+                 "suffix": pc.ends_with}
+
+
+def _rlike_error() -> ValueError:
+    return ValueError(
+        "'rlike' is Java regex, which only decode_filtered evaluates (as a "
+        "Spark where on the decoded rows); chunk-local jobs take the other "
+        "filter ops")
+
+
+def row_mask(arrow_name: str, op: str, value):
+    """Compile one filter into its exact row mask ``arr -> bool ndarray``
+    over a decoded column of arrow type ``arrow_name``: the one
+    implementation of every row op but ``rlike``. SQL predicate semantics:
+    null is false, floats order NaN greatest and equal to itself with
+    -0.0 == +0.0 (Spark's and DuckDB's order), and timestamps compare in
+    storage-unit ticks, as zone pruning does — so the array is the
+    chunk's as decoded, before any unit cast. Like :func:`zone_keep` it
+    dispatches on the COLUMN's type, and a value/column mismatch or an
+    unknown op raises here, before any chunk is read. ``rlike`` raises
+    too: Spark's rlike is Java regex, which no chunk-local mask
+    reproduces."""
+    if op == "rlike":
+        raise _rlike_error()
+    if op in _PC_BYTES_OPS:
+        fn, pattern = _PC_BYTES_OPS[op], _prefix_bytes(arrow_name, value, op)
+        test = lambda arr: fn(arr, pattern=pattern)  # noqa: E731
+    elif arrow_name in _STRINGY:
+        t = parse_arrow_type(arrow_name)
+        if op == "in":
+            vs = pa.array(list(value), type=t)  # ArrowTypeError on a mismatch
+            test = lambda arr: pc.is_in(arr, value_set=vs)  # noqa: E731
+        elif op in _CMP_OPS:
+            _zone_key(arrow_name, value)  # type check: raises on mismatch
+            fn, rhs = _PC_OPS[op], pa.scalar(value, type=t)
+            test = lambda arr: fn(arr, rhs)  # noqa: E731
+        else:
+            raise _zone_op_error(op)
+    else:
+        # ints, timestamps (ticks) and floats (packed keys) compare as
+        # int64 order keys, the zone keys' own order
+        if op == "in":
+            keys = np.array([_zone_key(arrow_name, v)[0] for v in value],
+                            dtype=np.int64)
+            cmp = lambda lhs: np.isin(lhs, keys)  # noqa: E731
+        elif op in _CMP_OPS:
+            fn, key = _NP_OPS[op], np.int64(_zone_key(arrow_name, value)[0])
+            cmp = lambda lhs: fn(lhs, key)  # noqa: E731
+        else:
+            raise _zone_op_error(op)
+        floats = arrow_name in ("float", "double")
+
+        def mask(arr):
+            valid = pc.is_valid(arr).to_numpy(zero_copy_only=False)
+            if floats:
+                lhs = _packf_np(arr.cast(pa.float64()).fill_null(0.0)
+                                .to_numpy(zero_copy_only=False))
+            else:
+                lhs = (arr.cast(pa.int64()).fill_null(0)
+                       .to_numpy(zero_copy_only=False))
+            return cmp(lhs) & valid
+        return mask
+    return lambda arr: test(arr).fill_null(False).to_numpy(
+        zero_copy_only=False)
+
+
+def _arrow_mask(arr: pa.Array, op: str, value, arrow_name: str) -> np.ndarray:
+    """:func:`row_mask` compiled and run on one array."""
+    return row_mask(arrow_name, op, value)(arr)
+
+
+class DecodedChunk(dict):
+    """One chunk's columns, each decoded on first use: ``chunk`` is a
+    :func:`plan.read_chunks` ``{column: encoded}``, and a schema-log
+    ``added`` column the chunk predates reads as NULLs. ``get`` does not
+    decode, so a caller can ask whether a column is decoded yet."""
+
+    def __init__(self, chunk: dict, added: dict[str, str] | None = None):
+        super().__init__()
+        self.chunk, self.added = chunk, added or {}
+
+    def __missing__(self, c: str) -> pa.Array:
+        if c in self.chunk:
+            arr = decode_column(self.chunk[c])
+        else:  # a pre-add chunk: virtual NULLs
+            assert c in self.added, f"incomplete chunk: missing {c!r}"
+            arr = pa.nulls(self.rows(), parse_arrow_type(self.added[c]))
+        self[c] = arr
+        return arr
+
+    def rows(self) -> int:
+        if not self:
+            return len(self[next(iter(self.chunk))])
+        return len(next(iter(self.values())))
+
+
+class RowFilter:
+    """``AND(filters) AND OR(any_filters)`` compiled once (each filter
+    through :func:`row_mask`, so a bad filter raises on the driver) into
+    the exact row mask of one :class:`DecodedChunk`: a bool array, or None
+    when there is no filter. A conjunct that keeps no row ends the fold,
+    so the rest of the filter columns never decode. ``columns`` are the
+    filter columns a task must read."""
+
+    def __init__(self, types: dict[str, str], filters=(), any_filters=()):
+        for c, _, _ in (*filters, *any_filters):
+            if c not in types:
+                raise KeyError(f"column {c!r} not in encoded data")
+        self.conj = [(c, row_mask(types[c], op, v)) for c, op, v in filters]
+        self.disj = [(c, row_mask(types[c], op, v))
+                     for c, op, v in any_filters]
+        self.columns = list(dict.fromkeys(c for c, _ in self.conj + self.disj))
+
+    def __call__(self, cols: DecodedChunk) -> np.ndarray | None:
+        mask = None
+        for c, test in self.conj:
+            mask = test(cols[c]) if mask is None else mask & test(cols[c])
+            if not mask.any():
+                return mask
+        if self.disj:
+            any_mask = np.logical_or.reduce([test(cols[c])
+                                             for c, test in self.disj])
+            mask = any_mask if mask is None else mask & any_mask
+        return mask
+
+
+def keep_rows(mask: np.ndarray | None, n: int, dmask, key) -> np.ndarray:
+    """The rows of an ``n``-row chunk that ``mask`` keeps (every row when
+    None), minus the chunk's tombstoned positions (``dmask``: the task's
+    :class:`deletes.DeleteMask`, None on a store without deletes)."""
+    keep = np.ones(n, dtype=bool) if mask is None else mask.copy()
+    pos = dmask.positions(*key) if dmask is not None else None
+    if pos is not None:
+        keep[pos[pos < n]] = False
+    return keep
 
 
 # escapes whose Java-regex meaning is BROADER than (or absent from)
@@ -475,40 +635,52 @@ def scan_columns(store: str, columns: list[str],
     return list(columns) + sorted(phys)[:1]
 
 
+# the boolean column a task emits for the in-task branches of an OR clause
+# that also holds rlike branches, which Spark evaluates
+OR_COL = "_fsst_or_rows"
+
+
 def emit_chunks(store: str, chunks, columns: list[str], added: dict[str, str],
-                deletes: bool, provenance: bool = False
-                ) -> Iterator[pa.RecordBatch]:
+                deletes: bool, provenance: bool = False,
+                where: RowFilter | None = None,
+                flag: RowFilter | None = None) -> Iterator[pa.RecordBatch]:
     """The one chunk emitter: each ``(key, {column: encoded})`` of
     :func:`plan.read_chunks` decodes into one RecordBatch of ``columns``,
     led by ``pid, chunk_id`` when ``provenance``, one chunk at a time. A
     chunk written before a schema-log ADD COLUMN (``added``) holds NULLs
-    for it, timestamps convert to the microseconds Spark speaks, and when
-    the store has ``deletes`` tombstoned rows drop (a chunk that loses
-    every row emits nothing)."""
-    import numpy as np
-
+    for it. The rows that ``where`` keeps, less the store's tombstoned
+    rows when it has ``deletes`` (:func:`keep_rows`), are taken before
+    timestamps convert to the microseconds Spark speaks; a chunk left with
+    no row emits nothing, and the columns of a chunk ``where`` empties
+    never decode. ``flag`` appends its mask as the boolean column
+    ``OR_COL``. With neither a filter nor a tombstone, no mask is built
+    and no row is taken."""
     from ..env import madvise_hugepages
-    from .deletes import DeleteMask, apply_delete_mask
+    from .deletes import DeleteMask
 
     madvise_hugepages()
     dmask = DeleteMask(store) if deletes else None
     names = ["pid", "chunk_id", *columns] if provenance else list(columns)
+    if flag is not None:
+        names.append(OR_COL)
     for key, chunk in chunks:
-        cols = {c: decode_column(enc) for c, enc in chunk.items()}
-        n = len(next(iter(cols.values())))
-        arrays = []
-        for c in columns:
-            if c in cols:
-                arr = cols[c]
-            else:  # a pre-add chunk: virtual NULLs
-                assert c in added, f"incomplete chunk {key}: missing {c!r}"
-                arr = pa.nulls(n, parse_arrow_type(added[c]))
-            if pa.types.is_timestamp(arr.type) and arr.type.unit != "us":
-                arr = arr.cast(pa.timestamp("us", tz=arr.type.tz))
-            arrays.append(arr)
-        arrays = apply_delete_mask(dmask, key[0], key[1], arrays)
-        if arrays is None:
-            continue  # every row tombstoned
+        cols = DecodedChunk(chunk, added)
+        keep = where(cols) if where is not None else None
+        if dmask is not None:
+            keep = keep_rows(keep, cols.rows() if keep is None else len(keep),
+                             dmask, key)
+        if keep is not None:
+            if not keep.any():
+                continue  # no row passes, or every row is tombstoned
+            keep = None if keep.all() else pa.array(np.flatnonzero(keep))
+        arrays = [cols[c] for c in columns]
+        if flag is not None:
+            arrays.append(pa.array(flag(cols)))
+        if keep is not None:
+            arrays = [a.take(keep) for a in arrays]
+        arrays = [a.cast(pa.timestamp("us", tz=a.type.tz))
+                  if pa.types.is_timestamp(a.type) and a.type.unit != "us"
+                  else a for a in arrays]
         if provenance:
             n = len(arrays[0])
             arrays = [pa.array(np.full(n, key[0], dtype=np.int32)),
@@ -525,20 +697,25 @@ def decode_job(spark, out_dir: str, columns: list[str] | None = None,
                ordered: bool = False,
                _pids: list[int] | None = None,
                _chunk_keys: list[tuple[int, int]] | None = None,
-               _types: dict[str, str] | None = None) -> DataFrame:
+               _types: dict[str, str] | None = None,
+               _where: RowFilter | None = None,
+               _flag: RowFilter | None = None) -> DataFrame:
     """DataFrame of the decoded table (plus pid/chunk_id provenance cols).
 
     ``zone_filter=(col, op, value)`` — or a conjunction via
     ``zone_filters=[(col, op, value), ...]`` (all must hold) — prunes whole
     chunks via the encode-time zone maps BEFORE any payload is read or
     decoded — chunk-granular, so the result still contains non-matching
-    rows from surviving chunks; apply the exact row predicate afterwards
-    (``decode_filtered`` does both). ``zone_filters_any`` instead prunes
-    for a DISJUNCTION (any branch may hold; composable with the
-    conjunctive filters — both prunings apply). String equality filters
-    additionally prune via the dict codec's dictionary (``dict_prune``):
-    chunks whose dictionary lacks the value are skipped without decoding
-    any payload beyond the dictionary itself.
+    rows from surviving chunks. ``decode_filtered`` adds the exact row
+    predicate, which its file tasks apply to each decoded chunk
+    (``_where`` keeps rows, ``_flag`` emits the mask of an OR clause's
+    in-task branches as ``OR_COL``; see :func:`emit_chunks`).
+    ``zone_filters_any`` instead prunes for a DISJUNCTION (any branch may
+    hold; composable with the conjunctive filters — both prunings apply).
+    String equality filters additionally prune via the dict codec's
+    dictionary (``dict_prune``): chunks whose dictionary lacks the value
+    are skipped without decoding any payload beyond the dictionary
+    itself.
 
     ``as_of=N`` time-travels: only chunks committed by log entries 0..N
     decode (the planner reads only those pids' files — commit entries
@@ -554,6 +731,8 @@ def decode_job(spark, out_dir: str, columns: list[str] | None = None,
     types = (_types if _types is not None
              else column_arrow_types(out_dir, include_added=True))
     ddl, out_cols = decoded_schema_ddl(types, columns)
+    if _flag is not None:
+        ddl += f", {OR_COL} boolean"
     filters = list(zone_filters or [])
     if zone_filter is not None:
         filters.append(zone_filter)
@@ -565,11 +744,13 @@ def decode_job(spark, out_dir: str, columns: list[str] | None = None,
 
     deletes_on = has_deletes(out_dir)
     added = added_columns(out_dir)
-    scan = scan_columns(out_dir, out_cols, added)
+    wcols = [c for w in (_where, _flag) if w is not None for c in w.columns]
+    scan = scan_columns(out_dir, list(dict.fromkeys(out_cols + wcols)), added)
 
     def read_files(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         return emit_chunks(out_dir, task_chunks(batches, scan),
-                           out_cols, added, deletes_on, provenance=True)
+                           out_cols, added, deletes_on, provenance=True,
+                           where=_where, flag=_flag)
 
     # FILE-GRANULAR read: every (pid, chunk_id) group lives whole inside
     # its pid's single chunk file, so each task reads a run of files with
@@ -587,41 +768,36 @@ def decode_job(spark, out_dir: str, columns: list[str] | None = None,
     return file_tasks_df(spark, files).mapInArrow(read_files, ddl)
 
 
-def _row_predicate(col: str, op: str, value, arrow_name: str):
-    """Exact row predicate for one zone filter, typed by the COLUMN.
-
-    Timestamp columns compare in storage-unit ticks (``unix_micros`` for
-    the us-precision Spark type) — a bare ``F.col(ts) >= int`` raises
-    AnalysisException (TIMESTAMP vs BIGINT), so int/datetime/ISO-string
-    values are all coerced through ``_ts_ticks``."""
-    def coerce(v):
-        if arrow_name.startswith("timestamp["):
-            mult = _TS_UNIT_PER_SEC[_ts_unit(arrow_name)]
-            return _ts_ticks(arrow_name, v) * 10**6 // mult
-        _zone_key(arrow_name, v)  # type check only
-        return float(v) if arrow_name in ("float", "double") else v
-
-    if op == "rlike":
-        if arrow_name not in ("string", "large_string"):
-            raise ValueError(
-                f"'rlike' needs a string column; {col!r} is {arrow_name}")
-        return F.col(col).rlike(value)
-    name = {"prefix": "startswith", "contains": "contains",
-            "suffix": "endswith"}.get(op)
-    if name is not None:
-        raw = _prefix_bytes(arrow_name, value, op)  # type check
-        if op != "prefix" and arrow_name in ("binary", "large_binary"):
-            return getattr(F, name)(F.col(col), F.lit(raw))
-        return getattr(F.col(col), name)(
-            value.decode("utf-8") if isinstance(value, bytes) else value)
-    # each Column operation is several py4j round trips: build only the
-    # one comparison asked for
-    lhs = (F.unix_micros(F.col(col)) if arrow_name.startswith("timestamp[")
-           else F.col(col))
-    if op == "in":
-        return lhs.isin(*[coerce(v) for v in value])
-    return {">=": operator.ge, ">": operator.gt, "<=": operator.le,
-            "<": operator.lt, "==": operator.eq}[op](lhs, F.lit(coerce(value)))
+def _decode_rows(spark, out_dir: str, types: dict[str, str],
+                 columns: list[str] | None, flt: list[tuple],
+                 any_flt: list[tuple], **plan) -> DataFrame:
+    """:func:`decode_job` under ``plan`` with the exact row predicate
+    ``AND(flt) AND OR(any_flt)``. Every op but ``rlike`` runs in the file
+    task (:class:`RowFilter`), so only matching rows and ``columns`` leave
+    it. ``rlike`` is Java regex, so Spark evaluates it with a ``where`` on
+    the decoded rows (its columns ride along, then drop); an OR clause
+    that mixes it with other ops ORs it with the task's mask of those
+    branches, emitted as ``OR_COL``."""
+    rx = [f for f in flt if f[1] == "rlike"]
+    any_rx = [f for f in any_flt if f[1] == "rlike"]
+    any_task = [f for f in any_flt if f[1] != "rlike"]
+    where = RowFilter(types, [f for f in flt if f[1] != "rlike"],
+                      () if any_rx else any_task)
+    flag = RowFilter(types, (), any_task) if any_rx and any_task else None
+    extra = [c for c in dict.fromkeys(f[0] for f in rx + any_rx)
+             if columns is not None and c not in columns]
+    df = decode_job(spark, out_dir, None if columns is None else columns + extra,
+                    _types=types, _where=where, _flag=flag, **plan)
+    for c, _, pattern in rx:
+        df = df.where(F.col(c).rlike(pattern))
+    if any_rx:
+        pred = F.col(OR_COL) if flag is not None else None
+        for c, _, pattern in any_rx:
+            p = F.col(c).rlike(pattern)
+            pred = p if pred is None else (pred | p)
+        df = df.where(pred)
+    drop = extra + ([OR_COL] if flag is not None else [])
+    return df.drop(*drop) if drop else df
 
 
 def decode_filtered(spark, out_dir: str, col: str | None = None, op: str | None = None,
@@ -642,7 +818,9 @@ def decode_filtered(spark, out_dir: str, col: str | None = None, op: str | None 
     maps (plus dict sections and blooms) can match — the OR clause prunes
     to the union of its branches' keep-sets, so ``lang == 'de' OR lang ==
     'fr'`` on a clustered corpus still skips every other language's
-    chunks at 100 TB."""
+    chunks at 100 TB. The file tasks apply the row predicate to each
+    decoded chunk and emit only matching rows of ``columns``; only an
+    ``rlike`` filter (Java regex) becomes a Spark ``where``."""
     flt = list(filters or [])
     if col is not None:
         flt.insert(0, (col, op, value))
@@ -650,33 +828,17 @@ def decode_filtered(spark, out_dir: str, col: str | None = None, op: str | None 
     if not flt and not any_flt:
         raise ValueError("decode_filtered needs (col, op, value), "
                          "filters=[...], or any_filters=[...]")
-    # one entry per filter column, however many predicates name it
-    fcols = list(dict.fromkeys(f[0] for f in flt + any_flt))
-    cols = columns
-    if cols is not None:
-        cols = cols + [c for c in fcols if c not in cols]
     types = column_arrow_types(out_dir, include_added=True)
-    for fc in fcols:
+    for fc in dict.fromkeys(f[0] for f in flt + any_flt):
         if fc in types and types[fc].startswith(
                 ("list<", "large_list<", "fixed_size_list<")):
             raise ValueError(
                 f"cannot filter on nested column {fc!r} ({types[fc]}): "
                 "array columns have no zone maps or scalar predicates — "
                 "filter on a scalar column instead")
-    df = decode_job(spark, out_dir, cols, zone_filters=flt,
-                    zone_filters_any=any_flt or None, as_of=as_of,
-                    _pids=_pids, _types=types)
-    for fc, fop, fval in flt:
-        df = df.where(_row_predicate(fc, fop, fval, types[fc]))
-    if any_flt:
-        pred = None
-        for fc, fop, fval in any_flt:
-            p = _row_predicate(fc, fop, fval, types[fc])
-            pred = p if pred is None else (pred | p)
-        df = df.where(pred)
-    if columns is not None:
-        df = df.drop(*[c for c in fcols if c not in columns])
-    return df
+    return _decode_rows(spark, out_dir, types, columns, flt, any_flt,
+                        zone_filters=flt, zone_filters_any=any_flt or None,
+                        as_of=as_of, _pids=_pids)
 
 
 def decode_plan(spark, out_dir: str, columns: list[str] | None = None,
@@ -807,29 +969,22 @@ def decode_head(spark, out_dir: str, n: int,
     their counts, so the prefix doubles until the limit is met or every
     surviving chunk is read — each retry costs one count() over a chunk
     set that is still bounded by ~2× what the limit ultimately needed.
-    ``filters`` rows are exact (zone pruning is conservative; the row
-    predicates re-apply), so the returned rows always satisfy them."""
+    ``filters`` rows are exact (zone pruning is conservative; the file
+    tasks apply the row predicates, as in :func:`decode_filtered`), so
+    the returned rows always satisfy them."""
     if n <= 0:
         raise ValueError(f"decode_head needs n > 0 (got {n})")
     from .deletes import has_deletes
     from .plan import plan_chunks
 
     flt = list(filters or [])
-    fcols = [f[0] for f in flt]
-    cols = columns
-    if cols is not None:
-        cols = cols + [c for c in fcols if c not in cols]
     types = column_arrow_types(out_dir, include_added=True)
     plan = plan_chunks(out_dir, None, flt, types=types)
     chunks = [(k, fp.n_rows[k]) for fp in plan.files for k in fp.keys]
 
     def build(keys):
-        df = decode_job(spark, out_dir, cols, _chunk_keys=keys)
-        for fc, fop, fval in flt:
-            df = df.where(_row_predicate(fc, fop, fval, types[fc]))
-        if columns is not None:
-            df = df.drop(*[c for c in fcols if c not in columns])
-        return df
+        return _decode_rows(spark, out_dir, types, columns, flt, [],
+                            _chunk_keys=keys)
 
     if not flt and not has_deletes(out_dir):  # exact counts: one selection
         keys, got = [], 0

@@ -4,13 +4,15 @@ The shape is Iceberg v2's position deletes. ``delete_where`` never
 rewrites a chunk file: the driver-side planner (:mod:`jobs.plan`, the
 pruning every selective read uses) picks the chunks that might match,
 file tasks decode only their predicate columns through the one chunk
-reader and compute the exact row mask chunk-locally, and the job
-appends narrow ``(pid, chunk_id, pos)`` tombstone rows under
-``<store>/deletes/``. Every read that goes through ``decode_job`` /
-``decode_filtered`` / the ``fsst`` DataSource then applies the
-tombstones executor-side — each task reads the tombstone parquet with a
-pushed ``pid`` filter once per pid it touches, so merge-on-read costs
-one narrow-side lookup, never a shuffle or a driver collect.
+reader and compute the exact row mask chunk-locally (the one compiled
+row predicate, :class:`decode.RowFilter`), and the job appends narrow
+``(pid, chunk_id, pos)`` tombstone rows under ``<store>/deletes/``.
+Every read that goes through ``decode_job`` / ``decode_filtered`` / the
+``fsst`` DataSource then drops the tombstoned rows executor-side
+(:func:`decode.keep_rows`, in ``decode.emit_chunks``) — each task reads
+the tombstone parquet with a pushed ``pid`` filter once per pid it
+touches, so merge-on-read costs one narrow-side lookup, never a shuffle
+or a driver collect.
 
 What deletes do NOT compose with, by design: the metadata-only /
 sketch-answering fast paths of ``jobs.stats`` (column stats and exact
@@ -136,16 +138,6 @@ class DeleteMask:
         pos = self._by_pid[pid].get(chunk_id)
         return pos if pos is not None and len(pos) else None
 
-    def keep_indices(self, pid: int, chunk_id: int, n: int) -> np.ndarray | None:
-        """Surviving row indices of an n-row chunk, or None when nothing
-        in the chunk is tombstoned (callers skip the take entirely)."""
-        pos = self.positions(pid, chunk_id)
-        if pos is None:
-            return None
-        mask = np.ones(n, dtype=bool)
-        mask[pos[pos < n]] = False
-        return np.flatnonzero(mask)
-
 
 def delete_where(spark, store: str, col: str | None = None,
                  op: str | None = None, value=None,
@@ -184,39 +176,33 @@ def _where_tombstones(spark, store: str, flt: list[tuple],
                       any_flt: list[tuple], pids):
     """``delete_where``'s tombstone frame: the new ``(pid, chunk_id,
     pos)`` rows of ``AND(flt) AND OR(any_flt)``."""
-    from .agg import _conj_mask
-    from .decode import column_arrow_types
+    from .decode import RowFilter, column_arrow_types
 
     types = column_arrow_types(store)
-    fcols = list(dict.fromkeys(f[0] for f in flt + any_flt))
-    for c in fcols:
-        if c not in types:
-            raise KeyError(f"column {c!r} not in encoded data")
-    return _tombstones(
-        spark, store, fcols, flt, any_flt, pids, types,
-        lambda cols: _conj_mask(cols, flt, types, {}, any_flt))
+    where = RowFilter(types, flt, any_flt)
+    return _tombstones(spark, store, where.columns, flt, any_flt, pids,
+                       types, where)
 
 
 def _tombstones(spark, store: str, columns: list[str], flt, any_flt, pids,
-                types, row_mask):
+                types, where):
     """File tasks over the planner's surviving chunks of ``columns``:
-    ``row_mask(cols)`` marks each chunk's rows to delete, and the rows not
-    yet tombstoned become ``(pid, chunk_id, pos)`` rows."""
+    ``where(DecodedChunk)`` marks each chunk's rows to delete, and the
+    rows not yet tombstoned (:func:`decode.keep_rows`) become ``(pid,
+    chunk_id, pos)`` rows."""
+    from .decode import DecodedChunk, keep_rows
     from .plan import file_tasks_df, planned_files, task_chunks
 
     files = planned_files(store, columns, flt, any_flt, pids=pids,
                           types=types)
 
     def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        mask_cache = DeleteMask(store)
+        dmask = DeleteMask(store)
         for key, cols in task_chunks(batches, columns):
-            mask = row_mask(cols)
+            mask = where(DecodedChunk(cols))
             if not mask.any():
                 continue
-            already = mask_cache.positions(*key)
-            pos = np.flatnonzero(mask).astype(np.int64)
-            if already is not None:
-                pos = pos[~np.isin(pos, already)]
+            pos = np.flatnonzero(keep_rows(mask, len(mask), dmask, key))
             if not len(pos):
                 continue
             yield pa.RecordBatch.from_arrays(
@@ -263,8 +249,7 @@ def delete_matching(spark, store: str, col: str, keys_df,
     """
     from pyspark.sql import DataFrame as SparkDataFrame
 
-    from .agg import _packf_np
-    from .decode import _STRINGY, _zone_key, column_arrow_types
+    from .decode import column_arrow_types, row_mask
 
     if isinstance(keys_df, SparkDataFrame):
         if len(keys_df.columns) != 1:
@@ -294,32 +279,14 @@ def delete_matching(spark, store: str, col: str, keys_df,
     arrow_name = types[col]
     bkeys = spark.sparkContext.broadcast(
         sorted(r["_k"] for r in kdf.collect()))
-    probe = []  # built ONCE per task on first use (never per chunk — 10^7 keys)
+    probe = []  # compiled ONCE per task on first use (never per chunk — 10^7 keys)
 
-    def row_mask(cols):
-        import pyarrow.compute as pc
-
-        from ..kernel.codecs import decode_column
-
-        arr = decode_column(cols[col])
-        if arrow_name in _STRINGY:
-            if not probe:
-                probe.append(pa.array(list(bkeys.value), type=arr.type))
-            return (pc.is_in(arr, value_set=probe[0]).fill_null(False)
-                    .to_numpy(zero_copy_only=False).astype(bool))
+    def where(cols):
         if not probe:
-            probe.append(np.unique(np.array(
-                [_zone_key(arrow_name, v)[0] for v in bkeys.value],
-                dtype=np.int64)))
-        valid = pc.is_valid(arr).to_numpy(zero_copy_only=False).astype(bool)
-        if arrow_name in ("float", "double"):
-            lhs = _packf_np(arr.cast(pa.float64()).fill_null(0.0)
-                            .to_numpy(zero_copy_only=False))
-        else:  # ints and timestamps (storage-unit ticks)
-            lhs = arr.cast(pa.int64()).fill_null(0).to_numpy(zero_copy_only=False)
-        return np.isin(lhs, probe[0]) & valid
+            probe.append(row_mask(arrow_name, "in", bkeys.value))
+        return probe[0](cols[col])
 
-    tomb = _tombstones(spark, store, [col], [], [], pids, types, row_mask)
+    tomb = _tombstones(spark, store, [col], [], [], pids, types, where)
     return _append_tombstones(store, tomb, {"match_col": col,
                                             "n_keys": n_keys})
 
@@ -415,21 +382,3 @@ def materialize_deletes(spark, in_dir: str, out_dir: str,
         spark, df, out_dir, num_partitions=num_partitions,
         unique_col=unique_col, chunk_bytes=chunk_bytes, resume=False,
         lineage=lin)
-
-
-def apply_delete_mask(mask: "DeleteMask | None", pid: int, chunk_id: int,
-                      arrays: "list[pa.Array]") -> "list[pa.Array] | None":
-    """Shared read-side hook: drop tombstoned rows from one decoded
-    chunk's column arrays. Returns None when every row is tombstoned
-    (callers skip the emit), the arrays unchanged when the chunk is
-    clean."""
-    if mask is None:
-        return arrays
-    n = len(arrays[0]) if arrays else 0
-    keep = mask.keep_indices(pid, chunk_id, n)
-    if keep is None:
-        return arrays
-    if not len(keep):
-        return None
-    idx = pa.array(keep)
-    return [a.take(idx) for a in arrays]

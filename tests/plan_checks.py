@@ -62,3 +62,11 @@ def run_counting_py4j(spark, fn):
     finally:
         del client.send_command
     return out, n
+
+
+def assert_no_row_filter(df) -> None:
+    """A filtered read whose row predicate runs inside the file task: a
+    ``MapInArrow`` and no Spark ``Filter`` node in the executed plan."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan, plan
+    assert not re.search(r"\bFilter \(", plan), plan

@@ -157,7 +157,7 @@ def test_arrow_mask_float_sql_semantics():
     import numpy as np
     import pyarrow as pa
 
-    from fsst_spark.jobs.agg import _arrow_mask
+    from fsst_spark.jobs.decode import _arrow_mask
 
     arr = pa.array([1.5, float("nan"), -0.0, 0.0, -2.5, None], type=pa.float64())
     assert _arrow_mask(arr, ">=", 0.0, "double").tolist() == [

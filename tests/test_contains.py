@@ -5,14 +5,16 @@ counts, and DataSource StringContains pushdown."""
 import pytest
 from pyspark.sql import functions as F
 
-from fsst_spark.jobs.agg import encoded_count_filtered
+from fsst_spark.jobs.agg import encoded_count_filtered, encoded_group_count
 from fsst_spark.jobs.decode import (
     _dict_probes,
     decode_filtered,
+    decode_job,
     decode_plan,
     dict_has_value,
     dict_section,
 )
+from fsst_spark.jobs.deletes import delete_where
 from fsst_spark.jobs.encode import encode_job
 
 
@@ -188,3 +190,34 @@ class TestSuffix:
         assert got.count() == want.count() > 0
         # dict-prunable miss through the source
         assert back.filter(F.col("lang").endswith("zz")).count() == 0
+
+    def test_suffix_group_count(self, spark, store):
+        out, df = store
+        got = {r["value"]: r["cnt"] for r in encoded_group_count(
+            spark, out, "lang", filters=[("url", "suffix", "-77")]).collect()}
+        want = {r["lang"]: r["count"] for r in df.filter(
+            F.col("url").endswith("-77")).groupBy("lang").count().collect()}
+        assert got == want and sum(want.values()) > 0
+
+    def test_suffix_count_filtered(self, spark, store):
+        out, df = store
+        r = encoded_count_filtered(
+            spark, out, [("url", "suffix", "-77")]).collect()[0]
+        assert r["n_rows"] == df.filter(F.col("url").endswith("-77")).count() > 0
+        # a suffix is never provable from prefix zones
+        assert r["chunks_metadata_only"] == 0, r
+
+    def test_suffix_delete(self, spark, tmp_path):
+        out = str(tmp_path / "store")
+        df = (spark.range(0, 300).withColumnRenamed("id", "doc_id")
+              .withColumn("url", F.concat(
+                  F.lit("http://x/"), F.col("doc_id").cast("string"),
+                  F.when(F.col("doc_id") % 3 == 0, F.lit(".txt"))
+                  .otherwise(F.lit(".html")))))
+        encode_job(spark, df, out, num_partitions=2, resume=False,
+                   unique_col="doc_id").collect()
+        assert delete_where(spark, out, "url", "suffix", ".txt")[
+            "deleted_now"] == 100
+        left = decode_job(spark, out).select("doc_id", "url").collect()
+        assert sorted(r["doc_id"] for r in left) == [
+            i for i in range(300) if i % 3]

@@ -8,17 +8,19 @@ from collections import Counter
 import pytest
 from pyspark.sql import functions as F
 
-from fsst_spark.jobs.decode import decode_filtered, decode_job, decode_plan
+from fsst_spark.jobs.decode import (decode_filtered, decode_head, decode_job,
+                                    decode_plan)
 from fsst_spark.jobs.encode import encode_job
 from fsst_spark.sources.fsst_source import register
-from tests.plan_checks import (assert_no_chunk_row_shuffle, run_counting_jobs,
+from tests.plan_checks import (assert_no_chunk_row_shuffle,
+                               assert_no_row_filter, run_counting_jobs,
                                run_counting_py4j)
 
 URL = "00001234.example.org/page"
 # py4j commands the driver sends per call (test_py4j_round_trips_per_call);
 # a task frame built from a pickled RDD and a row predicate that built every
-# comparison made them 165 and 79
-POINT_PY4J = 90
+# comparison made them 165 and 79, and a Spark-side row predicate 90
+POINT_PY4J = 62
 ENCODE_PY4J = 48
 
 
@@ -48,6 +50,37 @@ def test_point_lookup_is_one_spark_job(spark, clustered):
         lambda: decode_filtered(spark, clustered, "url", "==", URL).collect())
     assert [r["doc_id"] for r in rows] == [1234]
     assert n_jobs == 1
+
+
+def test_row_predicate_runs_in_the_file_task(spark, clustered):
+    """Every filter op but rlike keeps rows inside the file task, so no
+    Spark Filter sits above the mapInArrow and only the requested columns
+    leave it; an rlike (Java regex) read keeps its Spark Filter, and an OR
+    clause that mixes rlike with other ops still returns exact rows."""
+    point = decode_filtered(spark, clustered, "url", "==", URL)
+    both = decode_filtered(
+        spark, clustered, columns=["doc_id"], filters=[("doc_id", "<", 2000)],
+        any_filters=[("lang", "==", "de"), ("url", "prefix", "000001")])
+    head = decode_head(spark, clustered, 5, columns=["doc_id"],
+                       filters=[("lang", "==", "fr")])
+    for df in (point, both, head):
+        assert_no_row_filter(df)
+    assert [r["doc_id"] for r in point.collect()] == [1234]
+    assert sorted(r["doc_id"] for r in both.collect()) == [
+        i for i in range(2000) if i % 3 == 0 or 100 <= i < 200]
+    assert both.columns == ["pid", "chunk_id", "doc_id"]
+    assert all(r["doc_id"] % 3 == 2 for r in head.collect())
+    assert head.columns == ["pid", "chunk_id", "doc_id"]
+
+    rx = decode_filtered(spark, clustered, "lang", "rlike", "^d")
+    with pytest.raises(AssertionError, match="Filter"):
+        assert_no_row_filter(rx)
+    mixed = decode_filtered(
+        spark, clustered, columns=["doc_id"],
+        any_filters=[("lang", "rlike", "^d"), ("doc_id", "<", 10)])
+    assert mixed.columns == ["pid", "chunk_id", "doc_id"]
+    assert sorted(r["doc_id"] for r in mixed.collect()) == [
+        i for i in range(4000) if i % 3 == 0 or i < 10]
 
 
 def test_source_point_lookup_plans_one_partition(spark, clustered):
@@ -192,7 +225,7 @@ def test_metadata_cache_rereads_replaced_files(spark, tmp_path,
 
 def test_py4j_round_trips_per_call(spark, clustered, tmp_path):
     """The driver's py4j traffic per call stays pinned: a point lookup
-    (plan, task frame, row predicate, collect) and a file-granular encode
+    (plan, task frame, collect) and a file-granular encode
     job's build and run."""
     from fsst_spark.jobs.encode import encode_files_job
 

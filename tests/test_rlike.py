@@ -15,6 +15,7 @@ from fsst_spark.jobs.decode import (_rlike_prunable, decode_filtered,
                                     decode_job, decode_plan)
 from fsst_spark.jobs.encode import encode_job
 from tests import REPO_ROOT
+from tests.plan_checks import run_counting_jobs
 
 
 @pytest.fixture(scope="module")
@@ -88,6 +89,28 @@ def test_rlike_combines_with_other_filters(spark, store):
 def test_rlike_non_string_column_raises(spark, store):
     with pytest.raises(ValueError):
         decode_filtered(spark, store, "doc_id", "rlike", "1+").count()
+
+
+def test_chunk_local_jobs_reject_rlike_before_any_job(spark, store):
+    """Only decode_filtered evaluates Java regex: the jobs that mask rows
+    inside their tasks raise on the driver, naming it, and start no job."""
+    from fsst_spark.jobs.agg import (encoded_count_filtered,
+                                     encoded_group_count, encoded_histogram)
+    from fsst_spark.jobs.deletes import delete_where
+
+    f = ("lang", "rlike", "^d")
+    calls = [
+        lambda: encoded_group_count(spark, store, "lang", filters=[f]),
+        lambda: encoded_count_filtered(spark, store, [f]),
+        lambda: encoded_histogram(spark, store, "doc_id", 100, filters=[f]),
+        lambda: delete_where(spark, store, *f),
+    ]
+    tracker = spark.sparkContext.statusTracker()
+    for i, call in enumerate(calls):
+        group = f"rlike-reject-{i}"
+        with pytest.raises(ValueError, match="decode_filtered"):
+            run_counting_jobs(spark, group, call)
+        assert not tracker.getJobIdsForGroup(group)
 
 
 def test_cli_rlike(spark, store, tmp_path):
