@@ -30,7 +30,6 @@ Reference tie: engine-level surface with no reference analog
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import shutil
@@ -41,13 +40,11 @@ from ..sources.fsst_source import (
     commit_range_pids,
 )
 from .deletes import _delete_files, _deletes_dir, _log_delete
+from .encode import part_files
 
 
 def _on_disk_pids(store: str, sub: str = "chunks") -> set[int]:
-    return {
-        int(os.path.basename(p)[len("part-"):-len(".parquet")])
-        for p in glob.glob(os.path.join(store, sub, "part-*.parquet"))
-    }
+    return {pid for pid, _ in part_files(os.path.join(store, sub))}
 
 
 def _trash_dir(store: str, kind: str) -> str:
@@ -197,8 +194,10 @@ def fsck_store(store: str, deep: bool = False) -> dict:
     import pyarrow.parquet as _pq
 
     issues: list[dict] = []
-    chunk_pids = _on_disk_pids(store, "chunks")
-    man_pids = _on_disk_pids(store, "manifest")
+    chunk_paths = dict(part_files(os.path.join(store, "chunks")))
+    chunk_pids = set(chunk_paths)
+    man_files = part_files(os.path.join(store, "manifest"))
+    man_pids = {pid for pid, _ in man_files}
     if not chunk_pids and not man_pids:
         issues.append({"kind": "not_a_store",
                        "detail": "no chunks/ or manifest/ files"})
@@ -247,18 +246,12 @@ def fsck_store(store: str, deep: bool = False) -> dict:
 
     if deep:
         man_rows: dict[int, int] = {}
-        for p in sorted(glob.glob(os.path.join(store, "manifest",
-                                               "part-*.parquet"))):
+        for _, p in man_files:
             t = _pq.read_table(p, columns=["pid", "n_rows"])
             for pid, n in zip(t.column("pid").to_pylist(),
                               t.column("n_rows").to_pylist()):
                 man_rows[int(pid)] = int(n)
-        for pid in sorted(chunk_pids):
-            cp = os.path.join(store, "chunks", f"part-{pid:05d}.parquet")
-            if not os.path.exists(cp):  # >5-digit pids keep full stems
-                cands = glob.glob(os.path.join(store, "chunks",
-                                               f"part-{pid}.parquet"))
-                cp = cands[0] if cands else cp
+        for pid, cp in sorted(chunk_paths.items()):
             try:
                 t = _pq.read_table(cp, columns=["chunk_id", "column",
                                                 "n_rows"])

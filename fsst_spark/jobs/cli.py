@@ -424,7 +424,8 @@ def main(argv: list[str] | None = None) -> int:
     cpt.add_argument("--data", required=True, help="existing encoded store")
     cpt.add_argument("--out", required=True, help="compacted store (new dir)")
     cpt.add_argument("--target-files", type=int, default=None,
-                     help="output chunk-file count (default: input/8)")
+                     help="output chunk-file count, at most the input's "
+                          "(default: input/8)")
 
     rcl = sub.add_parser("recluster",
                          help="re-layout an encoded store on a cluster key "
@@ -760,8 +761,7 @@ def main(argv: list[str] | None = None) -> int:
                                      filters=filters, any_filters=any_flt,
                                      as_of=args.as_of)
             else:
-                df = decode_job(spark, args.data, cols, as_of=args.as_of,
-                                ordered=args.ordered)
+                df = decode_job(spark, args.data, cols, as_of=args.as_of)
             w = df.drop("pid", "chunk_id").write.mode("overwrite")
             if args.partition_by:
                 w = w.partitionBy(*args.partition_by.split(","))
@@ -944,15 +944,12 @@ def main(argv: list[str] | None = None) -> int:
             print(json.dumps({"column": args.column, "n_distinct": len(vals),
                               "values": vals[:1000], **obs}, default=str))
         elif args.cmd == "compact":
-            import glob as _glob
-            import os as _os
-
             from fsst_spark.jobs.compact import compact_store
 
             metrics = compact_store(spark, args.data, args.out,
                                     target_files=args.target_files).collect()
             print(json.dumps({
-                "in_files": len(_glob.glob(_os.path.join(args.data, "chunks", "*.parquet"))),
+                "in_files": json.loads(metrics[0]["lineage"])["source_files"],
                 "out_files": len(metrics),
                 "rows": sum(m["n_rows"] for m in metrics),
                 "chunks": sum(m["n_chunks"] for m in metrics),

@@ -5,51 +5,85 @@ A long-running ingest (streaming epochs, many small encode partitions,
 resumed jobs) leaves an encoded store with thousands of small
 ``chunks/part-*.parquet`` files — the classic lakehouse small-file
 problem: footer-read overhead starts to dominate selective decodes, and
-file listings grow. Compaction rewrites the store at the FILE level:
-chunk rows (still encoded — payloads, params, checksums and zone maps are
-copied verbatim) are range-partitioned by their (pid, chunk_id) key into
-``target_files`` output partitions, re-keyed contiguously, and written
-with the same temp+atomic-rename protocol as the encode jobs. Column
-rows of one chunk stay together (the range shuffle keys on the full chunk
-key), so decode/verify semantics are unchanged; per-column-chunk
-checksums are preserved bit-for-bit, making a post-compaction ``verify``
-a true end-to-end gate.
+file listings grow. Every chunk lives whole in its pid's file, so
+compaction concatenates whole files: one file task per contiguous run of
+the pid-ordered files reads them with pyarrow, renumbers pid and
+chunk_id, and writes one file with the encode jobs' temp+atomic-rename
+protocol. Payloads, params, checksums, zone maps and sketches are copied
+verbatim, so decode/verify semantics are unchanged (a post-compaction
+``verify`` is a true end-to-end gate), and pid order, with any
+clustering, is kept.
 
-This is the shape of an Iceberg ``rewrite_data_files`` action: one narrow
-shuffle of already-compressed bytes, no decode, no re-encode, O(1) driver
-work.
+This is the shape of an Iceberg ``rewrite_data_files`` action: no decode,
+no re-encode, no shuffle, O(files) driver work.
 """
 
 from __future__ import annotations
 
+import bisect
+import itertools
 import json
 import os
 import time
-from typing import Iterator
 
+import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, functions as F
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame
 
-from .. import __version__
-from .encode import CHUNK_SCHEMA, METRIC_PA_SCHEMA, METRIC_SCHEMA_DDL, _atomic_write
+from .encode import (CHUNK_SCHEMA, METRIC_PA_SCHEMA, METRIC_SCHEMA_DDL,
+                     file_task_df, publish_part)
+
+
+def _byte_runs(paths: list[str], k: int) -> list[list[str]]:
+    """``paths`` cut into ``k`` (<= len(paths)) non-empty contiguous runs
+    of about equal bytes."""
+    cum = list(itertools.accumulate(map(os.path.getsize, paths)))
+    bounds = [0]
+    for j in range(1, k):
+        end = bisect.bisect_left(cum, cum[-1] * j / k) + 1
+        bounds.append(min(max(end, bounds[-1] + 1), len(paths) - k + j))
+    return [paths[a:b] for a, b in zip(bounds, bounds[1:] + [len(paths)])]
+
+
+def _compact_run(pid: int, paths: list[str], out_dir: str,
+                 lineage_json: str) -> dict:
+    """Concatenate the chunk files ``paths`` (pid order) into partition
+    ``pid`` of ``out_dir``; returns its manifest row."""
+    t0 = time.time()
+    # read as the canonical chunk schema: metadata columns a file written
+    # before they existed (e.g. bloom) lacks read as nulls
+    t = pq.read_table(paths, schema=CHUNK_SCHEMA)
+    old = (t.column("pid").to_numpy().astype(np.int64) << 32) \
+        | t.column("chunk_id").to_numpy()
+    _, first, chunk_ids = np.unique(old, return_index=True, return_inverse=True)
+    t = t.set_column(0, "pid", pa.array(np.full(t.num_rows, pid, np.int32)))
+    t = t.set_column(1, "chunk_id", pa.array(chunk_ids.astype(np.int32)))
+    return publish_part(out_dir, pid, t, t0, {
+        "n_rows": pc.sum(t.column("n_rows").take(first)).as_py(),
+        "n_chunks": len(first), "raw_bytes": pc.sum(t.column("raw_bytes")).as_py(),
+        "enc_bytes": pc.sum(t.column("enc_bytes")).as_py(),
+        "columns_json": "{}", "lineage": lineage_json})
 
 
 def compact_store(spark, in_dir: str, out_dir: str,
-                  target_files: int | None = None,
-                  lineage: dict | None = None) -> DataFrame:
-    """Rewrite ``in_dir``'s chunk files into ``target_files`` files under
-    ``out_dir`` (chunks/ + manifest/). Returns the lazy metrics frame —
-    ``.collect()`` it to run the job. Payloads are never decoded."""
-    import glob as _glob
+                  target_files: int | None = None) -> DataFrame:
+    """Rewrite ``in_dir``'s chunk files into ``min(target_files, input
+    files)`` files (default: one per 8 inputs) under ``out_dir`` (chunks/
+    + manifest/), each the concatenation of a contiguous pid-ordered run
+    of input files of about equal bytes. Returns the lazy metrics frame —
+    ``.collect()`` it to run the one Spark job. Payloads are never
+    decoded; a store with row tombstones is refused."""
+    from .plan import chunk_files
 
-    n_in = len(_glob.glob(os.path.join(in_dir, "chunks", "*.parquet")))
-    if n_in == 0:
-        raise FileNotFoundError(f"no chunk files under {in_dir}")
-    if target_files is None:
-        target_files = max(1, n_in // 8)
     if os.path.abspath(in_dir) == os.path.abspath(out_dir):
         raise ValueError("compact_store writes a NEW store; out_dir must "
                          "differ from in_dir (swap directories after)")
+    paths = [path for _, path in chunk_files(in_dir)]
+    n_in = len(paths)
+    if target_files is None:
+        target_files = max(1, n_in // 8)
     # compaction remaps (pid, chunk_id) while copying payloads verbatim —
     # position tombstones key on those ids and would be orphaned
     from .deletes import has_deletes
@@ -67,73 +101,21 @@ def compact_store(spark, in_dir: str, out_dir: str,
     from .schema import copy_schema_log
 
     copy_schema_log(in_dir, out_dir)
-    lineage_json = json.dumps(
-        {**(lineage or {}), "mode": "compacted", "source_store": in_dir,
-         "source_files": n_in, "target_files": target_files})
+    lineage_json = json.dumps({"mode": "compacted", "source_store": in_dir,
+                               "source_files": n_in, "target_files": target_files})
+    runs = _byte_runs(paths, min(target_files, n_in))
 
-    chunks = spark.read.parquet(os.path.join(in_dir, "chunks"))
-    # contiguous (pid, chunk_id) ranges per output file: preserves any
-    # clustering the encode layout had (sorted stores stay sorted). The
-    # range key must be exactly the chunk key — equal keys land in one
-    # partition, so every column row of a chunk stays in one task;
-    # including `column` in the key could split a chunk across files.
-    part = chunks.repartitionByRange(
-        target_files, F.col("pid"), F.col("chunk_id"))
-
-    def rewrite(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from pyspark import TaskContext
-
-        new_pid = TaskContext.get().partitionId()
-        t0 = time.time()
-        remap: dict[tuple[int, int], int] = {}
-        rows_by_chunk: dict[tuple[int, int], int] = {}
-        out_batches: list[pa.RecordBatch] = []
-        raw = enc = 0
+    def rewrite(batches):
         for batch in batches:
-            tbl = pa.Table.from_batches([batch])
-            pids = tbl.column("pid").to_pylist()
-            cids = tbl.column("chunk_id").to_pylist()
-            rows_col = tbl.column("n_rows").to_pylist()
-            new_ids = []
-            for p, c, r in zip(pids, cids, rows_col):
-                key = (p, c)
-                if key not in remap:
-                    remap[key] = len(remap)
-                    rows_by_chunk[key] = r  # same for every column row
-                new_ids.append(remap[key])
-            tbl = tbl.set_column(
-                tbl.schema.get_field_index("pid"), "pid",
-                pa.array([new_pid] * len(pids), pa.int32()))
-            tbl = tbl.set_column(
-                tbl.schema.get_field_index("chunk_id"), "chunk_id",
-                pa.array(new_ids, pa.int32()))
-            out_batches.extend(tbl.to_batches())
-            raw += sum(tbl.column("raw_bytes").to_pylist())
-            enc += sum(tbl.column("enc_bytes").to_pylist())
-        if not out_batches:
-            return
-        n_rows = sum(rows_by_chunk.values())
-        out_tbl = pa.Table.from_batches(out_batches)
-        # normalize to the canonical chunk schema, tolerating stores
-        # written before later-added metadata columns (e.g. bloom)
-        names = [f.name for f in CHUNK_SCHEMA if f.name in out_tbl.schema.names]
-        out_tbl = out_tbl.select(names).cast(
-            pa.schema([CHUNK_SCHEMA.field(n) for n in names]))
-        _atomic_write(out_tbl, os.path.join(
-            out_dir, "chunks", f"part-{new_pid:05d}.parquet"))
-        metric = {
-            "pid": new_pid, "status": "done", "n_rows": n_rows,
-            "n_chunks": len(remap), "raw_bytes": raw, "enc_bytes": enc,
-            "wall_sec": time.time() - t0, "columns_json": "{}",
-            "lineage": lineage_json, "engine_version": __version__,
-            "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        }
-        manifest_tbl = pa.Table.from_pylist([metric], schema=METRIC_PA_SCHEMA)
-        _atomic_write(manifest_tbl, os.path.join(
-            out_dir, "manifest", f"part-{new_pid:05d}.parquet"))
-        yield from manifest_tbl.to_batches()
+            for pid, run in zip(batch.column("pid").to_pylist(),
+                                batch.column("files").to_pylist()):
+                row = _compact_run(pid, json.loads(run), out_dir, lineage_json)
+                yield from pa.Table.from_pylist(
+                    [row], schema=METRIC_PA_SCHEMA).to_batches()
 
-    return part.mapInArrow(rewrite, METRIC_SCHEMA_DDL)
+    return (file_task_df(spark, [(i, json.dumps(r)) for i, r in enumerate(runs)],
+                         "pid int, files string")
+            .mapInArrow(rewrite, METRIC_SCHEMA_DDL))
 
 
 def recluster_store(spark, in_dir: str, out_dir: str, sort_key,

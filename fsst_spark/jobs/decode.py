@@ -694,7 +694,6 @@ def decode_job(spark, out_dir: str, columns: list[str] | None = None,
                zone_filters_any: list[tuple[str, str, int | str]] | None = None,
                dict_prune: bool = True,
                as_of: int | None = None,
-               ordered: bool = False,
                _pids: list[int] | None = None,
                _chunk_keys: list[tuple[int, int]] | None = None,
                _types: dict[str, str] | None = None,
@@ -721,8 +720,7 @@ def decode_job(spark, out_dir: str, columns: list[str] | None = None,
     decode (the planner reads only those pids' files — commit entries
     are immutable, so the same N always yields the same rows).
 
-    ``ordered=True`` guarantees the rows come globally ordered by
-    (pid, chunk_id, row position); every decode runs this way. Tasks read
+    Rows come globally ordered by (pid, chunk_id, row position). Tasks read
     runs of files in pid order and emit each file's chunks in file
     (chunk_id) order, so partition i strictly precedes partition i+1 with
     no shuffle and no row-level sort. On a store clustered with
@@ -758,7 +756,6 @@ def decode_job(spark, out_dir: str, columns: list[str] | None = None,
     # paths and keep-sets cross from the JVM. A selective read first asks
     # the driver-side planner which chunks can match: only files with
     # survivors become tasks, and each task decodes only its planned keys.
-    # Tasks run in pid order, which makes `ordered` free.
     if as_of is not None and _pids is not None:
         raise ValueError("pass as_of OR a pid whitelist, not both")
     pids = _as_of_pids(out_dir, as_of) if as_of is not None else _pids

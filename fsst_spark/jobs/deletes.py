@@ -20,8 +20,9 @@ min/max, octet-length stats, top-k, distinct, NDV, quantiles, store
 profiling and layout advice). Their answers come from encode-time chunk
 statistics, which tombstones invalidate; each of those entry points
 calls :func:`require_no_deletes` and fails fast with instructions
-instead of silently returning pre-delete numbers. ``compact_store`` likewise refuses: it remaps (pid, chunk_id)
-keys while copying payloads verbatim, which would orphan the tombstones.
+instead of silently returning pre-delete numbers. ``compact_store``
+likewise refuses: it concatenates whole chunk files and renumbers their
+(pid, chunk_id) keys, which would orphan the tombstones.
 ``materialize_deletes`` (decode -> re-encode, the Iceberg
 ``rewrite_data_files`` analog) folds tombstones into a new store and
 restores every fast path; ``recluster_store`` does too, since it reads
@@ -44,9 +45,10 @@ Reference tie: engine-level surface with no reference analog
 
 from __future__ import annotations
 
+import bisect
 import glob
+import math
 import os
-import shutil
 from typing import Iterator
 
 import numpy as np
@@ -299,6 +301,34 @@ def _log_delete(store: str, entry: dict) -> None:
     append_log_entry(os.path.join(_deletes_dir(store), "_log"), entry)
 
 
+def _pid_ranges(files: list[str], rows_per_file: int):
+    """``(n, ranges)``: the tombstone count of ``files`` and at most
+    ``ceil(n / rows_per_file)`` contiguous ``[lo, hi)`` pid ranges of
+    about equal counts, from the footers' row-group pid statistics and row
+    counts; a group's rows count as spread evenly over its pids."""
+    import pyarrow.dataset as ds
+
+    groups = [(rg.statistics["pid"]["min"], rg.statistics["pid"]["max"] + 1,
+               rg.num_rows)
+              for frag in ds.dataset(files, format="parquet").get_fragments()
+              for rg in frag.row_groups if rg.num_rows]
+    if not groups:
+        return 0, []
+
+    def below(x: int) -> float:  # tombstones with pid < x
+        return sum(r * min(max(x - lo, 0), hi - lo) / (hi - lo)
+                   for lo, hi, r in groups)
+
+    n, top = sum(g[2] for g in groups), max(g[1] for g in groups)
+    k = math.ceil(n / rows_per_file)
+    cuts = [min(groups)[0]]
+    for j in range(1, k):  # the least pid x with below(x) >= j * n / k
+        x = bisect.bisect_left(range(top), n * j / k, lo=cuts[-1], key=below)
+        if cuts[-1] < x < top:
+            cuts.append(x)
+    return n, list(zip(cuts, cuts[1:] + [top]))
+
+
 def compact_deletes(spark, store: str,
                     rows_per_file: int = 50_000_000) -> dict:
     """Merge the tombstone dataset into few (pid, chunk_id, pos)-sorted
@@ -308,49 +338,64 @@ def compact_deletes(spark, store: str,
     count and row-group ordering — this is the OPTIMIZE pass that
     restores both without touching payloads.
 
-    Swap protocol (safe against concurrent readers AND writers): snapshot
-    the current file list, write the deduped/sorted replacement files
-    into the deletes dir under fresh names, THEN unlink the snapshot
-    files. A reader racing the swap sees old+new together — a harmless
-    superset, because tombstones are a set union and mask application
-    dedupes positions (``load_delete_positions`` -> ``np.unique``). A
-    delete call racing the compaction lands a new file outside the
-    snapshot and survives untouched.
+    One Spark job: one file task per pid range of about ``rows_per_file``
+    tombstones (cut from the footers) reads it from the snapshot files
+    with a pushed pid filter, drops duplicates, sorts, and writes one
+    file under a ``.pending`` name readers do not list. Nothing lands
+    whole on one task or the driver.
 
-    At 10^9 tombstones: the sort is a normal range shuffle of narrow
-    int rows split into ``rows_per_file`` slices; nothing lands whole on
-    one reducer or the driver."""
-    import math
+    Swap protocol (safe against concurrent readers AND writers): snapshot
+    the current file list, write the deduped/sorted replacement files,
+    publish them under fresh names once the job has succeeded, THEN
+    unlink the snapshot files. A reader racing the swap sees old+new
+    together — a harmless superset, because tombstones are a set union
+    and mask application dedupes positions (``load_delete_positions`` ->
+    ``np.unique``). A delete call racing the compaction lands a new file
+    outside the snapshot and survives untouched; a crashed compaction
+    leaves ``.pending`` files, which the next one removes."""
     import uuid
+
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    from .encode import file_task_df
 
     files = _delete_files(store)
     if len(files) <= 1:
         return {"action": "compact_deletes", "files_before": len(files),
                 "files_after": len(files), "rows": deleted_count(store),
                 "skipped": True}
-    df = spark.read.parquet(*files)
-    n = df.count()
-    nfiles = max(1, math.ceil(n / rows_per_file))
-    tmp = os.path.join(_deletes_dir(store), "_compact_tmp")
-    shutil.rmtree(tmp, ignore_errors=True)
-    dd = df.dropDuplicates(["pid", "chunk_id", "pos"])
-    dd = (dd.repartitionByRange(nfiles, "pid", "chunk_id", "pos")
-          if nfiles > 1 else dd.coalesce(1))
-    (dd.sortWithinPartitions("pid", "chunk_id", "pos")
-       .write.mode("overwrite").parquet(tmp))
+    ddir = _deletes_dir(store)
+    for f in glob.glob(os.path.join(ddir, "*.pending")):
+        os.unlink(f)
+    n, ranges = _pid_ranges(files, rows_per_file)
     tag = uuid.uuid4().hex[:8]
-    moved = 0
-    for i, f in enumerate(sorted(glob.glob(os.path.join(tmp, "part-*.parquet")))):
-        os.replace(f, os.path.join(_deletes_dir(store),
-                                   f"compact-{tag}-{i:05d}.parquet"))
-        moved += 1
+    keys = ["pid", "chunk_id", "pos"]
+
+    def task(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        snapshot = ds.dataset(files, format="parquet")
+        for batch in batches:
+            for lo, hi, path in zip(*(batch.column(c).to_pylist()
+                                      for c in ("lo", "hi", "path"))):
+                t = (snapshot.to_table(filter=(ds.field("pid") >= lo)
+                                       & (ds.field("pid") < hi))
+                     .group_by(keys).aggregate([])
+                     .sort_by([(c, "ascending") for c in keys]))
+                if t.num_rows:
+                    pq.write_table(t, path)
+                    yield pa.RecordBatch.from_pydict({"path": [path]})
+
+    rows = [(lo, hi, os.path.join(ddir, f"compact-{tag}-{i:05d}.parquet.pending"))
+            for i, (lo, hi) in enumerate(ranges)]
+    written = (file_task_df(spark, rows, "lo bigint, hi bigint, path string")
+               .mapInArrow(task, "path string").collect())
+    for r in written:
+        os.replace(r["path"], r["path"][:-len(".pending")])
     for f in files:
         os.unlink(f)
-    shutil.rmtree(tmp, ignore_errors=True)
-    rows_after = deleted_count(store)
     entry = {"action": "compact_deletes", "files_before": len(files),
-             "files_after": moved, "rows_before": n, "rows": rows_after,
-             "skipped": False}
+             "files_after": len(written), "rows_before": n,
+             "rows": deleted_count(store), "skipped": False}
     _log_delete(store, entry)
     return entry
 

@@ -26,6 +26,7 @@ is a tiny parquet table (one row per partition) that doubles as lineage
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import json
 import os
@@ -294,31 +295,29 @@ def _zone_sum(arr: pa.Array, stats: dict) -> int | None:
     return s if -(1 << 63) <= s < (1 << 63) else None
 
 
+def part_files(directory: str) -> list[tuple[int, str]]:
+    """``(pid, path)`` of the ``part-<pid>.parquet`` files in a store's
+    ``chunks/`` or ``manifest/`` ``directory``, in pid order; any other
+    name (temp files, non-numeric stems) is skipped."""
+    out = []
+    for path in glob.glob(os.path.join(directory, "part-*.parquet")):
+        stem = os.path.basename(path)[len("part-"):-len(".parquet")]
+        if stem.isdigit():  # full numeric stem: safe past pid 99999
+            out.append((int(stem), path))
+    return sorted(out)
+
+
 def completed_pids(out_dir: str) -> set[int]:
-    mdir = os.path.join(out_dir, "manifest")
-    if not os.path.isdir(mdir):
-        return set()
-    out = set()
-    for f in os.listdir(mdir):
-        if f.startswith("part-") and f.endswith(".parquet"):
-            stem = f[len("part-"):-len(".parquet")]
-            if stem.isdigit():  # full numeric stem: safe past pid 99999
-                out.add(int(stem))
-    return out
+    return {pid for pid, _ in part_files(os.path.join(out_dir, "manifest"))}
 
 
 def _manifest_mode(out_dir: str) -> str | None:
     """The pid-keying mode an existing store was written under ('files' or
     'dataframe'; pre-mode manifests default to 'dataframe'), or None for a
     fresh/empty output dir. Reads one manifest footer."""
-    mdir = os.path.join(out_dir, "manifest")
-    if not os.path.isdir(mdir):
-        return None
-    for f in sorted(os.listdir(mdir)):
-        if f.startswith("part-") and f.endswith(".parquet"):
-            tbl = pq.read_table(os.path.join(mdir, f), columns=["lineage"])
-            if tbl.num_rows == 0:
-                continue
+    for _, path in part_files(os.path.join(out_dir, "manifest")):
+        tbl = pq.read_table(path, columns=["lineage"])
+        if tbl.num_rows:
             return json.loads(tbl.column(0)[0].as_py() or "{}").get("mode", "dataframe")
     return None
 
@@ -415,6 +414,21 @@ def _atomic_write(table: pa.Table, path: str) -> None:
     tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
     pq.write_table(table, tmp, compression="none")
     os.replace(tmp, path)
+
+
+def publish_part(out_dir: str, pid: int, chunks: pa.Table, t0: float,
+                 metric: dict) -> dict:
+    """Publish partition ``pid`` of ``out_dir``: its chunk file, then its
+    manifest row (``metric`` plus pid, status, ``wall_sec`` since ``t0``,
+    engine version and finish time), each by temp + atomic rename.
+    Returns the manifest row."""
+    _atomic_write(chunks, os.path.join(out_dir, "chunks", f"part-{pid:05d}.parquet"))
+    row = {"pid": pid, "status": "done", **metric,
+           "wall_sec": time.time() - t0, "engine_version": __version__,
+           "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())}
+    _atomic_write(pa.Table.from_pylist([row], schema=METRIC_PA_SCHEMA),
+                  os.path.join(out_dir, "manifest", f"part-{pid:05d}.parquet"))
+    return row
 
 
 def append_log_entry(log_dir: str, entry: dict) -> int:
@@ -665,21 +679,12 @@ def _encode_one_partition(pid: int, batches: Iterator[pa.RecordBatch], out_dir: 
     if not records:
         return None
 
-    chunk_tbl = pa.Table.from_pylist(records, schema=CHUNK_SCHEMA)
-    _atomic_write(chunk_tbl, os.path.join(out_dir, "chunks", f"part-{pid:05d}.parquet"))
-
-    raw_bytes = sum(m["raw"] for m in col_metrics.values())
-    enc_bytes = sum(m["enc"] for m in col_metrics.values())
-    metric_row = {
-        "pid": pid, "status": "done", "n_rows": n_rows_total, "n_chunks": chunk_id,
-        "raw_bytes": raw_bytes, "enc_bytes": enc_bytes, "wall_sec": time.time() - t0,
-        "columns_json": json.dumps(col_metrics), "lineage": lineage_json,
-        "engine_version": __version__,
-        "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-    }
-    manifest_tbl = pa.Table.from_pylist([metric_row], schema=METRIC_PA_SCHEMA)
-    _atomic_write(manifest_tbl, os.path.join(out_dir, "manifest", f"part-{pid:05d}.parquet"))
-    return metric_row
+    return publish_part(
+        out_dir, pid, pa.Table.from_pylist(records, schema=CHUNK_SCHEMA), t0,
+        {"n_rows": n_rows_total, "n_chunks": chunk_id,
+         "raw_bytes": sum(m["raw"] for m in col_metrics.values()),
+         "enc_bytes": sum(m["enc"] for m in col_metrics.values()),
+         "columns_json": json.dumps(col_metrics), "lineage": lineage_json})
 
 
 def encode_files_job(

@@ -13,8 +13,9 @@ fold :func:`store_meta` on the driver. Files that must be read become
 file tasks (:func:`file_tasks_df`, :func:`chunk_job`) or DataSource
 partitions, which read their chunks through :func:`read_chunks` (one
 pyarrow read per file, whole chunks grouped per file, no chunk-row
-shuffle); only ``verify_chunks`` reads its files itself, for the
-checksum column. Decode tasks and the DataSource's ``read()`` turn those
+shuffle); only ``verify_chunks`` (for the checksum column) and
+``compact_store`` (which copies whole files) read their files
+themselves. Decode tasks and the DataSource's ``read()`` turn those
 chunks into Arrow batches with ``decode.emit_chunks``. The planner reads
 chunk metadata with pyarrow and starts no Spark job. Per chunk file it
 reads the narrow columns ``META_COLS`` (plus the sketch columns a
@@ -41,7 +42,6 @@ there, which no predicate matches, so it drops.
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import threading
@@ -61,6 +61,7 @@ from .decode import (
     dict_section,
     zone_keep,
 )
+from .encode import file_task_df, part_files
 
 META_COLS = ("pid", "chunk_id", "column", "codec", "n_rows", "enc_bytes",
              "zmin_long", "zmax_long")
@@ -77,18 +78,15 @@ def chunk_files(store: str, pids=None) -> list[tuple[int, str]]:
     to ``pids`` when given. Raises FileNotFoundError when the store has no
     chunk file at all: the file-granular readers open chunk files with
     pyarrow, so a store must be a local or mounted directory."""
-    paths = glob.glob(os.path.join(store, "chunks", "part-*.parquet"))
-    if not paths:
+    files = part_files(os.path.join(store, "chunks"))
+    if not files:
         raise FileNotFoundError(
             f"no chunk files under {store!r} (readers open chunk files "
             "with pyarrow: the store must be a local or mounted directory)")
-    pids = None if pids is None else set(pids)
-    out = []
-    for path in paths:
-        pid = int(os.path.basename(path)[len("part-"):-len(".parquet")])
-        if pids is None or pid in pids:
-            out.append((pid, path))
-    return sorted(out)
+    if pids is None:
+        return files
+    pids = set(pids)
+    return [(pid, path) for pid, path in files if pid in pids]
 
 
 def file_tasks_df(spark, files: list):
@@ -101,8 +99,6 @@ def file_tasks_df(spark, files: list):
     plus the open cost. A read of a few small files is then a few tasks,
     not one Python task start per file. Row schema: ``files string``,
     the JSON list of the run's ``[path, keys]``."""
-    from .encode import file_task_df
-
     conf = spark._jsparkSession.sessionState().conf()
     open_cost = conf.filesOpenCostInBytes()
     sizes = [os.path.getsize(path) for path, _ in files]

@@ -38,19 +38,42 @@ Reference tie: engine-level surface with no reference analog
 
 from __future__ import annotations
 
-import glob
-import os
-
 from pyspark.sql import functions as F
 
+from .admin import _on_disk_pids
 from .deletes import _log_delete, delete_matching, delete_where
 from .encode import _manifest_mode
 
 
-def _store_pids(store: str) -> list[int]:
-    return sorted(
-        int(os.path.basename(p)[len("part-"):-len(".parquet")])
-        for p in glob.glob(os.path.join(store, "chunks", "part-*.parquet")))
+def _appender(spark, store: str, op: str, hint: str = ""):
+    """Refuse a store that is not datasource/dataframe mode, else return
+    ``append(df, chunk_bytes, lineage) -> (pids_before, appended_pids)``,
+    which appends ``df`` as fresh pids through the ``fsst`` writer or
+    ``encode_job`` (``lineage`` is for the latter)."""
+    mode = _manifest_mode(store)
+    if mode not in ("datasource", "dataframe"):
+        raise ValueError(
+            f"{op} supports datasource/dataframe-mode stores; "
+            f"{store!r} is mode {mode!r}{hint}")
+
+    def append(df, chunk_bytes: int, lineage: dict):
+        pids_before = sorted(_on_disk_pids(store))
+        if mode == "datasource":
+            from ..sources.fsst_source import register
+
+            register(spark)
+            (df.write.format("fsst").mode("append")
+             .option("chunk_bytes", chunk_bytes).save(store))
+        else:
+            from .encode import encode_job
+
+            pid_offset = (max(pids_before) + 1) if pids_before else 0
+            encode_job(spark, df, store, chunk_bytes=chunk_bytes,
+                       resume=False, pre_partitioned=True,
+                       pid_offset=pid_offset, lineage=lineage).collect()
+        return pids_before, sorted(_on_disk_pids(store) - set(pids_before))
+
+    return append
 
 
 def update_where(spark, store: str, set_exprs: dict,
@@ -67,12 +90,9 @@ def update_where(spark, store: str, set_exprs: dict,
     all SETs evaluate against the pre-update row). The updated column's
     type must not change (one store, one schema). Predicate forms mirror
     ``decode_filtered``/``delete_where``."""
-    mode = _manifest_mode(store)
-    if mode not in ("datasource", "dataframe"):
-        raise ValueError(
-            f"update_where supports datasource/dataframe-mode stores; "
-            f"{store!r} is mode {mode!r}. For a files-mode store, rewrite "
-            "through recluster_store or re-encode.")
+    append = _appender(
+        spark, store, "update_where", ". For a files-mode store, rewrite "
+        "through recluster_store or re-encode.")
     if not set_exprs:
         raise ValueError("update_where needs set_exprs={column: expression}")
 
@@ -99,24 +119,10 @@ def update_where(spark, store: str, set_exprs: dict,
                 f"{f_new.dataType.simpleString()}; a store has one schema "
                 "— cast back explicitly if intended")
 
-    pids_before = _store_pids(store)
     # append FIRST (crash between steps duplicates, never loses — see
     # module docstring). The decode plan's file listing snapshot predates
     # the append, so the self-referential read is safe.
-    if mode == "datasource":
-        from ..sources.fsst_source import register
-
-        register(spark)
-        (updated.write.format("fsst").mode("append")
-         .option("chunk_bytes", chunk_bytes).save(store))
-    else:
-        from .encode import encode_job
-
-        pid_offset = (max(pids_before) + 1) if pids_before else 0
-        encode_job(spark, updated, store, chunk_bytes=chunk_bytes,
-                   resume=False, pre_partitioned=True, pid_offset=pid_offset,
-                   lineage={"update_of": store}).collect()
-    appended = sorted(set(_store_pids(store)) - set(pids_before))
+    pids_before, appended = append(updated, chunk_bytes, {"update_of": store})
 
     flt = list(filters or [])
     if col is not None:
@@ -148,11 +154,7 @@ def merge_upsert(spark, store: str, source, key_col: str,
     refused past 10^7 keys (that merge is a rewrite). ``source``'s
     schema must equal the store's visible schema; ``source`` must not
     repeat a key (a multi-version upsert is ambiguous)."""
-    mode = _manifest_mode(store)
-    if mode not in ("datasource", "dataframe"):
-        raise ValueError(
-            f"merge_upsert supports datasource/dataframe-mode stores; "
-            f"{store!r} is mode {mode!r}")
+    append = _appender(spark, store, "merge_upsert")
     from .decode import column_arrow_types
 
     store_cols = sorted(column_arrow_types(store))
@@ -171,21 +173,8 @@ def merge_upsert(spark, store: str, source, key_col: str,
     # keys snapshot BEFORE the append (reading source twice is fine — the
     # duplicate check above already materialized its shuffle)
     keys = source.select(F.col(key_col).alias("_k"))
-    pids_before = _store_pids(store)
-    if mode == "datasource":
-        from ..sources.fsst_source import register
-
-        register(spark)
-        (source.write.format("fsst").mode("append")
-         .option("chunk_bytes", chunk_bytes).save(store))
-    else:
-        from .encode import encode_job
-
-        pid_offset = (max(pids_before) + 1) if pids_before else 0
-        encode_job(spark, source, store, chunk_bytes=chunk_bytes,
-                   resume=False, pre_partitioned=True, pid_offset=pid_offset,
-                   lineage={"merge_into": store, "key": key_col}).collect()
-    appended = sorted(set(_store_pids(store)) - set(pids_before))
+    pids_before, appended = append(source, chunk_bytes,
+                                   {"merge_into": store, "key": key_col})
     res = delete_matching(spark, store, key_col, keys, pids=pids_before)
     _log_delete(store, {
         "action": "merge", "key": key_col,

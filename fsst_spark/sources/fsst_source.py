@@ -60,7 +60,6 @@ engine-level capability this repo adds on top.
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 from dataclasses import dataclass
@@ -572,7 +571,7 @@ class FsstDataSource(DataSource):
             # incremental loads are just another write. Mode mixing is
             # refused the same way encode_job's resume guard does: pids
             # keyed by another scheme could silently collide.
-            from ..jobs.encode import _manifest_mode
+            from ..jobs.encode import _manifest_mode, completed_pids
 
             mode = _manifest_mode(store)
             if mode not in (None, "datasource"):
@@ -580,11 +579,7 @@ class FsstDataSource(DataSource):
                     f"store {store!r} was written by encode mode {mode!r}; "
                     "append via df.write.format('fsst') only composes with "
                     "datasource-written stores — use jobs.encode APIs here")
-            existing = glob.glob(os.path.join(store, "manifest", "part-*.parquet"))
-            if existing:
-                pid_offset = 1 + max(
-                    int(os.path.basename(p)[len("part-"):-len(".parquet")])
-                    for p in existing)
+            pid_offset = 1 + max(completed_pids(store), default=-1)
             from ..jobs.schema import dropped_columns
 
             ghost = dropped_columns(store) & {f.name for f in schema.fields}

@@ -33,11 +33,10 @@ def synth_encoded(tmp_path_factory):
     return src, enc, _run("encode", "--input", src, "--out", enc)
 
 
-def test_cli_encode_then_selective_decode(tmp_path):
-    src = str(tmp_path / "corpus2")
+def test_cli_encode_then_selective_decode(tmp_path, synth_encoded):
+    src = synth_encoded[0]
     enc = str(tmp_path / "encoded")
     dec = str(tmp_path / "decoded")
-    _run("synth", "--rows", "400", "--out", src)
     r = _run("encode", "--input", src, "--out", enc, "--partitions", "4")
     assert r["rows"] == 400 and r["ratio"] > 1.5
     _run("decode", "--data", enc, "--out", dec,
@@ -61,14 +60,13 @@ def test_cli_encode_fast_path_and_conjunctive_where(tmp_path, synth_encoded):
     assert n == 400
 
 
-def test_cli_compact_and_group_stats(tmp_path):
+def test_cli_compact_and_group_stats(tmp_path, synth_encoded):
     """compact merges small chunk files without decoding; group-stats
     answers GROUP BY from codec structure — both against the same synth
     corpus, cross-checked with DuckDB."""
-    src = str(tmp_path / "corpus5")
+    src = synth_encoded[0]
     enc = str(tmp_path / "encoded5")
     cmp_ = str(tmp_path / "compacted5")
-    _run("synth", "--rows", "400", "--out", src)
     _run("encode", "--input", src, "--out", enc, "--partitions", "8")
     r = _run("compact", "--data", enc, "--out", cmp_, "--target-files", "2")
     assert r["in_files"] == 8 and r["out_files"] == 2 and r["rows"] == 400
@@ -244,16 +242,15 @@ def test_cli_quantiles(tmp_path):
     assert r["n_values"] == 300 and r["quantiles"]["0.5"] > 0
 
 
-def test_cli_delete_and_materialize(tmp_path):
+def test_cli_delete_and_materialize(tmp_path, synth_encoded):
     """delete tombstones rows merge-on-read; count stays exact; decode
     excludes them; materialize-deletes folds them into a new store."""
     import duckdb
 
-    src = str(tmp_path / "corpus6")
+    src = synth_encoded[0]
     enc = str(tmp_path / "encoded6")
     dec = str(tmp_path / "decoded6")
     mat = str(tmp_path / "folded6")
-    _run("synth", "--rows", "400", "--out", src)
     _run("encode", "--input", src, "--out", enc, "--partitions", "4")
     want_del = duckdb.sql(
         f"SELECT count(*) FROM read_parquet('{src}/*.parquet') "

@@ -238,3 +238,34 @@ def test_compact_deletes_preserves_the_mask(spark, docs, store):
     # delete added files — run it and re-check equivalence either way
     compact_deletes(spark, store)
     assert decode_job(spark, store).count() == exp
+
+
+def test_compact_deletes_splits_by_pid_in_one_job(spark, docs, store):
+    """A small ``rows_per_file`` splits the tombstones into several
+    files over disjoint pid ranges, each sorted and deduplicated, in one
+    Spark job; the deleted set is unchanged."""
+    import glob as _glob
+
+    import pyarrow.parquet as _pq
+
+    from fsst_spark.jobs.deletes import _deletes_dir, compact_deletes
+    from tests.plan_checks import run_counting_jobs
+
+    delete_where(spark, store, "lang", "==", "de")
+    delete_where(spark, store, "lang", "==", "fr")
+    want = _ids(decode_job(spark, store))
+    rows = deleted_count(store)
+    res, jobs = run_counting_jobs(
+        spark, "compact_deletes",
+        lambda: compact_deletes(spark, store, rows_per_file=rows // 3))
+    assert jobs == 1
+    assert res["rows_before"] == rows and res["files_after"] > 1
+    files = sorted(_glob.glob(os.path.join(_deletes_dir(store), "*.parquet")))
+    assert len(files) == res["files_after"]
+    keys = [list(zip(*_pq.read_table(f).select(["pid", "chunk_id", "pos"])
+                     .to_pydict().values())) for f in files]
+    assert all(k == sorted(set(k)) for k in keys)
+    spans = sorted((k[0][0], k[-1][0]) for k in keys)
+    assert all(a[1] < b[0] for a, b in zip(spans, spans[1:])), spans
+    assert _ids(decode_job(spark, store)) == want
+    assert deleted_count(store) == docs.where("lang IN ('de', 'fr')").count()

@@ -33,7 +33,7 @@ def store(spark, tmp_path_factory):
 
 
 def test_ordered_decode_is_globally_sorted(spark, store):
-    got = decode_job(spark, store, ordered=True)
+    got = decode_job(spark, store)
     ids = [r["doc_id"] for r in got.collect()]  # partition-concat order
     assert ids == sorted(ids)
     assert len(ids) == 12000
@@ -60,7 +60,7 @@ def test_ordered_decode_with_unmaterialized_added_column(spark, tmp_path):
                num_partitions=15, pid_offset=9, resume=False,
                unique_col="doc_id", sort_key="doc_id").collect()
 
-    got = decode_job(spark, out, ordered=True)
+    got = decode_job(spark, out)
     assert 1 < got.rdd.getNumPartitions() < 24
     rows = got.collect()  # partition-concat order
     keys = list(dict.fromkeys((r["pid"], r["chunk_id"]) for r in rows))
@@ -70,7 +70,7 @@ def test_ordered_decode_with_unmaterialized_added_column(spark, tmp_path):
 
 
 def test_no_row_level_sort_in_plan(spark, store):
-    plan = decode_job(spark, store, ordered=True) \
+    plan = decode_job(spark, store) \
         ._jdf.queryExecution().executedPlan().toString()
     # the only Sort allowed is the chunk-METADATA in-partition sort that
     # runs BELOW the decode (over pid/chunk_id/payload rows); no sort may

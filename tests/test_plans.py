@@ -8,12 +8,13 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from fsst_spark.jobs.compact import compact_store
 from fsst_spark.jobs.decode import decode_job, decode_plan
 from fsst_spark.jobs.encode import encode_job, salted_repartition
 from fsst_spark.synth.webcorpus import synth_web_df
 from tests.plan_checks import (assert_file_granular_plan,
                                assert_no_chunk_row_shuffle,
-                               payload_read_filters)
+                               payload_read_filters, run_counting_jobs)
 
 
 def _plan(df) -> str:
@@ -158,3 +159,13 @@ def test_group_count_scan_pushes_column_filter(spark, encoded):
                    if "FileScan" in line), plan
 
 
+def test_compact_store_copies_files_in_one_job(spark, encoded, tmp_path):
+    # file tasks read whole chunk files with pyarrow: no JVM scan of
+    # chunks/, no shuffle, and one Spark job
+    out = str(tmp_path / "compacted")
+    job = compact_store(spark, encoded, out, target_files=2)
+    plan = _plan(job)
+    assert "MapInArrow" in plan, plan
+    assert "Exchange" not in plan and "FileScan" not in plan, plan
+    rows, jobs = run_counting_jobs(spark, "compact_store", job.collect)
+    assert len(rows) == 2 and jobs == 1
