@@ -33,13 +33,38 @@ changes. It has two callers:
   ``jobs.session.get_spark`` sets that for ``local`` masters. On a cluster
   it needs ``fsst_spark`` installed on the executors: ``--py-files``
   archives are not on the daemon's path when it starts.
+
+Socket reads. Spark's JVM writes each task's input to the worker over a
+loopback TCP socket with Nagle's algorithm on (RFC 896), and Linux delays
+the worker's ACK by up to 40 ms (RFC 1122). A small JVM write queued behind
+an unacknowledged one waits out that delay: unwrapped, a small task can
+block ~40 ms in ``ipc.open_stream`` for its input schema, twice its own
+work. So :func:`main` wraps ``pyspark.worker.main`` (:func:`quickack_main`)
+before it runs ``pyspark.daemon``, which binds ``worker_main`` as it starts.
+Per task, the wrapper sets ``TCP_NODELAY`` on the worker's socket and hands
+``worker_main`` a buffered reader whose every raw read first sets
+``TCP_QUICKACK`` (``tcp(7)``: send pending ACKs now; the kernel clears the
+flag again on its own). Every read of the input goes through that raw
+read: ``read_int``, pickled commands, and pyarrow's stream and batch reads.
+
+pyspark builds a fresh buffered ``infile`` for each task, and reads the
+first task's auth secret before the JVM sends any task bytes, so nothing
+is left buffered in ``infile`` when the wrapper reads past it. The wrapper
+passes ``infile`` through untouched for a Unix socket
+(``spark.python.unix.domain.socket.enabled``), on a platform without
+``socket.TCP_QUICKACK``, or when no socket handle can be opened on it.
+Only workers forked from this daemon get it: Spark's planner, write and
+commit workers come from ``pyspark.daemon``, which binds
+``pyspark.worker.main`` before any engine code runs.
 """
 
 from __future__ import annotations
 
 import importlib
+import io
 import os
 import runpy
+import socket
 import sys
 import zipimport
 
@@ -87,7 +112,68 @@ def install() -> bool:
     return PATCHES_ZIPIMPORT
 
 
+class _QuickAckRaw(io.RawIOBase):
+    """Raw reader over a worker's ``infile.raw`` that sets ``TCP_QUICKACK``
+    on ``sock`` before each read."""
+
+    def __init__(self, raw, sock: socket.socket):
+        self._raw = raw
+        self._sock = sock
+
+    def readable(self) -> bool:
+        return True
+
+    def fileno(self) -> int:
+        return self._raw.fileno()
+
+    def readinto(self, b) -> int | None:
+        self._sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_QUICKACK, 1)
+        return self._raw.readinto(b)
+
+
+def _tcp_handle(infile) -> socket.socket | None:
+    """A socket handle on ``infile``'s TCP connection, or None."""
+    try:
+        fd = os.dup(infile.fileno())
+    except (OSError, ValueError):  # closed, or not backed by a descriptor
+        return None
+    try:
+        sock = socket.socket(fileno=fd)
+    except OSError:  # not a socket
+        os.close(fd)
+        return None
+    if sock.family in (socket.AF_INET, socket.AF_INET6):
+        return sock
+    sock.close()
+    return None
+
+
+def quickack_main(worker_main):
+    """Wrap a pyspark ``worker_main(infile, outfile)`` so each task's input
+    socket reads ACK at once and its writes skip Nagle (module docstring)."""
+
+    def main(infile, outfile):
+        sock = _tcp_handle(infile) if hasattr(socket, "TCP_QUICKACK") else None
+        if sock is None:
+            return worker_main(infile, outfile)
+        try:
+            sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
+            reader = io.BufferedReader(
+                _QuickAckRaw(infile.raw, sock),
+                int(os.environ.get("SPARK_BUFFER_SIZE", 65536)))
+            return worker_main(reader, outfile)
+        finally:
+            sock.close()
+
+    return main
+
+
 def main() -> None:
     if install():
         importlib.invalidate_caches()  # read each archive once, pre-fork
+    # pyspark.daemon runs ``sys.argv[1]``'s ``main`` (pyspark.worker here).
+    name = sys.argv[1] if sys.argv[1:] else ""
+    worker = importlib.import_module(
+        name if name.startswith("pyspark") else "pyspark.worker")
+    worker.main = quickack_main(worker.main)
     runpy.run_module("pyspark.daemon", run_name="__main__", alter_sys=True)

@@ -120,8 +120,7 @@ def compact_store(spark, in_dir: str, out_dir: str,
 
 def recluster_store(spark, in_dir: str, out_dir: str, sort_key,
                     num_partitions: int | None = None,
-                    chunk_bytes: int = 16 << 20,
-                    lineage: dict | None = None) -> DataFrame:
+                    chunk_bytes: int = 16 << 20) -> DataFrame:
     """Re-layout an existing encoded store on a new cluster key — the
     maintenance action that turns an ingest-ordered store into one whose
     zone maps actually prune (Iceberg's ``rewrite_data_files`` with a
@@ -147,15 +146,14 @@ def recluster_store(spark, in_dir: str, out_dir: str, sort_key,
     return encode_job(
         spark, df, out_dir, num_partitions=num_partitions,
         chunk_bytes=chunk_bytes, resume=False, sort_key=list(keys),
-        lineage={**(lineage or {}), "recluster_from": in_dir})
+        lineage={"recluster_from": in_dir})
 
 
 def merge_stores(spark, in_dirs: "list[str]", out_dir: str,
                  sort_key=None, columns: "list[str] | None" = None,
                  num_partitions: int | None = None,
                  chunk_bytes: int = 16 << 20,
-                 unique_col: str = "url",
-                 lineage: dict | None = None) -> DataFrame:
+                 unique_col: str = "url") -> DataFrame:
     """Consolidate a shard FAMILY into ONE store — the monthly-compaction
     action for a store-per-crawl-day layout (Iceberg's rewrite across
     snapshots): ``decode_stores`` unions the shards (schema drift
@@ -184,4 +182,4 @@ def merge_stores(spark, in_dirs: "list[str]", out_dir: str,
         spark, df, out_dir, num_partitions=num_partitions,
         chunk_bytes=chunk_bytes, resume=False, unique_col=unique_col,
         sort_key=list(keys) if keys is not None else None,
-        lineage={**(lineage or {}), "merged_from": list(in_dirs)})
+        lineage={"merged_from": list(in_dirs)})

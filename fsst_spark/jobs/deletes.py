@@ -403,8 +403,7 @@ def compact_deletes(spark, store: str,
 def materialize_deletes(spark, in_dir: str, out_dir: str,
                         unique_col: str | None = None,
                         num_partitions: int | None = None,
-                        chunk_bytes: int = 16 << 20,
-                        lineage: dict | None = None):
+                        chunk_bytes: int = 16 << 20):
     """Fold tombstones into a NEW store (decode -> re-encode, Iceberg's
     ``rewrite_data_files`` for delete files): the output has no
     ``deletes/`` state, so every metadata/sketch fast path works again.
@@ -418,7 +417,7 @@ def materialize_deletes(spark, in_dir: str, out_dir: str,
     from .encode import encode_job
 
     df = decode_job(spark, in_dir).drop("pid", "chunk_id")
-    lin = {**(lineage or {}), "materialized_deletes_from": in_dir,
+    lin = {"materialized_deletes_from": in_dir,
            "tombstones_folded": deleted_count(in_dir)}
     if unique_col is None:
         return encode_job(spark, df, out_dir, chunk_bytes=chunk_bytes,

@@ -72,19 +72,8 @@ def _sym_len_vec(s: np.ndarray) -> np.ndarray:
     return lens
 
 
-def sym_concat(a: int, b: int) -> int:
-    """Concatenate two packed symbols (reference src/lib.rs:100-110)."""
-    la = sym_len(a)
-    assert la + sym_len(b) <= 8, "cannot build symbol with length > 8"
-    return ((b << (8 * la)) | a) & M64
-
-
 def sym_from_bytes(bs: bytes) -> int:
     return int.from_bytes(bs[:8].ljust(8, b"\x00"), "little")
-
-
-def sym_to_bytes(s: int) -> bytes:
-    return s.to_bytes(8, "little")[: sym_len(s)]
 
 
 def _code_new_symbol(code: int, length: int) -> int:

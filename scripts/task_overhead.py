@@ -14,6 +14,9 @@ wall time of a one-task no-op job over ``plan.file_tasks_df`` (the task
 frame of every file-granular job) on one of that store's chunk files. A
 worker-startup or task-frame regression (daemon, imports, per-task or
 per-planner-call setup) shows here without a full benchmark run.
+``socket_hook`` says whether the tasks ran with ``fsst_spark.daemon``'s
+socket-read wrapper: the engine daemon, over TCP, on a platform with
+``socket.TCP_QUICKACK``.
 
 Usage: python scripts/task_overhead.py [--master local[4]]
 """
@@ -24,6 +27,7 @@ import contextlib
 import io
 import json
 import os
+import socket
 import statistics
 import sys
 import tempfile
@@ -113,10 +117,15 @@ def main() -> None:
             file_job_s = _file_job_s(spark, store)
         conf = spark.sparkContext.getConf()
         slots = spark.sparkContext.defaultParallelism
+        daemon_module = conf.get("spark.python.daemon.module", "pyspark.daemon")
         print(json.dumps({
             "tasks": n,
             "slots": slots,
-            "daemon_module": conf.get("spark.python.daemon.module", "pyspark.daemon"),
+            "daemon_module": daemon_module,
+            "socket_hook": (daemon_module == "fsst_spark.daemon"
+                            and hasattr(socket, "TCP_QUICKACK")
+                            and conf.get("spark.python.unix.domain.socket.enabled",
+                                         "false").lower() != "true"),
             "python_s": round(python_s, 4),
             "jvm_s": round(jvm_s, 4),
             "per_task_ms": round((python_s - jvm_s) * min(n, slots) / n * 1000, 1),

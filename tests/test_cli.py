@@ -33,6 +33,15 @@ def synth_encoded(tmp_path_factory):
     return src, enc, _run("encode", "--input", src, "--out", enc)
 
 
+@pytest.fixture(scope="module")
+def synth300(tmp_path_factory):
+    """One ``synth --rows 300`` corpus, shared by the CLI tests that only
+    read it and encode it their own way."""
+    src = str(tmp_path_factory.mktemp("cli_synth300") / "corpus")
+    _run("synth", "--rows", "300", "--out", src)
+    return src
+
+
 def test_cli_encode_then_selective_decode(tmp_path, synth_encoded):
     src = synth_encoded[0]
     enc = str(tmp_path / "encoded")
@@ -150,13 +159,12 @@ def test_spark_submit_py_files_packaging(tmp_path):
     assert r == {"ok": True, "rows": 200}
 
 
-def test_cli_stats_and_cluster_by(tmp_path):
+def test_cli_stats_and_cluster_by(tmp_path, synth300):
     """--cluster-by url_sort_key(url) takes the expression path; the stats
     subcommand answers count/min/max from metadata and --exact-minmax
     recovers exact string bounds from boundary chunks."""
-    src = str(tmp_path / "corpus4")
+    src = synth300
     enc = str(tmp_path / "encoded4")
-    _run("synth", "--rows", "300", "--out", src)
     r = _run("encode", "--input", src, "--out", enc,
              "--cluster-by", "url_sort_key(url)")
     assert r["rows"] == 300
@@ -230,12 +238,11 @@ def test_cli_decode_where_any(tmp_path, synth_encoded):
     assert got == want > 0
 
 
-def test_cli_quantiles(tmp_path):
+def test_cli_quantiles(tmp_path, synth300):
     """Quantiles end-to-end via the spark-submit entry point: percentiles
     from the per-chunk quantile sketches."""
-    src = str(tmp_path / "corpus5")
+    src = synth300
     enc = str(tmp_path / "encoded5")
-    _run("synth", "--rows", "300", "--out", src)
     _run("encode", "--input", src, "--out", enc)
     r = _run("quantiles", "--data", enc, "--column", "warc_ts",
              "--q", "0.5")
@@ -270,11 +277,10 @@ def test_cli_delete_and_materialize(tmp_path, synth_encoded):
     assert sum(row["cnt"] for row in g) == 400 - want_del
 
 
-def test_cli_join_and_plan(tmp_path):
-    src = str(tmp_path / "jc")
+def test_cli_join_and_plan(tmp_path, synth300):
+    src = synth300
     enc = str(tmp_path / "jenc")
     out = str(tmp_path / "joined")
-    _run("synth", "--rows", "300", "--out", src)
     _run("encode", "--input", src, "--out", enc, "--partitions", "2",
          "--cluster-by", "url")
     plan = _run("join", "--left", enc, "--right", enc, "--on", "url",
